@@ -3658,8 +3658,6 @@ def _q_curation_multiscript(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops to 66 KB / 1.3 s optimize / 2.1 s warm exec."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.langid import (
         assemble_script_pred,
-        predict_lang_ngram,
-        script_profile_cols,
     )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.scriptq import (
         char_ngram_dup_frac,
@@ -3998,8 +3996,6 @@ def _q_language_mix_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged)."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.langid import (
         assemble_script_pred,
-        predict_lang_ngram,
-        script_profile_cols,
     )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.sampling import (
         hash_fraction,
@@ -4069,8 +4065,6 @@ def _q_quality_calibrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pred rank window + the rollup."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.langid import (
         assemble_script_pred,
-        predict_lang_ngram,
-        script_profile_cols,
     )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.scriptq import (
         quality_score_script,
@@ -4640,13 +4634,12 @@ def _q_lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted accuracy pytest-pinned). Scoring is map-only, HOF-free
     whole-stage codegen: each language's score is the
     replace()-length-diff occurrence mass of its profile trigrams
-    (functions/langid.py:lang_score_ngram — the hashed-table and
+    (functions/langid.py:profile_score — the hashed-table and
     per-trigram-filter designs both lost to plan/interp overheads,
     see the module notes); the twin is the same replace() arithmetic,
     integer-exact, identical argmax/tie-break."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.langid import (
         predict_lang,
-        predict_lang_ngram,
     )
 
     docs = _plant_multilingual(fan_out_small_scan(load_table(spark, sf_dir, "documents")))
@@ -4724,8 +4717,6 @@ def _q_lang_id_script(spark: SparkSession, sf_dir: str) -> DataFrame:
     and silently fell back to interpreted eval."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.langid import (
         assemble_script_pred,
-        predict_lang_ngram,
-        script_profile_cols,
     )
 
     docs = _plant_multiscript(fan_out_small_scan(load_table(spark, sf_dir, "documents")))
@@ -5309,22 +5300,21 @@ def _q_ivf_pq_topk_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_region_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Damped PageRank (10 fixed power-method rounds) over the OD
-    region graph — which regions anchor the city's movement. The
-    iterative-algorithm class beyond connected components, and unlike
-    components' data-dependent convergence loop this one is a static
-    plan chain, so it carries a full DuckDB twin (unrolled CTEs) under
-    the value-hash gate. Decimal-exact contribution sums + per-round
-    9-dp rounding keep both engines bit-identical (see
+    region graph — which regions anchor the city's movement. Unlike
+    components' data-dependent convergence loop this is a static
+    round chain, so it carries a full DuckDB twin (unrolled CTEs)
+    under the value-hash gate. Decimal-exact contribution sums +
+    per-round 9-dp rounding keep both engines bit-identical (see
     operators/pagerank.py).
 
-    Round 16 (guide §8, the kmeans bounded-driver-fetch budget
-    class): the region graph has ≤ N_REGIONS+1 nodes BY CONSTRUCTION (region ids 1..N plus the gap-fill sentinel 0),
-    so after the data-scale OD aggregation + weight normalization
-    (Spark) the ≤ N² edge rows are metadata — the 10 power rounds
-    fold on the driver (operators/graph_bounded.py:pagerank_fold,
-    arithmetic mirrored step for step; the unchanged DuckDB twin
-    verifies bit-identity every run) instead of paying 10
-    distributed join+agg rounds over a ≤400-row table."""
+    The region graph has ≤ N_REGIONS+1 nodes BY CONSTRUCTION (region
+    ids 1..N plus the gap-fill sentinel 0; guide §8, the kmeans
+    bounded-driver-fetch budget class), so after the data-scale OD
+    aggregation + weight normalization (Spark) the ≤ (N+1)² edge rows
+    are metadata — the 10 power rounds fold on the driver
+    (operators/graph_bounded.py:pagerank_fold, arithmetic mirrored
+    step for step from the DuckDB twin, which verifies bit-identity
+    every run)."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.graph_bounded import (
         collect_edges_bounded,
         pagerank_fold,
@@ -5445,7 +5435,7 @@ def _q_region_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batch 4): mesoscale community structure beyond components /
     PageRank / triangles. 4 fixed rounds, deterministic (score desc,
     label asc) tie-break; full unrolled DuckDB twin
-    (operators/labelprop.py). Round 16 (guide §8): the hour-keyed OD
+    (operators/labelprop.py). Guide §8: the hour-keyed OD
     multigraph collapses to ≤ C(N_REGIONS,2) undirected weighted
     edges in Spark (the data-scale aggregate), then the 4 synchronous
     rounds fold on the driver (graph_bounded.label_propagation_fold —
@@ -5785,8 +5775,8 @@ def _q_region_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically sparsified OD graph (top-3 out-edges per node —
     the k-NN-graph construction; the raw OD graph is near-complete and
     every distance would be 0/1). 6 relax rounds; full unrolled
-    DuckDB twin (operators/bfs.py). Round 16 (guide §8): the relax
-    loop folds on the driver over the ≤ N_REGIONS² collected edge
+    DuckDB twin (operators/bfs.py). Guide §8: the relax loop folds on
+    the driver over the ≤ N_REGIONS² collected edge
     rows (integer arithmetic — trivially exact;
     operators/graph_bounded.py:bfs_hops_fold); the data-scale OD
     aggregation and the top-3 sparsification window stay in Spark."""
@@ -6368,12 +6358,13 @@ def _q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_region_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core decomposition (batch 6): the 4-core of the symmetrized
-    top-3-sparsified OD graph (the bfs_hops k-NN-graph construction —
+    top-3-sparsified OD graph (the bfs.topk_out_edges k-NN-graph
+    construction —
     the raw OD graph is near-complete and every node would trivially
     survive). 6 fixed peel rounds (converged for this graph: peeling
     is monotone and 6 exceeds the longest peel chain, pytest-pinned);
-    full unrolled DuckDB twin (operators/kcore.py). Round 16 (guide
-    §8): the 6 peel rounds fold on the driver over the ≤ 2·N_REGIONS²
+    full unrolled DuckDB twin (operators/kcore.py). Guide §8: the 6
+    peel rounds fold on the driver over the ≤ 2·N_REGIONS²
     collected symmetrized edge rows (integer arithmetic;
     graph_bounded.k_core_fold); the OD aggregation, top-3 window and
     symmetrize stay in Spark."""
@@ -7446,14 +7437,14 @@ def _q_region_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities on the directed OD graph (batch 9):
     PageRank's mutual-reinforcement sibling — authorities are the
     regions flows converge INTO, hubs the origins that feed strong
-    authorities. 5 fixed alternations, max-normalized DECIMAL sums,
+    authorities. 3 fixed alternations, max-normalized DECIMAL sums,
     9-dp floor rounding per half-round; full unrolled DuckDB twin
-    (operators/hits.py). Round 16 (guide §8): the 3 alternations
+    (operators/hits.py:hits_oracle_sql). Guide §8: the alternations
     fold on the driver over the ≤ N_REGIONS² collected edge rows
     (graph_bounded.hits_fold — the same shortest-repr decimal
-    quantization, exact sums, max-norm and floor-round epilogue, so
-    the unchanged twin verifies bit-identity); the OD aggregation
-    stays in Spark."""
+    quantization, exact sums, max-norm and floor-round epilogue as
+    the twin, which verifies bit-identity); the OD aggregation stays
+    in Spark."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.graph_bounded import (
         collect_edges_bounded,
         hits_fold,
@@ -7897,12 +7888,11 @@ def _q_q22_idle_rich(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Harmonic centrality over the top-3-sparsified OD region graph
-    (batch 13): all-pairs hop distances from ONE multi-source BFS
-    chain (4 relax rounds keyed by (source, node) — not |V| separate
-    traversals), then H(v) = Σ 1/d as exact integer twelfths
-    (12 = lcm(1..4)) with a single closing division
-    (operators/bfs.py:multi_source_hops/harmonic_centrality). Full
-    unrolled DuckDB twin. Round 16 (guide §8): the 4 relax rounds
+    (batch 13): all-pairs hop distances within 4 hops, then
+    H(v) = Σ 1/d as exact integer twelfths (12 = lcm(1..4)) with a
+    single closing division. Full unrolled DuckDB twin
+    (operators/bfs.py:harmonic_oracle_sql, one multi-source relax
+    chain keyed by (source, node)). Guide §8: the 4 relax rounds
     fold on the driver over the ≤ N_REGIONS² collected edge rows
     (integer arithmetic; graph_bounded.harmonic_fold); the OD
     aggregation and top-3 window stay in Spark."""
@@ -7938,9 +7928,9 @@ def _q_region_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closeness centrality over the top-3-sparsified OD region graph
     (batch 25): same one-chain multi-source BFS as harmonic
     centrality, different epilogue — C(v) = n_reached / Σd with both
-    counts exact BIGINTs and the division the only float op
-    (operators/bfs.py:closeness_centrality). Full unrolled DuckDB
-    twin. Round 16 (guide §8): the 4 relax rounds fold on the driver
+    counts exact BIGINTs and the division the only float op. Full
+    unrolled DuckDB twin (operators/bfs.py:closeness_oracle_sql).
+    Guide §8: the 4 relax rounds fold on the driver
     over the ≤ N_REGIONS² collected edge rows (integer arithmetic;
     graph_bounded.closeness_fold); the OD aggregation and top-3
     window stay in Spark."""

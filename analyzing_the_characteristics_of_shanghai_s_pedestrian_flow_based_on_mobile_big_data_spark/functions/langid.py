@@ -206,50 +206,24 @@ CHAR_PROFILES: dict[str, list[str]] = {
            "est", "ant", "aqu", "com"],
 }
 
-def char_trigrams(text: Column) -> Column:
-    """Array of character trigram STRINGS over the lowercased text —
-    empty below 3 chars. Body-safe construction (chars split once,
-    zip_with over shifted slices — never substring(text, i) in a HOF
-    body, the charlm O(len²) trap). Diagnostic/test helper; the
-    classifier itself never materializes trigram arrays (see
-    :func:`lang_score_ngram`)."""
-    chars = F.split(F.lower(text), "")
-    n = F.size(chars)
-    length = n - 2
-    c1 = F.slice(chars, 1, length)
-    c2 = F.slice(chars, 2, length)
-    c3 = F.slice(chars, 3, length)
-    t12 = F.zip_with(c1, c2, lambda a, b: F.concat(a, b))
-    return F.when(
-        n >= 3, F.zip_with(t12, c3, lambda a, b: F.concat(a, b))
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def lang_score_ngram(s: Column, lang: str) -> Column:
-    """One language's profile score over a LOWERCASED text column:
-    Σ over profile trigrams of (length(s) − length(replace(s, tri))) —
-    i.e. 3 × the total NON-OVERLAPPING occurrence count. Pure
-    string-function arithmetic, no HOF anywhere: the whole score sits
-    inside whole-stage codegen (the per-trigram filter formulation
-    paid ~1 µs of interpreted-lambda eval per (trigram × language) —
-    10M evals at sf0.1 — where this is 20 replace() scans of a short
-    string per language per doc; measured 10.4 s → sub-second).
+def profile_score(s: Column, trigrams: list[str]) -> Column:
+    """Occurrence mass of one trigram profile over a lowercased text
+    column: Σ over profile trigrams of
+    (length(s) − length(replace(s, tri))) — i.e. 3 × the total
+    NON-OVERLAPPING occurrence count. Pure string-function arithmetic,
+    no HOF anywhere: the whole score sits inside whole-stage codegen
+    (the per-trigram filter formulation paid ~1 µs of
+    interpreted-lambda eval per (trigram × language) — 10M evals at
+    sf0.1 — where this is 20 replace() scans of a short string per
+    language per doc; measured 10.4 s → sub-second).
     NON-OVERLAPPING occurrence counting is the DEFINING semantics of
     this score, not an approximation of a sliding-window count: for
     bordered trigrams like "ere"/"ana" (which several profiles do
     contain — "ere" in en, "ana" in sw) the two counts differ on
-    inputs like "erere", and this operator is specified as the
-    replace() arithmetic (ADVICE r14: the earlier docstring wrongly
-    claimed such trigrams were absent). The DuckDB twin is the same
-    replace() arithmetic, so values are integer-exact either way."""
-    return profile_score(s, CHAR_PROFILES[lang])
-
-
-def profile_score(s: Column, trigrams: list[str]) -> Column:
-    """Occurrence mass of one trigram profile over a lowercased text
-    column — the engine under :func:`lang_score_ngram`, factored out
-    so the Cyrillic/Arabic profile families (round 15) share the exact
-    same arithmetic (and thus the same DuckDB twin shape)."""
+    inputs like "erere". The DuckDB twin is the same replace()
+    arithmetic, so values are integer-exact either way. Every profile
+    family (Latin, Cyrillic, Arabic) shares this arithmetic and thus
+    the same twin shape."""
     terms = [
         F.length(s) - F.length(F.replace(s, F.lit(t), F.lit("")))
         for t in sorted(set(trigrams))
@@ -275,19 +249,6 @@ def profile_argmax(s: Column, profiles: dict[str, list[str]]) -> Column:
         ]
     )
     return F.array_min(cands).getField("l")
-
-
-def lang_scores_ngram(s: Column) -> dict[str, Column]:
-    """Per-language occurrence-mass fraction (score / text length) over
-    a lowercased text column — the diagnostic companion of
-    :func:`predict_lang_ngram` (same argmax, normalized)."""
-    n = F.length(s)
-    return {
-        lang: F.when(n > 0, lang_score_ngram(s, lang) / n).otherwise(
-            F.lit(0.0)
-        )
-        for lang in CHAR_PROFILES
-    }
 
 
 def predict_lang_ngram(text: Column) -> Column:

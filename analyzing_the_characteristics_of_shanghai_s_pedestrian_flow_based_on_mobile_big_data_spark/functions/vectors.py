@@ -33,41 +33,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product as an explicit left-to-right addition chain over a
-    known dimensionality. Same association order as :func:`dot`, so
-    bitwise-identical results and the two are freely interchangeable.
-
-    NOT the default: re-measured on Spark 4.1 the 64-term expression
-    tree costs ~1.4 s of Catalyst analysis per query AND runs ~60%
-    slower per row than the :func:`dot` fold (64 null-checked
-    element_at calls lose to the vectorized array walk). Kept for
-    engines/versions where codegen'd chains beat interpreted HOFs."""
-    terms = [
-        F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(dim)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def sq_norm_fixed(a: Column, dim: int) -> Column:
-    terms = [
-        F.element_at(a, i + 1) * F.element_at(a, i + 1) for i in range(dim)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def cosine_similarity_fixed(a: Column, b: Column, dim: int) -> Column:
-    return dot_fixed(a, b, dim) / (
-        F.sqrt(sq_norm_fixed(a, dim)) * F.sqrt(sq_norm_fixed(b, dim))
-    )
-
-
 def as_double_array(a: Column) -> Column:
     """Cast array<float> (testdata embeddings) to array<double> so all
     downstream math is float64 — matching the oracle's DOUBLE[]."""

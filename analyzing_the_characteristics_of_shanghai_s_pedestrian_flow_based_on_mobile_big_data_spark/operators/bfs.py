@@ -1,27 +1,23 @@
-"""Breadth-first traversal — fixed-round frontier expansion.
+"""Hop-distance queries over the OD region graph — Spark prep and
+DuckDB twins.
 
-The graph-traversal class (reachability, hop distance) that rounds
-out components/PageRank/LPA/triangles: dist(source)=0, and each
-round relaxes dist(v) = min(dist(v), min over in-edges (u,v) of
-dist(u)+1). With a FIXED round budget the plan is a static chain —
-like PageRank and unlike components' data-dependent loop — so it
-carries a full unrolled DuckDB twin under the value-hash gate.
-``max_hops`` bounds the radius explicitly (the iteration-count /
-convergence trade every distributed BFS makes; Pregel stops on an
-empty frontier, we stop at the budget and the budget is part of the
-query's contract).
-
-Scale shape: each round is ONE hash join (edges ⋈ dist on src) + ONE
-map-side-combinable min() aggregate, both keyed on node ids. Edges
-are checkpointed once, dist per round (lineage truncation — the
-pagerank.py:88-94 lesson). Shuffle payload per round is
-O(|frontier-adjacent edges|), never all-pairs.
+BFS, harmonic and closeness centrality share one relax rule:
+dist(source)=0, and each round sets dist(v) = min(dist(v), min over
+in-edges (u,v) of dist(u)+1). The rounds run on the driver
+(``graph_bounded.bfs_hops_fold`` / ``harmonic_fold`` /
+``closeness_fold``) because the region graph has at most
+(N_REGIONS+1)² edges by construction. With a FIXED round budget each
+twin here is a static chain of unrolled CTEs under the value-hash
+gate. ``max_hops`` bounds the radius explicitly: Pregel stops on an
+empty frontier, these queries stop at the budget, and the budget is
+part of the query's contract.
 
 The OD region graph is near-complete (every hop distance would be
-0/1 — vacuous), so the paired query sparsifies deterministically
-first: keep each node's top-``k`` strongest out-edges (ties broken
-on dest id) — the standard k-NN-graph construction, itself a
-windowed top-k per group that mirrors 1:1 into SQL.
+0/1 — vacuous), so the paired queries sparsify deterministically
+first with :func:`topk_out_edges`, the data-scale Spark step: keep
+each node's top-``k`` strongest out-edges (ties broken on dest id) —
+the standard k-NN-graph construction, a windowed top-k per group that
+mirrors 1:1 into SQL.
 
 No counterpart in the reference — engine breadth (SURVEY.md §2
 extensions).
@@ -46,42 +42,6 @@ def topk_out_edges(edges: DataFrame, k: int = 3) -> DataFrame:
         .filter(F.col("rn") <= k)
         .select("src", "dst")
     )
-
-
-def bfs_hops(
-    edges: DataFrame, source: int, max_hops: int = 6
-) -> DataFrame:
-    """Hop distance from ``source`` over the directed (src, dst)
-    graph, relaxed for exactly ``max_hops`` rounds. Returns
-    (node, hops); nodes not reached within the budget are absent, and
-    a ``source`` absent from the graph's node set yields an empty
-    result (so an empty edge table stays empty — no phantom row)."""
-    edges = edges.localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    dist = (
-        nodes.filter(F.col("node") == source)
-        .select(F.col("node").cast("int").alias("node"))
-        .withColumn("hops", F.lit(0))
-    )
-    for _ in range(max_hops):
-        cand = (
-            edges.join(dist.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("hops") + 1).alias("hops"),
-            )
-        )
-        dist = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("hops").alias("hops"))
-            .localCheckpoint(eager=False)
-        )
-    return dist
 
 
 def bfs_oracle_sql(graph_cte: str, source: int, max_hops: int = 6) -> str:
@@ -121,87 +81,17 @@ def bfs_oracle_sql(graph_cte: str, source: int, max_hops: int = 6) -> str:
     )
 
 
-# Exact integer weights 12/d for hop distances 1..4 (12 = lcm(1..4)):
-# harmonic centrality becomes Σ (12/d) / 12 — a BIGINT numerator and
-# ONE IEEE division, instead of an association-order-dependent sum of
-# 1/d doubles.
+# Harmonic centrality sums exact integer weights 12/d for hop distances
+# 1..4 (12 = lcm(1..4)): Σ (12/d) / 12 is a BIGINT numerator and ONE
+# IEEE division, instead of an association-order-dependent sum of 1/d
+# doubles.
 _HARMONIC_MAX_HOPS = 4
-_HARMONIC_WEIGHTS = {1: 12, 2: 6, 3: 4, 4: 3}
 
 
-def multi_source_hops(
-    edges: DataFrame, max_hops: int = _HARMONIC_MAX_HOPS
-) -> DataFrame:
-    """All-pairs hop distances within ``max_hops``: the bfs_hops relax
-    loop keyed by (source, node) — every node is its own 0-hop seed,
-    so ONE fixed chain of |rounds| join+min passes replaces |V|
-    separate traversals. Returns (source, node, hops), self rows
-    included at 0.
-
-    Scale shape: the per-round shuffle is O(|E| · avg frontier), keyed
-    on node ids; state is the (source, node) distance table — the
-    quadratic all-pairs table only materializes to the extent the
-    graph is actually connected within the budget, and the operator is
-    meant for node-bounded graphs (regions, clusters), not raw-entity
-    graphs."""
-    edges = edges.localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .select(F.col("node").cast("int").alias("node"))
-    )
-    dist = nodes.select(
-        F.col("node").alias("source"), "node"
-    ).withColumn("hops", F.lit(0))
-    for _ in range(max_hops):
-        cand = edges.join(
-            dist.withColumnRenamed("node", "src"), "src"
-        ).select(
-            "source",
-            F.col("dst").cast("int").alias("node"),
-            (F.col("hops") + 1).alias("hops"),
-        )
-        dist = (
-            dist.unionByName(cand)
-            .groupBy("source", "node")
-            .agg(F.min("hops").alias("hops"))
-            .localCheckpoint(eager=False)
-        )
-    return dist
-
-
-def harmonic_centrality(
-    edges: DataFrame, max_hops: int = _HARMONIC_MAX_HOPS
-) -> DataFrame:
-    """Harmonic centrality H(v) = Σ_{u≠v reached} 1/d(u→v) within the
-    fixed hop budget — the centrality that handles disconnection
-    gracefully (unreached pairs contribute 0, no ∞ bookkeeping).
-    Exact form: integer weights 12/d summed as BIGINT, one final
-    division by 12. Returns (node, n_reached, harmonic)."""
-    if max_hops != _HARMONIC_MAX_HOPS:
-        raise ValueError("exact weights are precomputed for max_hops=4")
-    d = multi_source_hops(edges, max_hops).filter(F.col("hops") > 0)
-    w = F.col("hops")
-    weight = (
-        F.when(w == 1, F.lit(12))
-        .when(w == 2, F.lit(6))
-        .when(w == 3, F.lit(4))
-        .otherwise(F.lit(3))
-        .cast("bigint")
-    )
-    return d.groupBy("node").agg(
-        F.count("*").alias("n_reached"),
-        (F.sum(weight).cast("double") / F.lit(12.0)).alias("harmonic"),
-    )
-
-
-def harmonic_oracle_sql(
-    graph_cte: str, max_hops: int = _HARMONIC_MAX_HOPS
-) -> str:
-    """Unrolled multi-source twin over ``graph(src, dst)`` +the exact
-    integer-weight harmonic aggregation."""
-    assert max_hops == _HARMONIC_MAX_HOPS
+def _multi_source_sql(graph_cte: str, max_hops: int) -> str:
+    """The all-pairs relax chain over ``graph(src, dst)``: every node
+    is its own 0-hop seed, and ``m{max_hops}`` holds (source, node,
+    hops) for every pair within the budget, self rows at 0."""
     parts = [
         graph_cte,
         """
@@ -227,10 +117,17 @@ def harmonic_oracle_sql(
           ) GROUP BY source, node
         )"""
         )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
+    return "WITH " + ",".join(parts)
+
+
+def harmonic_oracle_sql(
+    graph_cte: str, max_hops: int = _HARMONIC_MAX_HOPS
+) -> str:
+    """DuckDB twin of ``graph_bounded.harmonic_fold``: H(v) =
+    Σ_{u≠v reached} 1/d(u→v) within the hop budget, as the exact
+    integer-weight aggregation. Returns (node, n_reached, harmonic)."""
+    assert max_hops == _HARMONIC_MAX_HOPS
+    return _multi_source_sql(graph_cte, max_hops) + f"""
         SELECT CAST(node AS INTEGER) AS node,
                count(*) AS n_reached,
                CAST(sum(CASE hops WHEN 1 THEN 12 WHEN 2 THEN 6
@@ -240,65 +137,16 @@ def harmonic_oracle_sql(
         WHERE hops > 0
         GROUP BY node
         """
-    )
-
-
-def closeness_centrality(
-    edges: DataFrame, max_hops: int = _HARMONIC_MAX_HOPS
-) -> DataFrame:
-    """Closeness centrality within the fixed hop budget, exact-integer
-    form: C(v) = n_reached / Σ d(u→v) over pairs reached within
-    ``max_hops`` (the bounded-horizon closeness that, like harmonic,
-    needs no ∞ bookkeeping on disconnected graphs). n_reached and the
-    distance sum are exact BIGINTs off the same multi-source relax
-    table harmonic centrality uses; the single final division is the
-    only float op, so both engines produce identical doubles. Returns
-    (node, n_reached, total_hops, closeness)."""
-    d = multi_source_hops(edges, max_hops).filter(F.col("hops") > 0)
-    return d.groupBy("node").agg(
-        F.count("*").alias("n_reached"),
-        F.sum("hops").cast("bigint").alias("total_hops"),
-        (
-            F.count("*").cast("double")
-            / F.sum("hops").cast("double")
-        ).alias("closeness"),
-    )
 
 
 def closeness_oracle_sql(
     graph_cte: str, max_hops: int = _HARMONIC_MAX_HOPS
 ) -> str:
-    """Unrolled multi-source twin of :func:`closeness_centrality` —
-    the harmonic CTE chain with the closeness aggregation."""
-    parts = [
-        graph_cte,
-        """
-        m0 AS MATERIALIZED (
-          SELECT CAST(n AS INTEGER) AS source, CAST(n AS INTEGER) AS node,
-                 0 AS hops
-          FROM (
-            SELECT DISTINCT src AS n FROM graph
-            UNION SELECT dst FROM graph
-          )
-        )""",
-    ]
-    for r in range(1, max_hops + 1):
-        parts.append(
-            f"""
-        m{r} AS MATERIALIZED (
-          SELECT source, node, min(hops) AS hops FROM (
-            SELECT source, node, hops FROM m{r - 1}
-            UNION ALL
-            SELECT d.source, CAST(e.dst AS INTEGER) AS node,
-                   d.hops + 1 AS hops
-            FROM graph e JOIN m{r - 1} d ON e.src = d.node
-          ) GROUP BY source, node
-        )"""
-        )
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
+    """DuckDB twin of ``graph_bounded.closeness_fold``: C(v) =
+    n_reached / Σ d(u→v) over pairs reached within ``max_hops``, with
+    exact BIGINT count and distance sum and one final division.
+    Returns (node, n_reached, total_hops, closeness)."""
+    return _multi_source_sql(graph_cte, max_hops) + f"""
         SELECT CAST(node AS INTEGER) AS node,
                count(*) AS n_reached,
                CAST(sum(hops) AS BIGINT) AS total_hops,
@@ -308,4 +156,3 @@ def closeness_oracle_sql(
         WHERE hops > 0
         GROUP BY node
         """
-    )

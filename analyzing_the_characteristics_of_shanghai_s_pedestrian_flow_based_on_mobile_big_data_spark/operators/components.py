@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph_bounded import collect_edges_bounded
+
 
 class ConvergenceError(RuntimeError):
     """Label propagation exhausted max_iterations before converging."""
@@ -468,23 +470,21 @@ def connected_components_bounded(
 
     Raises when more than ``bound`` pair rows arrive — the caller's
     domain-size argument was wrong, and silently collecting an
-    unbounded table is exactly the driver-OOM class this repo bans.
+    unbounded table is exactly the driver-OOM class this repo bans —
+    and when a pair key is NULL (both through
+    ``graph_bounded.collect_edges_bounded``; use
+    :func:`connected_components` for an unbounded domain).
     """
     spark = pairs.sparkSession
-    rows = (
+    rows = collect_edges_bounded(
         pairs.select(
-            F.col(a_col).cast("long").alias("a"),
-            F.col(b_col).cast("long").alias("b"),
-        )
-        .limit(int(bound) + 1)
-        .collect()
+            F.col(a_col).cast("long").alias(a_col),
+            F.col(b_col).cast("long").alias(b_col),
+        ),
+        bound,
+        a_col,
+        b_col,
     )
-    if len(rows) > bound:
-        raise ValueError(
-            f"connected_components_bounded: pair table exceeds the "
-            f"declared domain bound ({bound} rows) — the domain is not "
-            "bounded; use connected_components"
-        )
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -495,8 +495,7 @@ def connected_components_bounded(
             parent[x], x = root, parent[x]
         return root
 
-    for r in rows:
-        a, b = r["a"], r["b"]
+    for a, b in rows:
         if a not in parent:
             parent[a] = a
         if b not in parent:

@@ -1,26 +1,29 @@
-"""Bounded-domain graph folds — the region-graph family at 100 TB.
+"""Bounded-domain graph folds — the only implementation of the
+region-graph family.
 
 The OD region graph has ≤ N_REGIONS+1 nodes BY CONSTRUCTION (region
 ids are a pmod of the event value plus the gap-fill sentinel 0 — a
-query parameter, not a data property), so after the data-scale OD aggregation the graph itself is
-metadata: ≤ N² edge rows regardless of corpus size. Round 16 (guide
-§8 "decide with small rows", and the kmeans_fit / IVF-codebook
-bounded-driver-fetch budget class this repo already uses): the
+query parameter, not a data property), so after the data-scale OD
+aggregation the graph itself is metadata: ≤ (N_REGIONS+1)² edge rows
+regardless of corpus size (guide §8 "decide with small rows", the
+kmeans_fit / IVF-codebook bounded-driver-fetch budget class). The
 iterative graph algorithms — PageRank, BFS/closeness/harmonic, HITS,
-k-core peeling, label propagation — fold those ≤400 rows on the
-driver instead of paying 3–10 distributed join+aggregate rounds with
-a barrier each over what is a codebook-sized table. The data-scale
-work (events → OD counts → edge weights) stays in Spark; the collect
-is bounded AND ENFORCED (limit(bound+1) + raise, never assumed).
+k-core peeling, label propagation — therefore fold those rows on the
+driver. A graph that is bounded by construction cannot outgrow one
+machine, so there is no distributed copy. The data-scale work
+(events → OD counts → edge weights, top-k sparsification,
+symmetrization) stays in Spark; the collect is bounded AND ENFORCED
+(:func:`collect_edges_bounded`, never assumed).
 
-Exactness: every fold mirrors its distributed twin's arithmetic
-step for step — the same shortest-repr double→DECIMAL quantization
-(Spark casts double→decimal via Double.toString + HALF_UP; Python's
-``repr`` is the same shortest round-trip repr), exact Decimal
-products/sums, correctly-rounded decimal→double, and the identical
-IEEE floor-round epilogues — so results are bit-identical to the
-unrolled DuckDB oracle twins, which are unchanged and verify this on
-every run. Integer algorithms (BFS, k-core, LPA) are trivially
+Exactness: every fold mirrors its unrolled DuckDB twin (the
+``*_oracle_sql`` generators in pagerank.py, hits.py, bfs.py,
+kcore.py and labelprop.py) step for step — the same shortest-repr
+double→DECIMAL quantization (DuckDB's nearest-decimal cast and
+Python's ``repr`` agree on the ≤12-digit decimals these doubles
+hold), exact Decimal products/sums, correctly-rounded
+decimal→double, and the identical IEEE floor-round epilogues — so
+results are bit-identical to the twins, which verify this on every
+oracle run. Integer algorithms (BFS, k-core, LPA) are trivially
 exact.
 """
 
@@ -30,29 +33,36 @@ from decimal import ROUND_HALF_UP, Decimal, localcontext
 from math import floor
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _Q12 = Decimal("1E-12")
 
 
 def collect_edges_bounded(df: DataFrame, bound: int, *cols: str) -> list:
     """Collect ``cols`` of ``df`` with the row count enforced ≤
-    ``bound`` (the connected_components_bounded contract): the caller
-    asserts a domain-size argument, and a wrong argument raises
-    instead of silently pulling an unbounded table to the driver."""
+    ``bound``: the caller asserts a domain-size argument, and a wrong
+    argument raises instead of silently pulling an unbounded table to
+    the driver. A NULL in any of ``cols`` raises too, naming the
+    column — a graph key is never NULL, and the folds would otherwise
+    fail later with a ``TypeError`` in a sort or a union-find."""
     rows = df.select(*cols).limit(int(bound) + 1).collect()
     if len(rows) > bound:
         raise ValueError(
             f"collect_edges_bounded: table exceeds the declared domain "
-            f"bound ({bound} rows) — the domain is not bounded; keep "
-            "the distributed operator"
+            f"bound ({bound} rows) — the domain is not bounded"
         )
+    for i, col in enumerate(cols):
+        if any(r[i] is None for r in rows):
+            raise ValueError(
+                f"collect_edges_bounded: column {col!r} holds NULL — "
+                "graph keys and weights must be non-NULL"
+            )
     return rows
 
 
 def _dec12(x: float) -> Decimal:
-    """Mirror Spark's cast(double as decimal(*,12)): shortest-repr
-    string, then HALF_UP quantize at 12 dp."""
+    """Mirror the twins' CAST(double AS DECIMAL(*,12)): shortest-repr
+    string, then HALF_UP quantize at 12 dp (exact for the ≤12-digit
+    decimals the rounded weights and ranks hold)."""
     return Decimal(repr(float(x))).quantize(_Q12, rounding=ROUND_HALF_UP)
 
 
@@ -62,9 +72,10 @@ def pagerank_fold(
     damping: float = 0.85,
     round_scale: int = 9,
 ) -> list[tuple[int, float]]:
-    """Driver twin of operators.pagerank.pagerank over a collected
-    (src, dst, w) edge list: dangling self-loops, decimal-exact
-    contribution sums, identical IEEE floor-round epilogue."""
+    """Damped PageRank over a collected (src, dst, w) edge list
+    (per-src weights from ``pagerank.normalized_edges``): dangling
+    self-loops, decimal-exact contribution sums, identical IEEE
+    floor-round epilogue to ``pagerank.pagerank_oracle_sql``."""
     nodes = sorted({s for s, _, _ in edges} | {d for _, d, _ in edges})
     srcs = {s for s, _, _ in edges}
     aug = list(edges) + [(n, n, 1.0) for n in nodes if n not in srcs]
@@ -97,8 +108,10 @@ def pagerank_fold(
 def bfs_hops_fold(
     edges: list[tuple[int, int]], source: int, max_hops: int = 6
 ) -> list[tuple[int, int]]:
-    """Driver twin of operators.bfs.bfs_hops: hop distance from
-    ``source``, radius ≤ max_hops; absent source → empty."""
+    """Hop distance from ``source`` over the directed (src, dst)
+    edges, radius ≤ max_hops; nodes not reached within the budget are
+    absent, and an absent source yields an empty result. Twin:
+    ``bfs.bfs_oracle_sql``."""
     nodes = {s for s, _ in edges} | {d for _, d in edges}
     if source not in nodes:
         return []
@@ -121,8 +134,9 @@ def bfs_hops_fold(
 def multi_source_hops_fold(
     edges: list[tuple[int, int]], max_hops: int = 4
 ) -> dict[tuple[int, int], int]:
-    """Driver twin of operators.bfs.multi_source_hops: (source, node)
-    → hops for every pair within the budget, self rows at 0."""
+    """All-pairs hop table: (source, node) → hops for every pair
+    within the budget, self rows at 0 (the ``m`` chain of
+    ``bfs._multi_source_sql``)."""
     nodes = sorted({s for s, _ in edges} | {d for _, d in edges})
     out: dict[int, list[int]] = {}
     for s, d in edges:
@@ -150,8 +164,9 @@ _HARMONIC_WEIGHTS = {1: 12, 2: 6, 3: 4, 4: 3}
 def harmonic_fold(
     edges: list[tuple[int, int]], max_hops: int = 4
 ) -> list[tuple[int, int, float]]:
-    """Driver twin of operators.bfs.harmonic_centrality: integer
-    twelfths summed exactly, one closing IEEE division."""
+    """Harmonic centrality (node, n_reached, harmonic) within the hop
+    budget: integer twelfths summed exactly, one closing IEEE
+    division. Twin: ``bfs.harmonic_oracle_sql``."""
     if max_hops != 4:
         raise ValueError("exact weights are precomputed for max_hops=4")
     dist = multi_source_hops_fold(edges, max_hops)
@@ -168,8 +183,9 @@ def harmonic_fold(
 def closeness_fold(
     edges: list[tuple[int, int]], max_hops: int = 4
 ) -> list[tuple[int, int, int, float]]:
-    """Driver twin of operators.bfs.closeness_centrality:
-    (node, n_reached, total_hops, n_reached/total_hops)."""
+    """Closeness centrality within the hop budget:
+    (node, n_reached, total_hops, n_reached/total_hops). Twin:
+    ``bfs.closeness_oracle_sql``."""
     dist = multi_source_hops_fold(edges, max_hops)
     agg: dict[int, tuple[int, int]] = {}
     for (_, v), h in dist.items():
@@ -187,8 +203,10 @@ def hits_fold(
     iterations: int = 5,
     round_scale: int = 9,
 ) -> list[tuple[int, float, float]]:
-    """Driver twin of operators.hits.hits: decimal(38,12) sums,
-    max-normalized, 9-dp floor-rounded per half-round."""
+    """(node, hub, authority) over the directed simple (src, dst)
+    graph after exactly ``iterations`` alternations from hub = 1.0:
+    decimal(38,12) sums, max-normalized, 9-dp floor-rounded per
+    half-round. Twin: ``hits.hits_oracle_sql``."""
     es = sorted({(s, d) for s, d in edges if s != d})
     nodes = sorted({s for s, _ in es} | {d for _, d in es})
     scale = float(10**round_scale)
@@ -224,8 +242,9 @@ def hits_fold(
 def k_core_fold(
     edges: list[tuple[int, int]], k: int, rounds: int = 6
 ) -> list[tuple[int, int]]:
-    """Driver twin of operators.kcore.k_core over the pre-symmetrized
-    (src, dst) edge list: fixed peel rounds, then (node, deg ≥ k)."""
+    """k-core over the pre-symmetrized (src, dst) edge list (both
+    orientations present): fixed peel rounds, then (node, deg ≥ k).
+    Twin: ``kcore.k_core_oracle_sql``."""
     live = list(edges)
     for _ in range(rounds):
         deg: dict[int, int] = {}
@@ -242,10 +261,11 @@ def k_core_fold(
 def label_propagation_fold(
     und_edges: list[tuple[int, int, int]], rounds: int = 4
 ) -> list[tuple[int, int]]:
-    """Driver twin of operators.labelprop.label_propagation, fed the
-    ALREADY-undirected (u, v, w) simple weighted edges (the Spark-side
-    ``undirected_weighted_edges`` aggregate stays distributed):
-    synchronous updates, (score desc, label asc) tie-break."""
+    """(node, community) after ``rounds`` synchronous weighted-LPA
+    updates, fed the ALREADY-undirected (u, v, w) simple weighted
+    edges (the Spark-side ``labelprop.undirected_weighted_edges``
+    aggregate stays distributed): (score desc, label asc) tie-break.
+    Twin: ``labelprop.lpa_oracle_sql``."""
     nbr: list[tuple[int, int, int]] = []
     for u, v, w in und_edges:
         nbr.append((u, v, w))

@@ -1,16 +1,15 @@
-"""HITS hubs & authorities — fixed-round mutual reinforcement.
+"""HITS hubs & authorities over the OD region graph — the DuckDB twin.
 
 PageRank's classic sibling: authority(v) = Σ_{u→v} hub(u),
-hub(u) = Σ_{u→v} authority(v), alternated. Where PageRank scores a
-node's stationary visit probability, HITS separates "pointed to by
-good hubs" from "points at good authorities" — on an OD graph:
-regions people flow INTO (authorities — destinations) vs regions that
-FEED many authorities (hubs — origins).
+hub(u) = Σ_{u→v} authority(v), alternated from hub = 1.0. Where
+PageRank scores a node's stationary visit probability, HITS separates
+"pointed to by good hubs" from "points at good authorities" — on an
+OD graph: regions people flow INTO (authorities — destinations) vs
+regions that FEED many authorities (hubs — origins).
 
-Physical shape per round: two node-keyed join+aggregate passes over
-the checkpointed edge list (one per direction) — map-combinable sums,
-payload O(|E|). Fixed ``iterations`` rounds → a static plan chain
-with a full unrolled DuckDB twin (the pagerank.py contract).
+The rounds run on the driver (``graph_bounded.hits_fold``) over the
+bounded region graph; :func:`hits_oracle_sql` is the unrolled DuckDB
+twin the fold is checked against.
 
 Cross-engine exactness: scores go through DECIMAL sums
 (association-order independent), are normalized by the MAX score each
@@ -24,103 +23,6 @@ extensions).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-_DEC = "decimal(38,12)"
-
-
-def _norm_round(scores: DataFrame, col: str, scale: float) -> DataFrame:
-    """Divide by the max score and floor-round at 1/scale.
-
-    ``scores`` must already be checkpointed (eager or lazy): the max
-    is ONE scalar read (a bounded driver fetch, the kmeans collect
-    budget class) embedded as a literal, and the normalization is a
-    lazy pure map over the same checkpoint. With a LAZY checkpoint the
-    per-checkpoint count job is skipped and this max read is the first
-    action against it; note that under AQE (on here) the checkpointed
-    plan's shuffle stages execute at checkpoint construction either
-    way, so the saving is the skipped count job, not a fusion of the
-    round's work into the max. (First cut used an in-plan 1-row-agg
-    crossJoin: 7.4 s at sf0.1; second cut collected the max from
-    UNcheckpointed lineage, recomputing every half-round twice: 4.6 s;
-    eager checkpoint + separate max job: ~2.5 s; lazy checkpoint: the
-    round-6 job-overhead cut.)"""
-    mx = scores.agg(F.max(col)).collect()[0][0] or 1.0
-    return scores.select(
-        "node",
-        (
-            F.floor(
-                F.col(col) / F.lit(float(mx)) * F.lit(scale) + F.lit(0.5)
-            )
-            / F.lit(scale)
-        ).alias(col),
-    )
-
-
-def hits(
-    edges: DataFrame, iterations: int = 5, round_scale: int = 9
-) -> DataFrame:
-    """(node, hub, authority) over the directed simple (src, dst)
-    graph after exactly ``iterations`` alternations, init all-1.0.
-    Nodes appear if they touch any edge; a node with no in-edges has
-    authority 0.0, no out-edges hub 0.0."""
-    edges = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    scale = float(10**round_scale)
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    for i in range(iterations):
-        auth_raw = (
-            edges.join(
-                hub.select(F.col("node").alias("src"), "hub"), "src"
-            )
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("hub").cast(_DEC)).cast("double").alias("authority"))
-        )
-        auth_full = (
-            nodes.join(auth_raw, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("authority"), F.lit(0.0)).alias(
-                    "authority"
-                ),
-            )
-            .localCheckpoint(eager=False)
-        )
-        auth = _norm_round(auth_full, "authority", scale)
-        hub_raw = (
-            edges.join(
-                auth.select(F.col("node").alias("dst"), "authority"),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("node"))
-            .agg(
-                F.sum(F.col("authority").cast(_DEC)).cast("double").alias("hub")
-            )
-        )
-        hub_full = (
-            nodes.join(hub_raw, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        hub = _norm_round(hub_full, "hub", scale)
-    return nodes.join(hub, "node").join(auth, "node").select(
-        "node", "hub", "authority"
-    )
 
 
 def hits_oracle_sql(

@@ -1,23 +1,19 @@
 """k-core decomposition — fixed-round peeling.
 
-The degeneracy-based community/cohesion primitive that rounds out the
-graph family (components, PageRank, LPA, triangles, BFS): the k-core
-is the maximal induced subgraph where every node keeps degree ≥ k.
-Computed by PEELING — simultaneously drop all nodes with current
-degree < k, recompute degrees on the induced subgraph, repeat. With a
-FIXED round budget the plan is a static chain (the bfs.py/pagerank.py
-contract), so it carries a full unrolled DuckDB twin under the
-value-hash gate; the budget is part of the query contract and peeling
+The k-core is the maximal induced subgraph where every node keeps
+degree ≥ k. It is computed by PEELING: drop all nodes with current
+degree < k at once, recompute degrees on the induced subgraph,
+repeat. The budget is part of the query contract, and peeling
 converges when a round removes nobody (monotone: the alive set only
 shrinks, so ``rounds ≥ longest peel chain`` gives the exact k-core —
-6 covers any 20-node graph's chains at k=4, asserted converged in
+6 covers the paired query's graph at k=4, asserted converged in
 tests).
 
-Scale shape per round: one degree aggregate (map-side combinable,
-keyed on node) + two semi-joins filtering the edge list to alive
-endpoints — all node-keyed hash exchanges, payload O(|E alive|),
-shrinking monotonically. Edges checkpointed once, the alive set per
-round (lineage truncation).
+The rounds run on the driver (``graph_bounded.k_core_fold``) because
+the region graph has at most (N_REGIONS+1)² edges by construction.
+This module keeps the data-scale Spark step (:func:`symmetrize`) and
+the unrolled DuckDB twin (:func:`k_core_oracle_sql`) the fold is
+checked against.
 
 No counterpart in the reference — engine breadth (SURVEY.md §2
 extensions).
@@ -37,33 +33,6 @@ def symmetrize(edges: DataFrame) -> DataFrame:
         F.col("dst").alias("src"), F.col("src").alias("dst")
     )
     return fwd.unionByName(rev).distinct()
-
-
-def k_core(edges: DataFrame, k: int, rounds: int = 6) -> DataFrame:
-    """Nodes of the k-core of the undirected graph ``edges``
-    (pre-symmetrized (src, dst), both orientations present) with
-    their core-subgraph degree: (node, deg). Peels for exactly
-    ``rounds`` rounds."""
-    live = edges.localCheckpoint(eager=False)
-    for _ in range(rounds):
-        deg = live.groupBy("src").agg(F.count("*").alias("deg"))
-        alive = deg.filter(F.col("deg") >= k).select(
-            F.col("src").alias("node")
-        )
-        live = (
-            live.join(
-                alive.select(F.col("node").alias("src")), "src", "semi"
-            )
-            .join(
-                alive.select(F.col("node").alias("dst")), "dst", "semi"
-            )
-            .localCheckpoint(eager=False)
-        )
-    return (
-        live.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").alias("deg"))
-        .filter(F.col("deg") >= k)
-    )
 
 
 def k_core_oracle_sql(graph_cte: str, k: int, rounds: int = 6) -> str:

@@ -1,14 +1,9 @@
 """Community detection — synchronous weighted label propagation (LPA).
 
-Completes the graph-analytics family (components = connectivity,
-PageRank = centrality, triangles = local density) with mesoscale
-structure: which groups of OD regions exchange more flow internally
-than externally. LPA is the standard scalable community algorithm —
-no objective function to optimize, just local label agreement — and
-its synchronous, deterministically tie-broken variant is expressible
-as a fixed chain of joins + aggregates, so (like PageRank, unlike
-components' data-dependent loop) it carries a full unrolled DuckDB
-twin under the value-hash gate.
+Mesoscale structure of the OD region graph: which groups of regions
+exchange more flow internally than externally. LPA is the standard
+scalable community algorithm — no objective function to optimize,
+just local label agreement.
 
 Update rule, per round, for every node v:
 
@@ -16,19 +11,16 @@ Update rule, per round, for every node v:
                label(u) = ℓ;   ties → smallest ℓ;   isolated nodes
                keep their label.
 
-Determinism: integer edge weights, total (score desc, label asc)
-order via row_number. Synchronous update (all nodes flip together
-from the previous round's labels) — the asynchronous variant is
-order-dependent and cannot be oracle-checked.
+Determinism: integer edge weights and a total (score desc, label asc)
+order. Synchronous update (all nodes flip together from the previous
+round's labels) — the asynchronous variant is order-dependent and
+cannot be oracle-checked.
 
-Scale shape: each round is ONE hash join (directed-edge table ⋈
-labels on src) + ONE map-side-combinable aggregate (dst, label) +
-ONE users-sized window — all keyed on node ids, AQE-skew-safe. The
-edge table is eager-localCheckpointed once up front and labels are
-checkpointed per round (the components.py / pagerank.py lineage
-lesson: without truncation round k re-derives the whole upstream
-pipeline k times). Fixed round count keeps the plan static; LPA
-empirically stabilizes in ≤5 rounds on most graphs.
+The rounds run on the driver (``graph_bounded.label_propagation_fold``)
+because the region graph has at most (N_REGIONS+1)² edges by
+construction. This module keeps the data-scale Spark step
+(:func:`undirected_weighted_edges`) and the unrolled DuckDB twin
+(:func:`lpa_oracle_sql`) the fold is checked against.
 
 No counterpart in the reference (no graph code there) — engine
 breadth, SURVEY.md §2 extensions.
@@ -36,7 +28,7 @@ breadth, SURVEY.md §2 extensions.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -53,56 +45,6 @@ def undirected_weighted_edges(edges: DataFrame) -> DataFrame:
         .groupBy("u", "v")
         .agg(F.sum("w").alias("w"))
     )
-
-
-def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
-    """Run ``rounds`` synchronous weighted-LPA updates over the
-    undirected simplification of ``edges`` (src, dst, w — integer
-    weights). Returns (node, community) where community is the final
-    label (labels are initialized to the node id, so a community id is
-    the id of one of its members)."""
-    und = undirected_weighted_edges(edges)
-    # both directions once, so each round is a single src-keyed join
-    nbr = (
-        und.select(
-            F.col("u").alias("src"), F.col("v").alias("dst"), "w"
-        )
-        .unionByName(
-            und.select(
-                F.col("v").alias("src"), F.col("u").alias("dst"), "w"
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
-    nodes = nbr.select(F.col("src").alias("node")).distinct()
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
-        eager=False
-    )
-    rank_w = Window.partitionBy("dst").orderBy(
-        F.col("score").desc(), F.col("label").asc()
-    )
-    for _ in range(rounds):
-        scores = (
-            nbr.join(labels.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst", "label")
-            .agg(F.sum("w").alias("score"))
-        )
-        winner = (
-            scores.withColumn("rn", F.row_number().over(rank_w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("dst").alias("node"), "label")
-        )
-        # isolated nodes (none here once self-loops are dropped from a
-        # connected OD graph, but contractually): keep current label
-        labels = (
-            labels.select("node", F.col("label").alias("__old"))
-            .join(winner, "node", "left")
-            .select(
-                "node", F.coalesce("label", "__old").alias("label")
-            )
-            .localCheckpoint(eager=False)
-        )
-    return labels.select("node", F.col("label").alias("community"))
 
 
 def lpa_oracle_sql(graph_cte: str, rounds: int = 4) -> str:

@@ -5,8 +5,8 @@ The reference assembles hour-keyed scipy CSR matrices on the driver
 collect → numpy). That caps the product at what fits in one python
 process. Here the OD matrix *is* a DataFrame ``(hour, orig, dest, cnt)``
 — it distributes, joins, and incrementally updates like any other
-table; densifying to scipy is an edge adapter for the epidemic-sim
-consumer, run only at the final (tiny: regions²) size.
+table; :func:`to_wide` is the edge adapter to the reference's wide
+export shape, run only at the final (tiny: regions²) size.
 """
 
 from __future__ import annotations
@@ -51,17 +51,4 @@ def to_wide(od: DataFrame, dest_ids: list[int]) -> DataFrame:
         .pivot("dest", dest_ids)
         .sum("cnt")
         .na.fill(0)
-    )
-
-
-def to_scipy_csr(od_pdf, n_regions: int):
-    """Edge adapter: one hour's long-form OD rows (pandas) → scipy CSR,
-    the exact product the SIAR simulation consumes
-    (cal_mobility_matrix.py:177-185). Driver-side by design — only ever
-    called on a single hour's (n_regions²-bounded) slice."""
-    from scipy.sparse import csr_matrix  # lazy: scipy optional
-
-    return csr_matrix(
-        (od_pdf["cnt"], (od_pdf["orig"], od_pdf["dest"])),
-        shape=(n_regions, n_regions),
     )

@@ -1,53 +1,42 @@
-"""PageRank — fixed-iteration power method over a weighted digraph.
+"""PageRank over the OD region graph — Spark prep and the DuckDB twin.
 
-The iterative-algorithm class beyond connected components
-(components.py): rank flows along out-edge weights with damped
-teleport. Applied here to the OD region graph (which regions anchor
-the city's movement), but the operator is graph-generic.
+The power iteration itself runs on the driver
+(``graph_bounded.pagerank_fold``): the region graph has at most
+(N_REGIONS+1)² edges by construction, so ten rounds over it are
+metadata work. This module keeps the two pieces around that fold:
 
-Spark-first shape per iteration: one hash join (edges ⋈ ranks on src,
-rank side is node-cardinality — broadcast for dimension-sized graphs,
-shuffle-on-node for web-scale ones) + one map-combined aggregation to
-dst + a left join back to the node set for rankless nodes. The
-iteration count is FIXED (power method converges geometrically at
-rate=damping; 10 rounds ≈ 0.85^10 ≈ 0.2 residual on adversarial
-graphs, far tighter on real OD mixes), so the whole computation is a
-static plan chain — no data-dependent convergence test, which keeps
-the operator expressible as a deterministic unrolled-CTE SQL twin and
-spares the per-round driver barrier components.py needs.
+- :func:`normalized_edges` — the data-scale Spark step that turns
+  (src, dst, cnt) multigraph counts into per-src weights;
+- :func:`pagerank_oracle_sql` — the unrolled-CTE DuckDB twin the fold
+  is checked against.
+
+Rank rule, ``s`` = ``round_scale`` (9), ``d`` = damping:
+
+    rank⁰(v) = floor((1/N)·10ˢ + ½)/10ˢ;
+    rankⁱ⁺¹(v) = floor(((1-d)/N + d·Σ_{(u,v)∈E} w(u,v)·rankⁱ(u))·10ˢ + ½)/10ˢ.
 
 Dangling nodes (no out-edges) get a self-loop of weight 1 — the
-standard sink fix, done in-plan (no scalar side-channel), so total
-rank mass is conserved without a per-iteration global aggregate.
+standard sink fix — so total rank mass is conserved. The iteration
+count is fixed (the power method converges geometrically at
+rate=damping), so the twin is a static CTE chain.
 
 Cross-engine determinism: the contribution arithmetic never multiplies
 raw doubles — weights are rounded to 12 decimals and ranks to
-``round_scale`` (9) decimals, so casting each to DECIMAL(18,12)
-recovers the *identical* decimal value on both engines (a double
-holding a ≤12-digit decimal converts exactly under both Java's
-shortest-repr cast and DuckDB's nearest-decimal cast; an arbitrary
-double does NOT — the two engines disagree in the 17th digit, which
-is why the raw-product formulation was rejected). The decimal×decimal
+``round_scale`` decimals, so casting each to DECIMAL(18,12) recovers
+the *identical* decimal value in DuckDB and in the fold (a double
+holding a ≤12-digit decimal converts exactly under a shortest-repr
+cast and under DuckDB's nearest-decimal cast; an arbitrary double does
+NOT — the engines disagree in the 17th digit). The decimal×decimal
 product and its per-dst sum are then exact and association-order
 independent; one correctly-rounded decimal→double cast, an IEEE
 teleport division, and a 9-dp round re-synchronize representations
 every iteration.
-
-At cluster scale: ``checkpoint_every`` truncates plan lineage (the
-same localCheckpoint cadence components.py uses) — without it a
-30-iteration chain re-derives every prior join on each action. All
-checkpoints are lazy (eager=False): logical truncation is what fixes
-Catalyst re-analysis, and with no data-dependent exit the whole loop
-can materialize in the one final action instead of one job per
-checkpoint.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_DEC = "decimal(18,12)"
 
 
 def normalized_edges(
@@ -83,123 +72,25 @@ def normalized_edges(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 10,
-    damping: float = 0.85,
-    round_scale: int = 9,
-    checkpoint_every: int | None = 3,
-) -> DataFrame:
-    """Rank every node of the weighted digraph ``edges`` (src, dst, w;
-    per-src weights sum to 1). Returns (node, rank) after exactly
-    ``iterations`` damped power-method rounds.
-
-    rank⁰(v) = floor((1/N)·10ˢ + ½)/10ˢ;
-    rankⁱ⁺¹(v) = floor(((1-d)/N + d·Σ_{(u,v)∈E} w(u,v)·rankⁱ(u))·10ˢ + ½)/10ˢ.
-    """
-    # Checkpoint the graph tables ONCE before iterating: every
-    # iteration references nodes/aug/n_row, and without truncation each
-    # of the 10 rounds would re-derive the full upstream pipeline that
-    # produced the edges (measured 160 s → ~10 s on the OD graph).
-    # localCheckpoint, not persist: it also cuts the lineage the
-    # per-round plans would otherwise re-analyze. eager=False
-    # everywhere: the LogicalRDD truncation (the Catalyst-re-analysis
-    # fix) is identical, and the per-checkpoint count job is skipped —
-    # that skipped job is the whole saving. Under AQE (on in this
-    # session) the checkpointed plan's shuffle stages still execute at
-    # construction regardless of eager, so eager=False does NOT defer
-    # upstream work into the final action; each checkpointed table
-    # computes once either way (round-6 job-overhead cut).
-    edges = edges.localCheckpoint(eager=False)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # dangling sink fix: nodes with no out-edge self-loop at weight 1
-    dangling = nodes.join(
-        edges.select(F.col("src").alias("node")).distinct(), "node", "left_anti"
-    )
-    aug = edges.unionByName(
-        dangling.select(
-            F.col("node").alias("src"),
-            F.col("node").alias("dst"),
-            F.lit(1.0).alias("w"),
-        )
-    ).localCheckpoint(eager=False)
-    # N via a 1-row aggregate crossJoin — stays in-plan (no collect),
-    # broadcast by AQE; teleport/init are single IEEE divisions
-    n_row = nodes.agg(F.count("*").alias("__n")).localCheckpoint(eager=False)
-    # 1-d precomputed in Python so both engines embed the identical
-    # binary64 constant (1.0 - 0.85 != 0.15 in floating point)
-    tele = 1.0 - damping
-    ranks = nodes.crossJoin(n_row).select(
-        "node",
-        (
-            F.floor(
-                F.lit(1.0) / F.col("__n") * F.lit(float(10**round_scale))
-                + F.lit(0.5)
-            )
-            / F.lit(float(10**round_scale))
-        ).alias("rank"),
-    )
-    for i in range(iterations):
-        contrib = (
-            aug.join(ranks, aug["src"] == ranks["node"])
-            .groupBy("dst")
-            .agg(
-                F.sum(
-                    F.col("w").cast(_DEC) * F.col("rank").cast(_DEC)
-                ).alias("__acc")
-            )
-        )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .crossJoin(n_row)
-            .select(
-                "node",
-                (
-                    F.floor(
-                        (
-                            F.lit(tele) / F.col("__n")
-                            + F.lit(damping)
-                            * F.coalesce(
-                                F.col("__acc").cast("double"), F.lit(0.0)
-                            )
-                        )
-                        * F.lit(float(10**round_scale))
-                        + F.lit(0.5)
-                    )
-                    / F.lit(float(10**round_scale))
-                ).alias("rank"),
-            )
-        )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
-
-
 def pagerank_oracle_sql(
     edges_cte: str,
     iterations: int = 10,
     damping: float = 0.85,
     round_scale: int = 9,
 ) -> str:
-    """Generate the unrolled-CTE DuckDB twin of :func:`pagerank`.
+    """Generate the unrolled-CTE DuckDB twin of
+    ``graph_bounded.pagerank_fold``.
 
     ``edges_cte`` must define a CTE named ``graph`` with columns
     (src, dst, cnt). Aggregates are barred from recursive CTE members,
     so the fixed iteration count unrolls into ``iterations`` chained
-    plain CTEs — same decimal-sum + per-round rounding as the Spark
-    side.
+    plain CTEs — same decimal-sum + per-round rounding as the fold.
 
     The shared tables are AS MATERIALIZED: the r-chain is a
     single-reference chain, so DuckDB's optimizer would otherwise
     inline it end-to-end and re-evaluate nodes/aug/nn (and everything
     upstream of ``graph``) once per unrolled round — measured 50 s vs
-    sub-second on the OD graph. The same role localCheckpoint plays on
-    the Spark side."""
+    sub-second on the OD graph."""
     parts = [
         edges_cte,
         """

@@ -26,18 +26,14 @@ Design choices, all Spark-first:
   PQ approximation of BOTH dot and candidate norm, so the served
   index needs only (vec_id, codes) — the reconstructed norm is a
   code-determined constant folded at encode time.
-- **No residual encoding** in the DEFAULT IVF composition (codes
-  quantize the raw vector, not x − coarse_centroid): residuals buy
-  recall at the cost of coupling codes to the coarse assignment
-  (re-encoding on every recenter, m Lloyd chains per list in the
-  twin); the composition below keeps index maintenance Θ(delta).
-  Round 14 implemented the full residual family
-  (:func:`pq_residual_codebooks` / :func:`ivf_pq_topk_residual`) and
-  MEASURED it (SCALE_PROBE_r14 pq_residual): on this cosine-metric
-  unit-norm corpus with sampled global residual codebooks, residual
-  encoding LOSES to raw at every shortlist width — the raw default
-  stands on evidence, not simplification (see the residual section's
-  notes for the full numbers and why).
+- **No residual encoding** (codes quantize the raw vector, not
+  x − coarse_centroid): residuals couple codes to the coarse
+  assignment (re-encoding on every recenter, m Lloyd chains per list
+  in the twin), while raw codes keep index maintenance Θ(delta).
+  Round 14 measured three residual constructions (sampled global,
+  trained global and per-list Lloyd codebooks; SCALE_PROBE_r14
+  pq_residual): on this cosine-metric unit-norm corpus none beat raw
+  encoding's recall@3, and each lost to it at 32k rows.
 
 Engine parity: every distance/dot is a 0.0-seeded sequential left
 fold; the ADC sum folds subspaces in ascending-j order; codebook
@@ -597,536 +593,6 @@ def ivf_pq_topk(
     return _pq_ranked(pairs, k)
 
 
-# Residual encoding (round 14, VERDICT r13 #4) ---------------------------
-#
-# FAISS's IVFPQ default encodes the RESIDUAL x − c(x) rather than the
-# raw vector: residual mass is much smaller than vector mass, so the
-# same m·log2(ksub) bits quantize finer and ADC recall-per-byte rises.
-# The trade the non-residual docstring records still holds — codes
-# couple to the coarse assignment (a recenter forces re-encode) and
-# the scoring algebra grows a per-(centroid, code) term — so this
-# family lives alongside the raw path and SCALE_PROBE_r14's pq_residual
-# family measures whether the recall lift pays for it on this corpus.
-#
-# MEASURED ANSWER (SCALE_PROBE_r14.jsonl, pq_residual family — the
-# pq_topk_trained honest-negative precedent): residual encoding is
-# WORSE than raw on this corpus at every shortlist width — raw-ADC
-# recall@3 1.0 vs 0.73 at 8k rows, refined R=16 1.0 vs 0.93 at 32k,
-# refined R=4 0.53 vs 0.27 at 32k. The FAISS residual win assumes L2
-# assignment and PER-LIST Lloyd-trained residual codebooks; here
-# assignment is cosine on an already-unit-norm corpus and the residual
-# codebook is a GLOBAL md5-stratified sample, so a list's residual
-# distribution (tight noise=0.3 cluster around its centroid) is
-# quantized by other clusters' residual directions — cross-cluster
-# junk. ivf_pq_topk_refined therefore KEEPS raw encoding; the residual
-# family stays as the measured capability. FOLLOW-UP also measured:
-# TRAINING the global residual codebook (pq_residual_codebooks_trained,
-# 2 Lloyd rounds per subspace over the corpus residuals) narrows but
-# does not close the gap — ADC 0.87 vs sampled-res 0.73 vs raw 1.0 at
-# 8k; refined R=16 0.80 vs raw 1.0 at 32k (res_t_* probe rows). The
-# negative result now covers ALL THREE constructions: PER-LIST
-# residual books (pq_residual_codebooks_per_list — FAISS's actual
-# default, n_lists × m Lloyd chains, 55-69 s train at the probe
-# scales) recover raw's recall at 8k rows (ADC 1.0) but still LOSE at
-# 32k (ADC 0.2 vs raw 0.4; refined R=4 0.33 vs 0.53; R=16 both 1.0).
-# Interpretation: under cosine scoring on a unit-norm corpus the
-# probe-side dot(q, c) term dominates and within-list ordering rides
-# on the residual codes alone, where raw codes keep cross-list
-# resolution; as lists grow mixed (replicas of different seeds
-# sharing a list at 32k) residual quantization noise hurts the
-# ordering more than raw quantization noise. Raw encoding stays the
-# serving default — now against the strongest residual variant.
-#
-# Scoring algebra (cosine): the reconstruction is x̂ = c + r̂, so
-#   dot(q, x̂)  = dot(q, c) + Σ_j LUT_j[code_j]        (LUT on residual
-#                 codebooks — the same adc_lut_expr),
-#   ‖x̂‖²       = Σ_j ‖c_j + r̂_j‖²                      (block-diagonal),
-# with dot(q, c) computed once per PROBE row (nprobe per query) and
-# ‖c_j + cb_j[code]‖² a per-(centroid, subspace, code) constant folded
-# into literal tables at index build — the served row stays
-# (vec_id, centroid_id, codes, anorm), byte-identical width to the
-# raw-encode index.
-
-
-def _arr_sql(vec: list[float]) -> str:
-    return "array(" + ", ".join(f"{float(v)!r}D" for v in vec) + ")"
-
-
-def _py_assign_cosine(vec: list[float], coarse: list) -> int:
-    """Driver-side twin of ivf_assign's argmax (round-6 cosine via the
-    floor form, ties to the smallest centroid id) — used only to pick
-    the residual codebook sample's lists."""
-    import math
-
-    acc = 0.0
-    for x in vec:
-        acc += x * x
-    rn = math.sqrt(acc)
-    best = None
-    for cid, cvec in coarse:
-        a = 0.0
-        for v in cvec:
-            a += v * v
-        cn = math.sqrt(a)
-        dot = 0.0
-        for x, y in zip(cvec, vec):
-            dot += x * y
-        sim = math.floor(dot / (cn * rn) * 1e6 + 0.5) / 1e6
-        key = (sim, -int(cid))
-        if best is None or key > best[0]:
-            best = (key, int(cid))
-    return best[1]
-
-
-def pq_residual_codebooks(
-    emb: DataFrame,
-    coarse: list,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-) -> list[list[list[float]]]:
-    """Residual codebooks: ksub md5-stratified sample rows' residuals
-    vs their assigned coarse centroid, sliced per subspace — the same
-    deterministic sampling story as :func:`pq_codebooks`, on the
-    residual distribution the codes will actually quantize.
-
-    The sample EXCLUDES the coarse-centroid rows themselves: coarse
-    and codebook sampling share the md5 order, so the first ksub rows
-    ARE the centroids and their residuals are identically zero — an
-    all-zero codebook that maps every vector to code 0 (the bug the
-    first probe run caught: every candidate scored identically). The
-    sample is therefore the next ksub rows in md5 order after the
-    centroid ids."""
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    if not coarse:
-        return []
-    coarse_ids = {int(cid) for cid, _vec in coarse}
-    rows = [
-        (vid, vec)
-        for vid, vec in ivf_centroid_rows(emb, ksub + len(coarse_ids))
-        if int(vid) not in coarse_ids
-    ][:ksub]
-    if len(rows) < ksub:
-        return []  # corpus smaller than coarse+ksub: no usable sample
-    cents = {int(cid): [float(v) for v in vec] for cid, vec in coarse}
-    res_vecs = []
-    for _vid, vec in rows:
-        cid = _py_assign_cosine([float(v) for v in vec], coarse)
-        cvec = cents[cid]
-        res_vecs.append([float(a) - float(b) for a, b in zip(vec, cvec)])
-    return [
-        [list(rv[j * dsub : (j + 1) * dsub]) for rv in res_vecs]
-        for j in range(m)
-    ]
-
-
-def residual_expr(c_emb_col: str, coarse: list):
-    """x − c(x) as one CASE over the literal coarse centroids, keyed by
-    the row's centroid_id (centroid ids are sample vec_ids, not
-    positions, so element_at indexing cannot apply)."""
-    branches = " ".join(
-        f"WHEN {int(cid)}L THEN zip_with({c_emb_col}, {_arr_sql(vec)}, "
-        "(x, y) -> x - y)"
-        for cid, vec in coarse
-    )
-    return F.expr(f"CASE centroid_id {branches} END")
-
-
-def residual_norm_expr(codes_col: str, coarse: list, codebooks):
-    """‖c + r̂‖ from (centroid_id, codes) alone: per centroid, the
-    ascending-j fold over literal ‖c_j + cb_j[code]‖² tables — the
-    code-determined-constant property of pq_norm_expr, now
-    per-(centroid, subspace, code)."""
-    m = len(codebooks)
-    branches = []
-    for cid, cvec in coarse:
-        cv = [float(v) for v in cvec]
-        terms = []
-        off = 0
-        for j in range(m):
-            dsub = len(codebooks[j][0])
-            csub = cv[off : off + dsub]
-            vals = []
-            for sub in codebooks[j]:
-                acc = 0.0
-                for a, b in zip(csub, sub):
-                    s = a + b
-                    acc += s * s
-                vals.append(acc)
-            terms.append(
-                f"element_at({_arr_sql(vals)}, "
-                f"element_at({codes_col}, {j + 1}) + 1)"
-            )
-            off += dsub
-        branches.append(f"WHEN {int(cid)}L THEN {' + '.join(terms)}")
-    return F.expr(f"sqrt(CASE centroid_id {' '.join(branches)} END)")
-
-
-def _qdotc_sql(q_col: str, coarse: list) -> str:
-    """dot(q, c) per probe row — CASE over literal centroids."""
-    branches = " ".join(
-        f"WHEN {int(cid)}L THEN aggregate(zip_with({_arr_sql(vec)}, "
-        f"{q_col}, (x, y) -> x * y), 0.0D, (acc, x) -> acc + x)"
-        for cid, vec in coarse
-    )
-    return f"CASE centroid_id {branches} END"
-
-
-def ivf_pq_residual_index(
-    emb: DataFrame,
-    coarse: list,
-    codebooks,
-    dim: int = 64,
-) -> DataFrame:
-    """(vec_id, centroid_id, codes, anorm) under residual encoding —
-    map-only over literal tables, same width as the raw-encode index."""
-    from .similarity import ivf_assign
-
-    assigned = ivf_assign(emb, coarse, dim)
-    return (
-        assigned.withColumn("res", residual_expr("c_emb", coarse))
-        .select(
-            "vec_id",
-            "centroid_id",
-            pq_code_expr("res", codebooks).alias("codes"),
-        )
-        .withColumn("anorm", residual_norm_expr("codes", coarse, codebooks))
-    )
-
-
-def ivf_pq_topk_residual(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    coarse: list | None = None,
-    codebooks=None,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    indexed: DataFrame | None = None,
-) -> DataFrame:
-    """IVF + residual-PQ codes-only stage: identical plan shape to
-    :func:`ivf_pq_topk` (map-only assignment/encode, broadcast probe
-    join, no all-pairs), with dot(q, c) added probe-side and the
-    residual anorm candidate-side."""
-    if coarse is None:
-        coarse = ivf_centroid_rows(emb, n_centroids)
-    if codebooks is None:
-        codebooks = pq_residual_codebooks(emb, coarse, m, ksub, dim)
-    if not coarse or not codebooks:
-        return _empty_topk(emb)
-    ksub = len(codebooks[0])
-    m = len(codebooks)
-    if indexed is None:
-        indexed = ivf_pq_residual_index(emb, coarse, codebooks, dim)
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        as_double_array(F.col("embedding")).alias("q_emb"),
-    )
-    probes = (
-        q.withColumn(
-            "probe_list",
-            F.slice(
-                F.reverse(F.array_sort(_centroid_sims("q_emb", coarse, dim))),
-                1,
-                nprobe,
-            ),
-        )
-        .withColumn("probe", F.explode("probe_list"))
-        .select(
-            "query_id",
-            (-F.col("probe.negid")).cast("long").alias("centroid_id"),
-            adc_lut_expr("q_emb", codebooks).alias("lut"),
-            F.expr(
-                "sqrt(aggregate(q_emb, 0.0D, (acc, x) -> acc + x * x))"
-            ).alias("q_norm"),
-            F.col("q_emb"),
-        )
-        .withColumn("qc", F.expr(_qdotc_sql("q_emb", coarse)))
-        .drop("q_emb")
-    )
-    adc = (
-        f"aggregate(transform(sequence(0, {m - 1}), j -> "
-        f"element_at(lut, j * {ksub} + element_at(codes, j + 1) + 1)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
-    pairs = (
-        indexed.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos_r", F.expr(f"round((qc + ({adc})) / (q_norm * anorm), 6)")
-        )
-    )
-    return _pq_ranked(pairs, k)
-
-
-def ivf_pq_topk_residual_refined(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    r: int = 16,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    coarse: list | None = None,
-    codebooks=None,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    indexed: DataFrame | None = None,
-) -> DataFrame:
-    """Residual shortlist + exact rerank — the serving composition of
-    the residual family (the ivf_pq_topk_refined shape)."""
-    shortlist = ivf_pq_topk_residual(
-        emb, queries, k=r, n_centroids=n_centroids, nprobe=nprobe,
-        coarse=coarse, codebooks=codebooks, m=m, ksub=ksub, dim=dim,
-        indexed=indexed,
-    )
-    return pq_refine(emb, shortlist, queries, k=k, dim=dim)
-
-
-def pq_residual_codebooks_trained(
-    emb: DataFrame,
-    coarse: list,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    iterations: int = 2,
-) -> list[list[list[float]]]:
-    """TRAINED residual codebooks: one kmeans_fit Lloyd chain per
-    subspace over the corpus's RESIDUAL slices (x − c(x), computed
-    map-side via :func:`residual_expr`) — the strongest GLOBAL
-    residual quantizer short of FAISS's per-list training. Exists to
-    complete the round-14 residual measurement: the sampled residual
-    codebook lost to raw encoding (SCALE_PROBE_r14 pq_residual); this
-    answers whether TRAINING the global residual codebook closes the
-    gap, isolating 'sampling vs training' from 'global vs per-list'
-    (probed in the same family, rows res_t_*)."""
-    from .kmeans import kmeans_fit
-    from .similarity import ivf_assign
-
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    if not coarse:
-        return []
-    dsub = dim // m
-    res = (
-        ivf_assign(emb, coarse, dim)
-        .withColumn("res", residual_expr("c_emb", coarse))
-        .select("vec_id", "res")
-        .localCheckpoint(eager=False)
-    )
-    books = []
-    for j in range(m):
-        sub = res.select(
-            "vec_id", F.slice("res", j * dsub + 1, dsub).alias("vec")
-        )
-        cents, _ = kmeans_fit(sub, k=ksub, iterations=iterations)
-        if not cents:
-            return []
-        books.append(
-            [[float(x) for x in v] for _c, v in sorted(cents.items())]
-        )
-    return books
-
-
-def pq_residual_codebooks_per_list(
-    emb: DataFrame,
-    coarse: list,
-    m: int = 8,
-    ksub: int = 16,
-    dim: int = 64,
-    iterations: int = 2,
-) -> dict[int, list[list[list[float]]]]:
-    """PER-LIST residual codebooks — FAISS's actual IVFPQ default and
-    the last untested hypothesis of the round-14 residual measurement:
-    each inverted list trains its own per-subspace Lloyd chains over
-    ITS residual distribution ({centroid_id: codebooks}). Lists
-    smaller than ksub yield fewer centroids; the books are padded with
-    zero codewords (a zero residual codeword reconstructs the centroid
-    itself — a valid, inert entry). Training cost is n_lists × m Lloyd
-    chains: the documented reason the global books were tried first."""
-    from .kmeans import kmeans_fit
-    from .similarity import ivf_assign
-
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    if not coarse:
-        return {}
-    dsub = dim // m
-    res = (
-        ivf_assign(emb, coarse, dim)
-        .withColumn("res", residual_expr("c_emb", coarse))
-        .select("vec_id", "centroid_id", "res")
-        .localCheckpoint(eager=False)
-    )
-    res.count()
-    out: dict[int, list[list[list[float]]]] = {}
-    for cid, _vec in coarse:
-        lst = res.filter(F.col("centroid_id") == int(cid))
-        books = []
-        for j in range(m):
-            sub = lst.select(
-                "vec_id", F.slice("res", j * dsub + 1, dsub).alias("vec")
-            )
-            cents, _ = kmeans_fit(sub, k=ksub, iterations=iterations)
-            cb = [[float(x) for x in v] for _c, v in sorted(cents.items())]
-            while len(cb) < ksub:
-                cb.append([0.0] * dsub)
-            books.append(cb)
-        out[int(cid)] = books
-    return out
-
-
-def _per_list_code_sql(res_col: str, books: dict) -> str:
-    """codes via CASE over lists, each branch the standard argmin tree
-    under that list's codebooks."""
-    branches = []
-    for cid, cbs in books.items():
-        parts = []
-        off = 0
-        for cb in cbs:
-            structs = ", ".join(
-                f"named_struct('d', {_sub_sq_dist_sql(res_col, off, sub)}, "
-                f"'c', {c})"
-                for c, sub in enumerate(cb)
-            )
-            parts.append(f"int(array_min(array({structs})).c)")
-            off += len(cb[0])
-        branches.append(
-            f"WHEN {int(cid)}L THEN array({', '.join(parts)})"
-        )
-    return f"CASE centroid_id {' '.join(branches)} END"
-
-
-def ivf_pq_residual_index_per_list(
-    emb: DataFrame, coarse: list, books: dict, dim: int = 64
-) -> DataFrame:
-    """(vec_id, centroid_id, codes, anorm) under per-list residual
-    encoding — one CASE-fused map-only pass."""
-    from .similarity import ivf_assign
-
-    cents = {int(cid): [float(v) for v in vec] for cid, vec in coarse}
-    assigned = ivf_assign(emb, coarse, dim).withColumn(
-        "res", residual_expr("c_emb", coarse)
-    )
-    coded = assigned.select(
-        "vec_id",
-        "centroid_id",
-        F.expr(_per_list_code_sql("res", books)).alias("codes"),
-    )
-    # per-(list, subspace, code) squared-norm tables for anorm
-    branches = []
-    for cid, cbs in books.items():
-        cv = cents[int(cid)]
-        terms = []
-        off = 0
-        for j, cb in enumerate(cbs):
-            dsub = len(cb[0])
-            csub = cv[off : off + dsub]
-            vals = []
-            for sub in cb:
-                acc = 0.0
-                for a, b in zip(csub, sub):
-                    s = a + b
-                    acc += s * s
-                vals.append(acc)
-            terms.append(
-                f"element_at({_arr_sql(vals)}, "
-                f"element_at(codes, {j + 1}) + 1)"
-            )
-            off += dsub
-        branches.append(f"WHEN {int(cid)}L THEN {' + '.join(terms)}")
-    return coded.withColumn(
-        "anorm",
-        F.expr(f"sqrt(CASE centroid_id {' '.join(branches)} END)"),
-    )
-
-
-def ivf_pq_topk_residual_per_list(
-    emb: DataFrame,
-    queries: DataFrame,
-    books: dict,
-    coarse: list,
-    k: int = 3,
-    nprobe: int = 4,
-    dim: int = 64,
-    indexed: DataFrame | None = None,
-) -> DataFrame:
-    """Codes-only serving under per-list residual books: the probe row
-    carries the LUT of ITS list's codebooks (CASE over lists), plus
-    dot(q, c) — same broadcast-join plan shape as the other ADC
-    stages."""
-    if not coarse or not books:
-        return _empty_topk(emb)
-    m = len(next(iter(books.values())))
-    ksub = len(next(iter(books.values()))[0])
-    if indexed is None:
-        indexed = ivf_pq_residual_index_per_list(emb, coarse, books, dim)
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        as_double_array(F.col("embedding")).alias("q_emb"),
-    )
-    lut_branches = []
-    for cid, cbs in books.items():
-        entries = []
-        off = 0
-        for cb in cbs:
-            dsub = len(cb[0])
-            for sub in cb:
-                arr = _arr_sql(sub)
-                entries.append(
-                    f"aggregate(zip_with(slice(q_emb, {off + 1}, {dsub}), "
-                    f"{arr}, (x, y) -> x * y), 0.0D, (acc, t) -> acc + t)"
-                )
-            off += dsub
-        lut_branches.append(
-            f"WHEN {int(cid)}L THEN array({', '.join(entries)})"
-        )
-    probes = (
-        q.withColumn(
-            "probe_list",
-            F.slice(
-                F.reverse(F.array_sort(_centroid_sims("q_emb", coarse, dim))),
-                1,
-                nprobe,
-            ),
-        )
-        .withColumn("probe", F.explode("probe_list"))
-        .select(
-            "query_id",
-            (-F.col("probe.negid")).cast("long").alias("centroid_id"),
-            F.col("q_emb"),
-        )
-        .withColumn(
-            "lut",
-            F.expr(f"CASE centroid_id {' '.join(lut_branches)} END"),
-        )
-        .withColumn("qc", F.expr(_qdotc_sql("q_emb", coarse)))
-        .withColumn(
-            "q_norm",
-            F.expr("sqrt(aggregate(q_emb, 0.0D, (acc, x) -> acc + x * x))"),
-        )
-        .drop("q_emb")
-    )
-    adc = (
-        f"aggregate(transform(sequence(0, {m - 1}), j -> "
-        f"element_at(lut, j * {ksub} + element_at(codes, j + 1) + 1)), "
-        "0.0D, (acc, x) -> acc + x)"
-    )
-    pairs = (
-        indexed.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cos_r", F.expr(f"round((qc + ({adc})) / (q_norm * anorm), 6)")
-        )
-    )
-    return _pq_ranked(pairs, k)
-
-
 # Scalar quantization (SQ8) — round 14 -----------------------------------
 #
 # The middle point of the bytes-vs-recall curve FAISS ships as
@@ -1142,6 +608,10 @@ def ivf_pq_topk_residual_per_list(
 # cosine folds dequantized values min_i + c_i·s_i in ascending-dim
 # order with literal mins/scales — every step +,*,/ and floor, so the
 # DuckDB twin is bit-exact.
+
+
+def _arr_sql(vec: list[float]) -> str:
+    return "array(" + ", ".join(f"{float(v)!r}D" for v in vec) + ")"
 
 
 def sq8_train(emb: DataFrame, dim: int = 64) -> tuple[list[float], list[float]]:

@@ -17,11 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import (
-    as_double_array,
-    cosine_similarity,
-    cosine_similarity_fixed,
-)
+from ..functions.vectors import as_double_array, cosine_similarity
 
 
 def _ranked_topk(pairs: DataFrame, k: int) -> DataFrame:
@@ -41,10 +37,6 @@ def _cos(dim: int | None):
     # BOTH expression-compile time (the 64-term tree costs ~1.4 s of
     # analysis per query) and per-row throughput (~12 vs ~19.5 us/pair)
     # — so the fold is the default regardless of whether dim is known.
-    # cosine_similarity_fixed stays available for engines where codegen
-    # beats interpreted HOFs; both produce bitwise-identical results
-    # (same left-to-right association), so swapping never changes
-    # query output.
     del dim
     return cosine_similarity
 

@@ -35,15 +35,3 @@ def salted_count(
     salt = F.pmod(F.xxhash64(F.col(salt_col)), F.lit(n_salts)).alias("__salt")
     partial = df.groupBy(*keys, salt).agg(F.count("*").alias("__cnt"))
     return partial.groupBy(*keys).agg(F.sum("__cnt").alias("cnt"))
-
-
-def replicated_broadcast_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    how: str = "left",
-) -> DataFrame:
-    """Hot-key-safe dimension join: broadcast the dim so no fact-side
-    shuffle exists to skew. (For dims too large to broadcast, the
-    AQE skew-join split in session.py handles the sort-merge path.)"""
-    return fact.join(F.broadcast(dim), key, how)

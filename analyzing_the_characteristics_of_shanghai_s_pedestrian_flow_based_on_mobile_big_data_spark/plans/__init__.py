@@ -1,8 +1,7 @@
 """Plan-inspection helpers — the feedback loop for scale tuning.
 
 Used by tests to assert the physical properties that matter at 100 TB:
-filters pushed to the parquet scan, small dims broadcast, python kept
-out of hot paths. Grading plans, not just results.
+small dims broadcast, python kept out of hot paths. Grading plans, not just results.
 """
 
 from __future__ import annotations
@@ -19,13 +18,6 @@ def physical_plan(df: DataFrame) -> str:
 def assert_broadcast_join(df: DataFrame) -> None:
     plan = physical_plan(df)
     assert "BroadcastHashJoin" in plan, f"expected broadcast join, got:\n{plan}"
-
-
-def assert_pushed_filters(df: DataFrame) -> None:
-    plan = physical_plan(df)
-    assert "PushedFilters: [" in plan and "PushedFilters: []" not in plan.replace(
-        "PushedFilters: [], ", ""
-    ), f"expected parquet pushed filters in:\n{plan}"
 
 
 def assert_no_python_udf(df: DataFrame) -> None:

@@ -1,7 +1,8 @@
 """Batch-4 operator unit tests: quality profile, weighted sampling,
-cohort retention, label propagation, k-means. The DuckDB oracle gate
-covers cross-engine value equality; these pin SEMANTICS on planted
-fixtures where the right answer is known by construction."""
+cohort retention, k-means (label propagation and BFS live in
+test_graph.py). The DuckDB oracle gate covers cross-engine value
+equality; these pin SEMANTICS on planted fixtures where the right
+answer is known by construction."""
 
 from __future__ import annotations
 
@@ -16,9 +17,6 @@ from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile
 from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.kmeans import (
     assign_clusters,
     kmeans_fit,
-)
-from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.labelprop import (
-    label_propagation,
 )
 from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.quality import (
     profile_table,
@@ -95,23 +93,6 @@ def test_cohort_retention_triangle(spark):
     assert out[("2024-01-01", 2)] == (2, 1.0)  # both back
     assert out[("2024-01-08", 0)] == (1, 1.0)  # u3's own cohort
     assert ("2024-01-08", 1) not in out
-
-
-def test_label_propagation_two_cliques(spark):
-    # two triangles {1,2,3} and {10,11,12} bridged by one weak edge
-    edges = [
-        (1, 2, 5), (2, 3, 5), (1, 3, 5),
-        (10, 11, 5), (11, 12, 5), (10, 12, 5),
-        (3, 10, 1),
-    ]
-    df = spark.createDataFrame(edges, "src int, dst int, w long")
-    out = {
-        r.node: r.community
-        for r in label_propagation(df, rounds=4).collect()
-    }
-    assert len({out[1], out[2], out[3]}) == 1
-    assert len({out[10], out[11], out[12]}) == 1
-    assert out[1] != out[10]
 
 
 def test_kmeans_planted_blobs(spark):
@@ -255,35 +236,21 @@ def test_minmax_norm_bounds(spark):
     assert vals[(0, 1)] == 0.0 and vals[(1, 1)] == 1.0 and vals[(2, 1)] == 0.5
 
 
-def test_bfs_hops_chain_and_budget(spark):
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.bfs import (
-        bfs_hops,
-        topk_out_edges,
-    )
-
-    # chain 1->2->3->4->5 plus a shortcut 1->3; budget cuts at 2 hops
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (1, 3)], "src int, dst int"
-    )
-    out = {r.node: r.hops for r in bfs_hops(edges, 1, max_hops=2).collect()}
-    assert out == {1: 0, 2: 1, 3: 1, 4: 2}  # 5 is 3 hops: outside budget
-
-    # sparsifier: top-2 by weight, ties to smaller dst, self-loops gone
-    wedges = spark.createDataFrame(
-        [(1, 1, 99), (1, 2, 5), (1, 3, 5), (1, 4, 1)],
-        "src int, dst int, w long",
-    )
-    kept = sorted((r.src, r.dst) for r in topk_out_edges(wedges, k=2).collect())
-    assert kept == [(1, 2), (1, 3)]
-
-
 def test_iterative_ops_partition_invariant(spark):
-    """Core determinism contract: kmeans, LPA and BFS produce
-    IDENTICAL results under any input partitioning (decimal sums,
-    total-order tie-breaks, integer math — nothing depends on
-    partition boundaries or row order)."""
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.bfs import (
-        bfs_hops,
+    """Core determinism contract: kmeans produces IDENTICAL results
+    under any input partitioning (decimal sums, total-order
+    tie-breaks — nothing depends on partition boundaries or row
+    order). LPA and BFS fold on the driver over a collected edge
+    list, so partitioning can only change the ORDER of that list:
+    each fold must be invariant to every permutation tried here."""
+    import random
+
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.graph_bounded import (
+        bfs_hops_fold,
+        label_propagation_fold,
+    )
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.labelprop import (
+        undirected_weighted_edges,
     )
 
     pts = [
@@ -294,6 +261,7 @@ def test_iterative_ops_partition_invariant(spark):
         (i % 9, (i * 7) % 9, 1 + i % 4) for i in range(40)
     ]
     base_k = base_l = base_b = None
+    rng = random.Random(7)
     for parts in (1, 7, 32):
         emb = spark.createDataFrame(
             pts, "vec_id long, vec array<double>"
@@ -303,17 +271,20 @@ def test_iterative_ops_partition_invariant(spark):
         e = spark.createDataFrame(
             edges, "src int, dst int, w long"
         ).repartition(parts)
-        got_l = sorted(
-            (r.node, r.community)
-            for r in label_propagation(e, rounds=3).collect()
-        )
-        got_b = sorted(
-            (r.node, r.hops)
-            for r in bfs_hops(e.select("src", "dst"), 0, 4).collect()
-        )
+        und = [(r.u, r.v, r.w) for r in undirected_weighted_edges(e).collect()]
+        directed = [(r.src, r.dst) for r in e.select("src", "dst").collect()]
+        for perm in range(3):
+            if perm:
+                rng.shuffle(und)
+                rng.shuffle(directed)
+            got_l = label_propagation_fold(und, rounds=3)
+            got_b = bfs_hops_fold(directed, 0, 4)
+            if base_l is None:
+                base_l, base_b = got_l, got_b
+            else:
+                assert got_l == base_l
+                assert got_b == base_b
         if base_k is None:
-            base_k, base_l, base_b = got_k, got_l, got_b
+            base_k = got_k
         else:
             assert got_k == base_k
-            assert got_l == base_l
-            assert got_b == base_b

@@ -1,5 +1,6 @@
-"""Batch-6 invariants: k-core peeling, range-join alignment,
-MAD medians, CUSUM integer math, basket mining, BM25, sparse matmul."""
+"""Batch-6 invariants: range-join alignment, MAD medians, CUSUM
+integer math, basket mining, BM25, sparse matmul (k-core peeling lives
+in test_graph.py)."""
 
 from __future__ import annotations
 
@@ -13,56 +14,6 @@ from conftest import SF_SMALL
 
 def _run(spark, name):
     return entrymod.queries()[name](spark, SF_SMALL)
-
-
-def test_kcore_peeling_converged_and_correct(spark):
-    """The 6-round budget must be past convergence for the paired
-    graph (7 rounds == 6 rounds), and a hand graph peels right: a
-    triangle with a pendant chain has an empty 3-core after full
-    peeling... here: 4-clique + pendant → 2-core keeps the clique."""
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.kcore import (
-        k_core,
-        symmetrize,
-    )
-
-    # 4-clique (0-3) + chain 3-4-5
-    und = [(a, b) for a in range(4) for b in range(4) if a != b]
-    und += [(3, 4), (4, 3), (4, 5), (5, 4)]
-    g = spark.createDataFrame(und, "src long, dst long").distinct()
-    core3 = {(r.node, r.deg) for r in k_core(g, k=3, rounds=6).collect()}
-    assert core3 == {(0, 3), (1, 3), (2, 3), (3, 3)}  # clique only
-    core2 = {r.node for r in k_core(g, k=2, rounds=6).collect()}
-    assert core2 == {0, 1, 2, 3}  # chain 4-5 peels in 2 rounds
-
-    # paired-query convergence: one extra round changes nothing
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.bfs import (
-        topk_out_edges,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.sources import (
-        events_as_pings,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark import (
-        operators as ops,
-    )
-
-    pos = ops.hourly_positions(
-        events_as_pings(spark, SF_SMALL, entrymod.N_REGIONS)
-    )
-    od = ops.od_matrix(ops.gap_fill_edges(pos))
-    tot = od.groupBy("orig", "dest").agg(F.sum("cnt").alias("w"))
-    g2 = symmetrize(
-        topk_out_edges(
-            tot.select(
-                F.col("orig").alias("src"),
-                F.col("dest").alias("dst"),
-                "w",
-            ),
-            k=3,
-        )
-    )
-    r6 = sorted(tuple(r) for r in k_core(g2, 4, rounds=6).collect())
-    r7 = sorted(tuple(r) for r in k_core(g2, 4, rounds=7).collect())
-    assert r6 == r7 and len(r6) > 0
 
 
 def test_range_join_alignment_equals_naive_between(spark):

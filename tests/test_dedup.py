@@ -1786,3 +1786,10 @@ def test_connected_components_bounded_enforces_bound(spark):
     )
     with pytest.raises(ValueError, match="domain bound"):
         connected_components_bounded(pairs, bound=5)
+    # a NULL key is a named contract error, not a later TypeError in
+    # the union-find
+    with_null = spark.createDataFrame(
+        [(1, 2), (None, 3)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(ValueError, match="'doc_a' holds NULL"):
+        connected_components_bounded(with_null, bound=5)

@@ -93,33 +93,6 @@ def test_diversity_bounds_on_real_positions(spark):
     assert bad == 0
 
 
-def test_harmonic_centrality_closed_form_path_graph(spark):
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.bfs import (
-        harmonic_centrality,
-        multi_source_hops,
-    )
-
-    # directed path 1 -> 2 -> 3 -> 4: H(2)=1, H(3)=1.5, H(4)=1+1/2+1/3
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "src int, dst int"
-    )
-    got = {
-        r.node: (r.n_reached, r.harmonic)
-        for r in harmonic_centrality(edges).collect()
-    }
-    assert got[2] == (1, 1.0)
-    assert got[3] == (2, 1.5)
-    n, h = got[4]
-    assert n == 3 and h == (12 + 6 + 4) / 12.0
-    assert 1 not in got  # nothing reaches the head
-    # hop table is exact: dist(1 -> 4) = 3
-    hops = {
-        (r.source, r.node): r.hops
-        for r in multi_source_hops(edges).collect()
-    }
-    assert hops[(1, 4)] == 3 and hops[(1, 1)] == 0
-
-
 def test_od_flow_balance_conserves_total_flow(spark):
     rows = entrymod.queries()["od_flow_balance"](spark, SF_SMALL).collect()
     assert rows

@@ -1,6 +1,6 @@
 """Round-14 property tests — independent references for the new
 surfaces: the fused charlm attach kernel, the distributed scorer fit,
-residual PQ, and the widened langid (added as those land)."""
+SQ8 and the widened langid."""
 
 from __future__ import annotations
 
@@ -296,139 +296,6 @@ def test_predict_lang_ngram_edges(spark):
     }
     assert got[1] == sorted(CHAR_PROFILES)[0]
     assert got[2] == sorted(CHAR_PROFILES)[0]
-
-
-def test_residual_pq_reconstruction_and_codebooks(spark):
-    """Residual-PQ invariants: codebooks are NOT all-zero (the coarse
-    rows are excluded from the sample — sharing the md5 order made
-    every sampled residual identically zero, mapping all vectors to
-    code 0), the stored anorm equals the reconstruction norm ‖c + r̂‖
-    exactly, and codes vary across the corpus."""
-    import math
-
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.vectors import (
-        as_double_array,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.pq import (
-        ivf_pq_residual_index,
-        pq_residual_codebooks,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
-        ivf_centroid_rows,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    coarse = ivf_centroid_rows(emb, 16)
-    cbs = pq_residual_codebooks(emb, coarse, m=8, ksub=16, dim=64)
-    assert cbs and any(
-        any(abs(v) > 1e-9 for v in sub) for cb in cbs for sub in cb
-    )
-    coarse_ids = {int(c) for c, _ in coarse}
-    idx = ivf_pq_residual_index(emb, coarse, cbs, dim=64)
-    rows = idx.filter(F.col("vec_id") < 40).collect()
-    assert rows
-    assert len({tuple(r.codes) for r in rows}) > 1  # codes vary
-    cents = {int(c): [float(x) for x in v] for c, v in coarse}
-    vecs = {
-        r.vec_id: [float(x) for x in r.e]
-        for r in emb.select(
-            "vec_id", as_double_array(F.col("embedding")).alias("e")
-        ).filter(F.col("vec_id") < 40).collect()
-    }
-    dsub = 8
-    for r in rows[:10]:
-        c = cents[r.centroid_id]
-        rec = []
-        for j in range(8):
-            rec += [
-                c[j * dsub + t] + cbs[j][r.codes[j]][t] for t in range(dsub)
-            ]
-        assert abs(r.anorm - math.sqrt(sum(v * v for v in rec))) < 1e-9
-    del coarse_ids, vecs
-
-
-def test_residual_pq_exact_on_codebook_rows(spark):
-    """A vector whose residual IS a codebook entry must reconstruct
-    exactly: the sampled rows' own codes select their own residual,
-    and anorm equals the true vector norm to float precision."""
-    import math
-
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.vectors import (
-        as_double_array,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.pq import (
-        ivf_pq_residual_index,
-        pq_residual_codebooks,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
-        ivf_centroid_rows,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    coarse = ivf_centroid_rows(emb, 8)
-    cbs = pq_residual_codebooks(emb, coarse, m=8, ksub=8, dim=64)
-    sample_ids = [
-        int(vid)
-        for vid, _ in ivf_centroid_rows(emb, 16)
-        if int(vid) not in {int(c) for c, _ in coarse}
-    ][:8]
-    idx = ivf_pq_residual_index(emb, coarse, cbs, dim=64)
-    got = {
-        r.vec_id: r
-        for r in idx.filter(F.col("vec_id").isin(sample_ids)).collect()
-    }
-    norms = {
-        r.vec_id: math.sqrt(sum(float(x) ** 2 for x in r.e))
-        for r in emb.select(
-            "vec_id", as_double_array(F.col("embedding")).alias("e")
-        ).filter(F.col("vec_id").isin(sample_ids)).collect()
-    }
-    exact = sum(
-        1 for vid in sample_ids if abs(got[vid].anorm - norms[vid]) < 1e-9
-    )
-    # every sampled row reconstructs itself (its own residual is the
-    # nearest codeword — distance 0)
-    assert exact == len(sample_ids), (exact, len(sample_ids))
-
-
-def test_per_list_residual_reconstruction(spark):
-    """Per-list residual invariants: every list owns its own books
-    (padded with zero codewords when the list is smaller than ksub),
-    codes select within the OWNING list's books, and the stored anorm
-    equals the per-list reconstruction norm exactly."""
-    import math
-
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.pq import (
-        ivf_pq_residual_index_per_list,
-        pq_residual_codebooks_per_list,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
-        ivf_centroid_rows,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings").filter(
-        F.col("vec_id") < 300
-    )
-    coarse = ivf_centroid_rows(emb, 4)
-    books = pq_residual_codebooks_per_list(
-        emb, coarse, m=8, ksub=8, dim=64, iterations=1
-    )
-    assert set(books) == {int(c) for c, _ in coarse}
-    for cid, cbs in books.items():
-        assert len(cbs) == 8 and all(len(cb) == 8 for cb in cbs)
-    idx = ivf_pq_residual_index_per_list(emb, coarse, books, dim=64)
-    rows = idx.filter(F.col("vec_id") < 30).collect()
-    assert rows and len({tuple(r.codes) for r in rows}) > 1
-    cents = {int(c): [float(x) for x in v] for c, v in coarse}
-    for r in rows[:8]:
-        c = cents[r.centroid_id]
-        cbs = books[int(r.centroid_id)]
-        rec = []
-        for j in range(8):
-            rec += [
-                c[j * 8 + t] + cbs[j][r.codes[j]][t] for t in range(8)
-            ]
-        assert abs(r.anorm - math.sqrt(sum(v * v for v in rec))) < 1e-9
 
 
 def test_dsir_scores_separate_and_resample_upweights(spark):

@@ -80,7 +80,7 @@ EXCHANGE_CEILING = {
     "cusum_changepoint": 4,
     "seasonal_hod_index": 4,
     "basket_pairs": 6,
-    "region_kcore": 2,       # final-stage only; peel rounds checkpointed
+    "region_kcore": 2,       # peel rounds fold on the driver during build
     "event_stay_range_join": 2,
     "levenshtein_near_keys": 10,  # static; dictionary-encoded name-domain DP
     "bm25_search": 14,  # static pre-AQE count; runtime collapses to 7
@@ -106,7 +106,7 @@ EXCHANGE_CEILING = {
     "span_corruption_pairs": 0,  # pure map: array HOFs over the scan
     "graph_summary_stats": 6,   # final-stage; edge table checkpointed
     "embedding_principal_component": 0,  # driver-assembled 64-row result
-    "region_hits": 4,  # final-stage; every half-round checkpointed
+    "region_hits": 4,  # alternations fold on the driver during build
     # batch 10 (round 5): mobility characteristics
     "radius_of_gyration": 4,
     "location_diversity": 6,
@@ -128,7 +128,7 @@ EXCHANGE_CEILING = {
     "q16_supplier_cnt": 10,
     "q17_small_qty_revenue": 10,
     # batches 13-18 (round 5)
-    "harmonic_centrality": 2,   # final-stage; relax rounds checkpointed
+    "harmonic_centrality": 2,   # relax rounds fold on the driver during build
     "ols_value_trend": 2,
     "benford_digits": 4,
     "od_flow_balance": 16,      # static; both legs re-derive edges pre-AQE
@@ -162,7 +162,7 @@ EXCHANGE_CEILING = {
     "q13_customer_distribution": 4,
     "q21_waiting_supplier": 16,  # static; lo/stats/at_max legs share scans at runtime
     # batch 25 (round 6)
-    "region_closeness": 2,   # final stage; BFS chain behind lazy checkpoints
+    "region_closeness": 2,   # relax rounds fold on the driver during build
     "exploration_curve": 6,
     "user_burstiness": 4,
     # batch 26 (round 6): dedup survivorship (CC rounds checkpointed).

@@ -4,7 +4,6 @@ and the plan shape holds.
 
 Usage:
     python tools/scale_probe.py [N] [sf_dir]            # trajectory+hygiene chain
-    python tools/scale_probe.py --family graph [N] [sf_dir]
     python tools/scale_probe.py --family ann [N] [sf_dir]
     python tools/scale_probe.py --family setsim [N] [sf_dir]
     python tools/scale_probe.py --family cc [N] [sf_dir]
@@ -12,12 +11,6 @@ Usage:
 Writes scaled tables to /tmp and prints one JSON line with per-stage
 seconds. Replication designs per family:
 
-- graph: events N× in disjoint user spaces. The OD region GRAPH is
-  unchanged (same 20 nodes; every edge count multiplies by ~N and
-  normalized weights/degrees are N-invariant), so PageRank / HITS /
-  k-core / harmonic outputs must be IDENTICAL at every N — the probe
-  asserts the value fingerprint, which turns the scale run into a
-  correctness check of the whole derivation chain too.
 - ann: embeddings N× in disjoint vec_id spaces (queries fixed to the
   rep-0 vectors). Brute-force top-k is Θ(N); sign-bucket ANN re-derives
   nbits ≈ log2(N·2000/16) so in-bucket candidates stay ~constant.
@@ -55,106 +48,6 @@ from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile
 
 def _noop(df) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def _timed(results: dict, key: str, df) -> None:
-    t0 = time.perf_counter()
-    _noop(df)
-    results[f"{key}_s"] = round(time.perf_counter() - t0, 2)
-
-
-def _scaled_events_pings(spark, sf_dir: str, n: int):
-    base = load_events(spark, sf_dir)
-    copies = base.crossJoin(
-        spark.range(n).select(F.col("id").alias("rep"))
-    ).select(
-        (F.col("user_id") + F.col("rep") * 1_000_000).alias("user_id"),
-        "ts",
-        "event_type",
-        "event_id",
-        "value",
-    )
-    out = os.path.join(tempfile.gettempdir(), f"events_x{n}.parquet")
-    copies.write.mode("overwrite").parquet(out)
-    scaled = spark.read.parquet(out)
-    return scaled.select(
-        "user_id",
-        "ts",
-        F.date_trunc("hour", "ts").alias("hour"),
-        (F.pmod(F.floor("value").cast("long"), F.lit(20)) + 1)
-        .cast("int")
-        .alias("region_id"),
-        "event_id",
-    ), scaled.count()
-
-
-def _fingerprint(df) -> str:
-    """Order-insensitive value fingerprint of a (small) result —
-    asserts replication-invariance of graph-family outputs."""
-    import hashlib
-
-    rows = sorted(tuple(map(repr, r)) for r in df.collect())
-    return hashlib.md5(repr(rows).encode()).hexdigest()[:16]
-
-
-def probe_graph(spark, sf_dir: str, n: int) -> dict:
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.bfs import (
-        harmonic_centrality,
-        topk_out_edges,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.hits import (
-        hits,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.kcore import (
-        k_core,
-        symmetrize,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.pagerank import (
-        normalized_edges,
-        pagerank,
-    )
-
-    pings, n_rows = _scaled_events_pings(spark, sf_dir, n)
-    results = {"family": "graph", "replication": n, "rows": n_rows}
-
-    def od():
-        pos = ops.hourly_positions(pings)
-        return ops.od_matrix(ops.gap_fill_edges(pos))
-
-    t0 = time.perf_counter()
-    pr = pagerank(
-        normalized_edges(
-            od().select(
-                F.col("orig").alias("src"), F.col("dest").alias("dst"), "cnt"
-            )
-        ),
-        iterations=10,
-    )
-    results["pagerank_fp"] = _fingerprint(pr)
-    results["pagerank_s"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    h = hits(
-        od().select(F.col("orig").alias("src"), F.col("dest").alias("dst"))
-    )
-    results["hits_fp"] = _fingerprint(h)
-    results["hits_s"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    tot = od().groupBy("orig", "dest").agg(F.sum("cnt").alias("w"))
-    g = topk_out_edges(
-        tot.select(F.col("orig").alias("src"), F.col("dest").alias("dst"), "w"),
-        k=3,
-    )
-    kc = k_core(symmetrize(g), k=4, rounds=6)
-    results["kcore_fp"] = _fingerprint(kc)
-    results["kcore_s"] = round(time.perf_counter() - t0, 2)
-
-    t0 = time.perf_counter()
-    hc = harmonic_centrality(g)
-    results["harmonic_fp"] = _fingerprint(hc)
-    results["harmonic_s"] = round(time.perf_counter() - t0, 2)
-    return results
 
 
 def probe_ann(spark, sf_dir: str, n: int) -> dict:
@@ -1891,24 +1784,20 @@ def probe_pq_trained(spark, sf_dir: str, n: int) -> dict:
 def probe_od_fine(spark, sf_dir: str, n: int) -> dict:
     """OD family at the reference's commented-out FINE grain (round
     13, VERDICT r12 #6): 5081 regions instead of the shipped 356/20 —
-    the ~200× key-cardinality stress on od_matrix/od_fractions/
-    pagerank (/root/reference/cal_mobility_matrix.py:161,176 keeps the
-    5081×5081 variant commented because driver-side scipy assembly
-    can't hold it; the long-form DataFrame has no such cap). Records:
+    the ~200× key-cardinality stress on od_matrix/od_fractions (the
+    reference's cal_mobility_matrix.py:161,176 keeps the 5081×5081
+    variant commented because driver-side scipy assembly can't hold
+    it; the long-form DataFrame has no such cap). Records:
     - od key cardinality and build time at the fine grain;
     - the sentinel-region skew (gap-fill's out-of-observation region 0
       is the hot orig at any grain): hot-key edge share, plus the
       max/mean (hour, orig) group size that od_fractions' window must
       hold — the skew lever, bounded by dest-cardinality by design;
     - AQE shuffle coalescing: output partitions of the od aggregate vs
-      the static spark.sql.shuffle.partitions;
-    - pagerank at 5081 nodes: time + replication-invariant fingerprint
-      (fractions, not counts, so ×n replication cancels)."""
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.pagerank import (
-        normalized_edges,
-        pagerank,
-    )
-
+      the static spark.sql.shuffle.partitions.
+    The region-graph queries (PageRank and its siblings) fold on the
+    driver over a graph bounded by N_REGIONS, so this grain is not a
+    query shape for them."""
     base = load_events(spark, sf_dir)
     copies = base.crossJoin(
         spark.range(n).select(F.col("id").alias("rep"))
@@ -1963,19 +1852,6 @@ def probe_od_fine(spark, sf_dir: str, n: int) -> dict:
     fr = ops.od_fractions(od)
     results["od_fractions_rows"] = fr.count()
     results["od_fractions_s"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    pr = pagerank(
-        normalized_edges(
-            od.select(
-                F.col("orig").alias("src"), F.col("dest").alias("dst"),
-                "cnt",
-            )
-        ),
-        iterations=10,
-    )
-    results["pagerank_nodes"] = pr.count()
-    results["pagerank_fp"] = _fingerprint(pr)
-    results["pagerank_s"] = round(time.perf_counter() - t0, 2)
     od.unpersist()
     return results
 
@@ -2051,149 +1927,6 @@ def probe_ingest_deletes(spark, sf_dir: str, n: int) -> dict:
         and serving_signature_rows(table, tomb).count() == served_rows
     )
     shutil.rmtree(base, ignore_errors=True)
-    return results
-
-
-def probe_pq_residual(spark, sf_dir: str, n: int) -> dict:
-    """Residual vs raw PQ encoding (round 14, VERDICT r13 #4): on the
-    perturbed-replicated corpus, build BOTH indexes from the same
-    coarse quantizer and measure raw-ADC recall@3 and refined recall@3
-    at R ∈ {4, 8, 16} plus serve times — the recall-per-R comparison
-    that decides whether FAISS-default residual encoding earns its
-    assignment coupling on this corpus. Index widths are identical
-    ((vec_id, centroid_id, codes, anorm)), so recall-at-equal-R is
-    recall-at-equal-bytes."""
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.pq import (
-        ivf_pq_residual_index,
-        ivf_pq_topk,
-        ivf_pq_topk_residual,
-        pq_codebooks,
-        pq_refine,
-        pq_residual_codebooks,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_centroid_rows,
-        perturbed_replicas,
-        recall_against,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.sources import (
-        load_table,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    copies = perturbed_replicas(emb, n, noise=0.3)
-    out = os.path.join(
-        tempfile.gettempdir(), f"embeddings_pqres_x{n}.parquet"
-    )
-    copies.write.mode("overwrite").parquet(out)
-    scaled = spark.read.parquet(out)
-    results = {
-        "family": "pq_residual",
-        "replication": n,
-        "rows": scaled.count(),
-    }
-    queries = scaled.filter(F.col("vec_id") < 5)
-    cent = ivf_centroid_rows(scaled, 16)
-    cbs_raw = pq_codebooks(scaled, m=8, ksub=16, dim=64)
-    cbs_res = pq_residual_codebooks(scaled, cent, m=8, ksub=16, dim=64)
-    res_index = ivf_pq_residual_index(scaled, cent, cbs_res, dim=64)
-    res_index = res_index.persist()
-    res_index.count()
-
-    bf = brute_force_topk(scaled, queries, k=3, dim=64).persist()
-    bf.count()
-    t0 = time.perf_counter()
-    raw3 = ivf_pq_topk(
-        scaled, queries, k=3, nprobe=4, codebooks=cbs_raw, coarse=cent,
-        dim=64,
-    )
-    results["raw_adc_recall"] = recall_against(bf, raw3)
-    results["raw_adc_s"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    res3 = ivf_pq_topk_residual(
-        scaled, queries, k=3, nprobe=4, coarse=cent, codebooks=cbs_res,
-        dim=64, indexed=res_index,
-    )
-    results["res_adc_recall"] = recall_against(bf, res3)
-    results["res_adc_s"] = round(time.perf_counter() - t0, 2)
-    for r in (4, 8, 16):
-        short = ivf_pq_topk(
-            scaled, queries, k=r, nprobe=4, codebooks=cbs_raw,
-            coarse=cent, dim=64,
-        )
-        results[f"raw_refined_recall_r{r}"] = recall_against(
-            bf, pq_refine(scaled, short, queries, k=3, dim=64)
-        )
-        short_res = ivf_pq_topk_residual(
-            scaled, queries, k=r, nprobe=4, coarse=cent,
-            codebooks=cbs_res, dim=64, indexed=res_index,
-        )
-        results[f"res_refined_recall_r{r}"] = recall_against(
-            bf, pq_refine(scaled, short_res, queries, k=3, dim=64)
-        )
-    # trained GLOBAL residual codebooks (round 14 follow-up): isolates
-    # 'sampling vs training' from 'global vs per-list' in the residual
-    # negative result
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.pq import (
-        pq_residual_codebooks_trained,
-    )
-
-    t0 = time.perf_counter()
-    cbs_rt = pq_residual_codebooks_trained(
-        scaled, cent, m=8, ksub=16, dim=64, iterations=2
-    )
-    results["res_t_train_s"] = round(time.perf_counter() - t0, 2)
-    rt_index = ivf_pq_residual_index(scaled, cent, cbs_rt, dim=64).persist()
-    rt_index.count()
-    rt3 = ivf_pq_topk_residual(
-        scaled, queries, k=3, nprobe=4, coarse=cent, codebooks=cbs_rt,
-        dim=64, indexed=rt_index,
-    )
-    results["res_t_adc_recall"] = recall_against(bf, rt3)
-    for r in (4, 8, 16):
-        short_rt = ivf_pq_topk_residual(
-            scaled, queries, k=r, nprobe=4, coarse=cent,
-            codebooks=cbs_rt, dim=64, indexed=rt_index,
-        )
-        results[f"res_t_refined_recall_r{r}"] = recall_against(
-            bf, pq_refine(scaled, short_rt, queries, k=3, dim=64)
-        )
-    rt_index.unpersist()
-    # PER-LIST residual codebooks — FAISS's actual default, the last
-    # hypothesis: n_lists × m Lloyd chains (the cost that kept it for
-    # last), CASE-fused encode/LUT
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.pq import (
-        ivf_pq_residual_index_per_list,
-        ivf_pq_topk_residual_per_list,
-        pq_residual_codebooks_per_list,
-    )
-
-    t0 = time.perf_counter()
-    books_pl = pq_residual_codebooks_per_list(
-        scaled, cent, m=8, ksub=16, dim=64, iterations=2
-    )
-    results["res_pl_train_s"] = round(time.perf_counter() - t0, 2)
-    pl_index = ivf_pq_residual_index_per_list(
-        scaled, cent, books_pl, dim=64
-    ).persist()
-    pl_index.count()
-    pl3 = ivf_pq_topk_residual_per_list(
-        scaled, queries, books_pl, cent, k=3, nprobe=4, dim=64,
-        indexed=pl_index,
-    )
-    results["res_pl_adc_recall"] = recall_against(bf, pl3)
-    for r in (4, 8, 16):
-        short_pl = ivf_pq_topk_residual_per_list(
-            scaled, queries, books_pl, cent, k=r, nprobe=4, dim=64,
-            indexed=pl_index,
-        )
-        results[f"res_pl_refined_recall_r{r}"] = recall_against(
-            bf, pq_refine(scaled, short_pl, queries, k=3, dim=64)
-        )
-    pl_index.unpersist()
-    bf.unpersist()
-    res_index.unpersist()
     return results
 
 
@@ -2657,12 +2390,10 @@ def probe_r15c_ops(spark, sf_dir: str, n: int) -> dict:
 
 
 FAMILIES = {
-    "graph": probe_graph,
     "r15_ops": probe_r15_ops,
     "r15b_ops": probe_r15b_ops,
     "r15c_ops": probe_r15c_ops,
     "pq": probe_pq,
-    "pq_residual": probe_pq_residual,
     "scorer_fit": probe_scorer_fit,
     "text_train": probe_text_train,
     "pq_encode": probe_pq_encode,
