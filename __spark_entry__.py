@@ -52,7 +52,7 @@ from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile
     text as tx,
 )
 from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.exprmemo import (  # noqa: E402
-    memoized_expr,
+    cached,
 )
 from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.langid import (  # noqa: E402
     predict_lang_ngram_cached,
@@ -1543,14 +1543,13 @@ def _q_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ops.bucketed_ann_topk(emb, queries_df, k=3, dim=64, multi_probe=1)
 
 
-_IVF_CODEBOOKS: dict[tuple, list] = {}
-
-
 def _dataset_fingerprint(sf_dir: str, table: str) -> tuple:
-    """Cheap invalidation key for per-dataset index artifacts: the
-    sorted (name, mtime_ns, size) of the table's parquet file(s). If
-    the dataset at a path is regenerated in-process (test fixtures,
-    re-runs), the fingerprint changes and cached artifacts rebuild."""
+    """Cheap invalidation key for per-dataset index artifacts (the
+    prefix of their keys in the artifact cache, ``cached``): the table
+    path plus the sorted (name, mtime_ns, size) of its parquet
+    file(s). If the dataset at a path is regenerated in-process (test
+    fixtures, re-runs), the fingerprint changes and cached artifacts
+    rebuild."""
     import os as _os
 
     path = _os.path.join(sf_dir, f"{table}.parquet")
@@ -2864,7 +2863,7 @@ def _q_curation_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "wv",
         F.size(F.col("toks")).cast("int").alias("n_tokens"),
         tx.quality_score(F.col("text")).alias("quality"),
-        memoized_expr(
+        cached(
             ("entry", "pred_lang_toks"),
             lambda: predict_lang(F.col("toks")),
         ).alias("pred_lang"),
@@ -3122,13 +3121,29 @@ def _coarse_centroids_cached(spark: SparkSession, sf_dir: str):
         ivf_centroid_rows,
     )
 
-    key = _dataset_fingerprint(sf_dir, "embeddings")
-    cent = _IVF_CODEBOOKS.get(key)
-    if cent is None:
-        cent = _IVF_CODEBOOKS[key] = ivf_centroid_rows(
+    return cached(
+        _dataset_fingerprint(sf_dir, "embeddings") + ("ivf16",),
+        lambda: ivf_centroid_rows(
             fan_out_small_scan(load_table(spark, sf_dir, "embeddings")), 16
-        )
-    return cent
+        ),
+    )
+
+
+def _charlm_cached(spark: SparkSession, sf_dir: str):
+    """The char-trigram LM table (functions/charlm.py) trained on the
+    UNPLANTED documents table — one table shared by charlm_quality,
+    curation_full and curation_full_web (whose URL-planted docs are
+    scored against the same corpus model)."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.charlm import (
+        char_trigram_lm,
+    )
+
+    return cached(
+        _dataset_fingerprint(sf_dir, "documents") + ("charlm3",),
+        lambda: char_trigram_lm(
+            fan_out_small_scan(load_table(spark, sf_dir, "documents"))
+        ),
+    )
 
 
 def _kmeans_centroids_cached(spark: SparkSession, sf_dir: str):
@@ -3142,17 +3157,16 @@ def _kmeans_centroids_cached(spark: SparkSession, sf_dir: str):
         kmeans_fit,
     )
 
-    key = _dataset_fingerprint(sf_dir, "embeddings") + ("kmeans16x3",)
-    cent = _IVF_CODEBOOKS.get(key)
-    if cent is None:
+    def _build():
         vec = fan_out_small_scan(load_table(spark, sf_dir, "embeddings")).select(
             "vec_id", as_double_array(F.col("embedding")).alias("vec")
         )
         cents, _ = kmeans_fit(vec, k=16, iterations=3)
-        cent = _IVF_CODEBOOKS[key] = sorted(
-            (int(c), list(v)) for c, v in cents.items()
-        )
-    return cent
+        return sorted((int(c), list(v)) for c, v in cents.items())
+
+    return cached(
+        _dataset_fingerprint(sf_dir, "embeddings") + ("kmeans16x3",), _build
+    )
 
 
 def _pq_codebooks_cached(spark: SparkSession, sf_dir: str):
@@ -3163,12 +3177,15 @@ def _pq_codebooks_cached(spark: SparkSession, sf_dir: str):
         pq_codebooks,
     )
 
-    key = _dataset_fingerprint(sf_dir, "embeddings") + ("pq8x16",)
-    cbs = _IVF_CODEBOOKS.get(key)
-    if cbs is None:
-        emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
-        cbs = _IVF_CODEBOOKS[key] = pq_codebooks(emb, m=8, ksub=16, dim=64)
-    return cbs
+    return cached(
+        _dataset_fingerprint(sf_dir, "embeddings") + ("pq8x16",),
+        lambda: pq_codebooks(
+            fan_out_small_scan(load_table(spark, sf_dir, "embeddings")),
+            m=8,
+            ksub=16,
+            dim=64,
+        ),
+    )
 
 
 def _q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3322,10 +3339,10 @@ def _q_pq_codes_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
-    key = _dataset_fingerprint(sf_dir, "embeddings") + ("pq8x256",)
-    cbs = _IVF_CODEBOOKS.get(key)
-    if cbs is None:
-        cbs = _IVF_CODEBOOKS[key] = pq_codebooks(emb, m=8, ksub=256, dim=64)
+    cbs = cached(
+        _dataset_fingerprint(sf_dir, "embeddings") + ("pq8x256",),
+        lambda: pq_codebooks(emb, m=8, ksub=256, dim=64),
+    )
     return pq_encode_arrow(emb, cbs).select(
         "vec_id",
         F.array_join("codes", ",").alias("codes_s"),
@@ -3352,7 +3369,6 @@ def _q_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact with charlm_score_expr (pinned in pytest), so the
     oracle hash is identical."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.charlm import (
-        char_trigram_lm,
         charlm_attach_arrow,
     )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.langid import (
@@ -3363,10 +3379,7 @@ def _q_curation_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
-    key = _dataset_fingerprint(sf_dir, "documents") + ("charlm3",)
-    table = _IVF_CODEBOOKS.get(key)
-    if table is None:
-        table = _IVF_CODEBOOKS[key] = char_trigram_lm(docs)
+    table = _charlm_cached(spark, sf_dir)
     # Pushdown fences (round 16, the curation_multiscript lesson
     # applied to THIS pipeline — measured: without them
     # PushPredicateThroughNonJoin substitutes the heavy aliases into
@@ -3444,7 +3457,6 @@ def _q_curation_full_web(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — plan-pinned. Real curation runs text and domain gates in
     one pass; this is that pass."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.charlm import (
-        char_trigram_lm,
         charlm_attach_arrow,
     )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.langid import (
@@ -3461,12 +3473,7 @@ def _q_curation_full_web(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _plant_urls(fan_out_small_scan(load_table(spark, sf_dir, "documents")))
-    key = _dataset_fingerprint(sf_dir, "documents") + ("charlm3",)
-    table = _IVF_CODEBOOKS.get(key)
-    if table is None:
-        table = _IVF_CODEBOOKS[key] = char_trigram_lm(
-            fan_out_small_scan(load_table(spark, sf_dir, "documents"))
-        )
+    table = _charlm_cached(spark, sf_dir)
     keyed = docs.select(
         "doc_id",
         "text",
@@ -4567,16 +4574,11 @@ def _q_charlm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     charlm_score_expr remains the composable column form
     curation_full gates on."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.charlm import (
-        char_trigram_lm,
         charlm_scores_arrow,
     )
 
     docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
-    key = _dataset_fingerprint(sf_dir, "documents") + ("charlm3",)
-    table = _IVF_CODEBOOKS.get(key)
-    if table is None:
-        table = _IVF_CODEBOOKS[key] = char_trigram_lm(docs)
-    return charlm_scores_arrow(docs, table)
+    return charlm_scores_arrow(docs, _charlm_cached(spark, sf_dir))
 
 
 _LANG_SNIPPETS: dict[str, str] = {
@@ -4785,11 +4787,7 @@ def _scorer_fit_cached(spark: SparkSession, sf_dir: str):
         scorer_fit_ls,
     )
 
-    key = _dataset_fingerprint(sf_dir, "documents") + (
-        f"scorerfit{_SCORER_NB}x{_SCORER_EPOCHS}",
-    )
-    fit = _IVF_CODEBOOKS.get(key)
-    if fit is None:
+    def _build():
         docs = _plant_scored_docs(fan_out_small_scan(load_table(spark, sf_dir, "documents")))
         # the CHECKPOINTED feature frame rides the cache next to the
         # parameters (the S11 hot-DF pattern): three queries consume
@@ -4808,9 +4806,13 @@ def _scorer_fit_cached(spark: SparkSession, sf_dir: str):
             epochs=_SCORER_EPOCHS,
             eta=_SCORER_ETA,
         )
-        fit = _IVF_CODEBOOKS[key] = (w, bias, cv.count(), cv)
-    w, bias, n, cv = fit
-    return w, bias, n, cv
+        return (w, bias, cv.count(), cv)
+
+    return cached(
+        _dataset_fingerprint(sf_dir, "documents")
+        + (f"scorerfit{_SCORER_NB}x{_SCORER_EPOCHS}",),
+        _build,
+    )
 
 
 def _q_scorer_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4867,11 +4869,7 @@ def _scorer_sig_cached(spark: SparkSession, sf_dir: str):
         scorer_fit_sig,
     )
 
-    key = _dataset_fingerprint(sf_dir, "documents") + (
-        f"scorersig{_SCORER_NB}x{_SCORER_EPOCHS}",
-    )
-    fit = _IVF_CODEBOOKS.get(key)
-    if fit is None:
+    def _build():
         _w_ls, _b_ls, n, cv = _scorer_fit_cached(spark, sf_dir)
         w, bias = scorer_fit_sig(
             cv,
@@ -4880,8 +4878,13 @@ def _scorer_sig_cached(spark: SparkSession, sf_dir: str):
             eta=_SCORER_SIG_ETA,
             eta_bias=_SCORER_SIG_ETA_B,
         )
-        fit = _IVF_CODEBOOKS[key] = (w, bias, n, cv)
-    return fit
+        return (w, bias, n, cv)
+
+    return cached(
+        _dataset_fingerprint(sf_dir, "documents")
+        + (f"scorersig{_SCORER_NB}x{_SCORER_EPOCHS}",),
+        _build,
+    )
 
 
 def _q_scorer_trained_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4976,14 +4979,13 @@ def _dsir_ratios_cached(spark: SparkSession, sf_dir: str) -> list[float]:
         hashed_bucket_counts,
     )
 
-    key = _dataset_fingerprint(sf_dir, "documents") + ("dsir256",)
-    tab = _IVF_CODEBOOKS.get(key)
-    if tab is None:
+    def _build():
         docs = _plant_scored_docs(fan_out_small_scan(load_table(spark, sf_dir, "documents")))
         ct, tt = hashed_bucket_counts(docs.filter(F.col("y") == 1))
         cr, tr = hashed_bucket_counts(docs)
-        tab = _IVF_CODEBOOKS[key] = dsir_ratio_table(ct, tt, cr, tr)
-    return tab
+        return dsir_ratio_table(ct, tt, cr, tr)
+
+    return cached(_dataset_fingerprint(sf_dir, "documents") + ("dsir256",), _build)
 
 
 def _q_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5077,15 +5079,15 @@ def _bpe_cached(spark: SparkSession, sf_dir: str):
         vocab_with_freq,
     )
 
-    key = _dataset_fingerprint(sf_dir, "documents") + (
-        f"bpe{_BPE_K}x{_BPE_TOPV}",
-    )
-    out = _IVF_CODEBOOKS.get(key)
-    if out is None:
+    def _build():
         docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
         vocab = vocab_with_freq(docs, top_v=_BPE_TOPV)
-        out = _IVF_CODEBOOKS[key] = bpe_train(vocab, k_merges=_BPE_K)
-    return out
+        return bpe_train(vocab, k_merges=_BPE_K)
+
+    return cached(
+        _dataset_fingerprint(sf_dir, "documents") + (f"bpe{_BPE_K}x{_BPE_TOPV}",),
+        _build,
+    )
 
 
 def _q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5170,12 +5172,12 @@ def _sq8_cached(spark: SparkSession, sf_dir: str):
         sq8_train,
     )
 
-    key = _dataset_fingerprint(sf_dir, "embeddings") + ("sq8",)
-    out = _IVF_CODEBOOKS.get(key)
-    if out is None:
-        emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
-        out = _IVF_CODEBOOKS[key] = sq8_train(emb, dim=64)
-    return out
+    return cached(
+        _dataset_fingerprint(sf_dir, "embeddings") + ("sq8",),
+        lambda: sq8_train(
+            fan_out_small_scan(load_table(spark, sf_dir, "embeddings")), dim=64
+        ),
+    )
 
 
 def _q_sq8_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5264,12 +5266,10 @@ def _q_pq_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = fan_out_small_scan(load_table(spark, sf_dir, "embeddings"))
-    key = _dataset_fingerprint(sf_dir, "embeddings") + ("pqtrain2x4",)
-    cbs = _IVF_CODEBOOKS.get(key)
-    if cbs is None:
-        cbs = _IVF_CODEBOOKS[key] = pq_codebooks_trained(
-            emb, m=2, ksub=4, dim=64, iterations=2
-        )
+    cbs = cached(
+        _dataset_fingerprint(sf_dir, "embeddings") + ("pqtrain2x4",),
+        lambda: pq_codebooks_trained(emb, m=2, ksub=4, dim=64, iterations=2),
+    )
     queries_df = emb.filter(F.col("vec_id") < 5)
     return pq_topk(emb, queries_df, k=3, codebooks=cbs)
 

@@ -37,43 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exprmemo import cached
 from .graph_bounded import collect_edges_bounded
 
 
 class ConvergenceError(RuntimeError):
     """Label propagation exhausted max_iterations before converging."""
-
-
-# Session-scoped memo for the star-quotient engagement decision
-# (round 9, VERDICT r8 #1): the decision is a PURE FUNCTION of the
-# corpus content and the (k, bands, n) banding scheme, yet round 8
-# re-ran its probe (one scalar agg + collect over the band table) on
-# EVERY invocation — a measured +0.4–0.6 s tax on all four registered
-# dedup-cluster queries at sf0.1 (BENCH_DRIFT_r8) even when the
-# answer is "skip". Keyed by the input plan's semanticHash (canonical
-# plan hash — stable across invocations, alias-insensitive) plus the
-# banding params. A stale or colliding entry can only mis-route the
-# PHYSICAL plan choice — both paths produce identical labels
-# (pytest-pinned) — so the failure mode is performance, never
-# correctness; a corpus mutated in place under the same path should
-# call clear_star_gate_cache() (or pass star_gate= explicitly).
-_STAR_GATE_CACHE: dict[tuple, bool] = {}
-_STAR_GATE_CACHE_MAX = 256
-
-
-def clear_star_gate_cache() -> None:
-    """Drop all memoized star-gate decisions (tests; in-place table
-    mutation under an unchanged plan)."""
-    _STAR_GATE_CACHE.clear()
-
-
-def _star_gate_key(d: DataFrame, k: int, bands: int, n: int):
-    """Memo key, or None when the plan hash is unavailable (the memo
-    then degrades to probing every call — round-8 behavior)."""
-    try:
-        return (d.semanticHash(), k, bands, n)
-    except Exception:
-        return None
 
 
 def connected_components(
@@ -178,123 +147,70 @@ def near_dup_components(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_iterations: int = 25,
-    hot_bucket_cap: int | None = None,
-    collapse_signatures: bool = True,
     materialize: str = "persist",
-    star_gate: bool | None = None,
-    star_stats: dict | None = None,
 ) -> DataFrame:
     """(doc_id, component) over the MinHash near-dup graph — result
     IDENTICAL to ``connected_components(minhash_lsh_pairs(docs))``
-    (pytest-pinned), computed with an EXACT-DIGEST PRE-COLLAPSE that
-    removes the dominant scale hazard the round-7 probe measured:
-    identical texts all share every band hash, so an exact-dup group
-    of g docs contributes g² candidate rows to the band self-join —
-    the all-identical 64× corpus cost 51 s and drove the CC family's
-    16→64× slope (SCALE.md §Round 7). Exact duplicates are the most
-    common duplicate class in a real crawl, and they are detectable
-    for the price of one md5 — so they are collapsed to their min-id
-    representative FIRST (one digest groupBy, the exact_dedup shape),
-    signatures/banding/CC run on distinct texts only (Θ(g) per group,
-    not Θ(g²)), and membership expands back through the digest table.
+    (pytest-pinned), computed over two quotients of the doc graph so
+    no duplicate class ever materializes its clique of pairs.
 
-    Equivalence argument: signatures are a pure function of text, so
-    (i) docs in a ≥2 digest group whose text yields AT LEAST ONE
-    shingle (≥ n tokens) are always mutual LSH pairs — identical
-    signatures agree on every band — and are graph members with or
-    without collapse, while a zero-shingle text (< n tokens) produces
-    no signature row at all, so its duplicates are NOT in the doc
-    graph and the within-group fallback below is gated on the same
-    token test doc_shingles applies; (ii) two DISTINCT texts collide
-    iff their representatives collide, so the rep graph is exactly
-    the quotient of the doc graph by text equality and components
-    correspond 1:1; (iii) both labelings pick the min reachable id,
-    and each group's representative IS its min id, so labels agree
-    too.
+    1. Exact-text collapse. Identical texts share every band hash, so
+       an exact-dup group of g docs would put g² rows into the band
+       self-join (the all-identical 64× corpus cost 51 s, SCALE.md
+       §Round 7). Each md5(text) group is collapsed to its min-id
+       representative first; signatures, banding and CC run on
+       distinct texts only, and membership expands back through the
+       digest table.
+    2. Signature-class star. g byte-DISTINCT texts that share the whole
+       MinHash signature (crawl boilerplate: case variants, identical
+       shingle sets) are still a clique. Text-reps are quotiented by
+       :func:`~.dedup.signature_digest`; the candidate join and CC run
+       on one representative per class, and members inherit the rep's
+       component — Θ(g) membership rows where the pair table is Θ(g²).
+       A class with g≥2 and no cross-class edge is its own component.
 
-    ``collapse_signatures=True`` (default, round 8) adds a SECOND
-    quotient level for the crawl-boilerplate case the exact collapse
-    cannot absorb: g byte-DISTINCT docs sharing the whole MinHash
-    signature (identical shingle sets, or near-identical sets whose
-    minima agree) are a clique by construction — identical signatures
-    agree on every band — so materializing their C(g,2) pair rows into
-    CC is pure waste. Text-reps are quotiented by full-signature
-    digest; banding, the candidate join, and CC run on one
-    representative per signature class; and class members inherit the
-    rep's component through the membership table — a STAR expansion,
-    Θ(g) rows, where the pair table is the Θ(g²) clique. A class with
-    g≥2 and no cross-class edge is its own component (labeled by its
-    rep = its min id). Equivalence mirrors the text-digest argument:
-    same-signature docs are always mutual LSH pairs, distinct
-    signatures collide iff their class reps collide, and every
-    quotient level's representative IS its min id, so min-label
-    propagation commutes with the quotient (pytest-pinned identical
-    to the uncollapsed composition). Engagement is ADAPTIVE: one
-    scalar agg over the persisted band table weighs the clique rows
-    the quotient would save against its extra stages — clean corpora
-    (the common case after the exact-text collapse) skip the
-    class/membership joins entirely, since the quotient would be a
-    no-op; boilerplate corpora take the star path. Same
-    probe-then-choose shape as choose_jaccard_path. The decision is
-    MEMOIZED per (corpus plan hash, k, bands, n) — round 9, VERDICT
-    r8 #1: it is a pure function of those inputs, so re-probing every
-    invocation charged every clean corpus +0.4–0.6 s at sf0.1 for an
-    answer already known; repeat invocations (the registered
-    dedup-cluster family, bench warm iterations) now skip the probe
-    job entirely. ``star_gate`` overrides the gate outright
-    (True = star path, False = plain join, None = adaptive+memo) —
-    the zero-cost route for callers that know their corpus, the same
-    contract shape as set_similarity_join_auto's ``stats=``. Either
-    route changes only the physical plan: labels are identical by
-    the pinned equivalence. ``star_stats`` (round 10, VERDICT r9 #6)
-    pre-seeds the FIRST decision from catalog-class statistics — the
-    set_similarity_stats dict shape over a one-row-per-doc
-    (doc_id, digest) table, where cand_pairs = Σ C(df,2) is exactly
-    the clique-pair savings — so a cold corpus with ANALYZE TABLE
-    NDVs never pays the probe job either; precedence is star_gate >
-    memo > star_stats > probe, and a stats-seeded decision enters
-    the memo.
+    Equivalence: signatures are a pure function of text, so same-text
+    and same-signature docs are always mutual LSH pairs (a text with
+    fewer than ``n`` tokens has no signature and is in no pair, hence
+    the ``has_shingle`` gate on the within-group fallback); two
+    distinct classes collide iff their representatives collide; and
+    every representative IS its class's min id, so min-label
+    propagation commutes with both quotients.
 
-    ``hot_bucket_cap`` can additionally arm the hot-bucket quotient in
-    :func:`~.dedup.lsh_pairs_from_bands` on the candidate join (pair
-    set identical by its pinned equivalence) — default None: after the
-    signature collapse the rep graph's signatures are all DISTINCT, so
-    an over-cap bucket quotients into singleton classes and the cap is
-    pure stage overhead (measured at g=256, SCALE_PROBE_r8: the
-    codegen'd band hash join clears bands·g² narrow rows faster than
-    the quotient's extra exchanges — the star expansion above is the
-    win; the cap is kept for pair-contract callers with genuinely
-    enormous mixed-signature buckets)."""
+    Route: the star quotient only pays when its savings — the clique
+    rows Σ C(g,2) over signature classes — exceed twice the signed-doc
+    count; a clean corpus takes the plain band join (always correct:
+    same-signature reps still collide on every band). The decision is
+    a pure function of (corpus plan, k, bands, n), so it is probed with
+    one scalar aggregate the first time and then served from the
+    artifact cache (key ``("star_route", semanticHash, k, bands, n)``)
+    for the rest of the Spark application: repeat invocations run no
+    probe job. Either route changes only the physical plan.
+
+    ``materialize="persist"`` (default — registered fixed-plan queries)
+    keeps one CacheManager entry per corpus, reused across invocations;
+    ``"checkpoint"`` is for varied-corpus loops (probes, per-day
+    clustering), where per-plan cache entries would accumulate."""
     from ..functions.text import token_count
-    from .dedup import (
-        lsh_pairs_from_bands,
-        minhash_bands,
-        minhash_lsh_pairs,
-        signature_digest,
-    )
+    from .dedup import lsh_pairs_from_bands, minhash_bands, signature_digest
 
     if materialize not in ("checkpoint", "persist"):
         raise ValueError(f"materialize must be checkpoint|persist: {materialize}")
 
+    def _materialized(df: DataFrame) -> DataFrame:
+        if materialize == "persist":
+            return df.persist()
+        return df.localCheckpoint(eager=True)
+
     d = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
-    # Per-doc digest table: feeds reps, the representative rows, AND
-    # the membership expansion — persisted so the corpus is scanned
-    # and hashed once, not once per consumer (same digest/min-id/count
-    # shape as dedup.exact_dedup, kept local so one persisted table
-    # serves all three uses). Lifetime: CacheManager keys entries by
-    # canonicalized plan, so repeated invocations over the same corpus
-    # REUSE one entry rather than accumulating (the repo-wide pattern,
-    # cf. minhash_lsh_pairs' persist); entries are per-dataset, bounded
-    # by the handful of sf dirs a session touches.
-    grp_raw = d.withColumn("digest", F.md5("text")).withColumn(
-        "has_shingle", token_count(F.col("text")) >= n
-    )
-    grp = (
-        grp_raw.persist()
-        if materialize == "persist"
-        else grp_raw.localCheckpoint(eager=True)
+    # Per-doc digest table: feeds reps, the representative rows AND the
+    # membership expansion, so the corpus is scanned and hashed once.
+    grp = _materialized(
+        d.withColumn("digest", F.md5("text")).withColumn(
+            "has_shingle", token_count(F.col("text")) >= n
+        )
     )
     reps = grp.groupBy("digest").agg(
         F.min("doc_id").alias("rep_id"),
@@ -308,125 +224,59 @@ def near_dup_components(
         .select("doc_id", "text")
     )
     membership = grp.select("doc_id", "digest").join(reps, "digest")
-    if not collapse_signatures:
-        pairs = minhash_lsh_pairs(
-            rep_docs, k=k, bands=bands, n=n, hot_bucket_cap=hot_bucket_cap
-        )
-        comp_rep = connected_components(pairs, max_iterations=max_iterations)
-        rep_label = comp_rep.withColumnRenamed("node", "rep_id")
-    else:
-        # Signature-class quotient. The band table is computed once
-        # for all text-reps and feeds the digest pass, the class-rep
-        # filter, and the candidate join. materialize="persist"
-        # (default — registered fixed-plan queries) keeps one bounded
-        # CacheManager entry reused across invocations over the same
-        # corpus (bench warm iterations); materialize="checkpoint"
-        # is for varied-corpus/parameter loops (probes, per-day
-        # clustering), where per-plan cache entries would accumulate —
-        # the same contract as set_similarity_join_lsh.
-        bands_raw = minhash_bands(rep_docs, k=k, bands=bands, n=n)
-        bands_df = (
-            bands_raw.persist()
-            if materialize == "persist"
-            else bands_raw.localCheckpoint(eager=True)
-        )
-        # whole-signature digest — THE shared class key
-        # (dedup.signature_digest), same function in every quotient.
-        # Built lazily: the plain path with a memoized/forced gate
-        # never needs it (that skip IS the round-9 reclaimed tax).
-        sigd = cls = None
+    # The band table feeds the route probe, the class table and the
+    # candidate join — computed once for all text-reps.
+    bands_df = _materialized(minhash_bands(rep_docs, k=k, bands=bands, n=n))
 
-        def _class_table():
-            nonlocal sigd, cls
-            if cls is None:
-                sigd = signature_digest(bands_df)
-                cls = sigd.groupBy("__sig").agg(
-                    F.min("doc_id").alias("rep2"),
-                    F.count(F.lit(1)).alias("g2"),
-                )
-            return cls
+    def _class_table() -> tuple[DataFrame, DataFrame]:
+        sigd = signature_digest(bands_df)
+        cls = sigd.groupBy("__sig").agg(
+            F.min("doc_id").alias("rep2"),
+            F.count(F.lit(1)).alias("g2"),
+        )
+        return sigd, cls
 
-        # Adaptive engagement: one scalar agg over the (persisted)
-        # band table weighs the star path's SAVINGS — the clique pair
-        # rows Σ C(g2, 2) it avoids — against its ~5 extra narrow
-        # stages. A clean-ish corpus (a handful of size-2 signature
-        # classes — the measured sf0.1 case, where the quotient costs
-        # 2× for nothing) skips the class/membership joins: skipping
-        # is ALWAYS correct, signature-duplicate reps still collide on
-        # every band in the plain join. Boilerplate corpora (savings ≫
-        # corpus) take the star path. The probe runs AT MOST ONCE per
-        # (corpus plan hash, banding) per session — the memo above —
-        # and not at all under an explicit star_gate.
-        use_star = star_gate
-        cache_key = None
-        if use_star is None:
-            cache_key = _star_gate_key(d, k, bands, n)
-            if cache_key is not None:
-                use_star = _STAR_GATE_CACHE.get(cache_key)
-        if use_star is None and star_stats is not None:
-            # Catalog-stats pre-seed (round 10, VERDICT r9 #6): the
-            # memo kills the repeat-invocation probe; this kills the
-            # FIRST one. Same dict shape as set_similarity_stats /
-            # set_similarity_stats_from_catalog computed over a
-            # one-row-per-doc (doc_id, signature-or-text-digest)
-            # table: cand_pairs = Σ C(df,2) IS the clique-pair
-            # savings and n_rows the signed-doc count, so the rule
-            # below is the probe's own inequality on supplied
-            # numbers — zero jobs. The decision is seeded into the
-            # memo so later un-seeded invocations stay probe-free.
-            use_star = bool(
-                float(star_stats["cand_pairs"])
-                > 2.0 * float(star_stats["n_rows"])
-            )
-            if cache_key is not None:
-                if len(_STAR_GATE_CACHE) >= _STAR_GATE_CACHE_MAX:
-                    _STAR_GATE_CACHE.clear()
-                _STAR_GATE_CACHE[cache_key] = use_star
-        if use_star is None:
-            stats = _class_table().agg(
+    def _probe() -> bool:
+        stats = (
+            _class_table()[1]
+            .agg(
                 F.coalesce(
                     F.sum(F.col("g2") * (F.col("g2") - 1) / 2), F.lit(0.0)
                 ).alias("saved_pairs"),
                 F.coalesce(F.sum("g2"), F.lit(0)).alias("n_docs_sig"),
-            ).collect()[0]
-            use_star = bool(stats.saved_pairs > 2.0 * stats.n_docs_sig)
-            if cache_key is not None:
-                if len(_STAR_GATE_CACHE) >= _STAR_GATE_CACHE_MAX:
-                    _STAR_GATE_CACHE.clear()
-                _STAR_GATE_CACHE[cache_key] = use_star
-        if not use_star:
-            pairs2 = lsh_pairs_from_bands(
-                bands_df, hot_bucket_cap=hot_bucket_cap
             )
-            comp2 = connected_components(
-                pairs2, max_iterations=max_iterations
-            )
-            rep_label = comp2.withColumnRenamed("node", "rep_id")
-        else:
-            cls = _class_table()
-            mem2 = sigd.join(cls, "__sig").select("doc_id", "rep2", "g2")
-            rep2_bands = bands_df.join(
-                cls.select(F.col("rep2").alias("doc_id")), "doc_id"
-            )
-            pairs2 = lsh_pairs_from_bands(
-                rep2_bands, hot_bucket_cap=hot_bucket_cap
-            )
-            comp2 = connected_components(
-                pairs2, max_iterations=max_iterations
-            )
-            # per text-rep label: component of its class rep, else —
-            # for a g2≥2 class with no cross-class edge — the class
-            # itself is a clique/component labeled by its rep (= its
-            # min id). Docs with no signature row (zero shingles)
-            # fall through to the text-group rule below.
-            rep_label = mem2.join(
-                comp2.withColumnRenamed("node", "rep2"), "rep2", "left"
-            ).select(
-                F.col("doc_id").alias("rep_id"),
-                F.coalesce(
-                    "component", F.when(F.col("g2") >= 2, F.col("rep2"))
-                ).alias("component"),
-            )
+            .collect()[0]
+        )
+        return bool(stats.saved_pairs > 2.0 * stats.n_docs_sig)
+
+    use_star = cached(("star_route", d.semanticHash(), k, bands, n), _probe)
+    if not use_star:
+        comp2 = connected_components(
+            lsh_pairs_from_bands(bands_df), max_iterations=max_iterations
+        )
+        rep_label = comp2.withColumnRenamed("node", "rep_id")
+    else:
+        sigd, cls = _class_table()
+        mem2 = sigd.join(cls, "__sig").select("doc_id", "rep2", "g2")
+        rep2_bands = bands_df.join(
+            cls.select(F.col("rep2").alias("doc_id")), "doc_id"
+        )
+        comp2 = connected_components(
+            lsh_pairs_from_bands(rep2_bands), max_iterations=max_iterations
+        )
+        # per text-rep label: component of its class rep, else — for a
+        # g2≥2 class with no cross-class edge — the class itself is a
+        # clique/component labeled by its rep (= its min id). Docs with
+        # no signature row (zero shingles) fall through to the
+        # text-group rule below.
+        rep_label = mem2.join(
+            comp2.withColumnRenamed("node", "rep2"), "rep2", "left"
+        ).select(
+            F.col("doc_id").alias("rep_id"),
+            F.coalesce(
+                "component", F.when(F.col("g2") >= 2, F.col("rep2"))
+            ).alias("component"),
+        )
     return (
         membership.join(rep_label, "rep_id", "left")
         .withColumn(

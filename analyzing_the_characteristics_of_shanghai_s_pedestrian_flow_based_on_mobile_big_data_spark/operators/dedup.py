@@ -471,13 +471,11 @@ def signature_digest(bands_df: DataFrame) -> DataFrame:
     (round 10 — chaining hashes alone made two docs with different
     PARTIAL band sets but equal hash values collide, e.g. {(0,h)} vs
     {(1,h)}; full minhash_bands output always carries every band per
-    doc, so complete signatures were never affected, but the
-    hot-bucket quotient accepts arbitrary materialized band tables —
-    hypothesis found the hole). THE shared definition for every
-    signature-class quotient — lsh_pairs_from_bands' hot-bucket path,
-    near_dup_components' star expansion, and the scale probes — whose
-    equivalence arguments all require the class key to be the same
-    function everywhere."""
+    doc, so complete signatures were never affected — hypothesis
+    found the hole on arbitrary band tables). THE shared definition
+    for every signature-class quotient — near_dup_components' star
+    expansion and the scale probes — whose equivalence arguments
+    require the class key to be the same function everywhere."""
     return bands_df.groupBy("doc_id").agg(
         F.md5(
             F.array_join(
@@ -495,87 +493,27 @@ def signature_digest(bands_df: DataFrame) -> DataFrame:
     )
 
 
-def lsh_pairs_from_bands(
-    bands_df: DataFrame, hot_bucket_cap: int | None = None
-) -> DataFrame:
+def lsh_pairs_from_bands(bands_df: DataFrame) -> DataFrame:
     """Candidate pairs from a band table (materialized index or the
     in-plan :func:`minhash_bands` output): equi self-join on
     (band, band_hash), doc_a < doc_b, deduped. Assumes one row per
     (doc_id, band) — what minhash_bands emits and what the keyed
     incremental index stores.
 
-    ``hot_bucket_cap`` (round-8, VERDICT r7 #2) bounds the Σg²
-    band-join blowup for NEAR-IDENTICAL-BUT-NOT-IDENTICAL documents —
-    the crawl-boilerplate case the identical-text pre-collapse
-    (components.near_dup_components) cannot absorb: g byte-distinct
-    docs sharing every band hash put g rows in each of their ``bands``
-    buckets, hence bands·g² self-join rows, deduped back to C(g,2).
-    With a cap set, bucket sizes are counted first (one map-combined
-    agg over the band table, the same cheap-stats shape as the prefix
-    filter's df counts); buckets ≤ cap self-join directly, and rows in
-    over-cap buckets are quotiented by FULL-SIGNATURE digest (docs
-    whose entire band-hash vector agrees — since a doc's band rows are
-    a pure function of its signature, a digest class is wholly inside
-    or wholly outside any bucket): one representative per class enters
-    the hot self-join (c² rows for c distinct signatures instead of
-    m² for m docs), cross-class pairs expand back through the
-    membership table, and within-class pairs (always candidates —
-    identical signatures agree on every band) are emitted directly as
-    C(g,2) output rows, the unavoidable floor. The pair SET is
-    IDENTICAL to the uncapped join (pytest-pinned): a pair sharing a
-    cold bucket survives the cold path, a pair sharing only hot
-    buckets collides iff its signature classes' reps collide, and the
-    final distinct dedups pairs found by both. Default None keeps the
-    single-join plan — and the round-8 measurement says to KEEP that
-    default for pair-materializing consumers (SCALE_PROBE_r8
-    lsh_hotband: at g=256 planted boilerplate the uncapped codegen'd
-    hash join clears the 52M narrow band-join rows in 3.8 s while the
-    quotient's extra exchanges + skewed expansion joins cost 24.5 s;
-    the C(g,2) OUTPUT floor dominates asymptotically either way). When
-    the consumer is clustering, don't cap here — use
-    ``near_dup_components(collapse_signatures=True)``, whose star
-    expansion skips materializing the clique entirely (measured
-    near-flat). The cap remains for genuinely enormous mixed-signature
-    buckets where bands·m² join rows, not output, are the binding
-    term."""
-    if hot_bucket_cap is None:
-        a = bands_df.alias("a")
-        b_ = bands_df.alias("b")
-        return (
-            a.join(
-                b_,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
-    cap = int(hot_bucket_cap)
-    # The band table feeds the size count, both cold-join sides, the
-    # hot-doc digest pass, and the rep join (~6 references). Already-
-    # cached inputs (minhash_lsh_pairs persists before calling) are
-    # used as-is — checkpointing on top of a persisted input would
-    # hold the table twice in executor storage; an un-cached lineage
-    # (a derived join like the star path's rep2_bands) is eagerly
-    # checkpointed once instead of re-executing per reference.
-    bt = (
-        bands_df
-        if bands_df.is_cached
-        else bands_df.localCheckpoint(eager=True)
-    )
-    sizes = bt.groupBy("band", "band_hash").agg(F.count("*").alias("__bsz"))
-    tagged = bt.join(sizes, ["band", "band_hash"])
-    cold = tagged.filter(F.col("__bsz") <= cap).select(
-        "doc_id", "band", "band_hash"
-    )
-    cold_pairs = (
-        cold.alias("a")
-        .join(
-            cold.alias("b"),
+    A bucket of g docs costs g² join rows, and g byte-distinct docs
+    that share a whole signature fill ``bands`` such buckets. There is
+    deliberately no hot-bucket quotient here: at g=256 planted
+    boilerplate (SCALE_PROBE_r8 lsh_hotband) the plain codegen'd hash
+    join cleared the 52M band-join rows in 3.8 s where the quotient's
+    extra exchanges and skewed expansion joins took 24.5 s, and the
+    C(g,2) output floor is paid either way. Clustering consumers avoid
+    the clique altogether through the signature-class star route of
+    :func:`~.components.near_dup_components`."""
+    a = bands_df.alias("a")
+    b_ = bands_df.alias("b")
+    return (
+        a.join(
+            b_,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
@@ -584,58 +522,8 @@ def lsh_pairs_from_bands(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
         )
-    )
-    hot_rows = tagged.filter(F.col("__bsz") > cap).select(
-        "doc_id", "band", "band_hash"
-    )
-    # Full-signature digest of every doc holding >= 1 hot row: all of
-    # a doc's band rows (band-ordered) hashed into one 32-char class
-    # key. Struct sort orders by band first, so the digest is
-    # row-order independent.
-    hot_doc_ids = hot_rows.select("doc_id").distinct()
-    digests = signature_digest(bt.join(hot_doc_ids, "doc_id")).withColumnRenamed(
-        "__sig", "__dig"
-    )
-    cls = digests.groupBy("__dig").agg(
-        F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("g")
-    )
-    mem = digests.select("__dig", "doc_id")
-    rep_hot = hot_rows.join(
-        cls.select(F.col("rep").alias("doc_id"), "__dig"), "doc_id"
-    ).select(F.col("doc_id").alias("rep"), "__dig", "band", "band_hash")
-    rep_pairs = (
-        rep_hot.alias("a")
-        .join(
-            rep_hot.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.rep") < F.col("b.rep")),
-        )
-        .select(F.col("a.__dig").alias("__da"), F.col("b.__dig").alias("__db"))
         .distinct()
     )
-    cross = (
-        rep_pairs.join(
-            mem.select(F.col("__dig").alias("__da"), F.col("doc_id").alias("ma")),
-            "__da",
-        )
-        .join(
-            mem.select(F.col("__dig").alias("__db"), F.col("doc_id").alias("mb")),
-            "__db",
-        )
-        .select(
-            F.least("ma", "mb").alias("doc_a"),
-            F.greatest("ma", "mb").alias("doc_b"),
-        )
-    )
-    within = (
-        cls.filter(F.col("g") >= 2)
-        .join(mem.select("__dig", F.col("doc_id").alias("ma")), "__dig")
-        .join(mem.select("__dig", F.col("doc_id").alias("mb")), "__dig")
-        .filter(F.col("ma") < F.col("mb"))
-        .select(F.col("ma").alias("doc_a"), F.col("mb").alias("doc_b"))
-    )
-    return cold_pairs.unionByName(cross).unionByName(within).distinct()
 
 
 def minhash_lsh_pairs(
@@ -645,19 +533,15 @@ def minhash_lsh_pairs(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hot_bucket_cap: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: split the k-wide signature into ``bands``
     bands of k/bands rows; docs agreeing on any full band are
     candidates. Join is equi on (band_idx, band_hash) — shuffles hash
-    keys only, scales linearly with corpus size. ``hot_bucket_cap``
-    forwards to :func:`lsh_pairs_from_bands` — set it on
-    boilerplate-heavy corpora where many byte-distinct docs share
-    whole signatures (pair set identical either way)."""
+    keys only, scales linearly with corpus size."""
     # Persist: the band table feeds both sides of the candidate
     # self-join; it is k×32B per doc — tiny relative to the corpus.
     bands_df = minhash_bands(docs, k, bands, n, id_col, text_col).persist()
-    return lsh_pairs_from_bands(bands_df, hot_bucket_cap=hot_bucket_cap)
+    return lsh_pairs_from_bands(bands_df)
 
 
 def minhash_lsh_pairs_script(
@@ -668,20 +552,19 @@ def minhash_lsh_pairs_script(
     n_char: int = 6,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hot_bucket_cap: int | None = None,
 ) -> DataFrame:
     """:func:`minhash_lsh_pairs` over the SCRIPT-ROUTED feature set
     (:func:`script_doc_shingles`) — candidate pairs that still exist
     for CJK/Thai documents, which the word-shingle path drops
     entirely (zero shingles → no signature → no bands). Identical
-    plan shape: signatures, bands, (band, band_hash) equi self-join;
-    the persist/cap mechanics are unchanged because everything below
-    the shingle table is feature-set agnostic."""
+    plan shape: signatures, bands, (band, band_hash) equi self-join,
+    because everything below the shingle table is feature-set
+    agnostic."""
     sh = script_doc_shingles(docs, n_word, n_char, id_col, text_col)
     bands_df = minhash_bands(
         docs, k, bands, n_word, id_col, text_col, shingles=sh
     ).persist()
-    return lsh_pairs_from_bands(bands_df, hot_bucket_cap=hot_bucket_cap)
+    return lsh_pairs_from_bands(bands_df)
 
 
 def simhash(

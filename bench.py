@@ -21,6 +21,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -397,13 +398,30 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
+    # A raising query is recorded (name, exception class, phase), left
+    # out of every total, and the run goes on; the process exits
+    # non-zero at the end so a partial run is never mistaken for a
+    # clean one.
+    failures: list[dict] = []
     for name in names:
-        run(name)  # warm-up: plan compile + codegen, not timed
-        samples = []
-        for _ in range(iters):
-            t0 = time.perf_counter()
-            run(name)
-            samples.append(time.perf_counter() - t0)
+        phase = "warmup"
+        try:
+            run(name)  # warm-up: plan compile + codegen, not timed
+            phase = "timed"
+            samples = []
+            for _ in range(iters):
+                t0 = time.perf_counter()
+                run(name)
+                samples.append(time.perf_counter() - t0)
+        except Exception as e:
+            failures.append(
+                {"name": name, "error": type(e).__name__, "phase": phase}
+            )
+            # leading newline: Spark's console progress bar leaves the
+            # cursor mid-line on stderr
+            print(f"\nbench: {name} failed in {phase}:", file=sys.stderr)
+            traceback.print_exc()
+            continue
         samples.sort()
         timings[name] = round(samples[len(samples) // 2], 3)
         spread[name] = round(samples[-1] - samples[0], 3)
@@ -467,7 +485,10 @@ def main() -> None:
                 for ln in proc.stdout.strip().splitlines()
                 if ln.startswith("{")
             ][-1]
-            common14 = float(json.loads(line)["common14_total"])
+            isolated = json.loads(line)
+            if "failures" in isolated:
+                raise RuntimeError(f"failed queries {isolated['failures']}")
+            common14 = float(isolated["common14_total"])
             common14_mode = "isolated"
         except Exception as e:  # fall back to the session number
             print(f"bench: isolated common-14 pass failed: {e}",
@@ -491,6 +512,8 @@ def main() -> None:
         "common14_total": common14,
         "common14_total_session": common14_session,
     }
+    if failures:
+        result["failures"] = failures
     # full detail goes to a file (committed per round); stdout carries
     # the one-line contract LAST, after spark.stop(), so a tail-capture
     # of stdout always ends at a complete, parseable JSON line
@@ -500,6 +523,8 @@ def main() -> None:
         fh.write("\n")
     print(json.dumps(result))
     sys.stdout.flush()
+    if failures:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

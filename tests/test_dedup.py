@@ -389,60 +389,30 @@ def test_near_dup_pairs_auto_propagates_meta(spark):
     assert meta["k"] % meta["bands"] == 0
 
 
-def test_lsh_hot_bucket_cap_pairs_identical(spark):
-    """Round-8 hot-band quotient (VERDICT r7 #2): the capped path must
-    produce the IDENTICAL candidate pair set. Fixture plants the exact
-    failure mode — boilerplate groups of byte-DISTINCT docs (case
-    variants: doc_shingles lowercases, so shingle sets and therefore
-    whole signatures agree while md5(text) differs, defeating the
-    exact-text pre-collapse) — plus ordinary near-dup and unrelated
-    docs so cold buckets, hot-vs-cold overlap, and cross-class hot
-    collisions are all exercised."""
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.dedup import (
-        minhash_bands,
-        lsh_pairs_from_bands,
+def _star_routes(cache: dict) -> list[bool]:
+    """The near_dup_components route decisions held by the artifact
+    cache (True = signature-class star route)."""
+    return [v for key, v in cache.items() if key[0] == "star_route"]
+
+
+def test_near_dup_components_cap_invariant(spark, monkeypatch):
+    """near_dup_components labels must not depend on the route it
+    picks (the signature-class star expansion or the plain band join
+    are physical-plan choices only). Two boilerplate group sizes
+    bracket the route's savings gate: the 12-variant group
+    (Σ C(g,2)=66 > 2·docs) ENGAGES the star quotient, the 5-doc corpus
+    stays on the plain route — the labels must equal the definitional
+    clique composition connected_components(minhash_lsh_pairs(docs))
+    in both regimes."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions import (
+        exprmemo,
     )
-
-    rows = []
-    base = "the quick brown fox jumps over the lazy dog near the river"
-    # two boilerplate groups of 6 case-variant copies each
-    for g, text in enumerate([base, base + " tonight again and again"]):
-        for i in range(6):
-            words = text.split()
-            words[i % len(words)] = words[i % len(words)].upper()
-            rows.append((g * 100 + i, " ".join(words)))
-    # a genuine near-dup pair and unrelated docs
-    rows.append((500, base + " extra trailing words here"))
-    rows.append((600, "completely different content about spark plans"))
-    rows.append((601, "another unrelated document with its own words"))
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    bands_df = minhash_bands(docs, k=8, bands=4, n=3)
-    want = sorted(
-        map(tuple, lsh_pairs_from_bands(bands_df).collect())
-    )
-    assert len(want) >= 2 * 15  # both 6-groups fully paired: C(6,2)=15
-    for cap in (1, 2, 4, 100):
-        got = sorted(
-            map(
-                tuple,
-                lsh_pairs_from_bands(bands_df, hot_bucket_cap=cap).collect(),
-            )
-        )
-        assert got == want, f"cap={cap}"
-
-
-def test_near_dup_components_cap_invariant(spark):
-    """near_dup_components labels must not depend on the hot-bucket
-    cap or the signature-class star expansion (both are physical-plan
-    choices only). Two boilerplate group sizes bracket the adaptive
-    savings gate: the 12-variant group (Σ C(g,2)=66 > 2·docs) ENGAGES
-    the star quotient, the lone pair stays on the skip path — the
-    labels must be identical to the uncollapsed clique composition in
-    both regimes."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.components import (
+        connected_components,
         near_dup_components,
     )
 
+    monkeypatch.setattr(exprmemo, "_CACHE", {})
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = []
     for i in range(12):
@@ -457,35 +427,29 @@ def test_near_dup_components_cap_invariant(spark):
         (10_000, "unrelated text with completely different words here")
     ]
     docs5 = spark.createDataFrame(small, "doc_id long, text string")
-    for docs in (docs12, docs5):
+    for docs, star in ((docs12, True), (docs5, False)):
         want = sorted(
-            map(
-                tuple,
-                near_dup_components(
-                    docs, hot_bucket_cap=None, collapse_signatures=False
-                ).collect(),
-            )
+            (r.node, r.component)
+            for r in connected_components(minhash_lsh_pairs(docs)).collect()
         )
-        for kwargs in (
-            {"hot_bucket_cap": 2},
-            {"hot_bucket_cap": None},
-            {"hot_bucket_cap": 2, "collapse_signatures": False},
-        ):
-            got = sorted(
-                map(tuple, near_dup_components(docs, **kwargs).collect())
-            )
-            assert got == want, kwargs
+        exprmemo._CACHE.clear()
+        got = sorted(map(tuple, near_dup_components(docs).collect()))
+        assert got == want, star
+        assert _star_routes(exprmemo._CACHE) == [star]
         assert len(want) >= 5
 
 
 def test_star_gate_memo_and_override(spark, monkeypatch):
-    """Round-9 (VERDICT r8 #1): the star-quotient engagement decision
-    is a pure function of (corpus, banding), so it is memoized per
-    plan hash — a REPEAT invocation over the same corpus must run
-    ZERO probe work (pinned structurally: signature_digest poisoned,
-    so a memoized plain decision that still touched the class table
-    would raise). star_gate= overrides the gate outright with labels
-    unchanged (both routes are physical-plan choices only)."""
+    """Round-9 (VERDICT r8 #1): the star-quotient route decision is a
+    pure function of (corpus, banding), so it is held in the artifact
+    cache per plan hash — a REPEAT invocation over the same corpus
+    must run ZERO probe work (pinned structurally: signature_digest
+    poisoned, so a cached plain decision that still touched the class
+    table would raise). Labels equal the definitional composition on
+    either route."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions import (
+        exprmemo,
+    )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
         components as comp,
     )
@@ -493,34 +457,25 @@ def test_star_gate_memo_and_override(spark, monkeypatch):
         dedup as dd,
     )
 
-    comp.clear_star_gate_cache()
-    # clean corpus (no byte-distinct signature duplicates): gate=skip
+    monkeypatch.setattr(exprmemo, "_CACHE", {})
+    # clean corpus (no byte-distinct signature duplicates): plain route
     clean = spark.createDataFrame(
         [(1, DOC_A), (2, DOC_A2), (3, DOC_B), (4, DOC_A)],
         "doc_id long, text string",
     )
     want = sorted(map(tuple, comp.near_dup_components(clean).collect()))
-    assert len(comp._STAR_GATE_CACHE) == 1
-    assert list(comp._STAR_GATE_CACHE.values()) == [False]
+    assert _star_routes(exprmemo._CACHE) == [False]
 
     def _boom(*a, **k):
         raise AssertionError("probe ran on a memoized invocation")
 
-    monkeypatch.setattr(dd, "signature_digest", _boom)
-    again = sorted(map(tuple, comp.near_dup_components(clean).collect()))
+    with monkeypatch.context() as mp:
+        mp.setattr(dd, "signature_digest", _boom)
+        again = sorted(map(tuple, comp.near_dup_components(clean).collect()))
     assert again == want
-    # explicit override: plain path forced, probe untouched, labels equal
-    forced = sorted(
-        map(
-            tuple,
-            comp.near_dup_components(clean, star_gate=False).collect(),
-        )
-    )
-    assert forced == want
-    monkeypatch.undo()
 
-    # boilerplate corpus: gate=star memoized True; repeat + star_gate=True
-    # agree with the uncollapsed composition
+    # boilerplate corpus: star route cached True; the first and the
+    # cached invocation agree with the uncollapsed composition
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     rows = []
     for i in range(12):
@@ -529,116 +484,18 @@ def test_star_gate_memo_and_override(spark, monkeypatch):
         rows.append((i, " ".join(words)))
     rows.append((10_000, "unrelated text with completely different words"))
     boiler = spark.createDataFrame(rows, "doc_id long, text string")
-    comp.clear_star_gate_cache()
+    exprmemo._CACHE.clear()
     want_b = sorted(
-        map(
-            tuple,
-            comp.near_dup_components(
-                boiler, collapse_signatures=False
-            ).collect(),
-        )
+        (r.node, r.component)
+        for r in comp.connected_components(
+            dd.minhash_lsh_pairs(boiler)
+        ).collect()
     )
     got_b = sorted(map(tuple, comp.near_dup_components(boiler).collect()))
     assert got_b == want_b
-    assert list(comp._STAR_GATE_CACHE.values()) == [True]
+    assert _star_routes(exprmemo._CACHE) == [True]
     got_memo = sorted(map(tuple, comp.near_dup_components(boiler).collect()))
-    got_forced = sorted(
-        map(
-            tuple,
-            comp.near_dup_components(boiler, star_gate=True).collect(),
-        )
-    )
-    assert got_memo == want_b and got_forced == want_b
-    comp.clear_star_gate_cache()
-
-
-def test_star_gate_stats_preseed_skips_probe(spark, monkeypatch):
-    """Round-10 (VERDICT r9 #6): the memo kills the repeat-invocation
-    probe; ``star_stats`` must kill the FIRST one — a cold-cache
-    invocation with supplied stats runs ZERO probe work (pinned
-    structurally: signature_digest poisoned; a plain decision that
-    still touched the class table would raise), labels unchanged, and
-    the decision is seeded into the memo. Precedence: an existing
-    memo entry wins over contradictory stats."""
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
-        components as comp,
-    )
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
-        dedup as dd,
-    )
-
-    clean = spark.createDataFrame(
-        [(1, DOC_A), (2, DOC_A2), (3, DOC_B), (4, DOC_A)],
-        "doc_id long, text string",
-    )
-    comp.clear_star_gate_cache()
-    want = sorted(map(tuple, comp.near_dup_components(clean).collect()))
-    comp.clear_star_gate_cache()
-
-    def _boom(*a, **k):
-        raise AssertionError("probe ran despite supplied star_stats")
-
-    monkeypatch.setattr(dd, "signature_digest", _boom)
-    # clean-corpus stats: no signature-duplicate classes -> plain path
-    stats = {"n_rows": 4, "n_keys": 4, "cand_pairs": 0.0, "max_df": 1}
-    got = sorted(
-        map(
-            tuple,
-            comp.near_dup_components(clean, star_stats=stats).collect(),
-        )
-    )
-    assert got == want
-    # the stats-seeded decision entered the memo
-    assert list(comp._STAR_GATE_CACHE.values()) == [False]
-    # memo precedence: contradictory stats are ignored on a warm memo
-    # (still plain -> poisoned digest still untouched)
-    boiler_stats = {"n_rows": 4, "n_keys": 4, "cand_pairs": 99.0, "max_df": 4}
-    again = sorted(
-        map(
-            tuple,
-            comp.near_dup_components(
-                clean, star_stats=boiler_stats
-            ).collect(),
-        )
-    )
-    assert again == want
-    assert list(comp._STAR_GATE_CACHE.values()) == [False]
-    monkeypatch.undo()
-    comp.clear_star_gate_cache()
-    # star-voting stats on a boilerplate corpus: labels still equal
-    # the uncollapsed composition (route change is physical only)
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = []
-    for i in range(12):
-        words = base.split()
-        words[i % len(words)] = words[i % len(words)].upper()
-        rows.append((i, " ".join(words)))
-    boiler = spark.createDataFrame(rows, "doc_id long, text string")
-    want_b = sorted(
-        map(
-            tuple,
-            comp.near_dup_components(
-                boiler, collapse_signatures=False
-            ).collect(),
-        )
-    )
-    got_b = sorted(
-        map(
-            tuple,
-            comp.near_dup_components(
-                boiler,
-                star_stats={
-                    "n_rows": 12,
-                    "n_keys": 12,
-                    "cand_pairs": 66.0,
-                    "max_df": 12,
-                },
-            ).collect(),
-        )
-    )
-    assert got_b == want_b
-    assert list(comp._STAR_GATE_CACHE.values()) == [True]
-    comp.clear_star_gate_cache()
+    assert got_memo == want_b
 
 
 def test_simhash_hamming_pairs_complete_cover(spark):

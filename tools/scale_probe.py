@@ -258,16 +258,17 @@ def probe_lsh_hotband(spark, sf_dir: str, n: int) -> dict:
     distinct md5(text), so the exact-text pre-collapse cannot absorb
     them) — and measure:
 
-    - the candidate PAIR join capped vs uncapped (the cap removes the
-      bands× band-join multiplier; the C(g,2) output floor remains in
-      both — pair fingerprints asserted identical);
+    - the candidate PAIR join (the bands× band-join multiplier and the
+      C(g,2) output floor);
     - the CLUSTERING composition (near_dup_components) with the
-      round-8 signature-class star expansion vs the clique pipeline —
-      the end-to-end near-flat path (Θ(g) rows per group instead of
-      Θ(g²) pair rows), cluster fingerprints asserted identical."""
+      round-8 signature-class star expansion vs the clique pipeline
+      ``connected_components(lsh_pairs_from_bands(bands))`` — the
+      end-to-end near-flat path (Θ(g) rows per group instead of Θ(g²)
+      pair rows), cluster fingerprints asserted identical."""
     import hashlib
 
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.components import (
+        connected_components,
         near_dup_components,
     )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.dedup import (
@@ -327,13 +328,8 @@ def probe_lsh_hotband(spark, sf_dir: str, n: int) -> dict:
     t0 = time.perf_counter()
     fp_u, n_u = fp_pairs(lsh_pairs_from_bands(bands_df))
     results["pairs_uncapped_s"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    fp_c, n_c = fp_pairs(lsh_pairs_from_bands(bands_df, hot_bucket_cap=32))
-    results["pairs_capped_s"] = round(time.perf_counter() - t0, 2)
     results["pairs"] = n_u
     results["pairs_fp_uncapped"] = fp_u
-    results["pairs_fp_capped"] = fp_c
-    assert fp_u == fp_c
 
     # The structural metric: CC input volume. The clique pipeline
     # feeds C(g,2)-per-group pair rows into label propagation; the
@@ -353,8 +349,8 @@ def probe_lsh_hotband(spark, sf_dir: str, n: int) -> dict:
     results["cc_input_rows_clique"] = n_u
     results["cc_input_rows_star"] = rep_pairs + results["rows"]
 
-    def fp_comp(df):
-        rows = sorted((r.doc_id, r.component) for r in df.collect())
+    def fp_comp(df, id_col="doc_id"):
+        rows = sorted((r[id_col], r.component) for r in df.collect())
         return hashlib.md5(repr(rows).encode()).hexdigest()[:16], len(rows)
 
     t0 = time.perf_counter()
@@ -364,10 +360,10 @@ def probe_lsh_hotband(spark, sf_dir: str, n: int) -> dict:
     results["cc_star_s"] = round(time.perf_counter() - t0, 2)
     t0 = time.perf_counter()
     fp_k, _ = fp_comp(
-        near_dup_components(
-            sdocs, max_iterations=30, materialize="checkpoint",
-            collapse_signatures=False, hot_bucket_cap=None,
-        )
+        connected_components(
+            lsh_pairs_from_bands(bands_df), max_iterations=30
+        ),
+        id_col="node",
     )
     results["cc_clique_s"] = round(time.perf_counter() - t0, 2)
     results["cc_members"] = members
