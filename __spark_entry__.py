@@ -54,6 +54,9 @@ from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile
 from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.exprmemo import (  # noqa: E402
     cached,
 )
+from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.sampling import (  # noqa: E402
+    hash_bucket,
+)
 from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.langid import (  # noqa: E402
     predict_lang_ngram_cached,
     predict_lang_tokens_cached,
@@ -8414,21 +8417,8 @@ _CMS_WIDTH = 1024
 
 
 def _cms_bucket(d: F.Column, key: F.Column) -> F.Column:
-    """Row d of the Count-Min sketch: md5('cms'‖d‖':'‖key) → first 8
-    hex digits → 32-bit int → mod width. md5, not an engine hash —
-    the whole sketch is reproducible bit-for-bit in ANY engine."""
-    hx = F.md5(
-        F.concat(
-            F.lit("cms"),
-            d.cast("string"),
-            F.lit(":"),
-            key.cast("string"),
-        )
-    )
-    return F.pmod(
-        F.conv(F.substring(hx, 1, 8), 16, 10).cast("long"),
-        F.lit(_CMS_WIDTH),
-    )
+    """Row d of the Count-Min sketch (functions/sampling.py:hash_bucket)."""
+    return hash_bucket("cms", d, key, _CMS_WIDTH)
 
 
 def _q_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8508,18 +8498,9 @@ _BLOOM_K = 3
 
 
 def _bloom_bit(i: F.Column, key: F.Column) -> F.Column:
-    hx = F.md5(
-        F.concat(
-            F.lit("bloom"),
-            i.cast("string"),
-            F.lit(":"),
-            key.cast("string"),
-        )
-    )
-    return F.pmod(
-        F.conv(F.substring(hx, 1, 8), 16, 10).cast("long"),
-        F.lit(_BLOOM_BITS),
-    )
+    """Bit of hash function i of the Bloom filter
+    (functions/sampling.py:hash_bucket)."""
+    return hash_bucket("bloom", i, key, _BLOOM_BITS)
 
 
 def _q_bloom_membership_report(spark: SparkSession, sf_dir: str) -> DataFrame:

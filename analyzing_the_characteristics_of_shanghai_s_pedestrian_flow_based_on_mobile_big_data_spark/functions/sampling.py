@@ -31,6 +31,20 @@ def hash_fraction(key: Column, salt: str = "") -> Column:
     return h.cast("double") / F.lit(float(HASH_DOMAIN))
 
 
+def hash_bucket(salt: str, i: Column, key: Column, width: int) -> Column:
+    """Bucket of ``key`` in row ``i`` of an md5 sketch (Count-Min rows,
+    Bloom hash functions): md5(salt ‖ i ‖ ':' ‖ key) → first 8 hex
+    digits → 32-bit int → mod ``width``. md5, not an engine hash, so
+    the batch sketches, their streaming twins and the DuckDB oracle
+    all reproduce one sketch bit-for-bit."""
+    hx = F.md5(
+        F.concat(F.lit(salt), i.cast("string"), F.lit(":"), key.cast("string"))
+    )
+    return F.pmod(
+        F.conv(F.substring(hx, 1, 8), 16, 10).cast("long"), F.lit(width)
+    )
+
+
 def deterministic_sample(df, key_col: str, rate: float, salt: str = "sample"):
     """Keep each row iff hash_fraction(key) < rate. Reproducible across
     engines/partitionings; expected |out| = rate·|df| with per-row

@@ -28,6 +28,18 @@ reuses the rest verbatim — merge cost Θ(delta + touched partitions),
 measured flat vs the monolithic chain's linear growth
 (SCALE_PROBE_r8 ingest_narrow). For bounded-history contracts,
 :meth:`IncrementalCountTable.compact` adds retention instead.
+
+One path each:
+
+- Every write (merge or compaction, monolithic or partitioned) ends
+  in :meth:`IncrementalCountTable._publish`, and every pointer,
+  manifest and scheme stamp is written by :func:`_write_json` (temp
+  file + ``os.replace``). Sketches with a non-additive merge (the KMV
+  sketch, the upsert tables) ride the same chain by overriding
+  ``_combine``.
+- Every ``incremental_*_stream`` is a table plus a delta builder
+  started by :func:`streaming.driver.foreach_batch_stream` (one file
+  per micro-batch, checkpointed foreachBatch sink).
 """
 
 from __future__ import annotations
@@ -43,6 +55,51 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..functions.sampling import hash_bucket
+from .driver import foreach_batch_stream
+
+
+def _write_json(path: str, obj, sort_keys: bool = False) -> None:
+    """Publish ``obj`` as the JSON file ``path`` atomically: the bytes
+    go to ``path + ".tmp"`` (``CURRENT.tmp`` for the pointer) and
+    ``os.replace`` swaps them in, so a reader — or a restart after a
+    crash — sees the old file or the new one, never torn JSON."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, sort_keys=sort_keys)
+    os.replace(tmp, path)
+
+
+def _fresh_name(kind: str, epoch: int | None, tag: str = "") -> str:
+    """A never-reused generation or manifest stem,
+    ``<kind>_<epoch>_<tag><8 hex>`` — every attempt writes somewhere
+    new, so no directory a pending lazy read may reference is ever
+    overwritten."""
+    return f"{kind}_{epoch if epoch is not None else 0}_{tag}{uuid.uuid4().hex[:8]}"
+
+
+def _epoch_rank(root: str, name: str) -> tuple[int, float]:
+    """GC order of a generation dir or manifest under ``root``: the
+    epoch embedded in its name (``gen_<E>_…``, ``manifest_<E>_…``) —
+    monotonic by construction — not filesystem mtime, which can tie or
+    go backwards under clock adjustments and mis-order which
+    generation gets deleted. mtime only tie-breaks same-epoch retry
+    attempts, where relative order is inconsequential (at most one of
+    them is the pointer's parent, and GC always keeps that)."""
+    try:
+        epoch = int(name.split("_")[1])
+    except (IndexError, ValueError):
+        epoch = -1
+    return (epoch, os.path.getmtime(os.path.join(root, name)))
+
+
+def _apply_retention(df: DataFrame, keep, transform) -> DataFrame:
+    """Compaction's row drop: the ``keep`` predicate, then the
+    ``transform`` (either may be None)."""
+    if keep is not None:
+        df = df.filter(keep)
+    return df if transform is None else transform(df)
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -335,15 +392,23 @@ class IncrementalCountTable:
         retried epoch, so the parent generation is always within the
         retain horizon."""
         ptr = self._pointer()
+        if ptr is not None:
+            self._check_monolithic(ptr["gen"])
+        gen = self._replay_base(ptr, epoch_id)
+        if gen is None:
+            return None  # empty table, or replaying the very first epoch
+        return self.spark.read.parquet(os.path.join(self.path, gen))
+
+    @staticmethod
+    def _replay_base(ptr: dict | None, epoch_id: int) -> str | None:
+        """The generation (or manifest) epoch ``epoch_id`` derives
+        from: the pointer's PARENT when this epoch already committed —
+        a replay rebases onto the state the first attempt saw, so its
+        delta is never applied twice — else the current head. None for
+        an empty table or a replay of the very first epoch."""
         if ptr is None:
             return None
-        self._check_monolithic(ptr["gen"])
-        gen = ptr["gen"]
-        if ptr.get("epoch") == epoch_id:
-            gen = ptr.get("parent")
-            if gen is None:
-                return None  # replaying the very first epoch
-        return self.spark.read.parquet(os.path.join(self.path, gen))
+        return ptr["parent"] if ptr["epoch"] == epoch_id else ptr["gen"]
 
     def _union_upgrading(self, existing: DataFrame, delta: DataFrame):
         """Union that tolerates a SCHEMA UPGRADE of the table: columns
@@ -393,64 +458,10 @@ class IncrementalCountTable:
         output. Writer-locked: a concurrent live writer raises
         :class:`ConcurrentWriterError` (class docstring)."""
         with self._writer_lock():
-            self._merge_batch_locked(delta, epoch_id)
+            base = self._replay_base(self._pointer(), epoch_id)
+            self._publish(self._write_merge(delta, base, epoch_id), epoch_id, base)
 
     def compact(self, keep=None, transform=None) -> None:
-        with self._writer_lock():
-            self._compact_locked(keep, transform)
-
-    def _merge_batch_locked(self, delta: DataFrame, epoch_id: int) -> None:
-        ptr = self._pointer()
-        if ptr is not None and ptr["epoch"] == epoch_id:
-            base_gen = ptr["parent"]  # replay: pointer already advanced
-        else:
-            base_gen = ptr["gen"] if ptr is not None else None
-        if base_gen is not None:
-            self._check_monolithic(base_gen)
-            existing = self.spark.read.parquet(
-                os.path.join(self.path, base_gen)
-            )
-            merged = self._union_upgrading(existing, delta)
-        else:
-            merged = delta
-        merged = self._combine(merged)
-        # Fresh directory per attempt: the lazy `existing` read above is
-        # materialized by this write while its input files still exist.
-        gen = f"gen_{epoch_id}_{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(os.path.join(self.path, gen))
-        tmp = os.path.join(self.path, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            json.dump({"gen": gen, "epoch": epoch_id, "parent": base_gen}, f)
-        os.replace(tmp, os.path.join(self.path, "CURRENT"))
-        # GC superseded generations — always keep the new current and
-        # its parent (a replay of this epoch may still rebase onto it),
-        # plus the `retain` most recent others so lazy read() handles
-        # from the last few merges stay consumable.
-        keep = {gen, base_gen}
-        gens = [
-            d
-            for d in os.listdir(self.path)
-            if d.startswith("gen_") and d not in keep
-        ]
-        # Rank by the epoch embedded in the generation name — monotonic
-        # by construction — not filesystem mtime, which can tie or go
-        # backwards under clock adjustments and mis-order which
-        # generation gets deleted. mtime only tie-breaks same-epoch
-        # retry attempts, where relative order is inconsequential (at
-        # most one of them is the pointer's parent, and that's in
-        # `keep`).
-        def gen_rank(d: str) -> tuple[int, float]:
-            try:
-                epoch = int(d.split("_")[1])
-            except (IndexError, ValueError):
-                epoch = -1
-            return (epoch, os.path.getmtime(os.path.join(self.path, d)))
-
-        gens.sort(key=gen_rank, reverse=True)
-        for d in gens[self.retain:]:
-            shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-
-    def _compact_locked(self, keep=None, transform=None) -> None:
         """Rewrite the current generation, dropping rows the ``keep``
         predicate (SQL string or Column; None = pure rewrite) rejects;
         ``transform`` (DataFrame → DataFrame, applied after ``keep``)
@@ -475,42 +486,66 @@ class IncrementalCountTable:
         converge identically either way, which is what the mid-stream
         parity pytest pins. At 100 TB this maps to a partition-pruned
         DELETE + VACUUM on Delta/Iceberg."""
-        ptr = self._pointer()
-        if ptr is None:
-            return
+        with self._writer_lock():
+            ptr = self._pointer()
+            if ptr is None:
+                return
+            self._publish(
+                self._write_compact(ptr, keep, transform),
+                ptr["epoch"],
+                ptr["parent"],
+            )
+
+    def _publish(self, head: str, epoch: int | None, parent: str | None) -> None:
+        """The commit step every merge and compaction ends with: swap
+        CURRENT to (``head``, epoch, replay parent), then GC what the
+        swap superseded — always keeping the new head and its parent (a
+        replay of this epoch may still rebase onto it)."""
+        _write_json(
+            os.path.join(self.path, "CURRENT"),
+            {"gen": head, "epoch": epoch, "parent": parent},
+        )
+        self._gc({head, parent})
+
+    def _write_merge(
+        self, delta: DataFrame, base: str | None, epoch_id: int
+    ) -> str:
+        """Write ``base`` ⊕ ``delta`` as a fresh generation; returns
+        its name."""
+        if base is not None:
+            self._check_monolithic(base)
+            existing = self.spark.read.parquet(os.path.join(self.path, base))
+            delta = self._union_upgrading(existing, delta)
+        # Fresh directory per attempt: the lazy `existing` read above is
+        # materialized by this write while its input files still exist.
+        gen = _fresh_name("gen", epoch_id)
+        self._combine(delta).write.mode("overwrite").parquet(
+            os.path.join(self.path, gen)
+        )
+        return gen
+
+    def _write_compact(self, ptr: dict, keep, transform) -> str:
+        """Write the current generation's retained rows as a fresh
+        generation; returns its name."""
         self._check_monolithic(ptr["gen"])
         cur = self.spark.read.parquet(os.path.join(self.path, ptr["gen"]))
-        if keep is not None:
-            cur = cur.filter(keep)
-        if transform is not None:
-            cur = transform(cur)
-        epoch = ptr["epoch"] if ptr["epoch"] is not None else 0
-        gen = f"gen_{epoch}_c{uuid.uuid4().hex[:8]}"
-        cur.write.mode("overwrite").parquet(os.path.join(self.path, gen))
-        tmp = os.path.join(self.path, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            json.dump(
-                {"gen": gen, "epoch": ptr["epoch"], "parent": ptr["parent"]}, f
-            )
-        os.replace(tmp, os.path.join(self.path, "CURRENT"))
-        # GC mirrors merge_batch: keep the compacted gen + the replay
-        # parent; the pre-compaction gen is the most recent "other",
-        # so it survives the retain window for live read() handles.
-        keep_dirs = {gen, ptr["parent"]}
+        gen = _fresh_name("gen", ptr["epoch"], "c")
+        _apply_retention(cur, keep, transform).write.mode("overwrite").parquet(
+            os.path.join(self.path, gen)
+        )
+        return gen
+
+    def _gc(self, keep: set) -> None:
+        """Delete superseded generations beyond the ``retain`` most
+        recent others, so lazy read() handles from the last few merges
+        stay consumable. After a compaction the pre-compaction
+        generation is the most recent "other", so it survives."""
         gens = [
             d
             for d in os.listdir(self.path)
-            if d.startswith("gen_") and d not in keep_dirs
+            if d.startswith("gen_") and d not in keep
         ]
-
-        def gen_rank(d: str) -> tuple[int, float]:
-            try:
-                e = int(d.split("_")[1])
-            except (IndexError, ValueError):
-                e = -1
-            return (e, os.path.getmtime(os.path.join(self.path, d)))
-
-        gens.sort(key=gen_rank, reverse=True)
+        gens.sort(key=lambda d: _epoch_rank(self.path, d), reverse=True)
         for d in gens[self.retain:]:
             shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
 
@@ -636,15 +671,12 @@ class PartitionedIncrementalCountTable(IncrementalCountTable):
         # silently adopting whichever dir's footer Spark samples
         return self.spark.read.option("mergeSchema", "true").parquet(*dirs)
 
-    def _merge_batch_locked(self, delta: DataFrame, epoch_id: int) -> None:
-        ptr = self._pointer()
-        if ptr is not None and ptr["epoch"] == epoch_id:
-            base_name = ptr["parent"]  # replay: pointer already advanced
-        else:
-            base_name = ptr["gen"] if ptr is not None else None
-        base_parts: dict = (
-            self._load_manifest(base_name)["parts"] if base_name else {}
-        )
+    def _write_merge(
+        self, delta: DataFrame, base: str | None, epoch_id: int
+    ) -> str:
+        """Rewrite the partitions ``delta`` touches on top of manifest
+        ``base`` and write the new manifest; returns its name."""
+        base_parts: dict = self._load_manifest(base)["parts"] if base else {}
         # the watermark read: which partitions does this delta touch?
         # NULL partition keys ride a sentinel value so they are never
         # silently dropped (NULL == NULL is false in the filter below)
@@ -652,7 +684,7 @@ class PartitionedIncrementalCountTable(IncrementalCountTable):
         touched = [
             str(r[0]) for r in delta.select(pstr).distinct().collect()
         ]
-        gen = f"gen_{epoch_id}_{uuid.uuid4().hex[:8]}"
+        gen = _fresh_name("gen", epoch_id)
         new_parts = dict(base_parts)
         if len(touched) > self.bulk_threshold:
             # BACKFILL DEGRADATION GUARD (round 9, VERDICT r8 #4): a
@@ -690,20 +722,9 @@ class PartitionedIncrementalCountTable(IncrementalCountTable):
                     os.path.join(self.path, rel)
                 )
                 new_parts[pv] = rel
-        manifest = f"manifest_{epoch_id}_{uuid.uuid4().hex[:8]}.json"
-        with open(os.path.join(self.path, manifest + ".tmp"), "w") as f:
-            json.dump({"parts": new_parts}, f)
-        os.replace(
-            os.path.join(self.path, manifest + ".tmp"),
-            os.path.join(self.path, manifest),
-        )
-        tmp = os.path.join(self.path, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            json.dump(
-                {"gen": manifest, "epoch": epoch_id, "parent": base_name}, f
-            )
-        os.replace(tmp, os.path.join(self.path, "CURRENT"))
-        self._gc(keep_manifests={manifest, base_name})
+        manifest = _fresh_name("manifest", epoch_id) + ".json"
+        _write_json(os.path.join(self.path, manifest), {"parts": new_parts})
+        return manifest
 
     def _write_touched_bulk(
         self,
@@ -758,17 +779,15 @@ class PartitionedIncrementalCountTable(IncrementalCountTable):
                 )
             new_parts[pv] = rel
 
-    def _compact_locked(self, keep=None, transform=None) -> None:
+    def _write_compact(self, ptr: dict, keep, transform) -> str:
         """Retention compaction: rewrite every partition the predicate
         filters (and the optional per-partition ``transform``, e.g.
-        the dead-id anti-join), drop partitions it empties. Full-table
-        cost — pair it with the partition narrowing (compaction is
-        rare; merges are every epoch)."""
-        ptr = self._pointer()
-        if ptr is None:
-            return
+        the dead-id anti-join), drop partitions it empties, and write
+        the new manifest; returns its name. Full-table cost — pair it
+        with the partition narrowing (compaction is rare; merges are
+        every epoch)."""
         parts = self._load_manifest(ptr["gen"])["parts"]
-        gen = f"gen_{ptr['epoch'] if ptr['epoch'] is not None else 0}_c{uuid.uuid4().hex[:8]}"
+        gen = _fresh_name("gen", ptr["epoch"], "c")
         # reference schema across ALL partitions (mergeSchema read):
         # after a schema upgrade, not-yet-rewritten partitions lack
         # the new column — align them (NULL) so a retention predicate
@@ -784,30 +803,15 @@ class PartitionedIncrementalCountTable(IncrementalCountTable):
                         df = df.withColumn(
                             field.name, F.lit(None).cast(field.dataType)
                         )
-            if keep is not None:
-                df = df.filter(keep)
-            if transform is not None:
-                df = transform(df)
+            df = _apply_retention(df, keep, transform)
             if df.limit(1).count() == 0:
                 continue
             nrel = os.path.join(gen, f"p_{_safe_part(pv)}")
             df.write.mode("overwrite").parquet(os.path.join(self.path, nrel))
             new_parts[pv] = nrel
-        manifest = f"manifest_{ptr['epoch'] or 0}_c{uuid.uuid4().hex[:8]}.json"
-        with open(os.path.join(self.path, manifest + ".tmp"), "w") as f:
-            json.dump({"parts": new_parts}, f)
-        os.replace(
-            os.path.join(self.path, manifest + ".tmp"),
-            os.path.join(self.path, manifest),
-        )
-        tmp = os.path.join(self.path, "CURRENT.tmp")
-        with open(tmp, "w") as f:
-            json.dump(
-                {"gen": manifest, "epoch": ptr["epoch"], "parent": ptr["parent"]},
-                f,
-            )
-        os.replace(tmp, os.path.join(self.path, "CURRENT"))
-        self._gc(keep_manifests={manifest, ptr["parent"]})
+        manifest = _fresh_name("manifest", ptr["epoch"], "c") + ".json"
+        _write_json(os.path.join(self.path, manifest), {"parts": new_parts})
+        return manifest
 
     def _gc(self, keep_manifests: set) -> None:
         """Delete superseded manifests beyond the retain window, then
@@ -819,15 +823,7 @@ class PartitionedIncrementalCountTable(IncrementalCountTable):
             and not m.endswith(".tmp")
             and m not in keep_manifests
         ]
-
-        def m_rank(m: str) -> tuple[int, float]:
-            try:
-                e = int(m.split("_")[1])
-            except (IndexError, ValueError):
-                e = -1
-            return (e, os.path.getmtime(os.path.join(self.path, m)))
-
-        manifests.sort(key=m_rank, reverse=True)
+        manifests.sort(key=lambda m: _epoch_rank(self.path, m), reverse=True)
         kept = set(k for k in keep_manifests if k) | set(
             manifests[: self.retain]
         )
@@ -875,6 +871,27 @@ def _safe_part(value: str) -> str:
     return "".join(out)
 
 
+def _merge_stream(
+    spark: SparkSession,
+    src_dir: str,
+    schema: str,
+    checkpoint_dir: str,
+    table: IncrementalCountTable,
+    delta,
+):
+    """Start the stream driver over ``src_dir`` with each micro-batch
+    merged into ``table`` as ``delta(batch)`` under its epoch — the
+    whole body of every stream whose upsert is one merge. Returns the
+    StreamingQuery."""
+    return foreach_batch_stream(
+        spark,
+        src_dir,
+        schema,
+        checkpoint_dir,
+        lambda batch_df, epoch_id: table.merge_batch(delta(batch_df), epoch_id),
+    )
+
+
 def incremental_occupancy_stream(
     spark: SparkSession,
     events_dir: str,
@@ -886,22 +903,12 @@ def incremental_occupancy_stream(
     table via foreachBatch. Returns the StreamingQuery."""
     table = IncrementalCountTable(spark, table_path, ["region_id", "hour"])
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy("region_id", "hour").agg(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("region_id", "hour").agg(
             F.count("*").alias("cnt")
         )
-        table.merge_batch(delta, epoch_id)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, events_dir, schema, checkpoint_dir, table, delta)
 
 
 def incremental_value_stats_stream(
@@ -926,26 +933,16 @@ def incremental_value_stats_stream(
         measures=("n", "sum_v", "sum_sq"),
     )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy("event_type").agg(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("event_type").agg(
             F.count("value").alias("n"),
             F.sum(F.col("value").cast("decimal(28,6)")).alias("sum_v"),
             F.sum(
                 (F.col("value") * F.col("value")).cast("decimal(28,6)")
             ).alias("sum_sq"),
         )
-        table.merge_batch(delta, epoch_id)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, events_dir, schema, checkpoint_dir, table, delta)
 
 
 def incremental_covisit_index_stream(
@@ -978,8 +975,8 @@ def incremental_covisit_index_stream(
         spark, table_path, ["user_id", "cell"]
     )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 "user_id",
                 F.pmod(
@@ -989,18 +986,8 @@ def incremental_covisit_index_stream(
             .groupBy("user_id", "cell")
             .agg(F.count("*").alias("cnt"))
         )
-        table.merge_batch(delta, epoch_id)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, events_dir, schema, checkpoint_dir, table, delta)
 
 
 def incremental_basket_index_stream(
@@ -1028,8 +1015,8 @@ def incremental_basket_index_stream(
         spark, table_path, ["user_id", "day", "event_type"]
     )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = (
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(
                 "user_id",
                 F.col("ts").cast("date").alias("day"),
@@ -1038,18 +1025,8 @@ def incremental_basket_index_stream(
             .groupBy("user_id", "day", "event_type")
             .agg(F.count("*").alias("cnt"))
         )
-        table.merge_batch(delta, epoch_id)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, events_dir, schema, checkpoint_dir, table, delta)
 
 
 def incremental_mobility_moments_stream(
@@ -1083,7 +1060,7 @@ def incremental_mobility_moments_stream(
         measures=("n", "sx", "sy", "sxx", "syy"),
     )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+    def delta(batch_df: DataFrame) -> DataFrame:
         region = (
             F.pmod(F.floor(F.col("value")).cast("long"), F.lit(n_regions))
             + 1
@@ -1091,7 +1068,7 @@ def incremental_mobility_moments_stream(
         z = (region - 1).cast("bigint")
         x = F.pmod(z, F.lit(width))
         y = (z / width).cast("bigint")
-        delta = (
+        return (
             batch_df.select(
                 "user_id", x.alias("x"), y.alias("y")
             )
@@ -1104,18 +1081,8 @@ def incremental_mobility_moments_stream(
                 F.sum(F.col("y") * F.col("y")).alias("syy"),
             )
         )
-        table.merge_batch(delta, epoch_id)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, events_dir, schema, checkpoint_dir, table, delta)
 
 
 def incremental_cms_stream(
@@ -1133,52 +1100,24 @@ def incremental_cms_stream(
     sketch's merge property), so the per-batch (depth, bucket) partial
     counts merged through the generation chain equal the batch-built
     sketch under any batch boundaries and epoch replays. Hashing is
-    md5 (the batch query's exact _cms_bucket recipe), so the
+    md5 (functions/sampling.py:hash_bucket, the batch query's
+    recipe), so the
     maintained sketch is bit-identical to the batch sketch — parity is
     pytest-pinned. Estimation stays a read-time min-over-rows probe."""
     table = IncrementalCountTable(
         spark, table_path, ["d", "bucket"], measures=("c",)
     )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+    def delta(batch_df: DataFrame) -> DataFrame:
         depths = F.array(*[F.lit(i) for i in range(depth)])
         hashed = batch_df.select(
             F.explode(depths).alias("d"), F.col("user_id")
         ).select(
-            "d",
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("cms"),
-                                F.col("d").cast("string"),
-                                F.lit(":"),
-                                F.col("user_id").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(width),
-            ).alias("bucket"),
+            "d", hash_bucket("cms", F.col("d"), F.col("user_id"), width).alias("bucket")
         )
-        delta = hashed.groupBy("d", "bucket").agg(F.count("*").alias("c"))
-        table.merge_batch(delta, epoch_id)
+        return hashed.groupBy("d", "bucket").agg(F.count("*").alias("c"))
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, events_dir, schema, checkpoint_dir, table, delta)
 
 
 def incremental_bloom_stream(
@@ -1202,11 +1141,12 @@ def incremental_bloom_stream(
     (The cnt measure counts per-batch-distinct contributions — a
     member active in several batches adds to it more than once — so
     cnt is an upper bound, NOT a member count; the filter's semantics
-    depend only on the key set, which is exact.) md5 hashing (the
-    batch _bloom_bit recipe); parity pytest-pinned."""
+    depend only on the key set, which is exact.) md5 hashing
+    (functions/sampling.py:hash_bucket, the batch query's recipe);
+    parity pytest-pinned."""
     table = IncrementalCountTable(spark, table_path, ["bit"])
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+    def delta(batch_df: DataFrame) -> DataFrame:
         hashes = F.array(*[F.lit(i) for i in range(k)])
         members = (
             batch_df.filter(F.col("event_type") == member_type)
@@ -1215,40 +1155,10 @@ def incremental_bloom_stream(
         )
         hashed = members.select(
             F.explode(hashes).alias("i"), "user_id"
-        ).select(
-            F.pmod(
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("bloom"),
-                                F.col("i").cast("string"),
-                                F.lit(":"),
-                                F.col("user_id").cast("string"),
-                            )
-                        ),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("long"),
-                F.lit(bits),
-            ).alias("bit")
-        )
-        delta = hashed.groupBy("bit").agg(F.count("*").alias("cnt"))
-        table.merge_batch(delta, epoch_id)
+        ).select(hash_bucket("bloom", F.col("i"), F.col("user_id"), bits).alias("bit"))
+        return hashed.groupBy("bit").agg(F.count("*").alias("cnt"))
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, events_dir, schema, checkpoint_dir, table, delta)
 
 
 def incremental_first_seen_stream(
@@ -1275,23 +1185,13 @@ def incremental_first_seen_stream(
         min_measures=("first_day",),
     )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy("user_id").agg(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy("user_id").agg(
             F.count("*").alias("n_events"),
             F.min(F.to_date("ts")).alias("first_day"),
         )
-        table.merge_batch(delta, epoch_id)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, events_dir, schema, checkpoint_dir, table, delta)
 
 
 def incremental_od_stream(
@@ -1329,24 +1229,14 @@ def incremental_od_stream(
             spark, table_path, ["hour", "orig", "dest"]
         )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        delta = batch_df.groupBy(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(
             F.col("hour"),
             F.col("pre_region_id").alias("orig"),
             F.col("region_id").alias("dest"),
         ).agg(F.count("*").alias("cnt"))
-        table.merge_batch(delta, epoch_id)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(edges_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, edges_dir, schema, checkpoint_dir, table, delta)
 
 
 def od_fractions_from_table(od_table: DataFrame) -> DataFrame:
@@ -1469,6 +1359,39 @@ def ivf_index_table(
     )
 
 
+def _assign_lists(
+    delta_emb: DataFrame, centroids: list, dim: int | None
+) -> DataFrame:
+    """(vec_id, seq, c_emb, deleted, centroid_id) for an embedding
+    delta (vec_id, seq, embedding[, deleted]): each vector's coarse
+    list is its nearest FIXED centroid, by one map-only
+    literal-centroid expression (no shuffle, no join); a delete mark
+    carries no list, and a delta without ``deleted`` deletes nothing.
+    The IVF and IVF-PQ upserts share this assignment."""
+    from ..functions.vectors import as_double_array
+    from ..operators.similarity import _centroid_sims
+
+    has_del = "deleted" in delta_emb.columns
+    c = delta_emb.select(
+        "vec_id",
+        "seq",
+        as_double_array(F.col("embedding")).alias("c_emb"),
+        (F.col("deleted") if has_del else F.lit(False)).alias("deleted"),
+    )
+    return c.withColumn(
+        "centroid_id",
+        F.when(
+            F.col("deleted"), F.lit(None).cast("long")
+        ).otherwise(
+            (
+                -F.array_max(
+                    _centroid_sims("c_emb", centroids, dim)
+                ).getField("negid")
+            ).cast("long")
+        ),
+    )
+
+
 def ivf_index_upsert(
     table: IncrementalUpsertTable,
     delta_emb: DataFrame,
@@ -1488,29 +1411,11 @@ def ivf_index_upsert(
     centroids re-list every vector), exactly as in FAISS-style IVF
     deployments where the quantizer is trained once and the lists
     absorb adds/deletes."""
-    from ..functions.vectors import as_double_array
-    from ..operators.similarity import _centroid_sims
-
-    has_del = "deleted" in delta_emb.columns
-    c = delta_emb.select(
-        "vec_id",
-        "seq",
-        as_double_array(F.col("embedding")).alias("c_emb"),
-        (F.col("deleted") if has_del else F.lit(False)).alias("deleted"),
+    assigned = _assign_lists(delta_emb, centroids, dim)
+    table.merge_batch(
+        assigned.select("vec_id", "seq", "c_emb", "centroid_id", "deleted"),
+        epoch_id,
     )
-    assigned = c.withColumn(
-        "centroid_id",
-        F.when(
-            F.col("deleted"), F.lit(None).cast("long")
-        ).otherwise(
-            (
-                -F.array_max(
-                    _centroid_sims("c_emb", centroids, dim)
-                ).getField("negid")
-            ).cast("long")
-        ),
-    ).select("vec_id", "seq", "c_emb", "centroid_id", "deleted")
-    table.merge_batch(assigned, epoch_id)
 
 
 def incremental_ivf_index_stream(
@@ -1540,16 +1445,7 @@ def incremental_ivf_index_stream(
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         ivf_index_upsert(table, batch_df, centroids, epoch_id, dim)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(emb_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return foreach_batch_stream(spark, emb_dir, schema, checkpoint_dir, upsert)
 
 
 def domain_cap_table(
@@ -1650,16 +1546,7 @@ def incremental_domain_cap_stream(
         )
         domain_cap_admit(table, keyed, cap, epoch_id)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(docs_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return foreach_batch_stream(spark, docs_dir, schema, checkpoint_dir, upsert)
 
 
 def pq_index_table(
@@ -1697,29 +1584,9 @@ def pq_index_upsert(
     FIXED across upserts; retraining either one re-means every code /
     re-lists every vector and is a rebuild by definition (the stream
     stamps them via :func:`operators.pq.pq_scheme`)."""
-    from ..functions.vectors import as_double_array
     from ..operators.pq import pq_code_expr, pq_norm_expr
-    from ..operators.similarity import _centroid_sims
 
-    has_del = "deleted" in delta_emb.columns
-    c = delta_emb.select(
-        "vec_id",
-        "seq",
-        as_double_array(F.col("embedding")).alias("c_emb"),
-        (F.col("deleted") if has_del else F.lit(False)).alias("deleted"),
-    )
-    assigned = c.withColumn(
-        "centroid_id",
-        F.when(
-            F.col("deleted"), F.lit(None).cast("long")
-        ).otherwise(
-            (
-                -F.array_max(
-                    _centroid_sims("c_emb", coarse, dim)
-                ).getField("negid")
-            ).cast("long")
-        ),
-    ).withColumn(
+    assigned = _assign_lists(delta_emb, coarse, dim).withColumn(
         "codes",
         F.when(
             F.col("deleted"), F.lit(None).cast("array<int>")
@@ -1759,16 +1626,7 @@ def incremental_pq_index_stream(
     def upsert(batch_df: DataFrame, epoch_id: int) -> None:
         pq_index_upsert(table, batch_df, coarse, codebooks, epoch_id, dim)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(emb_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return foreach_batch_stream(spark, emb_dir, schema, checkpoint_dir, upsert)
 
 
 def _pin_index_scheme(table_path: str, scheme: dict) -> None:
@@ -1821,10 +1679,7 @@ def _pin_index_scheme(table_path: str, scheme: dict) -> None:
             "otherwise rebuild"
         )
     else:
-        tmp = p + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(scheme, f, sort_keys=True)
-        os.replace(tmp, p)
+        _write_json(p, scheme, sort_keys=True)
 
 
 def read_index_scheme(table_path: str) -> dict:
@@ -1947,6 +1802,85 @@ def fold_out_dead_docs(
     )
 
 
+def _signature_index_stream(
+    spark: SparkSession,
+    docs_dir: str,
+    table_path: str,
+    checkpoint_dir: str,
+    schema: str,
+    keys: list[str],
+    scheme: dict,
+    signatures,
+    *,
+    id_col: str,
+    deleted_col: str | None,
+    retention_epochs: int | None,
+    compact_every: int,
+    fold_out_every: int | None,
+    fold_out_broadcast: bool,
+):
+    """The one body of the band and block index streams, which differ
+    only in ``signatures`` (docs → signature rows carrying ``keys``)
+    and the ``scheme`` stamped beside the chain. Each micro-batch:
+    split the takedown marks (rows with ``deleted_col`` NOT NULL) off
+    into the tombstone sidecar, merge the remaining docs' signature
+    keys (``cnt`` delivery count, ``last_epoch`` MAX), then every
+    ``compact_every`` epochs compact to the retention horizon and
+    every ``fold_out_every`` epochs fold the dead docs' rows out."""
+    table = IncrementalCountTable(
+        spark, table_path, keys, max_measures=("last_epoch",)
+    )
+    _pin_index_scheme(table.path, scheme)
+    tomb = (
+        signature_tombstone_table(spark, table_path)
+        if deleted_col is not None
+        else None
+    )
+
+    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+        docs = batch_df
+        if tomb is not None:
+            marks = batch_df.filter(
+                F.col(deleted_col).isNotNull()
+            ).select(
+                F.col(id_col).alias("doc_id"),
+                F.lit(int(epoch_id)).cast("long").alias("seq"),
+                F.col(deleted_col).alias("dead"),
+            )
+            docs = batch_df.filter(F.col(deleted_col).isNull()).drop(
+                deleted_col
+            )
+        delta = (
+            signatures(docs)
+            .groupBy(*keys)
+            .agg(
+                F.count("*").alias("cnt"),
+                F.lit(int(epoch_id)).cast("long").alias("last_epoch"),
+            )
+        )
+        table.merge_batch(delta, epoch_id)
+        if tomb is not None:
+            tomb.merge_batch(marks, epoch_id)
+        if (
+            retention_epochs is not None
+            and epoch_id > 0
+            and epoch_id % compact_every == 0
+        ):
+            table.compact(
+                F.col("last_epoch")
+                >= F.lit(int(epoch_id) - int(retention_epochs))
+            )
+        if (
+            tomb is not None
+            and fold_out_every is not None
+            and epoch_id > 0
+            and epoch_id % fold_out_every == 0
+        ):
+            fold_out_dead_docs(table, tomb, broadcast=fold_out_broadcast)
+
+    return foreach_batch_stream(spark, docs_dir, schema, checkpoint_dir, upsert)
+
+
 def incremental_band_index_stream(
     spark: SparkSession,
     docs_dir: str,
@@ -2016,74 +1950,22 @@ def incremental_band_index_stream(
     docs). Default None keeps the full-history contract."""
     from ..operators.dedup import minhash_band_scheme, minhash_bands
 
-    table = IncrementalCountTable(
-        spark,
-        table_path,
+    # the stamp is derived by the SAME helper batch scoring checks
+    # against (operators/dedup.py:minhash_band_scheme) — dict value
+    # unchanged, so existing stamps keep matching
+    return _signature_index_stream(
+        spark, docs_dir, table_path, checkpoint_dir, schema,
         ["doc_id", "band", "band_hash"],
-        max_measures=("last_epoch",),
-    )
-    # derived by the SAME helper batch scoring checks against
-    # (operators/dedup.py:minhash_band_scheme) — dict value unchanged,
-    # so existing stamps keep matching
-    _pin_index_scheme(table.path, minhash_band_scheme(k, bands, n))
-    has_marks = deleted_col is not None
-    tomb = (
-        signature_tombstone_table(spark, table_path) if has_marks else None
-    )
-
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        docs = batch_df
-        if has_marks:
-            marks = batch_df.filter(
-                F.col(deleted_col).isNotNull()
-            ).select(
-                F.col(id_col).alias("doc_id"),
-                F.lit(int(epoch_id)).cast("long").alias("seq"),
-                F.col(deleted_col).alias("dead"),
-            )
-            docs = batch_df.filter(F.col(deleted_col).isNull()).drop(
-                deleted_col
-            )
-        delta = (
-            minhash_bands(
-                docs, k=k, bands=bands, n=n,
-                id_col=id_col, text_col=text_col,
-            )
-            .groupBy("doc_id", "band", "band_hash")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.lit(int(epoch_id)).cast("long").alias("last_epoch"),
-            )
-        )
-        table.merge_batch(delta, epoch_id)
-        if has_marks:
-            tomb.merge_batch(marks, epoch_id)
-        if (
-            retention_epochs is not None
-            and epoch_id > 0
-            and epoch_id % compact_every == 0
-        ):
-            table.compact(
-                F.col("last_epoch")
-                >= F.lit(int(epoch_id) - int(retention_epochs))
-            )
-        if (
-            has_marks
-            and fold_out_every is not None
-            and epoch_id > 0
-            and epoch_id % fold_out_every == 0
-        ):
-            fold_out_dead_docs(table, tomb, broadcast=fold_out_broadcast)
-
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(docs_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        minhash_band_scheme(k, bands, n),
+        lambda docs: minhash_bands(
+            docs, k=k, bands=bands, n=n, id_col=id_col, text_col=text_col
+        ),
+        id_col=id_col,
+        deleted_col=deleted_col,
+        retention_epochs=retention_epochs,
+        compact_every=compact_every,
+        fold_out_every=fold_out_every,
+        fold_out_broadcast=fold_out_broadcast,
     )
 
 
@@ -2128,81 +2010,47 @@ def incremental_block_index_stream(
     :func:`incremental_band_index_stream`)."""
     from ..operators.dedup import hamming_block_scheme, simhash_blocks
 
-    table = IncrementalCountTable(
-        spark,
-        table_path,
-        ["doc_id", "blk", "val", "simhash"],
-        max_measures=("last_epoch",),
-    )
     # the stamp is derived by the SAME helper the batch-path check
     # uses (operators/dedup.py:hamming_block_scheme), so ingest and
     # batch can never describe one blocking two ways; the vote mode
     # (set vs tf-weighted) is part of the scheme — mixed-vote rows
     # never match each other
-    _pin_index_scheme(
-        table.path,
+    return _signature_index_stream(
+        spark, docs_dir, table_path, checkpoint_dir, schema,
+        ["doc_id", "blk", "val", "simhash"],
         hamming_block_scheme(max_hamming, nbits, min_key_bits, weighted),
-    )
-    has_marks = deleted_col is not None
-    tomb = (
-        signature_tombstone_table(spark, table_path) if has_marks else None
+        lambda docs: simhash_blocks(
+            docs, max_hamming, nbits, id_col=id_col, text_col=text_col,
+            min_key_bits=min_key_bits, weighted=weighted,
+        ),
+        id_col=id_col,
+        deleted_col=deleted_col,
+        retention_epochs=retention_epochs,
+        compact_every=compact_every,
+        fold_out_every=fold_out_every,
+        fold_out_broadcast=fold_out_broadcast,
     )
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        docs = batch_df
-        if has_marks:
-            marks = batch_df.filter(
-                F.col(deleted_col).isNotNull()
-            ).select(
-                F.col(id_col).alias("doc_id"),
-                F.lit(int(epoch_id)).cast("long").alias("seq"),
-                F.col(deleted_col).alias("dead"),
-            )
-            docs = batch_df.filter(F.col(deleted_col).isNull()).drop(
-                deleted_col
-            )
-        delta = (
-            simhash_blocks(
-                docs, max_hamming, nbits,
-                id_col=id_col, text_col=text_col,
-                min_key_bits=min_key_bits, weighted=weighted,
-            )
-            .groupBy("doc_id", "blk", "val", "simhash")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.lit(int(epoch_id)).cast("long").alias("last_epoch"),
-            )
-        )
-        table.merge_batch(delta, epoch_id)
-        if has_marks:
-            tomb.merge_batch(marks, epoch_id)
-        if (
-            retention_epochs is not None
-            and epoch_id > 0
-            and epoch_id % compact_every == 0
-        ):
-            table.compact(
-                F.col("last_epoch")
-                >= F.lit(int(epoch_id) - int(retention_epochs))
-            )
-        if (
-            has_marks
-            and fold_out_every is not None
-            and epoch_id > 0
-            and epoch_id % fold_out_every == 0
-        ):
-            fold_out_dead_docs(table, tomb, broadcast=fold_out_broadcast)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(docs_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+class KmvSketchTable(IncrementalCountTable):
+    """Per-group KMV distinct sketch, (group_col, hx) rows, on the
+    generation chain: the merge unions the stored sketch with the
+    delta's hash rows and re-takes the ``k`` minima per group
+    (:func:`operators.kmv.kmv_merge`), the way the upsert table swaps
+    SUM for a max-struct. KMV union-merge is associative, commutative
+    and idempotent, so batch boundaries and epoch replays all land on
+    the batch-built sketch; the chain adds what an in-place overwrite
+    cannot — a failed write leaves the previous generation current
+    and readable."""
+
+    def __init__(self, spark: SparkSession, path: str, group_col: str, k: int):
+        super().__init__(spark, path, [group_col], measures=())
+        self.k = k
+
+    def _combine(self, merged: DataFrame) -> DataFrame:
+        from ..operators.kmv import kmv_merge
+
+        return kmv_merge(merged, self.keys, k=self.k).select(*self.keys, "hx")
 
 
 def incremental_kmv_stream(
@@ -2218,45 +2066,25 @@ def incremental_kmv_stream(
 ):
     """Stream event files → per-group KMV distinct sketch via
     foreachBatch — the streaming half of the round-15 sketch tier
-    (operators/kmv.py). KMV union-merge is associative, commutative
-    and IDEMPOTENT (union the hash rows, re-take the k minima), so
-    any batch boundaries AND epoch replays land on the batch-built
-    sketch bit-for-bit — the first_seen MIN argument applied to a set
-    of minima, which is why no generation chain is needed here. The
-    maintained artifact is sketch-sized (≤ k rows per group); each
-    upsert unions the batch's own sketch with the stored one,
-    re-takes the minima and rewrites through the driver — the driver
-    traffic IS the artifact, the bounded-state class every
-    incremental index in this module lives in. Estimation stays a
-    read-time fold (kmv_estimate). Parity is pytest-pinned against
-    the batch-built sketch AND estimate."""
-    from ..operators.kmv import kmv_hash, kmv_merge, kmv_sketch
+    (operators/kmv.py). Each micro-batch's own sketch (≤ k rows per
+    group) merges into a :class:`KmvSketchTable`, whose union-merge
+    is idempotent, so any batch boundaries AND epoch replays land on
+    the batch-built sketch bit-for-bit — the first_seen MIN argument
+    applied to a set of minima. The generation chain makes each merge
+    a write to a fresh directory plus a pointer swap: a crash mid-write
+    leaves the previous sketch current, and the replayed epoch
+    rebuilds from it. Serve from ``KmvSketchTable(spark, table_path,
+    group_col, k).read()``; estimation stays a read-time fold
+    (kmv_estimate). Parity is pytest-pinned against the batch-built
+    sketch AND estimate."""
+    from ..operators.kmv import kmv_hash, kmv_sketch
 
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
+    table = KmvSketchTable(spark, table_path, group_col, k=k)
+
+    def delta(batch_df: DataFrame) -> DataFrame:
         keyed = batch_df.select(
             group_col, kmv_hash(F.col("user_id")).alias("hx")
         )
-        delta = kmv_sketch(keyed, [group_col], k=k)
-        try:
-            cur = spark.read.parquet(table_path).select(group_col, "hx")
-            uni = delta.select(group_col, "hx").unionByName(cur)
-        except Exception:
-            uni = delta.select(group_col, "hx")
-        merged = kmv_merge(uni, [group_col], k=k).select(group_col, "hx")
-        # materialize BEFORE the overwrite (the read above points at
-        # the same path) — sketch-sized by construction
-        rows = merged.collect()
-        spark.createDataFrame(rows, merged.schema).write.mode(
-            "overwrite"
-        ).parquet(table_path)
+        return kmv_sketch(keyed, [group_col], k=k)
 
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
-    return (
-        src.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _merge_stream(spark, events_dir, schema, checkpoint_dir, table, delta)

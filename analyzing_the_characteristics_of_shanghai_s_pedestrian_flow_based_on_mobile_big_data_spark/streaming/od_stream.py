@@ -28,6 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
+from .driver import file_stream
+
+POSITIONS_SCHEMA = "user_id long, hour timestamp, region_id int"
+
 EDGE_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -93,6 +97,18 @@ def streaming_od_edges(positions_stream: DataFrame) -> DataFrame:
     )
 
 
+def _to_memory(df: DataFrame, query_name: str, checkpoint_dir: str | None):
+    """Start an append-mode memory sink named ``query_name``."""
+    writer = (
+        df.writeStream.outputMode("append")
+        .format("memory")
+        .queryName(query_name)
+    )
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
 def run_od_stream_over_dir(
     spark,
     positions_dir: str,
@@ -100,24 +116,10 @@ def run_od_stream_over_dir(
     checkpoint_dir: str | None = None,
 ) -> "object":
     """Drive the stateful OD over a directory of position parquet files
-    (one micro-batch per file via maxFilesPerTrigger). Returns the
+    (one micro-batch per file, streaming/driver.py). Returns the
     running StreamingQuery; caller pumps with processAllAvailable()."""
-    src = (
-        spark.readStream.schema(
-            "user_id long, hour timestamp, region_id int"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(positions_dir)
-    )
-    edges = streaming_od_edges(src)
-    writer = (
-        edges.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    src = file_stream(spark, positions_dir, POSITIONS_SCHEMA)
+    return _to_memory(streaming_od_edges(src), query_name, checkpoint_dir)
 
 
 def streaming_gap_outliers(
@@ -152,19 +154,7 @@ def run_gap_outlier_stream_over_dir(
 ) -> "object":
     """Drive the streaming gap-outlier report over a directory of
     position parquet files (one micro-batch per file)."""
-    src = (
-        spark.readStream.schema(
-            "user_id long, hour timestamp, region_id int"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(positions_dir)
+    src = file_stream(spark, positions_dir, POSITIONS_SCHEMA)
+    return _to_memory(
+        streaming_gap_outliers(src, max_fill_hours), query_name, checkpoint_dir
     )
-    out = streaming_gap_outliers(src, max_fill_hours)
-    writer = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()

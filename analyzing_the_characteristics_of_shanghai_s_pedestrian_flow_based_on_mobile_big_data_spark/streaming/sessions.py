@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .driver import file_stream
+
 
 def streaming_session_counts(
     src: DataFrame,
@@ -52,13 +54,10 @@ def run_session_stream_to_memory(
 ):
     """Drive a parquet-directory source through the session aggregation
     into a complete-mode memory sink; returns the StreamingQuery."""
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(events_dir)
-    )
     return (
-        streaming_session_counts(src, gap, watermark)
+        streaming_session_counts(
+            file_stream(spark, events_dir, schema), gap, watermark
+        )
         .writeStream.format("memory")
         .queryName(query_name)
         .outputMode("complete")

@@ -495,8 +495,8 @@ def test_quality_calibrated_contract(spark):
 
 def test_incremental_kmv_stream_parity(spark, tmp_path):
     """The streamed sketch equals the batch-built sketch bit-for-bit
-    under file-at-a-time batching (KMV union-merge is idempotent, so
-    no generation chain) and yields the identical estimate."""
+    under file-at-a-time batching (KMV union-merge is idempotent) and
+    yields the identical estimate."""
     import datetime
 
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.kmv import (
@@ -505,6 +505,7 @@ def test_incremental_kmv_stream_parity(spark, tmp_path):
         kmv_merge,
     )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.streaming.incremental import (
+        KmvSketchTable,
         incremental_kmv_stream,
     )
 
@@ -524,9 +525,12 @@ def test_incremental_kmv_stream_parity(spark, tmp_path):
     q = incremental_kmv_stream(
         spark, src, table, str(tmp_path / "kck"), k=64
     )
-    q.awaitTermination(180)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
-    streamed = spark.read.parquet(table)
+    streamed = KmvSketchTable(spark, table, "event_type", k=64).read()
     batch = kmv_merge(
         spark.read.parquet(src).select(
             "event_type", kmv_hash(F.col("user_id")).alias("hx")
@@ -547,6 +551,62 @@ def test_incremental_kmv_stream_parity(spark, tmp_path):
     # view: 40 distinct users < k -> exact; click: saturated estimate
     assert est["view"] == 40.0
     assert abs(est["click"] - 800) / 800 < 4 / (64 ** 0.5)
+
+
+def test_kmv_sketch_table_replay_and_failed_write(spark, tmp_path):
+    """The KMV sketch on the generation chain: merging an epoch twice
+    leaves the sketch unchanged; a merge whose write raises leaves the
+    previous generation CURRENT and readable; re-running that epoch
+    ends bit-equal to the batch sketch over everything merged."""
+    import json
+    import os
+
+    import pytest
+
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.kmv import (
+        kmv_hash,
+        kmv_merge,
+    )
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.streaming.incremental import (
+        KmvSketchTable,
+    )
+
+    k = 8
+    t = KmvSketchTable(spark, str(tmp_path / "kmv"), "g", k=k)
+
+    def hashed(rows):
+        return spark.createDataFrame(rows, "g string, user_id long").select(
+            "g", kmv_hash(F.col("user_id")).alias("hx")
+        )
+
+    def sketch(df):
+        return sorted(map(tuple, df.select("g", "hx").collect()))
+
+    def pointer():
+        with open(os.path.join(t.path, "CURRENT")) as f:
+            return json.load(f)
+
+    e0 = [("a", i) for i in range(20)] + [("b", i) for i in range(3)]
+    e1 = [("a", 100 + i) for i in range(20)] + [("b", 7)]
+    t.merge_batch(hashed(e0), 0)
+    after0 = sketch(t.read())
+    assert after0 == sketch(kmv_merge(hashed(e0), ["g"], k=k))
+    # the same epoch merged twice: rebased on its parent, unchanged
+    t.merge_batch(hashed(e0), 0)
+    assert sketch(t.read()) == after0
+    # epoch 1's write raises: CURRENT still names epoch 0's generation
+    ptr0 = pointer()
+    boom = hashed(e1).withColumn(
+        "hx", F.coalesce(F.raise_error("injected write failure"), F.col("hx"))
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        t.merge_batch(boom, 1)
+    assert pointer() == ptr0
+    assert sketch(t.read()) == after0
+    # re-running epoch 1 lands on the batch sketch of e0 + e1
+    t.merge_batch(hashed(e1), 1)
+    assert pointer()["epoch"] == 1 and pointer()["parent"] == ptr0["gen"]
+    assert sketch(t.read()) == sketch(kmv_merge(hashed(e0 + e1), ["g"], k=k))
 
 
 def test_dedup_survivors_script_contract(spark):
