@@ -1480,9 +1480,9 @@ def _q_near_dup_pairs_t90(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold_den=2,
         # the route is PINNED to lsh (budget 0 over >=1 key), so the
         # router's two df-stats jobs would be pure overhead — synthetic
-        # stats skip them, the same designed input the catalog-stats
-        # path uses (set_similarity_stats_from_catalog); the pin itself
-        # is belt-and-braces: either input alone forces lsh
+        # stats skip them (the stats= input a catalog-fed caller
+        # uses); the pin itself is belt-and-braces: either input alone
+        # forces lsh
         pairs_per_key_budget=0,
         min_lsh_keys=1,
         stats={"n_keys": 2_000_000, "cand_pairs": 1e18},
@@ -5831,9 +5831,9 @@ def _q_user_covisit_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the cell domain is bounded (pmod 2000), so the query selects
     the bitmap path: per-user 32-word bitmaps, broadcast pair
     enumeration with the integer size-ratio prune, |∩| by
-    bit_count(and) lanes — 1.4 s at sf0.1, exact. All three paths
-    (bitmap / prefix / single-join) produce identical pair sets,
-    pytest-pinned. Above the dense-regime handoff
+    bit_count(and) lanes — 1.4 s at sf0.1, exact. Both exact paths
+    (bitmap / prefix) produce identical pair sets, pytest-pinned.
+    Above the dense-regime handoff
     (set_similarity_join_auto, round 7) the library routes this
     workload to MinHash-LSH instead — registered separately as
     `user_covisit_lsh` with its own oracle; THIS query stays on the
@@ -10650,27 +10650,21 @@ def _quality_margin_ctes(salt: str = "qs", bias: float = 0.0) -> str:
         )"""
 
 
-def _scorer_fit_ctes(
-    nb: int = None,
-    epochs: int = None,
-    eta: float = None,
-    salt: str = "qs",
-) -> str:
-    """CTE block (without WITH) re-running the ENTIRE distributed
-    classifier fit of functions/scorer.py:scorer_fit_ls in DuckDB —
-    the kmeans_oracle_ctes precedent at GD grain. Ends at
-    ``wfin(b, w)`` (trained weights), ``biasx(bias)``, plus ``cv``/
-    ``wlf`` for scoring. Parity rules restated relationally:
-    12dp floor-rounded addends summed as DECIMAL(38,12), ascending
-    0.0-seeded list_reduce folds for every per-doc score and the μ·w
-    scalar, floor-form 9dp weight rounding per epoch — pure IEEE ops
-    on identical inputs, so each epoch's weights (and therefore the
-    final vector) are bit-identical to the Spark fit."""
-    nb = nb if nb is not None else _SCORER_NB
-    epochs = epochs if epochs is not None else _SCORER_EPOCHS
-    eta = eta if eta is not None else _SCORER_ETA
-    m9 = f"{10**9}.0"
-    m12 = f"{10**12}.0"
+def _scorer_base_ctes():
+    """The CTE prefix both scorer-fit twins share — features, the
+    dense count vectors ``cv``, ``nn(n, ybar)``, the centering pass
+    ``mus``/``mul`` and ``w0`` — plus the SQL fragments their epochs
+    use: (base, m9, m12, dec, cv_fold, mw_fold). The precision comes
+    from the fits' own constants (scorer.ROUND_SCALE, ADDEND_SCALE)."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.scorer import (
+        ADDEND_SCALE,
+        ROUND_SCALE,
+    )
+
+    nb, salt = _SCORER_NB, "qs"  # scorer.hashed_count_rows' salt
+    m9 = f"{10**ROUND_SCALE}.0"
+    m12 = f"{10**ADDEND_SCALE}.0"
+    dec = f"DECIMAL(38,{ADDEND_SCALE})"
     hex8 = " + ".join(
         f"(strpos('0123456789abcdef', substr(md5('{salt}:' || x), "
         f"{i + 1}, 1)) - 1) * {16 ** (7 - i)}"
@@ -10683,8 +10677,7 @@ def _scorer_fit_ctes(
     )
     cv_fold = fold.format(terms="CAST(cvec[i] AS DOUBLE) * wl[i]")
     mw_fold = fold.format(terms="ml[i] * wl[i]")
-    parts = [
-        f"""
+    base = f"""
         d AS (
           SELECT doc_id,
                  CASE WHEN doc_id % 3 = 0
@@ -10730,7 +10723,7 @@ def _scorer_fit_ctes(
         mu0 AS (
           SELECT b,
                  sum(CAST(floor((CAST(c AS DOUBLE) / CAST(k AS DOUBLE))
-                       * {m12} + 0.5) / {m12} AS DECIMAL(38,12))) AS s
+                       * {m12} + 0.5) / {m12} AS {dec})) AS s
           FROM fx GROUP BY 1
         ),
         mus AS MATERIALIZED (
@@ -10742,7 +10735,24 @@ def _scorer_fit_ctes(
         ),
         mul AS MATERIALIZED (SELECT list(mu ORDER BY b) AS ml FROM mus),
         w0 AS MATERIALIZED (SELECT b, CAST(0.0 AS DOUBLE) AS w FROM dims)"""
-    ]
+    return base, m9, m12, dec, cv_fold, mw_fold
+
+
+def _scorer_fit_ctes() -> str:
+    """CTE block (without WITH) re-running the ENTIRE distributed
+    classifier fit of functions/scorer.py:scorer_fit_ls in DuckDB —
+    the kmeans_oracle_ctes precedent at GD grain. Ends at
+    ``wfin(b, w)`` (trained weights), ``biasx(bias)``, plus ``cv``/
+    ``wlf`` for scoring. Parity rules restated relationally, at the
+    fit's own precision constants (scorer.ADDEND_SCALE, ROUND_SCALE):
+    12dp floor-rounded addends summed as DECIMAL(38,12), ascending
+    0.0-seeded list_reduce folds for every per-doc score and the μ·w
+    scalar, floor-form 9dp weight rounding per epoch — pure IEEE ops
+    on identical inputs, so each epoch's weights (and therefore the
+    final vector) are bit-identical to the Spark fit."""
+    epochs, eta = _SCORER_EPOCHS, _SCORER_ETA
+    base, m9, m12, dec, cv_fold, mw_fold = _scorer_base_ctes()
+    parts = [base]
     for r in range(1, epochs + 1):
         p = r - 1
         parts.append(
@@ -10757,7 +10767,7 @@ def _scorer_fit_ctes(
         ),
         tt{r} AS (
           SELECT CAST(sum(CAST(floor(r * {m12} + 0.5) / {m12}
-                   AS DECIMAL(38,12))) AS DOUBLE) AS t
+                   AS {dec})) AS DOUBLE) AS t
           FROM mg{r}
         ),
         ss{r} AS MATERIALIZED (
@@ -10765,7 +10775,7 @@ def _scorer_fit_ctes(
                  CAST(sum(CAST(floor(((m.r * CAST(m.cvec[dims.b + 1]
                        AS DOUBLE)) / CAST(m.k AS DOUBLE))
                        * {m12} + 0.5) / {m12}
-                   AS DECIMAL(38,12))) AS DOUBLE) AS s
+                   AS {dec})) AS DOUBLE) AS s
           FROM mg{r} m CROSS JOIN dims GROUP BY 1
         ),
         w{r} AS MATERIALIZED (
@@ -10791,100 +10801,23 @@ def _scorer_fit_ctes(
     return ",".join(parts)
 
 
-def _scorer_sig_ctes(
-    nb: int = None,
-    epochs: int = None,
-    eta: float = None,
-    eta_bias: float = None,
-    salt: str = "qs",
-) -> str:
+def _scorer_sig_ctes() -> str:
     """CTE block (without WITH) re-running the CALIBRATED sigmoid-link
     fit of functions/scorer.py:scorer_fit_sig — the _scorer_fit_ctes
-    clone with the algebraic-sigmoid gradient and a jointly-trained
-    intercept. σ̃ and σ̃′ are +,−,×,÷,abs only (no exp), so every
+    epochs over the same _scorer_base_ctes prefix, with the
+    algebraic-sigmoid gradient and a jointly-trained intercept. σ̃ and σ̃′ are +,−,×,÷,abs only (no exp), so every
     epoch's weights AND bias are bit-identical across engines; the
     expression text mirrors the Spark operator order exactly
     (0.5 + 0.5·z/az parses left-assoc in both). Ends at ``wfin(b, w)``
     and ``biasx(bias)`` (serving bias b₀ − μ·w, zero rows on an empty
     corpus — the Spark empty-input contract), plus ``cv``/``wlf`` for
     scoring."""
-    nb = nb if nb is not None else _SCORER_NB
-    epochs = epochs if epochs is not None else _SCORER_EPOCHS
-    eta = eta if eta is not None else _SCORER_SIG_ETA
-    eta_bias = eta_bias if eta_bias is not None else _SCORER_SIG_ETA_B
-    m9 = f"{10**9}.0"
-    m12 = f"{10**12}.0"
-    hex8 = " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5('{salt}:' || x), "
-        f"{i + 1}, 1)) - 1) * {16 ** (7 - i)}"
-        for i in range(8)
-    )
-    fold = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        f"list_transform(generate_series(1, {nb}), i -> {{terms}})), "
-        "(a, b) -> a + b)"
-    )
-    cv_fold = fold.format(terms="CAST(cvec[i] AS DOUBLE) * wl[i]")
-    mw_fold = fold.format(terms="ml[i] * wl[i]")
+    epochs, eta, eta_bias = _SCORER_EPOCHS, _SCORER_SIG_ETA, _SCORER_SIG_ETA_B
+    base, m9, m12, dec, cv_fold, mw_fold = _scorer_base_ctes()
     parts = [
-        f"""
-        d AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 3 = 0
-                      THEN text || ' {_SCORER_PLANT}' ELSE text END AS text,
-                 CAST(doc_id % 3 = 0 AS INTEGER) AS y
-          FROM documents
-        ),
-        t AS (SELECT doc_id, y, {_TOKENS_SQL} AS toks FROM d),
-        f0 AS (
-          SELECT doc_id, y,
-                 toks || (CASE WHEN len(toks) >= 2
-                          THEN list_transform(
-                                 generate_series(1, len(toks) - 1),
-                                 i -> toks[i] || ' ' || toks[i + 1])
-                          ELSE CAST([] AS VARCHAR[]) END) AS f
-          FROM t
-        ),
-        fb AS MATERIALIZED (
-          SELECT doc_id, y, CAST(len(f) AS INTEGER) AS k,
-                 list_transform(f, x ->
-                   CAST(({hex8}) % {nb} AS INTEGER)) AS bidx
-          FROM f0 WHERE len(f) > 0
-        ),
-        fx AS MATERIALIZED (
-          SELECT doc_id, k, b, CAST(count(*) AS INTEGER) AS c
-          FROM (SELECT doc_id, k, unnest(bidx) AS b FROM fb)
-          GROUP BY 1, 2, 3
-        ),
-        dims AS MATERIALIZED (
-          SELECT unnest(generate_series(0, {nb - 1})) AS b
-        ),
-        cv AS MATERIALIZED (
-          SELECT fb.doc_id, fb.y, fb.k,
-                 list(coalesce(fx.c, 0) ORDER BY dims.b) AS cvec
-          FROM fb CROSS JOIN dims
-          LEFT JOIN fx ON fx.doc_id = fb.doc_id AND fx.b = dims.b
-          GROUP BY 1, 2, 3
-        ),
-        nn AS MATERIALIZED (
-          SELECT count(*) AS n FROM cv
-        ),
-        mu0 AS (
-          SELECT b,
-                 sum(CAST(floor((CAST(c AS DOUBLE) / CAST(k AS DOUBLE))
-                       * {m12} + 0.5) / {m12} AS DECIMAL(38,12))) AS s
-          FROM fx GROUP BY 1
-        ),
-        mus AS MATERIALIZED (
-          SELECT dims.b,
-                 floor((CAST(coalesce(mu0.s, 0) AS DOUBLE) / nn.n)
-                       * {m9} + 0.5) / {m9} AS mu
-          FROM dims CROSS JOIN nn
-          LEFT JOIN mu0 ON mu0.b = dims.b
-        ),
-        mul AS MATERIALIZED (SELECT list(mu ORDER BY b) AS ml FROM mus),
-        w0 AS MATERIALIZED (SELECT b, CAST(0.0 AS DOUBLE) AS w FROM dims),
-        bb0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0)"""
+        base,
+        """
+        bb0 AS (SELECT CAST(0.0 AS DOUBLE) AS b0)""",
     ]
     for r in range(1, epochs + 1):
         p = r - 1
@@ -10905,7 +10838,7 @@ def _scorer_sig_ctes(
         ),
         tt{r} AS (
           SELECT CAST(sum(CAST(floor(g * {m12} + 0.5) / {m12}
-                   AS DECIMAL(38,12))) AS DOUBLE) AS t
+                   AS {dec})) AS DOUBLE) AS t
           FROM mg{r}
         ),
         ss{r} AS MATERIALIZED (
@@ -10913,7 +10846,7 @@ def _scorer_sig_ctes(
                  CAST(sum(CAST(floor(((m.g * CAST(m.cvec[dims.b + 1]
                        AS DOUBLE)) / CAST(m.k AS DOUBLE))
                        * {m12} + 0.5) / {m12}
-                   AS DECIMAL(38,12))) AS DOUBLE) AS s
+                   AS {dec})) AS DOUBLE) AS s
           FROM mg{r} m CROSS JOIN dims GROUP BY 1
         ),
         w{r} AS MATERIALIZED (
@@ -12725,6 +12658,14 @@ def _cos_ab(a: str, b: str) -> str:
 
 
 def oracle_sql() -> dict[str, str]:
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.quality import (
+        MEAN_ROUND,
+    )
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
+        MAX_BITS,
+        MIN_BITS,
+    )
+
     fold_sq = "list_reduce(list_transform({v}, x -> x * x), (a, b) -> a + b)"
     dot = (
         "list_reduce(list_transform(generate_series(1, len(q_emb)), "
@@ -12738,7 +12679,10 @@ def oracle_sql() -> dict[str, str]:
     # operators.similarity.adaptive_nbits / sign_bucket / probe_buckets:
     # nbits from count(*), bucket from the first-nbits sign bits,
     # probes = home bucket + one single-bit flip per sign bit.
-    nbits_sql = "GREATEST(4, LEAST(24, CAST(ceil(log2(count(*) / 16.0)) AS INTEGER)))"
+    nbits_sql = (
+        f"GREATEST({MIN_BITS}, LEAST({MAX_BITS}, "
+        "CAST(ceil(log2(count(*) / 16.0)) AS INTEGER)))"
+    )
     dyn_bucket = (
         "CAST(list_sum(list_transform(generate_series(1, (SELECT nbits FROM params)), "
         "j -> CASE WHEN {v}[j] >= 0 THEN CAST(2**(j-1) AS BIGINT) ELSE CAST(0 AS BIGINT) END)) AS BIGINT)"
@@ -14988,7 +14932,7 @@ def oracle_sql() -> dict[str, str]:
             FROM pairs QUALIFY rank <= 3
         """,
         # ---- batch 4: quality / sampling / cohorts / sequences / graph / ML
-        "data_quality_profile": """
+        "data_quality_profile": f"""
             WITH w AS (
               SELECT count(*) AS n,
                      count(event_id) AS nn_event_id,
@@ -15003,7 +14947,8 @@ def oracle_sql() -> dict[str, str]:
                      CAST(max(value) AS DOUBLE) AS max_value,
                      floor(CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
                            / CAST(count(value) AS DOUBLE)
-                           * 1000000.0 + 0.5) / 1000000.0 AS mean_value
+                           * {10**MEAN_ROUND}.0 + 0.5)
+                     / {10**MEAN_ROUND}.0 AS mean_value
               FROM events
             )
             SELECT '*' AS col_name, 'n_rows' AS metric,

@@ -37,7 +37,7 @@ stack (SURVEY.md §2 extensions).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ALPHABET = 28  # 0 = other, 1..26 = a-z, 27 = space
@@ -200,63 +200,13 @@ def charlm_scores_arrow(
     14 s at sf0.1); the kernel is a per-char table lookup plus three
     vectorized ops per doc. Parity with charlm_score_expr pinned in
     pytest over the real corpus."""
-    tbl = [float(p) for p in table]
-    out_schema = (
-        f"{id_col} long, n_trigrams long, __mean_raw double, "
-        "__min_raw double"
-    )
-
-    def score(batches):
-        import numpy as np
-        import pandas as pd
-
-        t = np.asarray(tbl, dtype=np.float64)
-        lut = np.zeros(128, dtype=np.int64)
-        for o in range(97, 123):
-            lut[o] = o - 96
-        lut[32] = 27
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ns, means, mins = [], [], []
-            for s in pdf["__lt"]:
-                if s is None or len(s) < 3:
-                    ns.append(0)
-                    means.append(0.0)
-                    mins.append(0.0)
-                    continue
-                codes = [
-                    int(lut[o]) if (o := ord(ch)) < 128 else 0 for ch in s
-                ]
-                c = np.asarray(codes, dtype=np.int64)
-                idx = c[:-2] * (ALPHABET * ALPHABET) + c[1:-1] * ALPHABET + c[2:] + 1
-                p = t[idx - 1]
-                ns.append(len(p))
-                means.append(float(np.cumsum(p)[-1]) / len(p))
-                mins.append(float(p.min()))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_trigrams": np.asarray(ns, dtype="int64"),
-                    "__mean_raw": means,
-                    "__min_raw": mins,
-                }
-            )
-
-    src = docs.select(id_col, F.lower(F.col(text_col)).alias("__lt"))
-    return src.mapInPandas(score, out_schema).select(
-        id_col,
-        "n_trigrams",
-        F.round("__mean_raw", 6).alias("mean_p"),
-        F.round("__min_raw", 6).alias("min_p"),
-    )
+    return charlm_attach_arrow(docs.select(id_col, text_col), table, text_col)
 
 
 def charlm_attach_arrow(
     df: DataFrame,
     table: list[float],
     text_col: str = "text",
-    drop_text: bool = True,
 ) -> DataFrame:
     """Arrow kernel as a FUSABLE STAGE (round 14, VERDICT r13 #1):
     append (n_trigrams, mean_p, min_p) to an arbitrary-width frame —
@@ -264,11 +214,13 @@ def charlm_attach_arrow(
     composed pipeline (curation_full) can run its cheap expression
     gates FIRST and pay the Python kernel only for the survivors,
     without a join back (a join would re-shuffle the corpus; this is
-    still one streamed scan).
+    still one streamed scan). ``text_col`` itself is consumed: it is
+    lowered into the kernel's input and dropped from the output.
 
-    Same bit-exactness contract as :func:`charlm_scores_arrow`:
-    lowering and rounding happen IN SPARK, the mean fold is an
-    ascending ``np.cumsum`` — parity with :func:`charlm_score_expr`
+    The one Arrow scoring kernel (:func:`charlm_scores_arrow` is this
+    stage over (id, text)) — see there for the bit-exactness
+    contract: lowering and rounding happen IN SPARK, the mean fold is
+    an ascending ``np.cumsum`` — parity with :func:`charlm_score_expr`
     pinned in pytest. Passthrough columns must be Arrow-simple
     (ints/doubles/strings/booleans/binary — what a curation gate
     carries); validated up front so a caller composing this onto a
@@ -285,9 +237,7 @@ def charlm_attach_arrow(
     )
 
     tbl = [float(p) for p in table]
-    src = df.withColumn("__lt", F.lower(F.col(text_col)))
-    if drop_text:
-        src = src.drop(text_col)
+    src = df.withColumn("__lt", F.lower(F.col(text_col))).drop(text_col)
     bad = [
         f"{f.name}: {f.dataType.simpleString()}"
         for f in src.schema.fields
@@ -355,20 +305,3 @@ def charlm_attach_arrow(
         F.round("__mean_raw", 6).alias("mean_p"),
         F.round("__min_raw", 6).alias("min_p"),
     )
-
-
-def charlm_doc_scores(
-    spark: SparkSession,
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    table: list[float] | None = None,
-) -> DataFrame:
-    """End-to-end: train on ``docs`` (unless a table is supplied —
-    production scores a crawl against a REFERENCE-corpus table, the
-    CCNet shape) and score every doc map-side."""
-    if table is None:
-        table = char_trigram_lm(docs, text_col)
-    return docs.select(
-        id_col, charlm_score_expr(F.col(text_col), table).alias("s")
-    ).select(id_col, "s.*")

@@ -307,13 +307,76 @@ def _score_fold_sql(cvec_col: str, ws: list[float]) -> str:
     )
 
 
+#: Fit precision: every DECIMAL sum adds ADDEND_SCALE-dp floor-rounded
+#: addends, and μ, the weights and the bias are floor-rounded at
+#: ROUND_SCALE dp. The DuckDB twins of both fits read these constants.
+ROUND_SCALE = 9
+ADDEND_SCALE = 12
+_DEC = f"decimal(38,{ADDEND_SCALE})"
+
+
+def _dot(mu: list[float], w: list[float]) -> float:
+    """μ·w as an ascending 0.0-seeded fold (the twins' list_reduce)."""
+    acc = 0.0
+    for m, x in zip(mu, w):
+        acc = acc + m * x
+    return acc
+
+
+def _bucket_sums(
+    frame: DataFrame, weight: Column, n_buckets: int
+) -> list[float]:
+    """Σᵢ dec₁₂(weightᵢ·c_ib/k_i) per bucket b — one bounded
+    bucket-cell DECIMAL aggregate over ``frame``'s (k, cvec)."""
+    out = [0.0] * n_buckets
+    for row in (
+        frame.select(
+            weight.alias("__u"), "k", F.posexplode("cvec").alias("b", "c")
+        )
+        .select(
+            "b",
+            _flr(
+                (F.col("__u") * F.col("c").cast("double"))
+                / F.col("k").cast("double"),
+                ADDEND_SCALE,
+            ).alias("a"),
+        )
+        .groupBy("b")
+        .agg(F.sum(F.col("a").cast(_DEC)).alias("s"))
+        .collect()
+    ):
+        out[int(row.b)] = float(row.s)
+    return out
+
+
+def _centered_means(cv: DataFrame, n: int, n_buckets: int) -> list[float]:
+    """The one-time centering pass shared by both fits:
+    μ_b = flr₉(Σᵢ dec₁₂(c_ib/k_i) / n)."""
+    return [
+        _flr_py(s / n, ROUND_SCALE)
+        for s in _bucket_sums(cv, F.lit(1.0), n_buckets)
+    ]
+
+
+def _epoch_sums(
+    cv: DataFrame, resid: Column, n_buckets: int
+) -> tuple[float, list[float]]:
+    """One GD epoch's aggregates for a per-doc residual ``resid``:
+    T = Σᵢ dec₁₂(r_i) and S_b = Σᵢ dec₁₂(r_i·c_ib/k_i). The two fits
+    differ only in ``resid`` and in the update step they take."""
+    marg = cv.select("k", "cvec", resid.alias("r"))
+    t_val = float(
+        marg.agg(F.sum(_flr(F.col("r"), ADDEND_SCALE).cast(_DEC))).first()[0]
+        or 0
+    )
+    return t_val, _bucket_sums(marg, F.col("r"), n_buckets)
+
+
 def scorer_fit_ls(
     cv: DataFrame,
     n_buckets: int = 256,
     epochs: int = 8,
     eta: float = 4000.0,
-    round_scale: int = 9,
-    addend_scale: int = 12,
 ) -> tuple[list[float], float]:
     """Fit (weights, bias) on a :func:`hashed_count_rows` frame by
     ``epochs`` full-batch GD steps on centered least squares:
@@ -333,68 +396,23 @@ def scorer_fit_ls(
     n = cv.count()
     if n == 0:
         return [0.0] * n_buckets, 0.0
-    dec = f"decimal(38,{addend_scale})"
     npos = cv.agg(F.sum("y")).first()[0] or 0
     ybar = float(npos) / float(n)
-    mu = [0.0] * n_buckets
-    for row in (
-        cv.select(F.posexplode("cvec").alias("b", "c"), "k")
-        .select(
-            "b",
-            _flr(
-                F.col("c").cast("double") / F.col("k").cast("double"),
-                addend_scale,
-            ).alias("a"),
-        )
-        .groupBy("b")
-        .agg(F.sum(F.col("a").cast(dec)).alias("s"))
-        .collect()
-    ):
-        mu[int(row.b)] = _flr_py(float(row.s) / n, round_scale)
-
+    mu = _centered_means(cv, n, n_buckets)
     w = [0.0] * n_buckets
     for _ in range(int(epochs)):
-        mw = 0.0
-        for b in range(n_buckets):
-            mw = mw + mu[b] * w[b]
         s_over_k = F.expr(_score_fold_sql("cvec", w)) / F.col("k").cast(
             "double"
         )
         resid = (F.col("y").cast("double") - F.lit(ybar)) - (
-            s_over_k - F.lit(mw)
+            s_over_k - F.lit(_dot(mu, w))
         )
-        marg = cv.select("k", "cvec", resid.alias("r"))
-        t_val = float(
-            marg.agg(
-                F.sum(_flr(F.col("r"), addend_scale).cast(dec))
-            ).first()[0]
-            or 0
-        )
-        s_vec = [0.0] * n_buckets
-        for row in (
-            marg.select("r", "k", F.posexplode("cvec").alias("b", "c"))
-            .select(
-                "b",
-                _flr(
-                    (F.col("r") * F.col("c").cast("double"))
-                    / F.col("k").cast("double"),
-                    addend_scale,
-                ).alias("a"),
-            )
-            .groupBy("b")
-            .agg(F.sum(F.col("a").cast(dec)).alias("s"))
-            .collect()
-        ):
-            s_vec[int(row.b)] = float(row.s)
+        t_val, s_vec = _epoch_sums(cv, resid, n_buckets)
         w = [
-            _flr_py(w[b] + eta * ((s_vec[b] - mu[b] * t_val) / n), round_scale)
+            _flr_py(w[b] + eta * ((s_vec[b] - mu[b] * t_val) / n), ROUND_SCALE)
             for b in range(n_buckets)
         ]
-    mw = 0.0
-    for b in range(n_buckets):
-        mw = mw + mu[b] * w[b]
-    bias = _flr_py(ybar - mw, round_scale)
-    return w, bias
+    return w, _flr_py(ybar - _dot(mu, w), ROUND_SCALE)
 
 
 def scorer_predict(
@@ -450,8 +468,6 @@ def scorer_fit_sig(
     epochs: int = 8,
     eta: float = 16000.0,
     eta_bias: float = 4.0,
-    round_scale: int = 9,
-    addend_scale: int = 12,
 ) -> tuple[list[float], float]:
     """Fit (weights, serving_bias) on a :func:`hashed_count_rows`
     frame by ``epochs`` full-batch GD steps on MSE over σ̃-link
@@ -481,70 +497,26 @@ def scorer_fit_sig(
     n = cv.count()
     if n == 0:
         return [0.0] * n_buckets, 0.0
-    dec = f"decimal(38,{addend_scale})"
-    mu = [0.0] * n_buckets
-    for row in (
-        cv.select(F.posexplode("cvec").alias("b", "c"), "k")
-        .select(
-            "b",
-            _flr(
-                F.col("c").cast("double") / F.col("k").cast("double"),
-                addend_scale,
-            ).alias("a"),
-        )
-        .groupBy("b")
-        .agg(F.sum(F.col("a").cast(dec)).alias("s"))
-        .collect()
-    ):
-        mu[int(row.b)] = _flr_py(float(row.s) / n, round_scale)
-
+    mu = _centered_means(cv, n, n_buckets)
     w = [0.0] * n_buckets
     b0 = 0.0
     for _ in range(int(epochs)):
-        mw = 0.0
-        for b in range(n_buckets):
-            mw = mw + mu[b] * w[b]
         z = (
             F.expr(_score_fold_sql("cvec", w)) / F.col("k").cast("double")
-            - F.lit(mw)
+            - F.lit(_dot(mu, w))
             + F.lit(b0)
         )
         az = F.lit(1.0) + F.abs(z)
         g = (sig_alg(z) - F.col("y").cast("double")) * (
             F.lit(0.5) / (az * az)
         )
-        marg = cv.select("k", "cvec", g.alias("g"))
-        t_val = float(
-            marg.agg(
-                F.sum(_flr(F.col("g"), addend_scale).cast(dec))
-            ).first()[0]
-            or 0
-        )
-        s_vec = [0.0] * n_buckets
-        for row in (
-            marg.select("g", "k", F.posexplode("cvec").alias("b", "c"))
-            .select(
-                "b",
-                _flr(
-                    (F.col("g") * F.col("c").cast("double"))
-                    / F.col("k").cast("double"),
-                    addend_scale,
-                ).alias("a"),
-            )
-            .groupBy("b")
-            .agg(F.sum(F.col("a").cast(dec)).alias("s"))
-            .collect()
-        ):
-            s_vec[int(row.b)] = float(row.s)
+        t_val, s_vec = _epoch_sums(cv, g, n_buckets)
         w = [
-            _flr_py(w[b] - eta * (s_vec[b] / n), round_scale)
+            _flr_py(w[b] - eta * (s_vec[b] / n), ROUND_SCALE)
             for b in range(n_buckets)
         ]
-        b0 = _flr_py(b0 - eta_bias * (t_val / n), round_scale)
-    mw = 0.0
-    for b in range(n_buckets):
-        mw = mw + mu[b] * w[b]
-    return w, _flr_py(b0 - mw, round_scale)
+        b0 = _flr_py(b0 - eta_bias * (t_val / n), ROUND_SCALE)
+    return w, _flr_py(b0 - _dot(mu, w), ROUND_SCALE)
 
 
 def scorer_predict_sig(

@@ -28,8 +28,9 @@ Scale hardening (100 TB):
   checkpoint construction regardless of eager, so the saving is
   exactly that one skipped job per round, not a deferral of the
   round's work into the flag collect;
-- a loop that exits without converging raises (or returns flagged via
-  ``strict=False``) instead of silently returning truncated labels.
+- a loop that exits without converging raises
+  :class:`ConvergenceError` instead of silently returning truncated
+  labels.
 """
 
 from __future__ import annotations
@@ -50,15 +51,14 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iterations: int = 25,
-    strict: bool = True,
 ) -> DataFrame:
     """(node, component) for every node in the pair table; component =
     smallest node id reachable. ``pairs`` is undirected input.
 
     With pointer jumping, ``max_iterations`` bounds the *log* of the
     component diameter — 25 rounds cover any graph that fits on disk.
-    ``strict=True`` raises :class:`ConvergenceError` if the loop exits
-    un-converged (silently truncated labels are wrong labels).
+    Raises :class:`ConvergenceError` if the loop exits un-converged
+    (silently truncated labels are wrong labels).
     """
     edges = (
         pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
@@ -130,12 +130,10 @@ def connected_components(
             break
     edges.unpersist()
     if not converged:
-        if strict:
-            raise ConvergenceError(
-                f"label propagation did not converge in {max_iterations} "
-                "rounds; raise max_iterations"
-            )
-        return labels.withColumn("converged", F.lit(False))
+        raise ConvergenceError(
+            f"label propagation did not converge in {max_iterations} "
+            "rounds; raise max_iterations"
+        )
     return labels
 
 
@@ -146,8 +144,6 @@ def near_dup_components(
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_iterations: int = 25,
-    materialize: str = "persist",
 ) -> DataFrame:
     """(doc_id, component) over the MinHash near-dup graph — result
     IDENTICAL to ``connected_components(minhash_lsh_pairs(docs))``
@@ -187,30 +183,22 @@ def near_dup_components(
     for the rest of the Spark application: repeat invocations run no
     probe job. Either route changes only the physical plan.
 
-    ``materialize="persist"`` (default — registered fixed-plan queries)
-    keeps one CacheManager entry per corpus, reused across invocations;
-    ``"checkpoint"`` is for varied-corpus loops (probes, per-day
-    clustering), where per-plan cache entries would accumulate."""
+    The digest and band tables are persisted: one CacheManager entry
+    per corpus, reused across invocations of the registered
+    fixed-plan queries. A loop over varied corpora clears the cache
+    between corpora (``spark.catalog.clearCache()``)."""
     from ..functions.text import token_count
     from .dedup import lsh_pairs_from_bands, minhash_bands, signature_digest
-
-    if materialize not in ("checkpoint", "persist"):
-        raise ValueError(f"materialize must be checkpoint|persist: {materialize}")
-
-    def _materialized(df: DataFrame) -> DataFrame:
-        if materialize == "persist":
-            return df.persist()
-        return df.localCheckpoint(eager=True)
 
     d = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
     # Per-doc digest table: feeds reps, the representative rows AND the
     # membership expansion, so the corpus is scanned and hashed once.
-    grp = _materialized(
-        d.withColumn("digest", F.md5("text")).withColumn(
-            "has_shingle", token_count(F.col("text")) >= n
-        )
+    grp = (
+        d.withColumn("digest", F.md5("text"))
+        .withColumn("has_shingle", token_count(F.col("text")) >= n)
+        .persist()
     )
     reps = grp.groupBy("digest").agg(
         F.min("doc_id").alias("rep_id"),
@@ -226,7 +214,7 @@ def near_dup_components(
     membership = grp.select("doc_id", "digest").join(reps, "digest")
     # The band table feeds the route probe, the class table and the
     # candidate join — computed once for all text-reps.
-    bands_df = _materialized(minhash_bands(rep_docs, k=k, bands=bands, n=n))
+    bands_df = minhash_bands(rep_docs, k=k, bands=bands, n=n).persist()
 
     def _class_table() -> tuple[DataFrame, DataFrame]:
         sigd = signature_digest(bands_df)
@@ -251,9 +239,7 @@ def near_dup_components(
 
     use_star = cached(("star_route", d.semanticHash(), k, bands, n), _probe)
     if not use_star:
-        comp2 = connected_components(
-            lsh_pairs_from_bands(bands_df), max_iterations=max_iterations
-        )
+        comp2 = connected_components(lsh_pairs_from_bands(bands_df))
         rep_label = comp2.withColumnRenamed("node", "rep_id")
     else:
         sigd, cls = _class_table()
@@ -261,9 +247,7 @@ def near_dup_components(
         rep2_bands = bands_df.join(
             cls.select(F.col("rep2").alias("doc_id")), "doc_id"
         )
-        comp2 = connected_components(
-            lsh_pairs_from_bands(rep2_bands), max_iterations=max_iterations
-        )
+        comp2 = connected_components(lsh_pairs_from_bands(rep2_bands))
         # per text-rep label: component of its class rep, else — for a
         # g2≥2 class with no cross-class edge — the class itself is a
         # clique/component labeled by its rep (= its min id). Docs with

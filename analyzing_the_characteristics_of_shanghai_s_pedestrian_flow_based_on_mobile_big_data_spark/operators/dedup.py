@@ -75,19 +75,11 @@ def doc_shingles(
     ).distinct()
 
 
-# Above this corpus size the adaptive probe itself would cost a full
-# tokenize pass worth caring about, and a natural corpus this big has
-# power-law shingle frequencies with statistical certainty — go
-# straight to the prefix-filtered path.
-LARGE_CORPUS_DOCS = 2_000_000
-
-
 def choose_jaccard_path(
     docs: DataFrame,
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_docs: int | None = None,
 ) -> bool:
     """Pick the ngram_jaccard_pairs candidate-generation strategy from
     cheap corpus stats. Returns True for the prefix-filtered path,
@@ -98,19 +90,13 @@ def choose_jaccard_path(
     frequency is ≫ √N (SCALE.md records the measured crossover); the
     prefix filter structurally caps that blowup but pays ~2 extra
     stages — measured 1.6× slower locally on a *uniform* corpus where
-    no shingle is hot. Rule: prefix when the corpus is large
-    (≥ ``LARGE_CORPUS_DOCS`` — probing would cost a corpus pass, and
-    hot shingles are certain in natural text at that size), else probe
-    max document frequency over the shingle table and prefix only when
-    max_df > 4·√N. The probe is one agg job over the same shingle
-    table the chosen path rebuilds; only its scalar max reaches the
-    driver."""
+    no shingle is hot. Rule: probe max document frequency over the
+    shingle table and prefix only when max_df > 4·√N. The probe is a
+    count plus one agg job over the same shingle table the chosen path
+    rebuilds; only scalars reach the driver."""
     import math
 
-    if n_docs is None:
-        n_docs = docs.count()
-    if n_docs >= LARGE_CORPUS_DOCS:
-        return True
+    n_docs = docs.count()
     if n_docs < 2:
         return False
     row = (
@@ -130,20 +116,18 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    prefix_filter: bool | None = None,
 ) -> DataFrame:
     """All pairs with n-gram Jaccard ≥ threshold, via shingle
     inverted-index self-join (no cross join: pairs only materialize for
     docs sharing ≥1 shingle).
 
-    ``prefix_filter=None`` (default) selects the path adaptively via
-    ``choose_jaccard_path``: prefix-filtered when the corpus is large
-    or a shingle's document frequency exceeds 4·√N (the measured
+    :func:`choose_jaccard_path` selects the path: prefix-filtered when
+    a shingle's document frequency exceeds 4·√N (the measured
     single-join blowup regime), single-join otherwise. Both paths are
     exact and produce identical pair sets (pytest-pinned), so the
     choice is purely a physical-plan decision.
 
-    ``prefix_filter=True`` is the 100 TB path: candidate
+    The prefix-filtered path is the 100 TB path: candidate
     generation joins only on each doc's prefix — its ⌈(1−t)·|A|⌉+1
     globally-rarest shingles (global order = document frequency asc,
     shingle asc). Prefix-filter lemma (exact, never drops a qualifying
@@ -158,9 +142,9 @@ def ngram_jaccard_pairs(
     doc id + shingle) — exactness is preserved; measured candidate-row
     reduction at sf0.1 is recorded in SCALE.md.
 
-    ``prefix_filter=False`` keeps the single-join formulation (counts
-    common shingles directly in the self-join): fewer stages, right for
-    small/skew-free corpora, quadratic on hot shingles.
+    The single-join path counts common shingles directly in the
+    self-join: fewer stages, right for small/skew-free corpora,
+    quadratic on hot shingles.
 
     Size-ratio prune in both paths: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|),
     applied *inside* the candidate join via least/greatest division
@@ -168,13 +152,11 @@ def ngram_jaccard_pairs(
     false prunes at equality)."""
     from pyspark.sql import Window
 
-    if prefix_filter is None:
-        prefix_filter = choose_jaccard_path(docs, n, id_col, text_col)
     ratio_ok = (
         F.least(F.col("a.n_sh"), F.col("b.n_sh"))
         / F.greatest(F.col("a.n_sh"), F.col("b.n_sh"))
     ) >= F.lit(threshold)
-    if prefix_filter:
+    if choose_jaccard_path(docs, n, id_col, text_col):
         # Augmented index in two exchanges: df via a window over the
         # shingle partition, then n_sh and the rarity rank in one
         # doc_id pass (both windows share the doc_id exchange).
@@ -1406,8 +1388,6 @@ def tf_cosine_dense_stats(
     n: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    pairs_per_key_budget: int = 64,
-    min_keys: int = 4096,
 ) -> dict:
     """Dense-regime probe for :func:`tf_cosine_pairs` (round 10,
     VERDICT r9 #2) — the same candidate-volume statistics and
@@ -1416,21 +1396,18 @@ def tf_cosine_dense_stats(
     computed over the DISTINCT (doc, term) table at gram size ``n``:
     Σ_term C(df,2) upper-bounds the suffix⋈index candidate rows, so
     when it says the average document would meet more than
-    ``pairs_per_key_budget`` partners, the vocabulary is too
-    degenerate for the Bayardo maxweight prefix bound to bite
+    :data:`~.similarity.PAIRS_PER_KEY_BUDGET` partners, the vocabulary
+    is too degenerate for the Bayardo maxweight prefix bound to bite
     (every doc shares every term — the Ω(U²) dense regime the
     operator's docstring documents) and no prefix ordering can fix
-    it. Two scalar-only aggregate jobs; at 100 TB feed the same dict
-    shape from catalog NDVs (set_similarity_stats_from_catalog).
-    Returns the stats dict plus ``path`` ∈ {"exact", "lsh"} ("lsh"
-    here meaning: do NOT run the exact join at this ``n``)."""
-    from .similarity import choose_set_similarity_path, set_similarity_stats
+    it. Two scalar-only aggregate jobs. Returns the stats dict plus
+    ``path`` ∈ {"exact", "lsh"} ("lsh" here meaning: do NOT run the
+    exact join at this ``n``)."""
+    from . import similarity
 
     terms = _tf_term_table(docs, int(n), id_col, text_col).distinct()
-    stats = set_similarity_stats(terms, "doc_id", "term")
-    stats["path"] = choose_set_similarity_path(
-        stats, pairs_per_key_budget, min_keys
-    )
+    stats = similarity.set_similarity_stats(terms, "doc_id", "term")
+    stats["path"] = similarity.choose_set_similarity_path(stats)
     return stats
 
 
@@ -1443,13 +1420,11 @@ def tf_cosine_pairs_auto(
     text_col: str = "text",
     max_n: int = 5,
     on_dense: str = "raise",
-    pairs_per_key_budget: int = 64,
-    min_keys: int = 4096,
-    stats: dict | None = None,
 ) -> DataFrame:
     """:func:`tf_cosine_pairs` behind the dense-regime guard: probe
-    the term-frequency tail at gram size ``n`` first; run the exact
-    APSS join only where the maxweight prefix bound can bite.
+    the term-frequency tail at gram size ``n`` first
+    (:func:`tf_cosine_dense_stats`); run the exact APSS join only
+    where the maxweight prefix bound can bite.
 
     On a vocabulary-degenerate corpus (unigram bag-of-words over a
     ~30-word vocabulary — this repo's synthetic documents table) the
@@ -1465,11 +1440,9 @@ def tf_cosine_pairs_auto(
       exhausted, then raise. Escalation CHANGES the similarity
       semantics from unigram to n-gram cosine, which is why it is
       opt-in, and the chosen n is discoverable via
-      tf_cosine_dense_stats.
+      tf_cosine_dense_stats."""
+    from .similarity import PAIRS_PER_KEY_BUDGET
 
-    ``stats`` pre-seeds the probe for the chosen ``n`` (the catalog
-    path: pass set_similarity_stats_from_catalog output and no probe
-    job runs at that n)."""
     if on_dense not in ("raise", "escalate"):
         raise ValueError(f"on_dense must be raise|escalate: {on_dense!r}")
     tried = []
@@ -1478,21 +1451,7 @@ def tf_cosine_pairs_auto(
     # must not be misdiagnosed as a measured data property
     max_n = max(int(max_n), nn)
     while nn <= max_n:
-        s = (
-            dict(stats, path=None)
-            if stats is not None and nn == int(n)
-            else None
-        )
-        if s is not None:
-            from .similarity import choose_set_similarity_path
-
-            s["path"] = choose_set_similarity_path(
-                s, pairs_per_key_budget, min_keys
-            )
-        else:
-            s = tf_cosine_dense_stats(
-                docs, nn, id_col, text_col, pairs_per_key_budget, min_keys
-            )
+        s = tf_cosine_dense_stats(docs, nn, id_col, text_col)
         tried.append((nn, s["path"], s["cand_pairs"], s["n_keys"]))
         if s["path"] == "exact":
             return tf_cosine_pairs(
@@ -1503,7 +1462,7 @@ def tf_cosine_pairs_auto(
         nn += 1
     raise ValueError(
         "tf_cosine_pairs_auto: dense regime — the candidate bound "
-        f"exceeds {pairs_per_key_budget} partners per document and the "
+        f"exceeds {PAIRS_PER_KEY_BUDGET} partners per document and the "
         "maxweight prefix filter cannot prune it (degenerate "
         "vocabulary). Tried (n, verdict, cand_pairs, n_keys): "
         f"{tried}. Raise n (word n-grams restore the rare-term "
@@ -2452,8 +2411,8 @@ def near_dup_pairs_auto(
     # forever; checkpoint blocks are ContextCleaner-reclaimed once the
     # caller drops the result, so parameter sweeps stay flat
     # (pytest-pinned: test_dedup.py cached-entry no-growth). At 100 TB
-    # the equivalent is a checkpointed shingle table (or catalog NDVs
-    # passed via stats=, skipping the jobs).
+    # the equivalent is a checkpointed shingle table (or precomputed
+    # stats passed via stats=, skipping the jobs).
     sh = doc_shingles(docs, n, id_col, text_col).localCheckpoint(eager=True)
     pairs = set_similarity_join_auto(
         sh, "doc_id", "shingle", threshold_num, threshold_den, **auto_kwargs

@@ -36,6 +36,11 @@ from pyspark.sql import DataFrame
 
 _Q12 = Decimal("1E-12")
 
+#: PageRank ranks and HITS scores are floor-rounded at this many
+#: decimals each round — by the folds here and by their DuckDB twins
+#: (pagerank.pagerank_oracle_sql, hits.hits_oracle_sql) alike.
+ROUND_SCALE = 9
+
 
 def collect_edges_bounded(df: DataFrame, bound: int, *cols: str) -> list:
     """Collect ``cols`` of ``df`` with the row count enforced ≤
@@ -70,7 +75,6 @@ def pagerank_fold(
     edges: list[tuple[int, int, float]],
     iterations: int = 10,
     damping: float = 0.85,
-    round_scale: int = 9,
 ) -> list[tuple[int, float]]:
     """Damped PageRank over a collected (src, dst, w) edge list
     (per-src weights from ``pagerank.normalized_edges``): dangling
@@ -82,7 +86,7 @@ def pagerank_fold(
     n = len(nodes)
     if n == 0:
         return []
-    scale = float(10**round_scale)
+    scale = float(10**ROUND_SCALE)
     tele = 1.0 - damping
     rank = {v: floor(1.0 / n * scale + 0.5) / scale for v in nodes}
     # quantize weights once: w is 12-dp by construction, the cast is
@@ -201,7 +205,6 @@ def closeness_fold(
 def hits_fold(
     edges: list[tuple[int, int]],
     iterations: int = 5,
-    round_scale: int = 9,
 ) -> list[tuple[int, float, float]]:
     """(node, hub, authority) over the directed simple (src, dst)
     graph after exactly ``iterations`` alternations from hub = 1.0:
@@ -209,7 +212,7 @@ def hits_fold(
     half-round. Twin: ``hits.hits_oracle_sql``."""
     es = sorted({(s, d) for s, d in edges if s != d})
     nodes = sorted({s for s, _ in es} | {d for _, d in es})
-    scale = float(10**round_scale)
+    scale = float(10**ROUND_SCALE)
 
     def norm_round(scores: dict[int, float]) -> dict[int, float]:
         mx = max(scores.values()) if scores else None

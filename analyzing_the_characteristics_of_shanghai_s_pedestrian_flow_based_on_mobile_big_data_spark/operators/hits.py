@@ -24,13 +24,13 @@ extensions).
 
 from __future__ import annotations
 
+from .graph_bounded import ROUND_SCALE
 
-def hits_oracle_sql(
-    graph_cte: str, iterations: int = 5, round_scale: int = 9
-) -> str:
+
+def hits_oracle_sql(graph_cte: str, iterations: int = 5) -> str:
     """Unrolled DuckDB twin over ``graph(src, dst)`` — MATERIALIZED per
     half-round (the PageRank CTE-inlining lesson)."""
-    sc = f"{10**round_scale}.0"
+    sc = f"{10**ROUND_SCALE}.0"
     parts = [
         graph_cte,
         """

@@ -53,6 +53,10 @@ from pyspark.sql import functions as F
 
 _DEC = "decimal(28,12)"
 
+#: Centroid coordinates are floor-rounded at this many decimals each
+#: round — by kmeans_fit and by its DuckDB twin alike.
+ROUND_SCALE = 9
+
 
 def _sq_dist_sql(vec_col: str, cent: list[float]) -> str:
     """Squared euclidean distance to a literal centroid — sequential
@@ -91,7 +95,6 @@ def kmeans_fit(
     iterations: int = 3,
     vec_col: str = "vec",
     id_col: str = "vec_id",
-    round_scale: int = 9,
 ) -> tuple[dict[int, list[float]], DataFrame]:
     """Run ``iterations`` Lloyd rounds on ``emb`` (id_col, vec_col:
     array<double>). Returns (final centroids {cluster: coords}, the
@@ -122,10 +125,10 @@ def kmeans_fit(
                     F.floor(
                         F.sum(F.col("x").cast(_DEC)).cast("double")
                         / F.count("*").cast("double")
-                        * F.lit(float(10**round_scale))
+                        * F.lit(float(10**ROUND_SCALE))
                         + F.lit(0.5)
                     )
-                    / F.lit(float(10**round_scale))
+                    / F.lit(float(10**ROUND_SCALE))
                 ).alias("coord")
             )
             .collect()  # bounded: k·dim cells
@@ -144,7 +147,6 @@ def kmeans_oracle_ctes(
     emb_cte: str,
     k: int = 8,
     iterations: int = 3,
-    round_scale: int = 9,
 ) -> str:
     """CTE block (without the WITH keyword) of the unrolled Lloyd
     rounds, ending at ``cent{iterations}(cluster, c)`` — exposed
@@ -190,8 +192,8 @@ def kmeans_oracle_ctes(
           SELECT cluster, g.i AS dim_idx,
                  floor(CAST(sum(CAST(emb[g.i] AS DECIMAL(28,12))) AS DOUBLE)
                        / CAST(count(*) AS DOUBLE)
-                       * {10**round_scale}.0 + 0.5)
-                 / {10**round_scale}.0 AS coord
+                       * {10**ROUND_SCALE}.0 + 0.5)
+                 / {10**ROUND_SCALE}.0 AS coord
           FROM asg{r} CROSS JOIN dims g
           GROUP BY cluster, g.i
         ),
@@ -213,7 +215,6 @@ def kmeans_oracle_sql(
     emb_cte: str,
     k: int = 8,
     iterations: int = 3,
-    round_scale: int = 9,
 ) -> str:
     """Full DuckDB twin of :func:`kmeans_fit`: the unrolled CTE chain
     plus the final-centroid/size select."""
@@ -224,7 +225,7 @@ def kmeans_oracle_sql(
     n = iterations
     return (
         "WITH "
-        + kmeans_oracle_ctes(emb_cte, k, iterations, round_scale)
+        + kmeans_oracle_ctes(emb_cte, k, iterations)
         + f"""
         , asg_final AS MATERIALIZED (
           SELECT a.vec_id, cluster FROM (

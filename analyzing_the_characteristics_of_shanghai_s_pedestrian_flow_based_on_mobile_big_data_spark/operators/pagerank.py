@@ -10,7 +10,7 @@ metadata work. This module keeps the two pieces around that fold:
 - :func:`pagerank_oracle_sql` — the unrolled-CTE DuckDB twin the fold
   is checked against.
 
-Rank rule, ``s`` = ``round_scale`` (9), ``d`` = damping:
+Rank rule, ``s`` = ``graph_bounded.ROUND_SCALE`` (9), ``d`` = damping:
 
     rank⁰(v) = floor((1/N)·10ˢ + ½)/10ˢ;
     rankⁱ⁺¹(v) = floor(((1-d)/N + d·Σ_{(u,v)∈E} w(u,v)·rankⁱ(u))·10ˢ + ½)/10ˢ.
@@ -22,7 +22,7 @@ rate=damping), so the twin is a static CTE chain.
 
 Cross-engine determinism: the contribution arithmetic never multiplies
 raw doubles — weights are rounded to 12 decimals and ranks to
-``round_scale`` decimals, so casting each to DECIMAL(18,12) recovers
+``s`` decimals, so casting each to DECIMAL(18,12) recovers
 the *identical* decimal value in DuckDB and in the fold (a double
 holding a ≤12-digit decimal converts exactly under a shortest-repr
 cast and under DuckDB's nearest-decimal cast; an arbitrary double does
@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .graph_bounded import ROUND_SCALE
 
 
 def normalized_edges(
@@ -76,7 +78,6 @@ def pagerank_oracle_sql(
     edges_cte: str,
     iterations: int = 10,
     damping: float = 0.85,
-    round_scale: int = 9,
 ) -> str:
     """Generate the unrolled-CTE DuckDB twin of
     ``graph_bounded.pagerank_fold``.
@@ -122,7 +123,7 @@ def pagerank_oracle_sql(
                  floor(CAST(1.0 AS DOUBLE) / nn.n * {m}.0 + 0.5) / {m}.0
                    AS rank
           FROM nodes CROSS JOIN nn
-        )""".format(m=10**round_scale),
+        )""".format(m=10**ROUND_SCALE),
     ]
     tele = 1.0 - damping
     for i in range(iterations):
@@ -145,7 +146,7 @@ def pagerank_oracle_sql(
           CROSS JOIN nn
         )""".format(
                 i=i, j=i + 1, d=repr(damping), t=repr(tele),
-                m=10**round_scale,
+                m=10**ROUND_SCALE,
             )
         )
     return (

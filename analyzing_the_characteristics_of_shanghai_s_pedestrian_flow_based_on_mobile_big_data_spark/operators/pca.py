@@ -38,6 +38,10 @@ from pyspark.sql import functions as F
 
 _DEC = "decimal(38,12)"
 
+#: The direction is floor-rounded at this many decimals each round —
+#: by power_iteration_top_pc and by its DuckDB twin alike.
+ROUND_SCALE = 9
+
 
 def _floor_round(x: float, scale: float) -> float:
     import math
@@ -50,13 +54,12 @@ def power_iteration_top_pc(
     dim: int,
     iterations: int = 3,
     vec_col: str = "vec",
-    round_scale: int = 9,
 ) -> list[float]:
     """Return the (max-abs-normalized, 9-dp-rounded) dominant Gram
     direction after ``iterations`` rounds, v⁰ = e₁."""
     emb = emb.localCheckpoint(eager=False)
     v = [1.0] + [0.0] * (dim - 1)
-    scale = float(10**round_scale)  # mirrors the oracle's literal
+    scale = float(10**ROUND_SCALE)
     for _ in range(iterations):
         arr = "array(" + ", ".join(f"{float(c)!r}D" for c in v) + ")"
         dot = (
@@ -97,7 +100,7 @@ def power_iteration_top_pc(
 
 
 def pca_oracle_sql(
-    emb_cte: str, dim: int, iterations: int = 3, round_scale: int = 9
+    emb_cte: str, dim: int, iterations: int = 3
 ) -> str:
     """Unrolled DuckDB twin: ``emb_cte`` must define ``e(vec_id, emb
     DOUBLE[])``. Each round is one matvec aggregate + a max-abs
@@ -141,8 +144,8 @@ def pca_oracle_sql(
         ),
         v{r} AS MATERIALIZED (
           SELECT w.j,
-                 floor(w.s / p.a * {10**round_scale}.0 + 0.5)
-                 / {10**round_scale}.0 AS c
+                 floor(w.s / p.a * {10**ROUND_SCALE}.0 + 0.5)
+                 / {10**ROUND_SCALE}.0 AS c
           FROM w{r} w CROSS JOIN p{r} p
         )"""
         )

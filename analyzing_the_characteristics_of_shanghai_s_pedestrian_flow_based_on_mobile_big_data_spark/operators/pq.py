@@ -335,14 +335,12 @@ def pq_topk(
     m: int = 8,
     ksub: int = 16,
     dim: int = 64,
-    encoded: DataFrame | None = None,
 ) -> DataFrame:
-    """Brute-force ADC top-k: every corpus vector scored from its m
-    codes against the broadcast query LUTs — the PQ baseline the IVF
-    composition prunes. Pass ``encoded`` (a materialized
-    :func:`pq_encode` table) to serve from the prebuilt index; the
-    corpus side never shuffles either way (scan → broadcast probe →
-    rank≤k window)."""
+    """Brute-force ADC top-k: every corpus vector encoded
+    (:func:`pq_encode`) and scored from its m codes against the
+    broadcast query LUTs — the PQ baseline the IVF composition prunes.
+    The corpus side never shuffles (scan → broadcast probe → rank≤k
+    window)."""
     if codebooks is None:
         codebooks = pq_codebooks(emb, m, ksub, dim)
     if not codebooks:
@@ -351,10 +349,8 @@ def pq_topk(
         # ivf_topk guard pattern)
         return _empty_topk(emb)
     ksub = len(codebooks[0])
-    if encoded is None:
-        encoded = pq_encode(emb, codebooks)
     pairs = (
-        encoded.crossJoin(F.broadcast(_q_side(queries, codebooks)))
+        pq_encode(emb, codebooks).crossJoin(F.broadcast(_q_side(queries, codebooks)))
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("cos_r", _adc_cos_expr(ksub, len(codebooks)))
     )

@@ -33,12 +33,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+#: Numeric means are floor-rounded at this many decimals — the
+#: data_quality_profile oracle twin reads the same constant.
+MEAN_ROUND = 6
+
+
 def profile_table(
     df: DataFrame,
     completeness_cols: Sequence[str],
     distinct_cols: Sequence[str] = (),
     numeric_cols: Sequence[str] = (),
-    mean_round: int = 6,
 ) -> DataFrame:
     """Profile ``df`` into a long-form quality-metrics table.
 
@@ -48,7 +52,7 @@ def profile_table(
     - ``completeness`` — non-null fraction, for ``completeness_cols``;
     - ``n_distinct`` — exact distinct count, for ``distinct_cols``;
     - ``min`` / ``max`` / ``mean`` — for ``numeric_cols`` (mean via
-      DECIMAL(28,6) sum, rounded to ``mean_round`` decimals);
+      DECIMAL(28,6) sum, rounded to :data:`MEAN_ROUND` decimals);
     - ``n_rows`` — table row count, once, under col_name ``*``.
 
     Ratios divide two exact BIGINTs in one IEEE division, so every
@@ -102,10 +106,10 @@ def profile_table(
                         F.col(f"__cnt_{c}") > 0,
                         F.col(f"__cnt_{c}").cast("double"),
                     )
-                    * float(10**mean_round)
+                    * float(10**MEAN_ROUND)
                     + 0.5
                 )
-                / float(10**mean_round),
+                / float(10**MEAN_ROUND),
             )
         )
     exploded = wide.select(

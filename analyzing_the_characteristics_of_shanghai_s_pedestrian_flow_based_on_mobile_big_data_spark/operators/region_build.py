@@ -40,7 +40,6 @@ def mint_dense_ids(
     anchor_cols: Sequence[str],
     id_col: str = "agent_id",
     large: bool = False,
-    range_partitions: int | None = None,
 ) -> DataFrame:
     """Dense 1-based surrogate ids over the anchor-key order, attached
     to every input row.
@@ -53,8 +52,8 @@ def mint_dense_ids(
     ``large=True`` (two-phase, no single-partition stage anywhere):
 
     1. distinct anchor keys, ``repartitionByRange`` on the anchor
-       order — partition *i* holds keys strictly below partition
-       *i+1*'s;
+       order into defaultParallelism partitions — partition *i* holds
+       keys strictly below partition *i+1*'s;
     2. parallel per-partition local ``row_number`` (window keyed on
        ``spark_partition_id`` — distinct keys make row_number a dense
        rank);
@@ -73,7 +72,7 @@ def mint_dense_ids(
         w = Window.orderBy(*anchors)
         return dim.withColumn(id_col, F.dense_rank().over(w))
     spark = dim.sparkSession
-    nparts = range_partitions or spark.sparkContext.defaultParallelism
+    nparts = spark.sparkContext.defaultParallelism
     keyed = (
         dim.select(*anchors)
         .distinct()
@@ -116,21 +115,19 @@ def build_region_dim(
     lon_col: str = "longitude",
     precisions: Sequence[int] = (5, 6, 7, 8),
     anchor_precision: int = 5,
-    large_dim: bool | None = None,
 ) -> DataFrame:
     """POI table → region dimension with geohash columns and a dense
     1-based ``agent_id`` keyed on the anchor-precision geohash
     (region.py:42-53).
 
-    ``large_dim`` routes id minting through the two-phase path (no
-    single-partition window anywhere — use for fine-grained dims:
-    5081+ subareas, grid cells). Default ``None`` picks automatically:
-    one ``count()`` on the POI input (a dimension-sized job, dwarfed
-    by the build itself) against :data:`LARGE_DIM_THRESHOLD`. The two
-    paths mint identical ids (pytest-pinned), so the switch is purely
-    a physical-plan decision."""
-    if large_dim is None:
-        large_dim = poi.count() > LARGE_DIM_THRESHOLD
+    One ``count()`` on the POI input (a dimension-sized job, dwarfed
+    by the build itself) against :data:`LARGE_DIM_THRESHOLD` routes id
+    minting: above it through the two-phase path (no single-partition
+    window anywhere — fine-grained dims: 5081+ subareas, grid cells),
+    else through the global window. The two paths mint identical ids
+    (pytest-pinned), so the switch is purely a physical-plan
+    decision."""
+    large_dim = poi.count() > LARGE_DIM_THRESHOLD
     out = poi
     for p in precisions:
         out = out.withColumn(

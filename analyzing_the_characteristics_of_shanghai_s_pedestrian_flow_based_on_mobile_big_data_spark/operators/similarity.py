@@ -78,23 +78,28 @@ def sign_bucket(emb_col, nbits: int = 4):
     return bit
 
 
-def adaptive_nbits(
-    n_rows: int,
-    target_bucket_size: int = 16,
-    min_bits: int = 4,
-    max_bits: int = 24,
-) -> int:
+#: adaptive_nbits' clamp. The ann oracle twins' ``nbits_sql`` reads
+#: the same bounds, so the two engines bucket alike.
+MIN_BITS = 4
+MAX_BITS = 24  # must stay ≤ the embedding dimension
+
+
+def adaptive_nbits(n_rows: int, target_bucket_size: int = 16) -> int:
     """Bucket-count policy: nbits ≈ log2(N / target_bucket_size), so the
     expected in-bucket candidate set stays ~constant as the corpus
     grows — a FIXED nbits makes the bucket self-join ~N²/2^nbits,
-    quadratic at scale. Clamped to [min_bits, max_bits] (max_bits must
-    stay ≤ embedding dim). At 100 TB pass the catalog row count instead
-    of running a count job."""
+    quadratic at scale. Clamped to [MIN_BITS, MAX_BITS]. The one
+    decision point of the sign-bucket operators: banded_ann_topk,
+    bucketed_ann_topk and embedding_near_dup_pairs all size their
+    buckets here."""
     import math
 
     if n_rows <= target_bucket_size:
-        return min_bits
-    return max(min_bits, min(max_bits, math.ceil(math.log2(n_rows / target_bucket_size))))
+        return MIN_BITS
+    return max(
+        MIN_BITS,
+        min(MAX_BITS, math.ceil(math.log2(n_rows / target_bucket_size))),
+    )
 
 
 def probe_buckets(bucket_col, nbits: int, multi_probe: int = 1):
@@ -129,9 +134,7 @@ def banded_ann_topk(
     queries: DataFrame,
     k: int = 3,
     n_tables: int = 4,
-    nbits: int | None = None,
     dim: int | None = None,
-    target_bucket_size: int = 16,
 ) -> DataFrame:
     """OR-amplified LSH: ``n_tables`` independent hash tables, each a
     sign bucket over a disjoint dimension slice; a corpus vector is a
@@ -140,9 +143,10 @@ def banded_ann_topk(
     classic AND-OR construction, complementary to Hamming multi-probe
     (which probes near buckets of ONE table). Duplicate candidates
     (pairs agreeing in several tables) are deduped by a (query, vec)
-    aggregate on scalar triples, never on array payloads."""
-    if nbits is None:
-        nbits = adaptive_nbits(emb.count(), target_bucket_size)
+    aggregate on scalar triples, never on array payloads. The bucket
+    width comes from :func:`adaptive_nbits`, capped at
+    ``dim // n_tables`` when ``dim`` is known."""
+    nbits = adaptive_nbits(emb.count())
     if dim is not None:
         nbits = max(1, min(nbits, dim // n_tables))
 
@@ -185,21 +189,18 @@ def bucketed_ann_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    nbits: int | None = None,
     dim: int | None = None,
     multi_probe: int = 1,
-    target_bucket_size: int = 16,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's sign
     bucket plus its Hamming-1 probe buckets. Equi-join on bucket id →
     the corpus shuffles once on a small int key (or broadcasts the
     queries); at 1000 executors each bucket's candidates stay
-    co-located. ``nbits=None`` derives the bucket count from the corpus
-    size (``adaptive_nbits``), keeping candidate sets ~constant-size as
+    co-located. The bucket count derives from the corpus size
+    (:func:`adaptive_nbits`), keeping candidate sets ~constant-size as
     the corpus grows; the probe expansion happens on the (small,
     broadcast) query side only."""
-    if nbits is None:
-        nbits = adaptive_nbits(emb.count(), target_bucket_size)
+    nbits = adaptive_nbits(emb.count())
     c = emb.select(
         "vec_id",
         as_double_array(F.col("embedding")).alias("c_emb"),
@@ -229,8 +230,6 @@ def bucketed_ann_topk(
 def embedding_near_dup_pairs(
     emb: DataFrame,
     threshold: float = 0.9,
-    nbits: int | None = None,
-    target_bucket_size: int = 16,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs, sign-bucket blocked with a
     size-adaptive bucket count (a fixed nbits makes the bucket
@@ -242,8 +241,7 @@ def embedding_near_dup_pairs(
     near-duplicate text embeddings; an isotropic random corpus (the
     synthetic test data) tops out near sqrt(2·ln(n_pairs)/dim), so
     tests use a lower cut to keep the gate non-vacuous."""
-    if nbits is None:
-        nbits = adaptive_nbits(emb.count(), target_bucket_size)
+    nbits = adaptive_nbits(emb.count())
     e = emb.select(
         "vec_id", as_double_array(F.col("embedding")).alias("emb")
     ).withColumn("bucket", sign_bucket(F.col("emb"), nbits))
@@ -901,9 +899,7 @@ def set_similarity_join(
     item_col: str,
     threshold_num: int,
     threshold_den: int,
-    prefix_filter: bool = True,
     dense_bitmap_domain: int | None = None,
-    collapse_identical: bool = True,
 ) -> DataFrame:
     """Exact Jaccard set-similarity self-join: all key pairs whose
     item sets satisfy ``den·|∩| ≥ num·|∪|`` (i.e. J ≥ num/den, held in
@@ -913,9 +909,10 @@ def set_similarity_join(
 
     Returns (key_a, key_b, n_shared, sz_a, sz_b) with key_a < key_b.
 
-    ``prefix_filter=True`` is the 100 TB path — the df-ranked
-    prefix-filter lemma proven for documents in dedup.py:122, applied
-    to any (key, item) set table:
+    Without ``dense_bitmap_domain`` it takes the 100 TB path — the
+    df-ranked prefix-filter lemma proven for documents in
+    dedup.py:ngram_jaccard_pairs, applied to any (key, item) set
+    table:
 
     * rank each key's items by global document frequency asc
       (tie: item asc — a shared total order);
@@ -946,8 +943,9 @@ def set_similarity_join(
     * verification joins the per-key sorted item arrays (built on the
       same key partitioning) and takes ``size(array_intersect)`` —
       exact, so the prefix filter is purely a physical-plan choice:
-      both paths produce identical pair sets (pytest-pinned in
-      tests/test_similarity.py).
+      it produces the pair set of the independent Python model
+      (pytest-pinned in tests/test_similarity.py and
+      tests/test_setsim_property.py).
 
     Hot items (a popular cell / a stopword shingle) have maximal df,
     so they sort to every key's *suffix* and never become join keys —
@@ -960,11 +958,6 @@ def set_similarity_join(
     vs 17 s for a broadcast nested-loop cross-join at sf0.1), and the
     LSH family (minhash_lsh_pairs) is the approximation measured
     against this operator's exact output.
-
-    ``prefix_filter=False`` keeps the single-join formulation (one
-    inverted-index self-join counting shared items directly): fewer
-    stages, right for small/skew-free set tables, quadratic on hot
-    items.
 
     ``dense_bitmap_domain=D`` selects the DENSE-regime path (exact;
     requires every non-NULL item to be a long in [0, D)): each key's
@@ -980,7 +973,9 @@ def set_similarity_join(
     table is broadcastable (≤ ~10M keys × D/8 bytes); past that, a
     dense workload's exact output is itself quadratic — the LSH
     family is the 100 TB answer, measured against this operator's
-    exact semantics at sampled scale. Since round 7 that handoff is
+    exact semantics at sampled scale. Identical sets are collapsed to
+    one representative before the pair loop and expanded after it
+    (the same quotient as the LSH path). Since round 7 that handoff is
     AUTOMATIC: :func:`set_similarity_join_auto` estimates the
     candidate bound from cheap df statistics and routes to
     :func:`set_similarity_join_lsh` (sub-quadratic candidates, exact
@@ -1017,18 +1012,13 @@ def set_similarity_join(
             )
             .drop("arr")
         )
-        if collapse_identical:
-            # quotient by set equality BEFORE the U² pair loop — the
-            # same collapse as the LSH path (docstring there): the
-            # bitmap + sz IS a canonical encoding of the set (distinct
-            # items in the words, NULL count in sz − bit count), so
-            # the shared digest applies directly
-            bm = _with_set_digest(bm, "bm")
-        bm = bm.localCheckpoint(eager=True)
-        if collapse_identical:
-            grp, work = _identical_set_groups(bm)
-        else:
-            work = bm
+        # quotient by set equality BEFORE the U² pair loop — the same
+        # collapse as the LSH path (docstring there): the bitmap + sz
+        # IS a canonical encoding of the set (distinct items in the
+        # words, NULL count in sz − bit count), so the shared digest
+        # applies directly
+        bm = _with_set_digest(bm, "bm").localCheckpoint(eager=True)
+        grp, work = _identical_set_groups(bm)
         # the checkpointed key table is tiny — AQE would coalesce it
         # to one partition and serialize the nested-loop join;
         # repartition restores task parallelism on the streamed side
@@ -1061,126 +1051,97 @@ def set_similarity_join(
             )
             .select("key_a", "key_b", "n_shared", "sz_a", "sz_b")
         )
-        if collapse_identical:
-            union_d = F.col("sz_a") + F.col("sz_b") - F.col("n_shared")
-            qual = common.filter(
-                F.lit(den) * F.col("n_shared") >= F.lit(num) * union_d
-            )
-            self_groups = _qualifying_self_groups(
-                work,
-                grp,
-                F.expr(
-                    "aggregate(transform(bm, x -> "
-                    "bigint(bit_count(x))), 0L, (acc, v) -> acc + v)"
-                ),
-                num,
-                den,
-            )
-            return _expand_identical_groups(
-                qual, bm.select("__pdig", "key"), grp, self_groups
-            )
-    elif prefix_filter:
-        # df via pre-aggregated join (combine-heavy shuffle of counts,
-        # not rows; AQE broadcasts the small side). Left join keeps
-        # NULL-item rows (df never read for them past the rank).
-        item_df = base.groupBy("item").agg(F.count("*").alias("df"))
-        aug = (
-            base.join(item_df, "item", "left")
-            .withColumn("sz", F.count("*").over(Window.partitionBy("key")))
-            .withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("key").orderBy("df", "item")
-                ),
-            )
-            .localCheckpoint(eager=True)
+        union_d = F.col("sz_a") + F.col("sz_b") - F.col("n_shared")
+        qual = common.filter(
+            F.lit(den) * F.col("n_shared") >= F.lit(num) * union_d
         )
-        # exact integer ⌈num·sz/den⌉, then prefix len = sz − ceil + 1
-        ceil_ts = F.floor(
-            (F.lit(num) * F.col("sz") + F.lit(den - 1)) / F.lit(den)
-        ).cast("long")
-        prefix = aug.filter(
-            F.col("rk") <= F.col("sz") - ceil_ts + F.lit(1)
-        ).select("key", "item", "sz")
-        size_ok = (
-            F.lit(den) * F.least(F.col("a.sz"), F.col("b.sz"))
-            >= F.lit(num) * F.greatest(F.col("a.sz"), F.col("b.sz"))
+        self_groups = _qualifying_self_groups(
+            work,
+            grp,
+            F.expr(
+                "aggregate(transform(bm, x -> "
+                "bigint(bit_count(x))), 0L, (acc, v) -> acc + v)"
+            ),
+            num,
+            den,
         )
-        # PPJoin's positional filter was tried here and measured
-        # SLOWER at sf0.1 (6.9 s vs 4.7 s): the per-row rank algebra
-        # on 11.7M joined rows costs more than the pruned rows save.
-        cand = (
-            prefix.alias("a")
-            .join(
-                prefix.alias("b"),
-                (F.col("a.item") == F.col("b.item"))
-                & (F.col("a.key") < F.col("b.key"))
-                & size_ok,
-            )
-            .select(
-                F.col("a.key").alias("key_a"),
-                F.col("b.key").alias("key_b"),
-            )
-            .distinct()
+        return _expand_identical_groups(
+            qual, bm.select("__pdig", "key"), grp, self_groups
         )
-        # collect_list drops NULL items (they can never intersect);
-        # sz still counts them, matching the unfiltered path.
-        key_sets = aug.groupBy("key").agg(
-            F.sort_array(F.collect_list("item")).alias("arr"),
-            F.max("sz").alias("sz"),
+    # df via pre-aggregated join (combine-heavy shuffle of counts,
+    # not rows; AQE broadcasts the small side). Left join keeps
+    # NULL-item rows (df never read for them past the rank).
+    item_df = base.groupBy("item").agg(F.count("*").alias("df"))
+    aug = (
+        base.join(item_df, "item", "left")
+        .withColumn("sz", F.count("*").over(Window.partitionBy("key")))
+        .withColumn(
+            "rk",
+            F.row_number().over(
+                Window.partitionBy("key").orderBy("df", "item")
+            ),
         )
-        common = (
-            cand.join(
-                key_sets.select(
-                    F.col("key").alias("key_a"),
-                    F.col("arr").alias("arr_a"),
-                    F.col("sz").alias("sz_a"),
-                ),
-                "key_a",
-            )
-            .join(
-                key_sets.select(
-                    F.col("key").alias("key_b"),
-                    F.col("arr").alias("arr_b"),
-                    F.col("sz").alias("sz_b"),
-                ),
-                "key_b",
-            )
-            .select(
-                "key_a",
-                "key_b",
-                F.size(F.array_intersect("arr_a", "arr_b")).alias("n_shared"),
-                "sz_a",
-                "sz_b",
-            )
+        .localCheckpoint(eager=True)
+    )
+    # exact integer ⌈num·sz/den⌉, then prefix len = sz − ceil + 1
+    ceil_ts = F.floor(
+        (F.lit(num) * F.col("sz") + F.lit(den - 1)) / F.lit(den)
+    ).cast("long")
+    prefix = aug.filter(
+        F.col("rk") <= F.col("sz") - ceil_ts + F.lit(1)
+    ).select("key", "item", "sz")
+    size_ok = (
+        F.lit(den) * F.least(F.col("a.sz"), F.col("b.sz"))
+        >= F.lit(num) * F.greatest(F.col("a.sz"), F.col("b.sz"))
+    )
+    # PPJoin's positional filter was tried here and measured
+    # SLOWER at sf0.1 (6.9 s vs 4.7 s): the per-row rank algebra
+    # on 11.7M joined rows costs more than the pruned rows save.
+    cand = (
+        prefix.alias("a")
+        .join(
+            prefix.alias("b"),
+            (F.col("a.item") == F.col("b.item"))
+            & (F.col("a.key") < F.col("b.key"))
+            & size_ok,
         )
-    else:
-        aug = base.withColumn(
-            "sz", F.count("*").over(Window.partitionBy("key"))
-        ).localCheckpoint(eager=True)
-        # distinct BEFORE the self-join: n_shared is |∩| under SET
-        # semantics (array_intersect's contract, matching the other
-        # paths) — joining raw rows would count a duplicated
-        # (key, item) row once per copy (caught by the round-7
-        # property suite on multiset inputs); sz keeps counting ALL
-        # rows, NULLs and duplicates included, as everywhere else
-        joinable = aug.distinct()
-        common = (
-            joinable.alias("a")
-            .join(
-                joinable.alias("b"),
-                (F.col("a.item") == F.col("b.item"))
-                & (F.col("a.key") < F.col("b.key")),
-            )
-            .groupBy(
-                F.col("a.key").alias("key_a"),
-                F.col("b.key").alias("key_b"),
-                F.col("a.sz").alias("sz_a"),
-                F.col("b.sz").alias("sz_b"),
-            )
-            .agg(F.count("*").alias("n_shared"))
-            .select("key_a", "key_b", "n_shared", "sz_a", "sz_b")
+        .select(
+            F.col("a.key").alias("key_a"),
+            F.col("b.key").alias("key_b"),
         )
+        .distinct()
+    )
+    # collect_list drops NULL items (they can never intersect);
+    # sz still counts them, matching the bitmap path.
+    key_sets = aug.groupBy("key").agg(
+        F.sort_array(F.collect_list("item")).alias("arr"),
+        F.max("sz").alias("sz"),
+    )
+    common = (
+        cand.join(
+            key_sets.select(
+                F.col("key").alias("key_a"),
+                F.col("arr").alias("arr_a"),
+                F.col("sz").alias("sz_a"),
+            ),
+            "key_a",
+        )
+        .join(
+            key_sets.select(
+                F.col("key").alias("key_b"),
+                F.col("arr").alias("arr_b"),
+                F.col("sz").alias("sz_b"),
+            ),
+            "key_b",
+        )
+        .select(
+            "key_a",
+            "key_b",
+            F.size(F.array_intersect("arr_a", "arr_b")).alias("n_shared"),
+            "sz_a",
+            "sz_b",
+        )
+    )
     union_sz = F.col("sz_a") + F.col("sz_b") - F.col("n_shared")
     return common.filter(
         F.lit(den) * F.col("n_shared") >= F.lit(num) * union_sz
@@ -1204,10 +1165,10 @@ def set_similarity_stats(
       candidate rows;
     - ``max_df``: the hottest item's key count (the m² blowup knob).
 
-    At 100 TB feed these from catalog/NDV statistics instead of agg
-    jobs (:func:`set_similarity_stats_from_catalog` — zero data jobs,
-    pytest-pinned); the decision rule only needs orders of
-    magnitude."""
+    A caller that already knows these (at 100 TB: from catalog NDV
+    statistics) passes them to :func:`set_similarity_join_auto` as
+    ``stats=`` and no stats job runs; the decision rule only needs
+    orders of magnitude."""
     k, it = F.col(key_col), F.col(item_col)
     base = sets.select(k.alias("key"), it.alias("item"))
     r1 = base.agg(
@@ -1235,73 +1196,17 @@ def set_similarity_stats(
     }
 
 
-def set_similarity_stats_from_catalog(
-    spark, table: str, key_col: str, item_col: str
-) -> dict:
-    """Router stats from ANALYZE TABLE catalog statistics — ZERO data
-    jobs (VERDICT r7 #4: at 100 TB the two full-table agg jobs of
-    :func:`set_similarity_stats` are not free). Requires the table to
-    have been analyzed::
-
-        ANALYZE TABLE t COMPUTE STATISTICS
-        ANALYZE TABLE t COMPUTE STATISTICS FOR COLUMNS key, item
-
-    Reads rowCount and per-column NDV/null counts from DESCRIBE
-    EXTENDED — metadata-only commands that never scan data — and
-    models document frequency as UNIFORM over the item NDV:
-    df̄ = non-null rows / NDV(item), cand_pairs ≈ NDV·C(df̄,2). By
-    convexity of C(x,2), the uniform model is the MINIMUM of
-    Σ C(df,2) under a fixed row total — an under-estimate on skewed
-    corpora, which only errs toward the exact path; a workload dense
-    ON AVERAGE (the regime where exact candidate volume is Ω(U²))
-    crosses the budget under any df shape, so the router's
-    order-of-magnitude decision is preserved. ``max_df`` is reported
-    as ⌈df̄⌉ (the model's value; the routing rule never reads it).
-    Raises ``ValueError`` naming the missing statistic if the table
-    was not analyzed — never silently guesses."""
-    t_rows = spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect()
-    n_rows = None
-    for r in t_rows:
-        if r.col_name == "Statistics" and "rows" in (r.data_type or ""):
-            # format: "NNN bytes, MMM rows"
-            n_rows = int(r.data_type.split(",")[1].strip().split(" ")[0])
-    if n_rows is None:
-        raise ValueError(
-            f"no rowCount statistic for {table}: run ANALYZE TABLE "
-            f"{table} COMPUTE STATISTICS first"
-        )
-
-    def col_stats(col: str) -> dict:
-        rows = spark.sql(
-            f"DESCRIBE TABLE EXTENDED {table} {col}"
-        ).collect()
-        info = {r.info_name: r.info_value for r in rows}
-        if info.get("distinct_count") in (None, "NULL"):
-            raise ValueError(
-                f"no NDV statistic for {table}.{col}: run ANALYZE TABLE "
-                f"{table} COMPUTE STATISTICS FOR COLUMNS {col} first"
-            )
-        return {
-            "ndv": int(info["distinct_count"]),
-            "nulls": int(info.get("num_nulls") or 0),
-        }
-
-    key_s, item_s = col_stats(key_col), col_stats(item_col)
-    nonnull = max(0, n_rows - item_s["nulls"])
-    ndv_item = max(1, item_s["ndv"])
-    df_bar = nonnull / ndv_item
-    return {
-        "n_rows": n_rows,
-        "n_keys": max(1, key_s["ndv"]),
-        "cand_pairs": ndv_item * df_bar * (df_bar - 1.0) / 2.0,
-        "max_df": int(-(-df_bar // 1)),
-    }
+#: The exact→LSH handoff: above this many candidate partners per key
+#: (over at least MIN_LSH_KEYS keys) the set-similarity routers leave
+#: the exact join.
+PAIRS_PER_KEY_BUDGET = 64
+MIN_LSH_KEYS = 4096
 
 
 def choose_set_similarity_path(
     stats: dict,
-    pairs_per_key_budget: int = 64,
-    min_lsh_keys: int = 4096,
+    pairs_per_key_budget: int = PAIRS_PER_KEY_BUDGET,
+    min_lsh_keys: int = MIN_LSH_KEYS,
 ) -> str:
     """Route ``set_similarity_join_auto`` from :func:`set_similarity_stats`
     output: ``"exact"`` or ``"lsh"``.
@@ -1670,16 +1575,17 @@ def lsh_collision_probability(
     return 1.0 - (1.0 - j**r) ** bands
 
 
+#: Signature-width cap of the recall-contract banding.
+LSH_MAX_K = 64
+
 def choose_lsh_params(
     threshold_num: int,
     threshold_den: int,
     target_recall: float,
-    margin: float = 0.0,
-    max_k: int = 64,
 ) -> tuple[int, int]:
     """(k, bands) meeting an explicit recall CONTRACT: P(collide) ≥
-    ``target_recall`` at J = threshold·(1+margin), with ROWS-PER-BAND
-    MAXIMIZED under the ``max_k`` signature-width cap.
+    ``target_recall`` at J = threshold, with ROWS-PER-BAND MAXIMIZED
+    under the :data:`LSH_MAX_K` signature-width cap.
 
     The objective is candidate PRUNING, not minimal signature cost
     (round-9 ADVICE — the docstring previously claimed "smallest
@@ -1693,8 +1599,6 @@ def choose_lsh_params(
     7 bands) reaches P≈0.918 — with r=1 every pair sharing ANY single
     minhash collides, so the candidate set balloons with
     low-similarity pairs that exact verification must then discard.
-    Callers that want the cheapest signature meeting the target can
-    pass a small ``max_k``.
 
     Why this shape: :func:`choose_lsh_bands` pins the S-curve MIDPOINT
     at the threshold, so measured recall at the boundary is ~0.5 by
@@ -1702,13 +1606,11 @@ def choose_lsh_params(
     engineering, silent answer-quality change. This selector inverts
     the curve instead: for each rows-per-band r (descending), the band
     count needed is b = ⌈ln(1−target) / ln(1−t'^r)⌉, and the first
-    (i.e. largest) r whose r·b fits ``max_k`` wins. Since P is
-    monotone increasing in J, meeting the target at
-    t' = threshold·(1+margin) meets it for EVERY pair at J ≥ t'; with
-    margin=0 (default) the guarantee holds at the threshold itself,
-    i.e. for every qualifying pair. Falls back to the best-effort
-    (1, max_k) banding when even r=1 cannot reach the target within
-    the cap — the caller reads the achieved probability from
+    (i.e. largest) r whose r·b fits :data:`LSH_MAX_K` wins. Since P is
+    monotone increasing in J, meeting the target at the threshold
+    meets it for EVERY qualifying pair. Falls back to the best-effort
+    (1, LSH_MAX_K) banding when even r=1 cannot reach the target
+    within the cap — the caller reads the achieved probability from
     ``__setsim_meta__`` (never a silent shortfall).
 
     Signature cost is k min-md5 aggregates per key — linear in k, so
@@ -1719,20 +1621,19 @@ def choose_lsh_params(
     if not 0.0 < target_recall < 1.0:
         raise ValueError(f"target_recall must be in (0,1): {target_recall}")
     t = threshold_num / threshold_den
-    t_g = min(1.0, t * (1.0 + margin))
-    if t_g >= 1.0:
+    if t >= 1.0:
         return 1, 1  # J=1 guarantee point: identical sets always collide
     best = None
-    for r in range(max_k, 0, -1):
-        p1 = t_g**r  # per-band collision probability at the guarantee point
+    for r in range(LSH_MAX_K, 0, -1):
+        p1 = t**r  # per-band collision probability at the threshold
         if 1.0 - p1 >= 1.0:
             continue  # p1 underflowed: no feasible band count at this r
         needed = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p1))
-        if r * needed <= max_k:
+        if r * needed <= LSH_MAX_K:
             best = (r, needed)
             break
     if best is None:
-        best = (1, max_k)  # best effort; meta reports the achieved P
+        best = (1, LSH_MAX_K)  # best effort; meta reports the achieved P
     r, b = best
     return r * b, b
 
@@ -1743,52 +1644,46 @@ def set_similarity_join_auto(
     item_col: str,
     threshold_num: int,
     threshold_den: int,
-    pairs_per_key_budget: int = 64,
-    min_lsh_keys: int = 4096,
-    dense_bitmap_domain: int | None = None,
-    lsh_k: int = 16,
-    lsh_bands: int | None = None,
+    pairs_per_key_budget: int = PAIRS_PER_KEY_BUDGET,
+    min_lsh_keys: int = MIN_LSH_KEYS,
     stats: dict | None = None,
     target_recall: float | None = None,
-    recall_margin: float = 0.0,
-    lsh_max_k: int = 64,
 ) -> DataFrame:
     """Cost-routed set-similarity join — the round-6 probe's measured
     dense-regime Ω(U²) bound (SCALE.md setsim: 4× users → 16.04×
     qualifying pairs) encoded as an automatic handoff instead of a
     docstring a user has to read. Estimates the candidate-pair bound
-    from cheap df statistics (:func:`set_similarity_stats`) and routes:
+    from cheap df statistics (:func:`set_similarity_stats`) and routes
+    through :func:`choose_set_similarity_path`:
 
-    - sparse regime → :func:`set_similarity_join` (exact; the
-      dense-bitmap variant when ``dense_bitmap_domain`` is given,
-      else the df-ranked prefix filter) — output EQUAL to the exact
-      join by construction;
+    - sparse regime → :func:`set_similarity_join` (exact, the
+      df-ranked prefix filter) — output EQUAL to the exact join by
+      construction;
     - dense regime (candidate bound > ``pairs_per_key_budget``
       partners/key over ≥ ``min_lsh_keys`` keys) →
       :func:`set_similarity_join_lsh` — sub-quadratic candidate
       generation, exact verification, output ⊆ the exact pair set.
 
-    Pass precomputed ``stats`` (e.g. from catalog NDVs via
-    :func:`set_similarity_stats_from_catalog` at 100 TB) to skip the
-    two scalar agg jobs — the caller's dict is never mutated. The
-    chosen path is recorded on the returned DataFrame's
-    ``.__setsim_path__`` attribute (plan-pinning tests read it), and
-    the full routing decision — path, banding, and the recall contract
-    when LSH is chosen — on ``.__setsim_meta__``.
+    Pass precomputed ``stats`` (the :func:`set_similarity_stats` dict
+    shape — at 100 TB from catalog NDVs) to skip the two scalar agg
+    jobs — the caller's dict is never mutated. The chosen path is
+    recorded on the returned DataFrame's ``.__setsim_path__``
+    attribute (plan-pinning tests read it), and the full routing
+    decision — path, banding, and the recall contract when LSH is
+    chosen — on ``.__setsim_meta__``.
 
     **Recall contract** (round 8): by default the LSH route uses the
-    midpoint banding (``choose_lsh_bands``) — measured recall ~0.5 AT
-    the threshold boundary, the S-curve midpoint by construction. Pass
-    ``target_recall`` (e.g. 0.8 or 0.95) to instead size the signature
-    via :func:`choose_lsh_params` so P(candidate) ≥ target for EVERY
-    pair at J ≥ threshold·(1+``recall_margin``) — with the default
-    margin 0, for every qualifying pair. The achieved probability, the
-    banding, and its cost (k grows with the target) are surfaced in
-    ``__setsim_meta__['expected_recall_at_threshold']`` etc., so a
+    midpoint banding over 16 hashes (``choose_lsh_bands``) — measured
+    recall ~0.5 AT the threshold boundary, the S-curve midpoint by
+    construction. Pass ``target_recall`` (e.g. 0.8 or 0.95) to instead
+    size the signature via :func:`choose_lsh_params` so P(candidate) ≥
+    target for EVERY pair at J ≥ threshold. The achieved probability,
+    the banding, and its cost (k grows with the target) are surfaced
+    in ``__setsim_meta__['expected_recall_at_threshold']`` etc., so a
     caller crossing the exact→LSH budget can SEE the semantics change
-    instead of inferring it from missing pairs. ``lsh_max_k`` caps the
-    signature width; an unreachable target degrades to best-effort
-    with the shortfall visible in the meta, never silently."""
+    instead of inferring it from missing pairs. An unreachable target
+    degrades to best-effort at :data:`LSH_MAX_K` with the shortfall
+    visible in the meta, never silently."""
     if not 1 <= int(threshold_num) <= int(threshold_den):
         raise ValueError(
             "set-similarity threshold must satisfy 1 <= num <= den: "
@@ -1806,55 +1701,41 @@ def set_similarity_join_auto(
     if path == "lsh":
         if target_recall is not None:
             # explicit recall contract: invert the S-curve so
-            # P(collide) >= target at J = threshold·(1+margin) — see
-            # choose_lsh_params; overrides lsh_k/lsh_bands
-            lsh_k, lsh_bands = choose_lsh_params(
-                threshold_num,
-                threshold_den,
-                target_recall,
-                recall_margin,
-                max_k=lsh_max_k,
+            # P(collide) >= target at J = threshold — see
+            # choose_lsh_params
+            k, bands = choose_lsh_params(
+                threshold_num, threshold_den, target_recall
             )
-        elif lsh_bands is None:
+        else:
             # banding matched to the threshold's S-curve midpoint —
             # a fixed 8×2 would be mis-tuned for high-threshold
             # (near-dup) workloads; see choose_lsh_bands
-            lsh_bands = choose_lsh_bands(threshold_num, threshold_den, lsh_k)
+            k = 16
+            bands = choose_lsh_bands(threshold_num, threshold_den, k)
         out = set_similarity_join_lsh(
             sets,
             key_col,
             item_col,
             threshold_num,
             threshold_den,
-            k=lsh_k,
-            bands=lsh_bands,
-            dense_bitmap_domain=dense_bitmap_domain,
+            k=k,
+            bands=bands,
         )
-        t_g = min(1.0, t * (1.0 + recall_margin))
         meta.update(
-            k=lsh_k,
-            bands=lsh_bands,
-            rows_per_band=lsh_k // lsh_bands,
+            k=k,
+            bands=bands,
+            rows_per_band=k // bands,
             target_recall=target_recall,
-            recall_margin=recall_margin,
             # family-average per-pair candidate probability; monotone
             # increasing in J, so the threshold value is the FLOOR over
-            # all qualifying pairs (margin>0: floor over J >= t_g only)
+            # all qualifying pairs
             expected_recall_at_threshold=round(
-                lsh_collision_probability(t, lsh_k, lsh_bands), 4
-            ),
-            expected_recall_at_guarantee=round(
-                lsh_collision_probability(t_g, lsh_k, lsh_bands), 4
+                lsh_collision_probability(t, k, bands), 4
             ),
         )
     else:
         out = set_similarity_join(
-            sets,
-            key_col,
-            item_col,
-            threshold_num,
-            threshold_den,
-            dense_bitmap_domain=dense_bitmap_domain,
+            sets, key_col, item_col, threshold_num, threshold_den
         )
         meta.update(expected_recall_at_threshold=1.0)
     out.__setsim_path__ = path

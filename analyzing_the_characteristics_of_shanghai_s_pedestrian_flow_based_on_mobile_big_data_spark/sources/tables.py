@@ -85,19 +85,17 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def fan_out_small_scan(
-    df: DataFrame, min_tasks: int | None = None
-) -> DataFrame:
+def fan_out_small_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition a scan that cannot yield enough input
     splits to occupy the cluster — the \"one huge unsplittable file\"
     remedy (input skew): a single small parquet file is ONE scan task,
     so every expression-heavy projection above it runs on one core
     while the rest idle. The gate is SCALE-ADAPTIVE, driven by the
     actual input bytes vs the session's split size: it fires only when
-    the file set provably produces fewer than half of ``min_tasks``
-    splits (default: the session's defaultParallelism), so at
-    production scale — where any real corpus is thousands of splits —
-    this is a no-op and the plan stays exchange-free. The round-robin
+    the file set provably produces fewer splits than half the
+    session's defaultParallelism, so at production scale — where any
+    real corpus is thousands of splits — this is a no-op and the plan
+    stays exchange-free. The round-robin
     exchange it inserts locally shuffles only the small scan's bytes,
     and Spark's sort-before-repartition (on by default) keeps the
     row-to-partition assignment deterministic under task retries.
@@ -108,8 +106,7 @@ def fan_out_small_scan(
     from urllib.parse import urlparse
 
     spark = df.sparkSession
-    if min_tasks is None:
-        min_tasks = spark.sparkContext.defaultParallelism
+    min_tasks = spark.sparkContext.defaultParallelism
     if min_tasks < 2:
         return df
     try:

@@ -22,3 +22,28 @@ def spark() -> SparkSession:
 
 def ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
+
+
+@pytest.fixture
+def setsim_handoff(monkeypatch):
+    """Move the exact→LSH handoff of choose_set_similarity_path — the
+    one decision point of the set-similarity and tf-cosine routers —
+    to ``(budget, min_keys)``. Returns the list of verdicts handed out
+    afterwards, so a test can prove the router it forced consulted it."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
+        similarity,
+    )
+
+    real = similarity.choose_set_similarity_path
+
+    def move(budget: int, min_keys: int) -> list[str]:
+        verdicts: list[str] = []
+
+        def choose(stats, *_a, **_k):
+            verdicts.append(real(stats, budget, min_keys))
+            return verdicts[-1]
+
+        monkeypatch.setattr(similarity, "choose_set_similarity_path", choose)
+        return verdicts
+
+    return move

@@ -12,6 +12,31 @@ DOC_A2 = "the quick brown fox jumps over the lazy dog and runs far away tonight"
 DOC_B = "completely different text about spark query engines and big data systems"
 
 
+def _jaccard_route(df) -> bool:
+    """True when ``df`` was built on the prefix-filtered path (its
+    rarity rank is the only row_number in either plan)."""
+    return "row_number" in df._jdf.queryExecution().analyzed().toString()
+
+
+def _forced_jaccard_pairs(monkeypatch, docs, prefix: bool, **kw) -> dict:
+    """ngram_jaccard_pairs with its route forced through the one
+    decision point, checked to have been consulted and to have run."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
+        dedup,
+    )
+
+    handed = []
+
+    def choose(*_a, **_k):
+        handed.append(prefix)
+        return prefix
+
+    monkeypatch.setattr(dedup, "choose_jaccard_path", choose)
+    df = ngram_jaccard_pairs(docs, **kw)
+    assert handed == [prefix] and _jaccard_route(df) is prefix
+    return {(r.doc_a, r.doc_b): round(r.jaccard, 9) for r in df.collect()}
+
+
 def _docs(spark):
     return spark.createDataFrame(
         [(1, DOC_A), (2, DOC_A2), (3, DOC_B), (4, DOC_A)],
@@ -35,7 +60,7 @@ def test_ngram_jaccard_finds_near_dup(spark):
     assert (1, 3) not in pairs
 
 
-def test_ngram_jaccard_prefix_filter_exact(spark):
+def test_ngram_jaccard_prefix_filter_exact(spark, monkeypatch):
     """Prefix-filtered candidate generation is exact: identical pair set
     and jaccard values as the unfiltered inverted-index formulation, at
     multiple thresholds, on a corpus with a deliberately hot shared
@@ -53,38 +78,25 @@ def test_ngram_jaccard_prefix_filter_exact(spark):
         "doc_id long, text string",
     )
     for t in (0.3, 0.5, 0.8):
-        fast = {
-            (r.doc_a, r.doc_b): round(r.jaccard, 9)
-            for r in ngram_jaccard_pairs(
-                docs, n=3, threshold=t, prefix_filter=True
-            ).collect()
-        }
-        slow = {
-            (r.doc_a, r.doc_b): round(r.jaccard, 9)
-            for r in ngram_jaccard_pairs(
-                docs, n=3, threshold=t, prefix_filter=False
-            ).collect()
-        }
+        fast = _forced_jaccard_pairs(monkeypatch, docs, True, n=3, threshold=t)
+        slow = _forced_jaccard_pairs(
+            monkeypatch, docs, False, n=3, threshold=t
+        )
         assert fast == slow, f"threshold {t}: {fast} != {slow}"
 
 
-def test_ngram_jaccard_prefix_filter_exact_on_testdata(spark):
+def test_ngram_jaccard_prefix_filter_exact_on_testdata(spark, monkeypatch):
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.sources.tables import (
         load_table,
     )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    fast = {
+    auto = {
         (r.doc_a, r.doc_b): round(r.jaccard, 9)
         for r in ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()
     }
-    slow = {
-        (r.doc_a, r.doc_b): round(r.jaccard, 9)
-        for r in ngram_jaccard_pairs(
-            docs, n=3, threshold=0.5, prefix_filter=False
-        ).collect()
-    }
-    assert fast == slow
+    slow = _forced_jaccard_pairs(monkeypatch, docs, False, n=3, threshold=0.5)
+    assert auto == slow
 
 
 def test_minhash_lsh_candidates_superset_of_dups(spark):
@@ -145,12 +157,9 @@ def test_connected_components_nonconvergence_flagged(spark):
     )
     with pytest.raises(ConvergenceError):
         connected_components(pairs, max_iterations=1)
-    flagged = connected_components(pairs, max_iterations=1, strict=False)
-    assert "converged" in flagged.columns
-    assert flagged.filter("converged = false").count() == 64
 
 
-def test_choose_jaccard_path_skew_vs_uniform(spark):
+def test_choose_jaccard_path_skew_vs_uniform(spark, monkeypatch):
     """VERDICT r2 #2 (adaptive path): the candidate-generation strategy
     must follow corpus shape — single join on a uniform corpus (no hot
     shingle: prefix filter's 2 extra stages are pure overhead), prefix
@@ -175,22 +184,19 @@ def test_choose_jaccard_path_skew_vs_uniform(spark):
     )
     assert choose_jaccard_path(skewed) is True
 
-    # beyond LARGE_CORPUS_DOCS the probe is skipped: prefix, always
-    assert choose_jaccard_path(uniform, n_docs=10_000_000) is True
-
-    for corpus in (uniform, skewed):
-        auto = {
-            (r.doc_a, r.doc_b, round(r.jaccard, 9))
-            for r in ngram_jaccard_pairs(corpus, n=3, threshold=0.5).collect()
+    autos = {}
+    for name, corpus in (("uniform", uniform), ("skewed", skewed)):
+        df = ngram_jaccard_pairs(corpus, n=3, threshold=0.5)
+        assert _jaccard_route(df) is (name == "skewed")
+        autos[name] = {
+            (r.doc_a, r.doc_b): round(r.jaccard, 9) for r in df.collect()
         }
+    for name, corpus in (("uniform", uniform), ("skewed", skewed)):
         for flag in (True, False):
-            explicit = {
-                (r.doc_a, r.doc_b, round(r.jaccard, 9))
-                for r in ngram_jaccard_pairs(
-                    corpus, n=3, threshold=0.5, prefix_filter=flag
-                ).collect()
-            }
-            assert auto == explicit
+            explicit = _forced_jaccard_pairs(
+                monkeypatch, corpus, flag, n=3, threshold=0.5
+            )
+            assert autos[name] == explicit
 
 
 def test_near_dup_pairs_auto_sparse_equals_exact(spark):
@@ -788,7 +794,7 @@ def test_tf_cosine_pairs_matches_brute_force(spark):
     assert all(4 not in p for p in found)
 
 
-def test_tf_cosine_dense_guard_routes_or_raises(spark):
+def test_tf_cosine_dense_guard_routes_or_raises(spark, setsim_handoff):
     """Round-10 (VERDICT r9 #2): on a vocabulary-degenerate corpus
     the maxweight prefix bound cannot bite, so tf_cosine_pairs_auto
     must either RAISE with the measured stats (default) or ESCALATE
@@ -815,41 +821,31 @@ def test_tf_cosine_dense_guard_routes_or_raises(spark):
         for i in range(60)
     ]
     dense = spark.createDataFrame(dense_rows, "doc_id long, text string")
-    s1 = tf_cosine_dense_stats(dense, n=1, min_keys=10, pairs_per_key_budget=4)
+    verdicts = setsim_handoff(4, 10)
+    s1 = tf_cosine_dense_stats(dense, n=1)
     assert s1["path"] == "lsh" and s1["n_keys"] == 60
+    assert verdicts == ["lsh"]
     with pytest.raises(ValueError, match="dense regime"):
-        tf_cosine_pairs_auto(
-            dense, 9, 10, n=1, min_keys=10, pairs_per_key_budget=4
-        )
+        tf_cosine_pairs_auto(dense, 9, 10, n=1)
+    assert verdicts == ["lsh", "lsh"]
     # escalation: 3-grams of the 12-token random sequences are near
     # unique, the probe passes and the result EQUALS the exact join
     # at the escalated n
-    esc = tf_cosine_pairs_auto(
-        dense, 9, 10, n=1, min_keys=10, pairs_per_key_budget=4,
-        on_dense="escalate",
-    )
-    s3 = tf_cosine_dense_stats(dense, n=3, min_keys=10, pairs_per_key_budget=4)
+    esc = tf_cosine_pairs_auto(dense, 9, 10, n=1, on_dense="escalate")
+    assert verdicts[2] == "lsh" and verdicts[-1] == "exact"
+    s3 = tf_cosine_dense_stats(dense, n=3)
     assert s3["path"] == "exact"
     want = sorted(map(tuple, tf_cosine_pairs(dense, 9, 10, n=3).collect()))
     assert sorted(map(tuple, esc.collect())) == want
     # rare-term corpus routes to exact at the requested n
     sparse_rows = [(i, f"tok{i}a tok{i}b tok{i}c") for i in range(60)]
     sparse = spark.createDataFrame(sparse_rows, "doc_id long, text string")
-    out = tf_cosine_pairs_auto(
-        sparse, 9, 10, n=1, min_keys=10, pairs_per_key_budget=4
-    )
+    n_before = len(verdicts)
+    out = tf_cosine_pairs_auto(sparse, 9, 10, n=1)
+    assert verdicts[n_before:] == ["exact"]
     assert sorted(map(tuple, out.collect())) == sorted(
         map(tuple, tf_cosine_pairs(sparse, 9, 10, n=1).collect())
     )
-    # pre-seeded stats (the catalog path) skip the probe job for the
-    # first n and still gate: dense stats -> raise without touching
-    # the corpus
-    with pytest.raises(ValueError, match="dense regime"):
-        tf_cosine_pairs_auto(
-            dense, 9, 10, n=1, min_keys=10, pairs_per_key_budget=4,
-            stats=dict(s1),
-        )
-
 
 def test_tf_cosine_pairs_decimal_membership_beyond_int64(spark):
     """Round-10 (ADVICE r9): the cross-multiplied threshold must stay

@@ -457,7 +457,7 @@ def test_charlm_arrow_kernel_bit_exact(spark):
     non-ascii, null)."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.charlm import (
         char_trigram_lm,
-        charlm_doc_scores,
+        charlm_score_expr,
         charlm_scores_arrow,
     )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.sources import (
@@ -485,6 +485,7 @@ def test_charlm_arrow_kernel_bit_exact(spark):
             r.doc_id: (r.n_trigrams, r.mean_p, r.min_p) for r in df.collect()
         }
 
-    assert as_map(charlm_doc_scores(spark, full, table=table)) == as_map(
-        charlm_scores_arrow(full, table)
-    )
+    via_expr = full.select(
+        "doc_id", charlm_score_expr(F.col("text"), table).alias("s")
+    ).select("doc_id", "s.*")
+    assert as_map(via_expr) == as_map(charlm_scores_arrow(full, table))

@@ -853,6 +853,49 @@ def test_incremental_ivf_index_stream_end_to_end(spark, tmp_path):
     assert got == want and len(got) == 13
 
 
+def test_index_scheme_stamp_resolves_file_uri(spark, tmp_path, monkeypatch):
+    """A maintained index addressed by a ``file:///`` URI stamps its
+    ``_scheme.json`` beside the generation chain's ``CURRENT``, and
+    read_index_scheme reads it back through the same URI — nothing
+    lands under the working directory."""
+    import math
+    import os
+
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
+        ivf_centroid_rows,
+        ivf_codebook_scheme,
+    )
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.streaming.incremental import (
+        incremental_ivf_index_stream,
+        read_index_scheme,
+    )
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    schema = "vec_id long, seq long, embedding array<double>"
+    rows = [
+        (i, 0, [math.sin((i + 1.3) * (j + 1) * 0.7) for j in range(8)])
+        for i in range(6)
+    ]
+    src = str(tmp_path / "emb_files")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    cent = ivf_centroid_rows(spark.createDataFrame(rows, schema), 2)
+    idx = tmp_path / "idx"
+    uri = "file://" + str(idx)
+    q = incremental_ivf_index_stream(
+        spark, src, uri, str(tmp_path / "ckpt"), cent, dim=8, schema=schema
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert (idx / "CURRENT").exists() and (idx / "_scheme.json").exists()
+    assert read_index_scheme(uri) == ivf_codebook_scheme(cent)
+    assert read_index_scheme(str(idx)) == read_index_scheme(uri)
+    assert os.listdir(cwd) == []
+
+
 def test_incremental_band_index_parity_with_batch_lsh(spark, tmp_path):
     """Dedup-on-ingest: the streamed MinHash band index, scored with
     lsh_pairs_from_bands, must equal batch minhash_lsh_pairs over the

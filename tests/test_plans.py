@@ -116,7 +116,7 @@ def test_cascade_join_single_fact_scan(spark):
 
 
 def test_build_region_dim_auto_selects_two_phase(spark, monkeypatch):
-    """build_region_dim(large_dim=None) must route inputs above
+    """build_region_dim must route inputs above
     LARGE_DIM_THRESHOLD through the two-phase mint (no SinglePartition
     exchange) and small inputs through the global window."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
@@ -156,7 +156,9 @@ def test_region_build_plans_are_python_free(spark):
         [(31.2, 121.5, 1), (31.3, 121.6, 2)],
         "latitude double, longitude double, type int",
     )
-    dim = build_region_dim(poi, large_dim=False)
+    dim = build_region_dim(poi)
+    # two POIs sit far below LARGE_DIM_THRESHOLD: the global-window mint
+    assert "SinglePartition" in physical_plan(dim)
     assert_no_python_udf(dim)
 
     pings = spark.createDataFrame(
@@ -262,7 +264,7 @@ def test_chi2_keywords_broadcasts_marginals(spark):
     assert_broadcast_join(entrymod._q_chi2_keywords(spark, SF_SMALL))
 
 
-def test_registered_path_selections_pinned(spark):
+def test_registered_path_selections_pinned(spark, setsim_handoff):
     """Round-7 path pins (VERDICT r6 #7): the three operators whose
     physical path is a DATA-DEPENDENT choice — ann_bucketed's adaptive
     nbits, user_covisit_jaccard's set-similarity path, ivf_topk's
@@ -271,6 +273,7 @@ def test_registered_path_selections_pinned(spark):
     fails HERE instead of surfacing as an unexplained bench move (the
     r3→r4 drift class)."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
+        PAIRS_PER_KEY_BUDGET,
         adaptive_nbits,
         choose_set_similarity_path,
         set_similarity_stats,
@@ -367,8 +370,10 @@ def test_registered_path_selections_pinned(spark):
     # out of the way (min_keys=0 — at 500 docs the default floor
     # routes everything exact, which is itself part of the pin above)
     docs_small = load_table(spark, SF_SMALL, "documents")
+    verdicts = setsim_handoff(PAIRS_PER_KEY_BUDGET, 0)
     with _pytest.raises(ValueError, match="dense regime"):
-        tf_cosine_pairs_auto(docs_small, n=1, min_keys=0)
+        tf_cosine_pairs_auto(docs_small, n=1)
+    assert verdicts == ["lsh"]
 
 
 def test_batch29_dedup_family_is_python_free(spark):

@@ -93,7 +93,7 @@ def test_charlm_arrow_parity_on_random_strings(spark):
     edge-doc pin."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.charlm import (
         char_trigram_lm,
-        charlm_doc_scores,
+        charlm_score_expr,
         charlm_scores_arrow,
     )
 
@@ -107,7 +107,11 @@ def test_charlm_arrow_parity_on_random_strings(spark):
     table = char_trigram_lm(docs)
     expr = {
         r.doc_id: (r.n_trigrams, r.mean_p, r.min_p)
-        for r in charlm_doc_scores(spark, docs, table=table).collect()
+        for r in docs.select(
+            "doc_id", charlm_score_expr(F.col("text"), table).alias("s")
+        )
+        .select("doc_id", "s.*")
+        .collect()
     }
     arw = {
         r.doc_id: (r.n_trigrams, r.mean_p, r.min_p)

@@ -50,24 +50,6 @@ def test_charlm_attach_arrow_bit_exact_with_expr(spark):
     assert len(via_kernel) == 500
 
 
-def test_charlm_attach_arrow_keeps_text(spark):
-    """drop_text=False keeps the text column for downstream gates."""
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.functions.charlm import (
-        char_trigram_lm,
-        charlm_attach_arrow,
-    )
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    table = char_trigram_lm(docs)
-    out = charlm_attach_arrow(docs.limit(20), table, drop_text=False)
-    assert set(out.columns) == {
-        "doc_id", "text", "n_trigrams", "mean_p", "min_p"
-    }
-    src = {r.doc_id: r.text for r in docs.limit(20).collect()}
-    for r in out.collect():
-        assert r.text == src[r.doc_id]
-
-
 def test_curation_full_matches_expression_gate(spark):
     """curation_full (Arrow-fused, cheap-gates-first) must keep the
     SAME doc set and values as the round-13 all-expression single

@@ -214,7 +214,6 @@ def probe_setsim(spark, sf_dir: str, n: int) -> dict:
     auto = set_similarity_join_auto(
         sets, "user_id", "cell",
         threshold_num=3, threshold_den=10,
-        dense_bitmap_domain=cells,
         stats=dict(stats),
     )
     results["covisit_auto_pairs"] = auto.count()
@@ -229,7 +228,6 @@ def probe_setsim(spark, sf_dir: str, n: int) -> dict:
         j = set_similarity_join_auto(
             sets, "user_id", "cell",
             threshold_num=3, threshold_den=10,
-            dense_bitmap_domain=cells,
             stats=dict(stats),
             target_recall=tgt,
         )
@@ -354,10 +352,10 @@ def probe_lsh_hotband(spark, sf_dir: str, n: int) -> dict:
         return hashlib.md5(repr(rows).encode()).hexdigest()[:16], len(rows)
 
     t0 = time.perf_counter()
-    fp_q, members = fp_comp(
-        near_dup_components(sdocs, max_iterations=30, materialize="checkpoint")
-    )
+    fp_q, members = fp_comp(near_dup_components(sdocs))
     results["cc_star_s"] = round(time.perf_counter() - t0, 2)
+    # near_dup_components persists its digest and band tables
+    spark.catalog.clearCache()
     t0 = time.perf_counter()
     fp_k, _ = fp_comp(
         connected_components(
@@ -413,9 +411,7 @@ def probe_dedup_e2e(spark, sf_dir: str, n: int) -> dict:
     results = {"family": "dedup_e2e", "replication": n, "rows": sdocs.count()}
 
     t0 = time.perf_counter()
-    comp = near_dup_components(
-        sdocs, k=8, bands=4, n=3, max_iterations=30, materialize="checkpoint"
-    )
+    comp = near_dup_components(sdocs, k=8, bands=4, n=3)
     surv = entry._survivor_table(sdocs, comp).select(
         (-F.col("top.nd")).alias("doc_id")
     )
@@ -434,6 +430,7 @@ def probe_dedup_e2e(spark, sf_dir: str, n: int) -> dict:
     results["survivor_fp"] = hashlib.md5(repr(surv_ids).encode()).hexdigest()[
         :16
     ]
+    spark.catalog.clearCache()
     return results
 
 
@@ -1233,12 +1230,13 @@ def probe_cc(spark, sf_dir: str, n: int) -> dict:
     )
 
     t0 = time.perf_counter()
-    comp2 = near_dup_components(sdocs, max_iterations=30, materialize="checkpoint")
+    comp2 = near_dup_components(sdocs)
     results["collapsed_clusters"] = (
         comp2.select("component").distinct().count()
     )
     results["collapsed_members"] = comp2.count()
     results["near_dup_cc_collapsed_s"] = round(time.perf_counter() - t0, 2)
+    spark.catalog.clearCache()
     return results
 
 
