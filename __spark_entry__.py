@@ -869,8 +869,8 @@ def _q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⌊(1−t)·|A|⌋+1-subset of A must hit B — rarity ordering is purely
     pruning, so engine tie-divergence cannot change the answer);
     verification counts |A∩B| exactly with two equi-joins against the
-    one persisted augmented index (the ngram_jaccard pattern — one
-    corpus scan, no array payloads replicated per candidate).
+    one persisted augmented index (one corpus scan, no array payloads
+    replicated per candidate).
     Threshold rides in integer form; one IEEE division at the edge."""
     docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
     return ops.containment_pairs(docs, n=3, threshold_num=4, threshold_den=5)
@@ -1432,13 +1432,13 @@ def _q_domain_blocklist_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return ops.ngram_jaccard_pairs(docs, n=3, threshold=0.5)
+    return ops.ngram_jaccard_pairs(docs, n=3, threshold_num=1, threshold_den=2)
 
 
 def _q_near_dup_pairs_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Auto-routed n-gram near-dup pairs (batch 27): the document-level
     face of the round-7 exact↔LSH handoff. At the CORRECTNESS scales
-    (sf0.001/sf0.01: 500 docs < min_lsh_keys) the router picks the
+    (sf0.001/sf0.01: 500 docs < MIN_LSH_KEYS) the router picks the
     EXACT path — pinned in tests/test_plans.py — so the oracle is the
     exact n-gram Jaccard SQL, and a corpus regeneration that flips the
     route fails the pin before it can silently turn the oracle row
@@ -1453,40 +1453,37 @@ def _q_near_dup_pairs_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_near_dup_pairs_t90(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DOCUMENT-level recall-contract near-dup join (batch 29, round 9,
-    VERDICT r8 #2): the same ``near_dup_pairs_auto`` surface a
-    training-data curator calls, pinned to the LSH route
-    (pairs_per_key_budget=0, min_lsh_keys=1 — deterministic at every
-    sf, the way a 100 TB corpus would route) with an EXPLICIT doc
-    recall guarantee: ``target_recall=0.9`` sizes the signature via
-    :func:`choose_lsh_params` so P(candidate) ≥ 0.9 for EVERY doc pair
-    at n-gram Jaccard ≥ 1/2 — at that threshold the selection is
-    k=54, 18 bands × 3 rows (pinned in tests/test_plans.py), vs the
-    midpoint banding's ~0.5 at the boundary. Verification stays exact
-    (emitted pairs carry true Jaccard; no false positives), so the
-    contract governs only what can be MISSED and the floor is the
-    collision probability at the threshold (monotone in J above it).
-    The oracle mirrors the full contract banding parametrically —
-    54 min-md5 shingle signatures, 18 band hashes, the integer size
-    prune, exact shared-shingle verification — so the doc-level
-    guarantee's mechanism is engine-differentially checked, closing
-    the round-8 gap where the only registered contract query was the
-    user-covisit one (reference dedup loops: cal_user_trace.py's
-    all-pairs comparisons, re-expressed sub-quadratically)."""
+    VERDICT r8 #2): n-gram shingle pairs at Jaccard ≥ 1/2 through
+    ``set_similarity_join_lsh`` banded by :func:`choose_lsh_params` —
+    the shape `user_covisit_lsh_t90` has — so P(candidate) ≥ 0.9 for
+    EVERY doc pair at the threshold: k=54, 18 bands × 3 rows (pinned
+    in tests/test_plans.py), vs the midpoint banding's ~0.5 at the
+    boundary. The route is LSH at every sf, the way a 100 TB corpus
+    would route. Verification stays exact (emitted pairs carry true
+    Jaccard; no false positives), so the contract governs only what
+    can be MISSED and the floor is the collision probability at the
+    threshold (monotone in J above it). The oracle mirrors the full
+    contract banding parametrically — 54 min-md5 shingle signatures,
+    18 band hashes, the integer size prune, exact shared-shingle
+    verification — so the doc-level guarantee's mechanism is
+    engine-differentially checked (reference dedup loops:
+    cal_user_trace.py's all-pairs comparisons, re-expressed
+    sub-quadratically)."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
+        similarity,
+    )
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.dedup import (
+        doc_jaccard,
+        doc_shingles,
+    )
+
     docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"))
-    return ops.near_dup_pairs_auto(
-        docs,
-        n=3,
-        threshold_num=1,
-        threshold_den=2,
-        # the route is PINNED to lsh (budget 0 over >=1 key), so the
-        # router's two df-stats jobs would be pure overhead — synthetic
-        # stats skip them (the stats= input a catalog-fed caller
-        # uses); the pin itself is belt-and-braces: either input alone
-        # forces lsh
-        pairs_per_key_budget=0,
-        min_lsh_keys=1,
-        stats={"n_keys": 2_000_000, "cand_pairs": 1e18},
-        target_recall=0.9,
+    k, bands = similarity.choose_lsh_params(1, 2, target_recall=0.9)
+    sh = doc_shingles(docs, 3).localCheckpoint(eager=True)
+    return doc_jaccard(
+        similarity.set_similarity_join_lsh(
+            sh, "doc_id", "shingle", 1, 2, k=k, bands=bands
+        )
     )
 
 
@@ -5826,13 +5823,14 @@ def _q_user_covisit_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Routed through ``set_similarity_join`` (similarity.py), which owns
     the regime analysis: this workload is DENSE (qualifying pairs are
     ~20% of ALL user pairs, so no candidate filter can prune — the
-    df-ranked prefix path proven for documents in dedup.py:122 was
-    measured at 4.7 s here because every pair shares a rare cell),
+    df-ranked prefix path of the same operator was measured at 4.7 s
+    here because every pair shares a rare cell),
     and the cell domain is bounded (pmod 2000), so the query selects
     the bitmap path: per-user 32-word bitmaps, broadcast pair
     enumeration with the integer size-ratio prune, |∩| by
-    bit_count(and) lanes — 1.4 s at sf0.1, exact. Both exact paths
-    (bitmap / prefix) produce identical pair sets, pytest-pinned.
+    bit_count(and) lanes — 1.4 s at sf0.1, exact. All three exact
+    paths (bitmap / prefix / single join) produce identical pair sets,
+    pytest-pinned.
     Above the dense-regime handoff
     (set_similarity_join_auto, round 7) the library routes this
     workload to MinHash-LSH instead — registered separately as
@@ -9405,7 +9403,7 @@ def _minhash_oracle(k: int = 8, bands: int = 4) -> str:
 
 def _doc_lsh_oracle_params(k: int, bands: int, num: int, den: int) -> str:
     """DuckDB mirror of the DOCUMENT-level recall-contract LSH join
-    (near_dup_pairs_auto forced to the LSH route) for an ARBITRARY
+    (near_dup_pairs_t90: set_similarity_join_lsh over doc shingles) for an ARBITRARY
     (k, bands) scheme at threshold num/den: distinct 3-gram shingles
     (the shared doc_shingles definition) → k min-md5 signatures →
     band hashes → candidate equi-join with the integer size prune →
@@ -16901,7 +16899,7 @@ def oracle_sql() -> dict[str, str]:
         """,
     }
     # near_dup_pairs_auto routes to the EXACT path on the committed
-    # corpus (n_keys < min_lsh_keys — pinned in tests/test_plans.py),
+    # corpus (n_keys < MIN_LSH_KEYS — pinned in tests/test_plans.py),
     # so its oracle is the same exact n-gram Jaccard SQL
     out["near_dup_pairs_auto"] = out["ngram_jaccard_pairs"]
     return out

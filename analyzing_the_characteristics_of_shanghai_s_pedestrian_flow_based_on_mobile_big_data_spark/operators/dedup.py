@@ -38,28 +38,34 @@ def exact_dedup(
     )
 
 
+def _token_table(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, pos, tok) — the word tokenizer under every word-gram
+    table (:func:`doc_shingles`, :func:`_tf_term_table`). posexplode
+    instead of array-lambda shingling: Spark's higher-order functions
+    (transform/filter lambdas) run interpreted, outside whole-stage
+    codegen — measured 2× slower than this fully codegen'd token-table
+    formulation.
+    INVARIANT: the split/trim/lower/non-empty filter must stay
+    equivalent to functions.text.tokens() — near_dup_components'
+    zero-shingle gate tests token_count(text) >= n as "this doc has a
+    shingle", and tests/test_dedup.py pins the equivalence on tricky
+    whitespace; change both or neither."""
+    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    return docs.select(
+        F.col(id_col).alias("doc_id"), F.posexplode(toks).alias("pos", "tok")
+    ).filter(F.col("tok") != "")
+
+
 def doc_shingles(
     docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """(id, shingle) — distinct n-gram word shingles per document.
-
-    posexplode + lead window instead of array-lambda shingling: Spark's
-    higher-order functions (transform/filter lambdas) run interpreted,
-    outside whole-stage codegen — measured 2× slower than this fully
-    codegen'd token-table formulation. The window's doc_id shuffle
-    doubles as the pre-partitioning for the distinct that follows.
-    INVARIANT: the inline split/trim/lower/non-empty filter below must
-    stay equivalent to functions.text.tokens() — near_dup_components'
-    zero-shingle gate tests token_count(text) >= n as "this doc has a
-    shingle", and tests/test_dedup.py pins the equivalence on
-    tricky whitespace; change both or neither.
-    """
+    """(id, shingle) — distinct n-gram word shingles per document:
+    the :func:`_token_table` tokens joined by a lead window. The
+    window's doc_id shuffle doubles as the pre-partitioning for the
+    distinct that follows."""
     from pyspark.sql import Window
 
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    tok_tbl = docs.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(toks).alias("pos", "tok")
-    ).filter(F.col("tok") != "")
+    tok_tbl = _token_table(docs, id_col, text_col)
     w = Window.partitionBy("doc_id").orderBy("pos")
     cols = [F.col("tok")] + [
         F.lead("tok", i).over(w).alias(f"__t{i}") for i in range(1, n)
@@ -75,183 +81,42 @@ def doc_shingles(
     ).distinct()
 
 
-def choose_jaccard_path(
-    docs: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> bool:
-    """Pick the ngram_jaccard_pairs candidate-generation strategy from
-    cheap corpus stats. Returns True for the prefix-filtered path,
-    False for the single-join path.
-
-    The single join's reducer work on one shingle shared by m docs is
-    ~m² candidate rows, so it degrades wherever a shingle's document
-    frequency is ≫ √N (SCALE.md records the measured crossover); the
-    prefix filter structurally caps that blowup but pays ~2 extra
-    stages — measured 1.6× slower locally on a *uniform* corpus where
-    no shingle is hot. Rule: probe max document frequency over the
-    shingle table and prefix only when max_df > 4·√N. The probe is a
-    count plus one agg job over the same shingle table the chosen path
-    rebuilds; only scalars reach the driver."""
-    import math
-
-    n_docs = docs.count()
-    if n_docs < 2:
-        return False
-    row = (
-        doc_shingles(docs, n, id_col, text_col)
-        .groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .agg(F.max("df").alias("m"))
-        .collect()[0]
+def doc_jaccard(pairs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard) from a set-similarity pair table
+    (key_a, key_b, n_shared, sz_a, sz_b) over doc shingles: one exact
+    IEEE division at the edge — the threshold was applied upstream in
+    integer form."""
+    union_sz = F.col("sz_a") + F.col("sz_b") - F.col("n_shared")
+    return pairs.select(
+        F.col("key_a").alias("doc_a"),
+        F.col("key_b").alias("doc_b"),
+        (F.col("n_shared") / union_sz.cast("double")).alias("jaccard"),
     )
-    max_df = row.m or 0
-    return max_df > 4.0 * math.sqrt(n_docs)
 
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
-    threshold: float = 0.8,
+    threshold_num: int = 1,
+    threshold_den: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """All pairs with n-gram Jaccard ≥ threshold, via shingle
-    inverted-index self-join (no cross join: pairs only materialize for
-    docs sharing ≥1 shingle).
+    """All doc pairs with n-gram shingle Jaccard ≥ num/den: the exact
+    :func:`~.similarity.set_similarity_join` over :func:`doc_shingles`
+    (no cross join: pairs only materialize for docs sharing ≥1
+    shingle). The join's stats pick the single-join or prefix-filtered
+    path (:func:`~.similarity.choose_exact_path`); on the committed
+    corpora no shingle is hot enough for the prefix filter, so this
+    runs the single join at every scale.
 
-    :func:`choose_jaccard_path` selects the path: prefix-filtered when
-    a shingle's document frequency exceeds 4·√N (the measured
-    single-join blowup regime), single-join otherwise. Both paths are
-    exact and produce identical pair sets (pytest-pinned), so the
-    choice is purely a physical-plan decision.
+    The shingle table is persisted: the stats jobs and both join
+    sides read it, so the corpus tokenizes once."""
+    from .similarity import set_similarity_join
 
-    The prefix-filtered path is the 100 TB path: candidate
-    generation joins only on each doc's prefix — its ⌈(1−t)·|A|⌉+1
-    globally-rarest shingles (global order = document frequency asc,
-    shingle asc). Prefix-filter lemma (exact, never drops a qualifying
-    pair): J(A,B) ≥ t ⇒ |A∩B| ≥ ⌈t·max(|A|,|B|)⌉, and two sets with
-    overlap ≥ α must share an element inside their (|X|−α+1)-prefixes
-    under any shared total order. Hot shingles ("of the and" trigrams,
-    power-law document frequency in natural corpora) have maximal df so
-    they sort to the *suffix* of every doc and never become join keys —
-    the m² reducer blowup on a shared-by-m-docs shingle is capped at
-    m = the number of docs rare-listing that shingle. Candidates are
-    then verified against the full shingle index (two equi-joins on
-    doc id + shingle) — exactness is preserved; measured candidate-row
-    reduction at sf0.1 is recorded in SCALE.md.
-
-    The single-join path counts common shingles directly in the
-    self-join: fewer stages, right for small/skew-free corpora,
-    quadratic on hot shingles.
-
-    Size-ratio prune in both paths: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|),
-    applied *inside* the candidate join via least/greatest division
-    (identical rounding to the final jaccard division — no float-edge
-    false prunes at equality)."""
-    from pyspark.sql import Window
-
-    ratio_ok = (
-        F.least(F.col("a.n_sh"), F.col("b.n_sh"))
-        / F.greatest(F.col("a.n_sh"), F.col("b.n_sh"))
-    ) >= F.lit(threshold)
-    if choose_jaccard_path(docs, n, id_col, text_col):
-        # Augmented index in two exchanges: df via a window over the
-        # shingle partition, then n_sh and the rarity rank in one
-        # doc_id pass (both windows share the doc_id exchange).
-        # Persisted: it feeds both candidate-join sides and the per-doc
-        # set assembly (at 100 TB: checkpoint to parquet instead).
-        w_sh = Window.partitionBy("shingle")
-        w_doc = Window.partitionBy("doc_id")
-        w_rk = Window.partitionBy("doc_id").orderBy("df", "shingle")
-        aug = (
-            doc_shingles(docs, n, id_col, text_col)
-            .withColumn("df", F.count("*").over(w_sh))
-            .withColumn("n_sh", F.count("*").over(w_doc))
-            .withColumn("rk", F.row_number().over(w_rk))
-            .persist()
-        )
-        # ceil((1-t)·n)+1 ≥ the exact prefix length ⌊(1−t)n⌋+1 — the
-        # ceil absorbs float fuzz on the conservative side only.
-        plen = F.ceil(F.lit(1.0 - threshold) * F.col("n_sh")) + F.lit(1)
-        prefix = aug.filter(F.col("rk") <= plen).select(
-            "doc_id", "shingle", "n_sh"
-        )
-        cand = (
-            prefix.alias("a")
-            .join(
-                prefix.alias("b"),
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & ratio_ok,
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.n_sh").alias("n_a"),
-                F.col("b.n_sh").alias("n_b"),
-            )
-            .distinct()
-        )
-        # Verify: per-doc sorted shingle sets (groupBy reuses aug's
-        # doc_id partitioning — no exchange), then two equi-joins keyed
-        # on doc id and a per-row array_intersect. Candidate count is
-        # near-linear in corpus size, so the set join shuffles little;
-        # locally AQE broadcasts the candidate side.
-        doc_sets = aug.groupBy("doc_id").agg(
-            F.sort_array(F.collect_list("shingle")).alias("arr")
-        )
-        n_common = F.size(F.array_intersect(F.col("arr_a"), F.col("arr_b")))
-        common = (
-            cand.join(
-                doc_sets.select(
-                    F.col("doc_id").alias("doc_a"), F.col("arr").alias("arr_a")
-                ),
-                "doc_a",
-            )
-            .join(
-                doc_sets.select(
-                    F.col("doc_id").alias("doc_b"), F.col("arr").alias("arr_b")
-                ),
-                "doc_b",
-            )
-            .select(
-                "doc_a", "doc_b", "n_a", "n_b", n_common.alias("n_common")
-            )
-        )
-    else:
-        # Single-join formulation: the inverted index feeds both sides
-        # of the self-join — persist so the corpus tokenizes once.
-        sh = (
-            doc_shingles(docs, n, id_col, text_col)
-            .withColumn("n_sh", F.count("*").over(Window.partitionBy("doc_id")))
-            .persist()
-        )
-        common = (
-            sh.alias("a")
-            .join(
-                sh.alias("b"),
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a.doc_id") < F.col("b.doc_id"))
-                & ratio_ok,
-            )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.n_sh").alias("n_a"),
-                F.col("b.n_sh").alias("n_b"),
-            )
-            .agg(F.count("*").alias("n_common"))
-        )
-    return (
-        common.withColumn(
-            "jaccard",
-            F.col("n_common")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+    sh = doc_shingles(docs, n, id_col, text_col).persist()
+    return doc_jaccard(
+        set_similarity_join(sh, "doc_id", "shingle", threshold_num, threshold_den)
     )
 
 
@@ -401,6 +266,36 @@ def verify_band_table(index_bands: DataFrame, bands: int) -> None:
         )
 
 
+def minhash_band_rows(k: int, bands: int):
+    """One (band, band_hash) row per band of a k-wide mh_0..mh_{k−1}
+    signature: band b hashes its r = k/bands components as
+    md5(concat_ws('|', mh_{b·r}, …)). THE band hash of the document
+    index (:func:`minhash_bands`) and of the generic set join
+    (``similarity.set_similarity_join_lsh``). One generator expression
+    instead of a bands-way union: a union of N selects over the
+    signature table re-runs the whole signature computation N times;
+    explode(array(...)) computes it once and fans out rows in place."""
+    if k % bands:
+        raise ValueError(f"k must divide evenly into bands: k={k}, bands={bands}")
+    r = k // bands
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.md5(
+                        F.concat_ws(
+                            "|",
+                            *[F.col(f"mh_{i}") for i in range(b * r, (b + 1) * r)],
+                        )
+                    ).alias("band_hash"),
+                )
+                for b in range(bands)
+            ]
+        )
+    )
+
+
 def minhash_bands(
     docs: DataFrame,
     k: int = 8,
@@ -419,27 +314,9 @@ def minhash_bands(
     incrementally maintainable (append-only per doc). ``shingles``
     forwards to :func:`minhash_signatures` (script-routed feature
     sets)."""
-    assert k % bands == 0, "k must divide evenly into bands"
-    r = k // bands
+    bb = minhash_band_rows(k, bands)
     sig = minhash_signatures(docs, k, n, id_col, text_col, shingles=shingles)
-    # One generator expression instead of a bands-way union: a union of
-    # N selects over sig re-runs the whole signature computation N
-    # times (N scans of the corpus); explode(array(...)) computes the
-    # signature once and fans out rows in-place.
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.col(f"mh_{i}") for i in range(b * r, (b + 1) * r)]
-                )
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bb")
-    ).select(
+    return sig.select("doc_id", bb.alias("bb")).select(
         "doc_id",
         F.col("bb.band").alias("band"),
         F.col("bb.band_hash").alias("band_hash"),
@@ -1144,12 +1021,12 @@ def containment_pairs(
     Scale shape — the containment prefix-filter lemma: if
     |A∩B| ≥ t·|A| then among A's ⌊(1−t)·|A|⌋+1 globally-RAREST
     shingles (global order = document frequency ascending, the same
-    df ranking the Jaccard prefix path uses) at least one is in B —
+    df ranking similarity.set_similarity_join's prefix path uses) at
+    least one is in B —
     so only the contained side's prefix enters the candidate join,
     against the container side's full inverted index; hot boilerplate
     shingles sort to every doc's suffix and never become join keys.
-    The index is built the ``ngram_jaccard_pairs`` way: ONE persisted
-    augmented table (df via a shingle-partition window; size and
+    The index is ONE persisted augmented table (df via a shingle-partition window; size and
     rarity rank sharing the doc_id exchange) feeds the prefix, the
     container side, and both verification joins — one corpus scan,
     one tokenization. Verification counts |A∩B| with two equi-joins
@@ -1355,17 +1232,11 @@ def _tf_term_table(
     """(doc_id, term) WITH multiplicity — the word-``n``-gram term
     table under tf_cosine_pairs and its dense-regime probe (one
     definition, so the probe can never judge a different vocabulary
-    than the join uses). Grams via the codegen'd posexplode+lead
-    formulation (array-lambda shingling runs interpreted — the
-    measured-2×-slower path doc_shingles already documents); the
-    inline split stays equivalent to functions.text.tokens()."""
+    than the join uses): the :func:`_token_table` tokens joined by a
+    lead window."""
     from pyspark.sql import Window
 
-    toks0 = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    tok_tbl = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(toks0).alias("pos", "tok"),
-    ).filter(F.col("tok") != "")
+    tok_tbl = _token_table(docs, id_col, text_col)
     if n == 1:
         return tok_tbl.select("doc_id", F.col("tok").alias("term"))
     w_lead = Window.partitionBy("doc_id").orderBy("pos")
@@ -1704,7 +1575,7 @@ def tf_cosine_pairs(
     become join keys. The bound is float but only PRUNES (an ε=1e-9
     guard keeps it conservative; candidate-set divergence between
     engines cannot change the verified output). One persisted
-    augmented index (the ngram_jaccard pattern) feeds the suffix, the
+    augmented index (the containment_pairs pattern) feeds the suffix, the
     full side, and both verification joins. Output: unordered
     (doc_a < doc_b, cosine).
 
@@ -1716,7 +1587,7 @@ def tf_cosine_pairs(
     inherently near-quadratic — every doc shares every term, the
     dense regime the set-sim router documents as Ω(U²) — while n ≥ 3
     grams re-establish the rare-term tail the filter needs (the same
-    reason ngram_jaccard prefixes work); the registered query uses
+    reason shingle prefix filters work); the registered query uses
     n=3."""
     from pyspark.sql import Window
 
@@ -2383,23 +2254,18 @@ def near_dup_pairs_auto(
     threshold_den: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    **auto_kwargs,
 ) -> DataFrame:
-    """Document-level twin of the round-7 set-similarity auto-handoff:
-    n-gram near-dup pairs (doc_a, doc_b, jaccard) with the
-    exact-vs-MinHash-LSH path chosen by
-    :func:`~..operators.similarity.set_similarity_join_auto` from
+    """Document-level face of the set-similarity auto-handoff: n-gram
+    near-dup pairs (doc_a, doc_b, jaccard) with the exact-vs-MinHash-LSH
+    path chosen by :func:`~.similarity.set_similarity_join_auto` from
     cheap shingle-df statistics. Below the handoff the output is
-    EXACTLY :func:`ngram_jaccard_pairs` at the same (integer)
-    threshold — pytest-pinned; above it, candidates come from banded
-    min-md5 signatures (bands matched to the threshold's S-curve
-    midpoint via ``choose_lsh_bands``) with exact verification, so
-    emitted pairs still carry true Jaccard values and no false
-    positives exist. The threshold is held in cross-multiplied integer
-    form end to end; ``jaccard`` is one exact IEEE division at the
-    edge. This replaces the 'read the docstring and pick
-    minhash_lsh_pairs yourself' step for corpora where the
-    inverted-index join's candidate volume has gone quadratic."""
+    EXACTLY :func:`ngram_jaccard_pairs` at the same threshold —
+    pytest-pinned; above it, candidates come from banded min-md5
+    signatures (bands matched to the threshold's S-curve midpoint via
+    ``choose_lsh_bands``) with exact verification, so emitted pairs
+    still carry true Jaccard values and no false positives exist. The
+    routing decision travels on ``__setsim_path__`` /
+    ``__setsim_meta__``."""
     from .similarity import set_similarity_join_auto
 
     # One shingle pass: the router's two scalar stats jobs and the
@@ -2410,19 +2276,12 @@ def near_dup_pairs_auto(
     # would pin one CacheManager entry per distinct parameterization
     # forever; checkpoint blocks are ContextCleaner-reclaimed once the
     # caller drops the result, so parameter sweeps stay flat
-    # (pytest-pinned: test_dedup.py cached-entry no-growth). At 100 TB
-    # the equivalent is a checkpointed shingle table (or precomputed
-    # stats passed via stats=, skipping the jobs).
+    # (pytest-pinned: test_dedup.py cached-entry no-growth).
     sh = doc_shingles(docs, n, id_col, text_col).localCheckpoint(eager=True)
     pairs = set_similarity_join_auto(
-        sh, "doc_id", "shingle", threshold_num, threshold_den, **auto_kwargs
+        sh, "doc_id", "shingle", threshold_num, threshold_den
     )
-    union_sz = F.col("sz_a") + F.col("sz_b") - F.col("n_shared")
-    out = pairs.select(
-        F.col("key_a").alias("doc_a"),
-        F.col("key_b").alias("doc_b"),
-        (F.col("n_shared") / union_sz.cast("double")).alias("jaccard"),
-    )
+    out = doc_jaccard(pairs)
     out.__setsim_path__ = pairs.__setsim_path__
     out.__setsim_meta__ = pairs.__setsim_meta__
     return out

@@ -14,10 +14,13 @@ partitionings.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double_array, cosine_similarity
+from .dedup import minhash_band_rows
 
 
 def _ranked_topk(pairs: DataFrame, k: int) -> DataFrame:
@@ -893,6 +896,34 @@ def ivf_health_report_df(
     )
 
 
+def _check_threshold(threshold_num: int, threshold_den: int) -> tuple[int, int]:
+    """The set-similarity threshold num/den as ints, 1 <= num <= den."""
+    num, den = int(threshold_num), int(threshold_den)
+    if not 1 <= num <= den:
+        raise ValueError(
+            "set-similarity threshold must satisfy 1 <= num <= den: "
+            f"got {threshold_num}/{threshold_den} (num=0 would make the "
+            "join-based candidate paths diverge — no equi-join method "
+            "can emit zero-overlap pairs)"
+        )
+    return num, den
+
+
+def _size_ok(sz_a, sz_b, num: int, den: int):
+    """Integer size-ratio prune: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|),
+    so a pair with den·min < num·max can never qualify."""
+    return F.lit(den) * F.least(sz_a, sz_b) >= F.lit(num) * F.greatest(
+        sz_a, sz_b
+    )
+
+
+def _qualifying(pairs: DataFrame, num: int, den: int) -> DataFrame:
+    """Keep the (key_a, key_b, n_shared, sz_a, sz_b) rows with
+    den·|∩| ≥ num·|∪|, |∪| = sz_a + sz_b − |∩|."""
+    union_sz = F.col("sz_a") + F.col("sz_b") - F.col("n_shared")
+    return pairs.filter(F.lit(den) * F.col("n_shared") >= F.lit(num) * union_sz)
+
+
 def set_similarity_join(
     sets: DataFrame,
     key_col: str,
@@ -901,173 +932,122 @@ def set_similarity_join(
     threshold_den: int,
     dense_bitmap_domain: int | None = None,
 ) -> DataFrame:
-    """Exact Jaccard set-similarity self-join: all key pairs whose
-    item sets satisfy ``den·|∩| ≥ num·|∪|`` (i.e. J ≥ num/den, held in
-    cross-multiplied INTEGER form end to end — no float boundary can
-    flip a pair; cf. the reference's all-pairs user-overlap loops,
-    count_*.py).
+    """Exact Jaccard set-similarity self-join — the one exact
+    implementation, for documents (``ngram_jaccard_pairs``,
+    ``near_dup_pairs_auto`` over ``doc_shingles``) and for any other
+    (key, item) set table: all key pairs whose item sets satisfy
+    ``den·|∩| ≥ num·|∪|`` (i.e. J ≥ num/den, held in cross-multiplied
+    INTEGER form end to end — no float boundary can flip a pair; cf.
+    the reference's all-pairs user-overlap loops, count_*.py).
 
     Returns (key_a, key_b, n_shared, sz_a, sz_b) with key_a < key_b.
+    On every path sz counts ROWS (duplicate (key, item) rows and NULL
+    items included) and n_shared counts DISTINCT non-NULL shared items
+    — NULL never matches, as in an inner join on item.
 
-    Without ``dense_bitmap_domain`` it takes the 100 TB path — the
-    df-ranked prefix-filter lemma proven for documents in
-    dedup.py:ngram_jaccard_pairs, applied to any (key, item) set
-    table:
+    Three physical paths, all exact (pytest-pinned against an
+    independent Python model in tests/test_setsim_property.py):
 
-    * rank each key's items by global document frequency asc
-      (tie: item asc — a shared total order);
-    * a key of size s only emits its ``s − ⌈t·s⌉ + 1`` rarest items
-      as join keys (⌈t·s⌉ computed in exact integer arithmetic:
-      ``(num·s + den − 1) div den`` — no float fuzz anywhere);
-    * lemma: J(A,B) ≥ t implies |A∩B| ≥ ⌈t·max(|A|,|B|)⌉ ≥ ⌈t·|X|⌉
-      for each side (the size bound min ≥ t·max is itself implied by
-      J ≥ t, so the integer size-ratio prune inside the candidate
-      join never drops a qualifying pair), and two sets with overlap
-      ≥ α share an element within their (|X|−α+1)-prefixes under any
-      shared total order. NULL items are private elements — they
-      count toward sz (matching the inner-join-on-item semantics
-      where NULL never matches) and can sit in a prefix, but the
-      lemma's rank-counting argument is indifferent to unmatchable
-      elements, so exactness holds.
+    * **single join** — the inverted index self-joined on item, |∩|
+      counted per pair: the fewest stages, right where no item is
+      hot, quadratic in the hottest item's key frequency;
+    * **prefix filter** (the 100 TB shape, Chaudhuri et al. ICDE 2006;
+      Bayardo et al. WWW 2007) — rank each key's items by global
+      document frequency asc (tie: item asc — a shared total order); a
+      key of size s only emits its ``s − ⌈t·s⌉ + 1`` rarest items as
+      join keys (⌈t·s⌉ in exact integer arithmetic:
+      ``(num·s + den − 1) div den``). Lemma: J(A,B) ≥ t implies
+      |A∩B| ≥ ⌈t·max(|A|,|B|)⌉ ≥ ⌈t·|X|⌉ for each side (the size
+      bound min ≥ t·max is itself implied by J ≥ t, so the integer
+      size-ratio prune inside the candidate join never drops a
+      qualifying pair), and two sets with overlap ≥ α share an
+      element within their (|X|−α+1)-prefixes under any shared total
+      order. NULL items are private elements — they count toward sz
+      and can sit in a prefix, but the lemma's rank-counting argument
+      is indifferent to unmatchable elements, so exactness holds. Hot
+      items (a popular cell / a stopword shingle) have maximal df, so
+      they sort to every key's *suffix* and never become join keys —
+      the m² reducer blowup on an item shared by m keys is capped at
+      the number of keys rare-listing it;
+    * **dense bitmap** (``dense_bitmap_domain=D``; requires every
+      non-NULL item to be a long in [0, D)) — below.
 
-    Physical plan choices (measured at sf0.1, SCALE.md):
+    Without ``dense_bitmap_domain`` the path is chosen by
+    :func:`choose_exact_path` from :func:`set_similarity_stats` (one
+    scalar aggregate); :func:`set_similarity_join_auto` reuses the
+    stats it already computed for the exact→LSH handoff.
 
-    * item df comes from a map-side-combined ``groupBy(item).count()``
-      joined back (AQE broadcasts the item-count table when small) —
-      the full set table never shuffles by item, unlike a
-      ``Window.partitionBy(item)`` which exchanges every row;
-    * sz and the rarity rank share one exchange on key;
-    * candidate pairs are ``distinct``-ed on the two key columns only
-      (a pair sharing p prefix items materializes p times; deduping
-      narrow rows halves the exchange vs carrying sizes through);
-    * verification joins the per-key sorted item arrays (built on the
-      same key partitioning) and takes ``size(array_intersect)`` —
-      exact, so the prefix filter is purely a physical-plan choice:
-      it produces the pair set of the independent Python model
-      (pytest-pinned in tests/test_similarity.py and
-      tests/test_setsim_property.py).
+    Prefix-path plan choices (measured at sf0.1, SCALE.md): item df
+    comes from a map-side-combined ``groupBy(item).count()`` joined
+    back (AQE broadcasts the item-count table when small) — the full
+    set table never shuffles by item, unlike a
+    ``Window.partitionBy(item)``; sz and the rarity rank share one
+    exchange on key; candidate pairs are ``distinct``-ed on the two
+    key columns only; verification joins the per-key sorted item
+    arrays and takes ``size(array_intersect)``.
 
-    Hot items (a popular cell / a stopword shingle) have maximal df,
-    so they sort to every key's *suffix* and never become join keys —
-    the m² reducer blowup on an item shared by m keys is capped at
-    the number of keys rare-listing it. In a *dense* regime (low
-    threshold, near-uniform df, qualifying pairs a constant fraction
-    of all pairs — the covisit query) no exact method is subquadratic
-    in pairs; the prefix path still wins by generating candidates
-    through equi-joins Spark executes as hash joins (measured 4.6 s
-    vs 17 s for a broadcast nested-loop cross-join at sf0.1), and the
-    LSH family (minhash_lsh_pairs) is the approximation measured
-    against this operator's exact output.
-
-    ``dense_bitmap_domain=D`` selects the DENSE-regime path (exact;
-    requires every non-NULL item to be a long in [0, D)): each key's
-    set becomes a ⌈D/64⌉-word bitmap, qualifying pairs are enumerated
-    by a broadcast nested-loop self-join over the (small) key table
-    with the integer size-ratio prune, and |∩| is
-    Σ bit_count(word_a & word_b) — pure integer lanes, no per-pair
-    hash sets. Measured 1.4 s vs 4.7 s (prefix) vs 10.4 s
-    (single-join) on the covisit workload at sf0.1, where qualifying
-    pairs are ~20% of ALL key pairs and no candidate filter can
-    prune: when the output itself is Ω(U²), inverted-index candidate
-    generation only adds exchanges. This path is right when the KEY
-    table is broadcastable (≤ ~10M keys × D/8 bytes); past that, a
-    dense workload's exact output is itself quadratic — the LSH
-    family is the 100 TB answer, measured against this operator's
-    exact semantics at sampled scale. Identical sets are collapsed to
-    one representative before the pair loop and expanded after it
-    (the same quotient as the LSH path). Since round 7 that handoff is
-    AUTOMATIC: :func:`set_similarity_join_auto` estimates the
-    candidate bound from cheap df statistics and routes to
-    :func:`set_similarity_join_lsh` (sub-quadratic candidates, exact
-    verification) above the budget — callers who do not know their
-    regime should use it instead of this function.
+    In a *dense* regime (low threshold, near-uniform df, qualifying
+    pairs a constant fraction of all pairs — the covisit query) no
+    exact method is subquadratic in pairs. There the bitmap path turns
+    each key's set into a ⌈D/64⌉-word bitmap, enumerates pairs by a
+    broadcast nested-loop self-join over the (small) key table with
+    the integer size-ratio prune, and takes |∩| as
+    Σ bit_count(word_a & word_b) — measured 1.4 s vs 4.7 s (prefix) vs
+    10.4 s (single join) on the covisit workload at sf0.1, where
+    qualifying pairs are ~20% of ALL key pairs. It is right while the
+    KEY table is broadcastable (≤ ~10M keys × D/8 bytes); past that a
+    dense workload's exact output is itself quadratic and the LSH
+    family (:func:`set_similarity_join_auto` hands off to
+    :func:`set_similarity_join_lsh`) is the 100 TB answer. Identical
+    sets are collapsed to one representative before the pair loop and
+    expanded after it (the same quotient as the LSH path).
     """
-    if not 1 <= int(threshold_num) <= int(threshold_den):
-        raise ValueError(
-            "set-similarity threshold must satisfy 1 <= num <= den: "
-            f"got {threshold_num}/{threshold_den} (num=0 would make the "
-            "join-based candidate paths diverge — no equi-join method "
-            "can emit zero-overlap pairs)"
-        )
-    k, it = F.col(key_col), F.col(item_col)
-    num, den = int(threshold_num), int(threshold_den)
-    base = sets.select(k.alias("key"), it.alias("item"))
+    num, den = _check_threshold(threshold_num, threshold_den)
+    base = sets.select(F.col(key_col).alias("key"), F.col(item_col).alias("item"))
     if dense_bitmap_domain is not None:
-        nwords = (int(dense_bitmap_domain) + 63) // 64
-        bm = (
-            base.groupBy("key")
-            .agg(
-                F.count("*").alias("sz"),
-                F.expr("filter(collect_list(item), c -> c IS NOT NULL)").alias(
-                    "arr"
-                ),
-            )
-            .withColumn(
-                "bm",
-                F.expr(
-                    f"transform(sequence(0, {nwords - 1}), w -> "
-                    "aggregate(filter(arr, c -> int(c div 64) = w), 0L, "
-                    "(acc, c) -> acc | shiftleft(1L, int(c % 64))))"
-                ),
-            )
-            .drop("arr")
+        return _bitmap_join(base, num, den, int(dense_bitmap_domain))
+    return _exact_join(base, num, den, set_similarity_stats(base, "key", "item"))
+
+
+def _exact_join(base: DataFrame, num: int, den: int, stats: dict) -> DataFrame:
+    """The single-join or prefix path over a (key, item) table, as
+    :func:`choose_exact_path` decides from ``stats``."""
+    if choose_exact_path(stats) == "prefix":
+        return _prefix_join(base, num, den)
+    return _single_join(base, num, den)
+
+
+def _single_join(base: DataFrame, num: int, den: int) -> DataFrame:
+    # sz counts every row; the join side keeps one row per distinct
+    # non-NULL (key, item), so |∩| has the set semantics of the prefix
+    # path's array_intersect. The distinct rides the sz window's key
+    # partitioning (no exchange).
+    aug = (
+        base.withColumn("sz", F.count(F.lit(1)).over(Window.partitionBy("key")))
+        .filter(F.col("item").isNotNull())
+        .distinct()
+    )
+    common = (
+        aug.alias("a")
+        .join(
+            aug.alias("b"),
+            (F.col("a.item") == F.col("b.item"))
+            & (F.col("a.key") < F.col("b.key"))
+            & _size_ok(F.col("a.sz"), F.col("b.sz"), num, den),
         )
-        # quotient by set equality BEFORE the U² pair loop — the same
-        # collapse as the LSH path (docstring there): the bitmap + sz
-        # IS a canonical encoding of the set (distinct items in the
-        # words, NULL count in sz − bit count), so the shared digest
-        # applies directly
-        bm = _with_set_digest(bm, "bm").localCheckpoint(eager=True)
-        grp, work = _identical_set_groups(bm)
-        # the checkpointed key table is tiny — AQE would coalesce it
-        # to one partition and serialize the nested-loop join;
-        # repartition restores task parallelism on the streamed side
-        par = 2 * sets.sparkSession.sparkContext.defaultParallelism
-        a = work.select(
-            F.col("key").alias("key_a"),
-            F.col("sz").alias("sz_a"),
-            F.col("bm").alias("bm_a"),
-        ).repartition(par)
-        b = work.select(
-            F.col("key").alias("key_b"),
-            F.col("sz").alias("sz_b"),
-            F.col("bm").alias("bm_b"),
+        .groupBy(
+            F.col("a.key").alias("key_a"),
+            F.col("b.key").alias("key_b"),
+            F.col("a.sz").alias("sz_a"),
+            F.col("b.sz").alias("sz_b"),
         )
-        size_ok = F.lit(den) * F.least("sz_a", "sz_b") >= F.lit(
-            num
-        ) * F.greatest("sz_a", "sz_b")
-        common = (
-            a.join(
-                F.broadcast(b),
-                (F.col("key_a") < F.col("key_b")) & size_ok,
-            )
-            .withColumn(
-                "n_shared",
-                F.expr(
-                    "aggregate(zip_with(bm_a, bm_b, "
-                    "(x, y) -> bigint(bit_count(x & y))), 0L, "
-                    "(acc, v) -> acc + v)"
-                ),
-            )
-            .select("key_a", "key_b", "n_shared", "sz_a", "sz_b")
-        )
-        union_d = F.col("sz_a") + F.col("sz_b") - F.col("n_shared")
-        qual = common.filter(
-            F.lit(den) * F.col("n_shared") >= F.lit(num) * union_d
-        )
-        self_groups = _qualifying_self_groups(
-            work,
-            grp,
-            F.expr(
-                "aggregate(transform(bm, x -> "
-                "bigint(bit_count(x))), 0L, (acc, v) -> acc + v)"
-            ),
-            num,
-            den,
-        )
-        return _expand_identical_groups(
-            qual, bm.select("__pdig", "key"), grp, self_groups
-        )
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .select("key_a", "key_b", "n_shared", "sz_a", "sz_b")
+    )
+    return _qualifying(common, num, den)
+
+
+def _prefix_join(base: DataFrame, num: int, den: int) -> DataFrame:
     # df via pre-aggregated join (combine-heavy shuffle of counts,
     # not rows; AQE broadcasts the small side). Left join keeps
     # NULL-item rows (df never read for them past the rank).
@@ -1090,10 +1070,6 @@ def set_similarity_join(
     prefix = aug.filter(
         F.col("rk") <= F.col("sz") - ceil_ts + F.lit(1)
     ).select("key", "item", "sz")
-    size_ok = (
-        F.lit(den) * F.least(F.col("a.sz"), F.col("b.sz"))
-        >= F.lit(num) * F.greatest(F.col("a.sz"), F.col("b.sz"))
-    )
     # PPJoin's positional filter was tried here and measured
     # SLOWER at sf0.1 (6.9 s vs 4.7 s): the per-row rank algebra
     # on 11.7M joined rows costs more than the pruned rows save.
@@ -1103,7 +1079,7 @@ def set_similarity_join(
             prefix.alias("b"),
             (F.col("a.item") == F.col("b.item"))
             & (F.col("a.key") < F.col("b.key"))
-            & size_ok,
+            & _size_ok(F.col("a.sz"), F.col("b.sz"), num, den),
         )
         .select(
             F.col("a.key").alias("key_a"),
@@ -1112,7 +1088,7 @@ def set_similarity_join(
         .distinct()
     )
     # collect_list drops NULL items (they can never intersect);
-    # sz still counts them, matching the bitmap path.
+    # sz still counts them, matching the other paths.
     key_sets = aug.groupBy("key").agg(
         F.sort_array(F.collect_list("item")).alias("arr"),
         F.max("sz").alias("sz"),
@@ -1137,14 +1113,85 @@ def set_similarity_join(
         .select(
             "key_a",
             "key_b",
-            F.size(F.array_intersect("arr_a", "arr_b")).alias("n_shared"),
+            F.size(F.array_intersect("arr_a", "arr_b"))
+            .cast("long")
+            .alias("n_shared"),
             "sz_a",
             "sz_b",
         )
     )
-    union_sz = F.col("sz_a") + F.col("sz_b") - F.col("n_shared")
-    return common.filter(
-        F.lit(den) * F.col("n_shared") >= F.lit(num) * union_sz
+    return _qualifying(common, num, den)
+
+
+def _bitmap_join(base: DataFrame, num: int, den: int, domain: int) -> DataFrame:
+    nwords = (domain + 63) // 64
+    bm = (
+        base.groupBy("key")
+        .agg(
+            F.count("*").alias("sz"),
+            F.expr("filter(collect_list(item), c -> c IS NOT NULL)").alias(
+                "arr"
+            ),
+        )
+        .withColumn(
+            "bm",
+            F.expr(
+                f"transform(sequence(0, {nwords - 1}), w -> "
+                "aggregate(filter(arr, c -> int(c div 64) = w), 0L, "
+                "(acc, c) -> acc | shiftleft(1L, int(c % 64))))"
+            ),
+        )
+        .drop("arr")
+    )
+    # quotient by set equality BEFORE the U² pair loop — the same
+    # collapse as the LSH path (docstring there): the bitmap + sz
+    # IS a canonical encoding of the set (distinct items in the
+    # words, NULL count in sz − bit count), so the shared digest
+    # applies directly
+    bm = _with_set_digest(bm, "bm").localCheckpoint(eager=True)
+    grp, work = _identical_set_groups(bm)
+    # the checkpointed key table is tiny — AQE would coalesce it
+    # to one partition and serialize the nested-loop join;
+    # repartition restores task parallelism on the streamed side
+    par = 2 * base.sparkSession.sparkContext.defaultParallelism
+    a = work.select(
+        F.col("key").alias("key_a"),
+        F.col("sz").alias("sz_a"),
+        F.col("bm").alias("bm_a"),
+    ).repartition(par)
+    b = work.select(
+        F.col("key").alias("key_b"),
+        F.col("sz").alias("sz_b"),
+        F.col("bm").alias("bm_b"),
+    )
+    common = (
+        a.join(
+            F.broadcast(b),
+            (F.col("key_a") < F.col("key_b"))
+            & _size_ok(F.col("sz_a"), F.col("sz_b"), num, den),
+        )
+        .withColumn(
+            "n_shared",
+            F.expr(
+                "aggregate(zip_with(bm_a, bm_b, "
+                "(x, y) -> bigint(bit_count(x & y))), 0L, "
+                "(acc, v) -> acc + v)"
+            ),
+        )
+        .select("key_a", "key_b", "n_shared", "sz_a", "sz_b")
+    )
+    self_groups = _qualifying_self_groups(
+        work,
+        grp,
+        F.expr(
+            "aggregate(transform(bm, x -> "
+            "bigint(bit_count(x))), 0L, (acc, v) -> acc + v)"
+        ),
+        num,
+        den,
+    )
+    return _expand_identical_groups(
+        _qualifying(common, num, den), bm.select("__pdig", "key"), grp, self_groups
     )
 
 
@@ -1152,48 +1199,64 @@ def set_similarity_stats(
     sets: DataFrame, key_col: str, item_col: str
 ) -> dict:
     """Cheap statistics that bound the exact join's candidate volume —
-    the inputs to :func:`choose_set_similarity_path`. Two scalar-only
-    aggregate jobs over the (key, item) table (the same item-df
-    aggregate the prefix filter computes anyway; only scalars reach
-    the driver):
+    the inputs to both route rules, :func:`choose_exact_path` and
+    :func:`choose_set_similarity_path`. One scalar-only aggregate
+    action over the (key, item) table: a grouping-sets count per key
+    and per item in one shuffle, then one global fold (only scalars
+    reach the driver):
 
-    - ``n_rows`` / ``n_keys``: table size and distinct key count;
+    - ``n_rows`` / ``n_keys``: table size and distinct non-NULL key
+      count;
     - ``cand_pairs``: Σ_item df·(df−1)/2 — EVERY pair sharing ≥1 item
       is counted by at least one shared item, so this upper-bounds
       both the qualifying-pair count (a qualifying pair shares
       ⌈t·max(sz)⌉ ≥ 1 items) and the inverted-index join's generated
       candidate rows;
-    - ``max_df``: the hottest item's key count (the m² blowup knob).
+    - ``max_df``: the hottest non-NULL item's key count (the m² blowup
+      knob).
 
-    A caller that already knows these (at 100 TB: from catalog NDV
-    statistics) passes them to :func:`set_similarity_join_auto` as
-    ``stats=`` and no stats job runs; the decision rule only needs
-    orders of magnitude."""
-    k, it = F.col(key_col), F.col(item_col)
-    base = sets.select(k.alias("key"), it.alias("item"))
-    r1 = base.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("key").alias("n_keys"),
-    ).collect()[0]
-    r2 = (
-        base.filter(F.col("item").isNotNull())
-        .groupBy("item")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(
-            F.coalesce(
-                F.sum(F.col("df") * (F.col("df") - F.lit(1)) / F.lit(2)),
-                F.lit(0.0),
-            ).alias("cand_pairs"),
-            F.coalesce(F.max("df"), F.lit(0)).alias("max_df"),
-        )
-        .collect()[0]
+    The decision rules only need orders of magnitude."""
+    base = sets.select(F.col(key_col).alias("key"), F.col(item_col).alias("item"))
+    # grouping_id: 1 on the per-key rows, 2 on the per-item rows
+    counts = base.groupingSets([["key"], ["item"]], "key", "item").agg(
+        F.grouping_id().alias("g"), F.count(F.lit(1)).alias("c")
     )
+    per_key = F.col("g") == 1
+    per_item = (F.col("g") == 2) & F.col("item").isNotNull()
+    row = counts.agg(
+        F.coalesce(F.sum(F.when(per_key, F.col("c"))), F.lit(0)).alias("n_rows"),
+        F.count(F.when(per_key & F.col("key").isNotNull(), 1)).alias("n_keys"),
+        F.coalesce(
+            F.sum(F.when(per_item, F.col("c") * (F.col("c") - 1) / 2)),
+            F.lit(0.0),
+        ).alias("cand_pairs"),
+        F.coalesce(F.max(F.when(per_item, F.col("c"))), F.lit(0)).alias("max_df"),
+    ).collect()[0]
     return {
-        "n_rows": int(r1.n_rows),
-        "n_keys": int(r1.n_keys),
-        "cand_pairs": float(r2.cand_pairs),
-        "max_df": int(r2.max_df),
+        "n_rows": int(row.n_rows),
+        "n_keys": int(row.n_keys),
+        "cand_pairs": float(row.cand_pairs),
+        "max_df": int(row.max_df),
     }
+
+
+def choose_exact_path(stats: dict) -> str:
+    """Pick the exact join's candidate generation from
+    :func:`set_similarity_stats` output: ``"single"`` or ``"prefix"``.
+
+    The single join's reducer work on one item shared by m keys is
+    ~m² candidate rows, so it degrades wherever an item's key
+    frequency is ≫ √N (SCALE.md records the measured crossover on
+    document shingles); the prefix filter structurally caps that
+    blowup but pays ~2 extra stages — measured 1.6× slower on a
+    *uniform* document corpus where no shingle is hot. Rule: prefix
+    only when max_df > 4·√n_keys. On the committed corpora the 3-gram
+    shingle max_df is 9 / 7 / 25 against 4·√N = 89 / 89 / 283 at
+    sf0.001 / sf0.01 / sf0.1, so ``ngram_jaccard_pairs`` runs the
+    single join at every scale."""
+    if stats["max_df"] > 4.0 * math.sqrt(stats["n_keys"]):
+        return "prefix"
+    return "single"
 
 
 #: The exact→LSH handoff: above this many candidate partners per key
@@ -1203,11 +1266,7 @@ PAIRS_PER_KEY_BUDGET = 64
 MIN_LSH_KEYS = 4096
 
 
-def choose_set_similarity_path(
-    stats: dict,
-    pairs_per_key_budget: int = PAIRS_PER_KEY_BUDGET,
-    min_lsh_keys: int = MIN_LSH_KEYS,
-) -> str:
+def choose_set_similarity_path(stats: dict) -> str:
     """Route ``set_similarity_join_auto`` from :func:`set_similarity_stats`
     output: ``"exact"`` or ``"lsh"``.
 
@@ -1215,19 +1274,19 @@ def choose_set_similarity_path(
     (SCALE.md setsim table: 4× users → 16.04× qualifying pairs — the
     documented Ω(U²) regime of any EXACT method): when the candidate
     bound says the average key would meet more than
-    ``pairs_per_key_budget`` partners, candidate volume is growing
+    :data:`PAIRS_PER_KEY_BUDGET` partners, candidate volume is growing
     with U² rather than U and no exact filter can prune it — the
     MinHash-LSH path (sub-quadratic candidate generation, exact
     verification of candidates) is the only shape that survives a
     100× scale-up. Below the budget, or on small key tables
-    (< ``min_lsh_keys``, where U² is trivially affordable and exact
-    recall is free), the exact path keeps its guarantee."""
+    (< :data:`MIN_LSH_KEYS`, where U² is trivially affordable and
+    exact recall is free), the exact path keeps its guarantee."""
     n_keys = stats["n_keys"]
-    if n_keys < min_lsh_keys:
+    if n_keys < MIN_LSH_KEYS:
         return "exact"
     # candidate bound can never exceed all-pairs
     est = min(stats["cand_pairs"], n_keys * (n_keys - 1) / 2.0)
-    if est > float(pairs_per_key_budget) * n_keys:
+    if est > float(PAIRS_PER_KEY_BUDGET) * n_keys:
         return "lsh"
     return "exact"
 
@@ -1385,15 +1444,8 @@ def set_similarity_join_lsh(
     overlap. Output is IDENTICAL to the uncollapsed join
     (pytest-pinned): identical sets always collide on every band, so
     no within- or cross-group pair can be lost by collapsing."""
-    if not 1 <= int(threshold_num) <= int(threshold_den):
-        raise ValueError(
-            "set-similarity threshold must satisfy 1 <= num <= den: "
-            f"got {threshold_num}/{threshold_den} (num=0 would make the "
-            "join-based candidate paths diverge — no equi-join method "
-            "can emit zero-overlap pairs)"
-        )
+    num, den = _check_threshold(threshold_num, threshold_den)
     kc, it = F.col(key_col), F.col(item_col)
-    num, den = int(threshold_num), int(threshold_den)
     base = sets.select(kc.alias("key"), it.alias("item"))
     aggs = [
         F.min(
@@ -1435,19 +1487,7 @@ def set_similarity_join_lsh(
         ]
         sig = base.groupBy("key").agg(*aggs)
         n_shared_expr = F.size(F.array_intersect("pl_a", "pl_b")).cast("long")
-    assert k % bands == 0, "k must divide evenly into bands"
-    r = k // bands
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    "|", *[F.col(f"mh_{i}") for i in range(b * r, (b + 1) * r)]
-                )
-            ).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]
+    bb = minhash_band_rows(k, bands)
     # One materialization: the signature/payload table feeds the band
     # table (both self-join sides), the verification join-backs, and
     # (when collapsing) the group membership/expansion joins.
@@ -1479,7 +1519,7 @@ def set_similarity_join_lsh(
         work = sig
     bands_df = (
         work.filter(F.col("mh_0").isNotNull())
-        .select("key", "sz", F.explode(F.array(*band_structs)).alias("bb"))
+        .select("key", "sz", bb.alias("bb"))
         .select(
             "key",
             "sz",
@@ -1487,9 +1527,6 @@ def set_similarity_join_lsh(
             F.col("bb.band_hash").alias("band_hash"),
         )
     )
-    size_ok = F.lit(den) * F.least("sz_a", "sz_b") >= F.lit(
-        num
-    ) * F.greatest("sz_a", "sz_b")
     a = bands_df.select(
         F.col("key").alias("key_a"),
         F.col("sz").alias("sz_a"),
@@ -1509,7 +1546,10 @@ def set_similarity_join_lsh(
     # join back per side afterwards, sized by the deduped pair set.
     cand = (
         a.join(b_, ["band", "band_hash"])
-        .filter((F.col("key_a") < F.col("key_b")) & size_ok)
+        .filter(
+            (F.col("key_a") < F.col("key_b"))
+            & _size_ok(F.col("sz_a"), F.col("sz_b"), num, den)
+        )
         .select("key_a", "key_b")
         .distinct()
     )
@@ -1534,10 +1574,7 @@ def set_similarity_join_lsh(
         .withColumn("n_shared", n_shared_expr)
         .select("key_a", "key_b", "n_shared", "sz_a", "sz_b")
     )
-    union_sz = F.col("sz_a") + F.col("sz_b") - F.col("n_shared")
-    qual = common.filter(
-        F.lit(den) * F.col("n_shared") >= F.lit(num) * union_sz
-    )
+    qual = _qualifying(common, num, den)
     if not collapse_identical:
         return qual
     # Expansion back to keys. Cross-group: every member pair of a
@@ -1610,14 +1647,12 @@ def choose_lsh_params(
     monotone increasing in J, meeting the target at the threshold
     meets it for EVERY qualifying pair. Falls back to the best-effort
     (1, LSH_MAX_K) banding when even r=1 cannot reach the target
-    within the cap — the caller reads the achieved probability from
-    ``__setsim_meta__`` (never a silent shortfall).
+    within the cap — :func:`lsh_collision_probability` gives the
+    achieved probability (never a silent shortfall).
 
     Signature cost is k min-md5 aggregates per key — linear in k, so
     the contract's price is explicit: target 0.8 at t=0.3 needs k=36,
     0.95 needs k=64 (pytest-pinned), vs the midpoint default's 16."""
-    import math
-
     if not 0.0 < target_recall < 1.0:
         raise ValueError(f"target_recall must be in (0,1): {target_recall}")
     t = threshold_num / threshold_den
@@ -1633,7 +1668,7 @@ def choose_lsh_params(
             best = (r, needed)
             break
     if best is None:
-        best = (1, LSH_MAX_K)  # best effort; meta reports the achieved P
+        best = (1, LSH_MAX_K)  # best effort below the target
     r, b = best
     return r * b, b
 
@@ -1644,88 +1679,49 @@ def set_similarity_join_auto(
     item_col: str,
     threshold_num: int,
     threshold_den: int,
-    pairs_per_key_budget: int = PAIRS_PER_KEY_BUDGET,
-    min_lsh_keys: int = MIN_LSH_KEYS,
-    stats: dict | None = None,
-    target_recall: float | None = None,
 ) -> DataFrame:
     """Cost-routed set-similarity join — the round-6 probe's measured
     dense-regime Ω(U²) bound (SCALE.md setsim: 4× users → 16.04×
     qualifying pairs) encoded as an automatic handoff instead of a
-    docstring a user has to read. Estimates the candidate-pair bound
-    from cheap df statistics (:func:`set_similarity_stats`) and routes
-    through :func:`choose_set_similarity_path`:
+    docstring a user has to read. Computes :func:`set_similarity_stats`
+    once (one scalar aggregate) and routes through
+    :func:`choose_set_similarity_path`:
 
-    - sparse regime → :func:`set_similarity_join` (exact, the
-      df-ranked prefix filter) — output EQUAL to the exact join by
+    - sparse regime → the exact :func:`set_similarity_join`, its
+      single-join vs prefix path chosen by :func:`choose_exact_path`
+      from the same stats — output EQUAL to the exact join by
       construction;
-    - dense regime (candidate bound > ``pairs_per_key_budget``
-      partners/key over ≥ ``min_lsh_keys`` keys) →
-      :func:`set_similarity_join_lsh` — sub-quadratic candidate
-      generation, exact verification, output ⊆ the exact pair set.
+    - dense regime (candidate bound > :data:`PAIRS_PER_KEY_BUDGET`
+      partners/key over ≥ :data:`MIN_LSH_KEYS` keys) →
+      :func:`set_similarity_join_lsh` over 16 hashes banded at the
+      threshold's S-curve midpoint (:func:`choose_lsh_bands`) —
+      sub-quadratic candidate generation, exact verification, output
+      ⊆ the exact pair set, recall ~0.5 AT the threshold boundary by
+      construction. A caller that needs a recall floor calls
+      :func:`set_similarity_join_lsh` with :func:`choose_lsh_params`
+      banding directly (``near_dup_pairs_t90``,
+      ``user_covisit_lsh_t90``).
 
-    Pass precomputed ``stats`` (the :func:`set_similarity_stats` dict
-    shape — at 100 TB from catalog NDVs) to skip the two scalar agg
-    jobs — the caller's dict is never mutated. The chosen path is
-    recorded on the returned DataFrame's ``.__setsim_path__``
-    attribute (plan-pinning tests read it), and the full routing
-    decision — path, banding, and the recall contract when LSH is
-    chosen — on ``.__setsim_meta__``.
-
-    **Recall contract** (round 8): by default the LSH route uses the
-    midpoint banding over 16 hashes (``choose_lsh_bands``) — measured
-    recall ~0.5 AT the threshold boundary, the S-curve midpoint by
-    construction. Pass ``target_recall`` (e.g. 0.8 or 0.95) to instead
-    size the signature via :func:`choose_lsh_params` so P(candidate) ≥
-    target for EVERY pair at J ≥ threshold. The achieved probability,
-    the banding, and its cost (k grows with the target) are surfaced
-    in ``__setsim_meta__['expected_recall_at_threshold']`` etc., so a
-    caller crossing the exact→LSH budget can SEE the semantics change
-    instead of inferring it from missing pairs. An unreachable target
-    degrades to best-effort at :data:`LSH_MAX_K` with the shortfall
-    visible in the meta, never silently."""
-    if not 1 <= int(threshold_num) <= int(threshold_den):
-        raise ValueError(
-            "set-similarity threshold must satisfy 1 <= num <= den: "
-            f"got {threshold_num}/{threshold_den} (num=0 would make the "
-            "join-based candidate paths diverge — no equi-join method "
-            "can emit zero-overlap pairs)"
-        )
-    if stats is None:
-        stats = set_similarity_stats(sets, key_col, item_col)
-    path = choose_set_similarity_path(
-        stats, pairs_per_key_budget, min_lsh_keys
-    )
-    t = threshold_num / threshold_den
+    The chosen path is recorded on the returned DataFrame's
+    ``.__setsim_path__`` attribute (plan-pinning tests read it), and
+    the routing decision — path, threshold, banding and the expected
+    recall at the threshold — on ``.__setsim_meta__``."""
+    num, den = _check_threshold(threshold_num, threshold_den)
+    base = sets.select(F.col(key_col).alias("key"), F.col(item_col).alias("item"))
+    stats = set_similarity_stats(base, "key", "item")
+    path = choose_set_similarity_path(stats)
+    t = num / den
     meta: dict = {"path": path, "threshold": t}
     if path == "lsh":
-        if target_recall is not None:
-            # explicit recall contract: invert the S-curve so
-            # P(collide) >= target at J = threshold — see
-            # choose_lsh_params
-            k, bands = choose_lsh_params(
-                threshold_num, threshold_den, target_recall
-            )
-        else:
-            # banding matched to the threshold's S-curve midpoint —
-            # a fixed 8×2 would be mis-tuned for high-threshold
-            # (near-dup) workloads; see choose_lsh_bands
-            k = 16
-            bands = choose_lsh_bands(threshold_num, threshold_den, k)
+        k = 16
+        bands = choose_lsh_bands(num, den, k)
         out = set_similarity_join_lsh(
-            sets,
-            key_col,
-            item_col,
-            threshold_num,
-            threshold_den,
-            k=k,
-            bands=bands,
+            base, "key", "item", num, den, k=k, bands=bands
         )
         meta.update(
             k=k,
             bands=bands,
             rows_per_band=k // bands,
-            target_recall=target_recall,
             # family-average per-pair candidate probability; monotone
             # increasing in J, so the threshold value is the FLOOR over
             # all qualifying pairs
@@ -1734,9 +1730,7 @@ def set_similarity_join_auto(
             ),
         )
     else:
-        out = set_similarity_join(
-            sets, key_col, item_col, threshold_num, threshold_den
-        )
+        out = _exact_join(base, num, den, stats)
         meta.update(expected_recall_at_threshold=1.0)
     out.__setsim_path__ = path
     out.__setsim_meta__ = meta

@@ -28,8 +28,9 @@ def ts(s: str) -> dt.datetime:
 def setsim_handoff(monkeypatch):
     """Move the exact→LSH handoff of choose_set_similarity_path — the
     one decision point of the set-similarity and tf-cosine routers —
-    to ``(budget, min_keys)``. Returns the list of verdicts handed out
-    afterwards, so a test can prove the router it forced consulted it."""
+    to ``(budget, min_keys)`` by patching the module constants it
+    reads. Returns the list of verdicts handed out afterwards, so a
+    test can prove the router it forced consulted it."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
         similarity,
     )
@@ -38,12 +39,37 @@ def setsim_handoff(monkeypatch):
 
     def move(budget: int, min_keys: int) -> list[str]:
         verdicts: list[str] = []
+        monkeypatch.setattr(similarity, "PAIRS_PER_KEY_BUDGET", budget)
+        monkeypatch.setattr(similarity, "MIN_LSH_KEYS", min_keys)
 
-        def choose(stats, *_a, **_k):
-            verdicts.append(real(stats, budget, min_keys))
+        def choose(stats):
+            verdicts.append(real(stats))
             return verdicts[-1]
 
         monkeypatch.setattr(similarity, "choose_set_similarity_path", choose)
         return verdicts
 
     return move
+
+
+@pytest.fixture
+def exact_route(monkeypatch):
+    """Force choose_exact_path — the exact join's single-join vs
+    prefix decision — to ``route``. Returns the list of the stats
+    dicts it was consulted with, so a test can prove the join it
+    forced asked."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
+        similarity,
+    )
+
+    def force(route: str) -> list[dict]:
+        asked: list[dict] = []
+
+        def choose(stats):
+            asked.append(stats)
+            return route
+
+        monkeypatch.setattr(similarity, "choose_exact_path", choose)
+        return asked
+
+    return force

@@ -12,28 +12,19 @@ DOC_A2 = "the quick brown fox jumps over the lazy dog and runs far away tonight"
 DOC_B = "completely different text about spark query engines and big data systems"
 
 
-def _jaccard_route(df) -> bool:
-    """True when ``df`` was built on the prefix-filtered path (its
-    rarity rank is the only row_number in either plan)."""
-    return "row_number" in df._jdf.queryExecution().analyzed().toString()
+def _jaccard_route(df) -> str:
+    """The exact join's path ``df`` was built on: only the prefix
+    filter verifies candidates with array_intersect."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return "prefix" if "array_intersect" in plan else "single"
 
 
-def _forced_jaccard_pairs(monkeypatch, docs, prefix: bool, **kw) -> dict:
+def _forced_jaccard_pairs(exact_route, docs, route: str, **kw) -> dict:
     """ngram_jaccard_pairs with its route forced through the one
     decision point, checked to have been consulted and to have run."""
-    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
-        dedup,
-    )
-
-    handed = []
-
-    def choose(*_a, **_k):
-        handed.append(prefix)
-        return prefix
-
-    monkeypatch.setattr(dedup, "choose_jaccard_path", choose)
+    asked = exact_route(route)
     df = ngram_jaccard_pairs(docs, **kw)
-    assert handed == [prefix] and _jaccard_route(df) is prefix
+    assert len(asked) == 1 and _jaccard_route(df) == route
     return {(r.doc_a, r.doc_b): round(r.jaccard, 9) for r in df.collect()}
 
 
@@ -53,14 +44,16 @@ def test_exact_dedup_groups_identical_texts(spark):
 def test_ngram_jaccard_finds_near_dup(spark):
     pairs = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in ngram_jaccard_pairs(_docs(spark), n=3, threshold=0.5).collect()
+        for r in ngram_jaccard_pairs(
+            _docs(spark), n=3, threshold_num=1, threshold_den=2
+        ).collect()
     }
     assert pairs[(1, 4)] == 1.0  # exact dup
     assert 0.5 <= pairs[(1, 2)] < 1.0  # one word changed
     assert (1, 3) not in pairs
 
 
-def test_ngram_jaccard_prefix_filter_exact(spark, monkeypatch):
+def test_ngram_jaccard_prefix_filter_exact(spark, exact_route):
     """Prefix-filtered candidate generation is exact: identical pair set
     and jaccard values as the unfiltered inverted-index formulation, at
     multiple thresholds, on a corpus with a deliberately hot shared
@@ -77,26 +70,26 @@ def test_ngram_jaccard_prefix_filter_exact(spark, monkeypatch):
         ],
         "doc_id long, text string",
     )
-    for t in (0.3, 0.5, 0.8):
-        fast = _forced_jaccard_pairs(monkeypatch, docs, True, n=3, threshold=t)
-        slow = _forced_jaccard_pairs(
-            monkeypatch, docs, False, n=3, threshold=t
-        )
-        assert fast == slow, f"threshold {t}: {fast} != {slow}"
+    for num, den in ((3, 10), (1, 2), (4, 5)):
+        kw = dict(n=3, threshold_num=num, threshold_den=den)
+        fast = _forced_jaccard_pairs(exact_route, docs, "prefix", **kw)
+        slow = _forced_jaccard_pairs(exact_route, docs, "single", **kw)
+        assert fast == slow, f"threshold {num}/{den}: {fast} != {slow}"
 
 
-def test_ngram_jaccard_prefix_filter_exact_on_testdata(spark, monkeypatch):
+def test_ngram_jaccard_prefix_filter_exact_on_testdata(spark, exact_route):
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.sources.tables import (
         load_table,
     )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    auto = {
-        (r.doc_a, r.doc_b): round(r.jaccard, 9)
-        for r in ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect()
-    }
-    slow = _forced_jaccard_pairs(monkeypatch, docs, False, n=3, threshold=0.5)
-    assert auto == slow
+    kw = dict(n=3, threshold_num=1, threshold_den=2)
+    auto = ngram_jaccard_pairs(docs, **kw)
+    # the committed corpus has no hot shingle: the single join runs
+    assert _jaccard_route(auto) == "single"
+    auto = {(r.doc_a, r.doc_b): round(r.jaccard, 9) for r in auto.collect()}
+    fast = _forced_jaccard_pairs(exact_route, docs, "prefix", **kw)
+    assert auto == fast and len(auto) > 0
 
 
 def test_minhash_lsh_candidates_superset_of_dups(spark):
@@ -159,44 +152,39 @@ def test_connected_components_nonconvergence_flagged(spark):
         connected_components(pairs, max_iterations=1)
 
 
-def test_choose_jaccard_path_skew_vs_uniform(spark, monkeypatch):
-    """VERDICT r2 #2 (adaptive path): the candidate-generation strategy
-    must follow corpus shape — single join on a uniform corpus (no hot
-    shingle: prefix filter's 2 extra stages are pure overhead), prefix
-    filter on a skewed one (a shingle shared by m >> sqrt(N) docs makes
-    the single join's reducer ~m^2) — and the adaptive default must
-    produce the identical pair set either way."""
+def test_choose_exact_path_skew_vs_uniform(spark, exact_route):
+    """VERDICT r2 #2 (adaptive path): the exact join's candidate
+    generation must follow corpus shape — single join on a uniform
+    corpus (no hot shingle: the prefix filter's 2 extra stages are
+    pure overhead), prefix filter on a skewed one (a shingle shared by
+    m >> sqrt(N) docs makes the single join's reducer ~m^2) — and
+    every route must produce the identical pair set."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.dedup import (
-        choose_jaccard_path,
-        ngram_jaccard_pairs,
+        doc_shingles,
+    )
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
+        choose_exact_path,
+        set_similarity_stats,
     )
 
     uniform = spark.createDataFrame(
         [(i, " ".join(f"w{i}x{j}" for j in range(10))) for i in range(50)],
         "doc_id long, text string",
     )
-    assert choose_jaccard_path(uniform) is False
-
     hot = "the quick brown fox jumps over"
     skewed = spark.createDataFrame(
         [(i, f"{hot} tail{i}a tail{i}b tail{i}c tail{i}d") for i in range(50)],
         "doc_id long, text string",
     )
-    assert choose_jaccard_path(skewed) is True
-
-    autos = {}
-    for name, corpus in (("uniform", uniform), ("skewed", skewed)):
-        df = ngram_jaccard_pairs(corpus, n=3, threshold=0.5)
-        assert _jaccard_route(df) is (name == "skewed")
-        autos[name] = {
-            (r.doc_a, r.doc_b): round(r.jaccard, 9) for r in df.collect()
-        }
-    for name, corpus in (("uniform", uniform), ("skewed", skewed)):
-        for flag in (True, False):
-            explicit = _forced_jaccard_pairs(
-                monkeypatch, corpus, flag, n=3, threshold=0.5
-            )
-            assert autos[name] == explicit
+    kw = dict(n=3, threshold_num=1, threshold_den=2)
+    for want, corpus in (("single", uniform), ("prefix", skewed)):
+        stats = set_similarity_stats(doc_shingles(corpus, 3), "doc_id", "shingle")
+        assert choose_exact_path(stats) == want, stats
+        df = ngram_jaccard_pairs(corpus, **kw)
+        assert _jaccard_route(df) == want
+        auto = {(r.doc_a, r.doc_b): round(r.jaccard, 9) for r in df.collect()}
+        for route in ("single", "prefix"):
+            assert auto == _forced_jaccard_pairs(exact_route, corpus, route, **kw)
 
 
 def test_near_dup_pairs_auto_sparse_equals_exact(spark):
@@ -213,7 +201,12 @@ def test_near_dup_pairs_auto_sparse_equals_exact(spark):
     assert auto.__setsim_path__ == "exact"
     got = sorted(map(tuple, auto.collect()))
     want = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect())
+        map(
+            tuple,
+            ngram_jaccard_pairs(
+                docs, n=3, threshold_num=1, threshold_den=2
+            ).collect(),
+        )
     )
     assert got == want and len(got) > 0
 
@@ -338,7 +331,7 @@ def test_doc_shingles_presence_matches_token_count(spark):
     assert has_shingle == gate == {2, 3, 8}
 
 
-def test_near_dup_pairs_auto_no_cache_growth(spark):
+def test_near_dup_pairs_auto_no_cache_growth(spark, setsim_handoff):
     """Round-8 lifecycle contract (VERDICT r7 #7): parameter-varied
     near_dup_pairs_auto invocations in one session must not accumulate
     CacheManager entries — the shingle table (and the LSH route's
@@ -353,46 +346,51 @@ def test_near_dup_pairs_auto_no_cache_growth(spark):
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
     was_empty = cache_mgr.isEmpty()
     docs = _docs(spark)
-    for n, num, den, kwargs in [
-        (3, 1, 2, {}),
-        (2, 1, 2, {}),
-        (3, 8, 10, {}),
-        # force the LSH route too (set_similarity_join_lsh's signature
-        # table shares the same lifecycle rule)
-        (3, 1, 2, {"pairs_per_key_budget": 0, "min_lsh_keys": 1}),
-        (3, 1, 2, {"pairs_per_key_budget": 0, "min_lsh_keys": 1,
-                   "target_recall": 0.9}),
+    for n, num, den, lsh in [
+        (3, 1, 2, False),
+        (2, 1, 2, False),
+        (3, 8, 10, False),
+        # the LSH route too (set_similarity_join_lsh's signature table
+        # shares the same lifecycle rule)
+        (3, 1, 2, True),
     ]:
+        if lsh:
+            verdicts = setsim_handoff(0, 1)
         out = near_dup_pairs_auto(
-            docs, n=n, threshold_num=num, threshold_den=den, **kwargs
+            docs, n=n, threshold_num=num, threshold_den=den
         )
+        assert out.__setsim_path__ == ("lsh" if lsh else "exact")
         out.collect()
         del out
+    assert verdicts == ["lsh"]
     assert cache_mgr.isEmpty() == was_empty
     if was_empty:
         assert cache_mgr.isEmpty()
 
 
-def test_near_dup_pairs_auto_propagates_meta(spark):
+def test_near_dup_pairs_auto_propagates_meta(spark, setsim_handoff):
     """__setsim_meta__ travels through the document-level wrapper so a
-    pipeline reading the routing decision sees the same contract the
-    set-level router surfaced."""
+    pipeline reading the routing decision sees the same banding the
+    set-level router chose."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.dedup import (
         near_dup_pairs_auto,
+    )
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
+        choose_lsh_bands,
+        lsh_collision_probability,
     )
 
     docs = _docs(spark)
     auto = near_dup_pairs_auto(docs, n=3, threshold_num=1, threshold_den=2)
     assert auto.__setsim_meta__["path"] == auto.__setsim_path__ == "exact"
-    lsh = near_dup_pairs_auto(
-        docs, n=3, threshold_num=1, threshold_den=2,
-        pairs_per_key_budget=0, min_lsh_keys=1, target_recall=0.8,
-    )
+    verdicts = setsim_handoff(0, 1)
+    lsh = near_dup_pairs_auto(docs, n=3, threshold_num=1, threshold_den=2)
     meta = lsh.__setsim_meta__
-    assert lsh.__setsim_path__ == "lsh"
-    assert meta["target_recall"] == 0.8
-    assert meta["expected_recall_at_threshold"] >= 0.8
-    assert meta["k"] % meta["bands"] == 0
+    assert verdicts == ["lsh"] and lsh.__setsim_path__ == "lsh"
+    assert (meta["k"], meta["bands"]) == (16, choose_lsh_bands(1, 2, 16))
+    assert meta["expected_recall_at_threshold"] == round(
+        lsh_collision_probability(0.5, meta["k"], meta["bands"]), 4
+    )
 
 
 def _star_routes(cache: dict) -> list[bool]:
@@ -599,7 +597,9 @@ def test_containment_pairs_exact_and_asymmetric(spark):
     assert any(a == 1 and b == 2 and c == 1.0 for a, b, c in got)
     jac = {
         (r.doc_a, r.doc_b)
-        for r in ngram_jaccard_pairs(docs, n=3, threshold=0.8).collect()
+        for r in ngram_jaccard_pairs(
+            docs, n=3, threshold_num=4, threshold_den=5
+        ).collect()
     }
     assert (1, 2) not in jac
 

@@ -264,7 +264,7 @@ def test_chi2_keywords_broadcasts_marginals(spark):
     assert_broadcast_join(entrymod._q_chi2_keywords(spark, SF_SMALL))
 
 
-def test_registered_path_selections_pinned(spark, setsim_handoff):
+def test_registered_path_selections_pinned(spark, setsim_handoff, monkeypatch):
     """Round-7 path pins (VERDICT r6 #7): the three operators whose
     physical path is a DATA-DEPENDENT choice — ann_bucketed's adaptive
     nbits, user_covisit_jaccard's set-similarity path, ivf_topk's
@@ -331,17 +331,24 @@ def test_registered_path_selections_pinned(spark, setsim_handoff):
 
     # 6) near_dup_pairs_t90 (round 9): the DOC-level contract query —
     # banding pinned to the library math (the oracle SQL is generated
-    # for (54, 18)), the route pinned to LSH at every sf, and the
-    # recall contract propagated through near_dup_pairs_auto's meta.
+    # for (54, 18)) and handed to the LSH join at every sf.
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
+        similarity,
+    )
+
     k_d, b_d = choose_lsh_params(1, 2, target_recall=0.9)
     assert (k_d, b_d) == (54, 18)
     assert lsh_collision_probability(0.5, k_d, b_d) >= 0.9
-    t90 = entrymod._q_near_dup_pairs_t90(spark, SF_SMALL)
-    meta = t90.__setsim_meta__
-    assert t90.__setsim_path__ == "lsh"
-    assert meta["target_recall"] == 0.9
-    assert (meta["k"], meta["bands"]) == (54, 18)
-    assert meta["expected_recall_at_threshold"] >= 0.9
+    real_lsh = similarity.set_similarity_join_lsh
+    bandings = []
+
+    def spy(*a, **kw):
+        bandings.append((kw["k"], kw["bands"]))
+        return real_lsh(*a, **kw)
+
+    monkeypatch.setattr(similarity, "set_similarity_join_lsh", spy)
+    entrymod._q_near_dup_pairs_t90(spark, SF_SMALL)
+    assert bandings == [(54, 18)]
 
     # 7) tf_cosine_pairs_auto (round 11): the registered APSS query
     # runs behind the dense-regime guard — the probe verdict must be

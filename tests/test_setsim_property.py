@@ -48,6 +48,21 @@ def _model(rows):
     return out
 
 
+def _model_stats(rows):
+    """Independent python model of set_similarity_stats: df counts an
+    item's rows, NULL items are left out of cand_pairs and max_df."""
+    df: dict = {}
+    for _k, i in rows:
+        if i is not None:
+            df[i] = df.get(i, 0) + 1
+    return {
+        "n_rows": len(rows),
+        "n_keys": len({k for k, _i in rows if k is not None}),
+        "cand_pairs": float(sum(d * (d - 1) // 2 for d in df.values())),
+        "max_df": max(df.values(), default=0),
+    }
+
+
 def _pairs(df):
     return {
         (r.key_a, r.key_b): (r.n_shared, r.sz_a, r.sz_b)
@@ -59,7 +74,7 @@ def _pairs(df):
     max_examples=8, deadline=None, suppress_health_check=list(HealthCheck)
 )
 @given(tables)
-def test_setsim_paths_vs_model_and_lsh_laws(spark, rows):
+def test_setsim_paths_vs_model_and_lsh_laws(spark, exact_route, rows):
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
         set_similarity_join,
         set_similarity_join_lsh,
@@ -68,11 +83,16 @@ def test_setsim_paths_vs_model_and_lsh_laws(spark, rows):
     sets = spark.createDataFrame(rows, "key long, item long")
     want = _model(rows)
 
-    exact = {}
-    for kw in ({}, {"dense_bitmap_domain": 10}):
-        got = _pairs(set_similarity_join(sets, "key", "item", NUM, DEN, **kw))
-        assert got == want, kw
-        exact = got
+    # the forced single join and prefix filter, then the bitmap path;
+    # the route rule is consulted once, with the model's stats
+    for route in ("single", "prefix"):
+        asked = exact_route(route)
+        got = _pairs(set_similarity_join(sets, "key", "item", NUM, DEN))
+        assert asked == [_model_stats(rows)] and got == want, route
+    exact = _pairs(
+        set_similarity_join(sets, "key", "item", NUM, DEN, dense_bitmap_domain=10)
+    )
+    assert exact == want
 
     lsh_variants = {}
     for domain in (None, 10):

@@ -190,8 +190,8 @@ EXCHANGE_CEILING = {
     # sf0.1 (zero duplicate sets) vs 8.7× faster on the duplicated
     # 16× probe corpus (SCALE.md §Round 7)
     "user_covisit_lsh": 54,
-    # exact route on the committed corpus (df-stat router; the prefix
-    # path's stats job runs before the plan, so only the join shows)
+    # exact route on the committed corpus (df-stat router → single
+    # join; the stats jobs run before the plan, so only the join shows)
     "near_dup_pairs_auto": 6,
     # batch 29 (round 9): doc-level recall contract — the LSH route's
     # signature agg + band fanout + candidate distinct + two payload
@@ -214,7 +214,7 @@ EXCHANGE_CEILING = {
     # the digest moved outside the rebuild agg in round 10, exchanges
     # unchanged
     "span_cleaned_text": 8,
-    # the ngram_jaccard-style persisted augmented index (shingle +
+    # one persisted augmented index (shingle +
     # doc_id window exchanges) + prefix-vs-index candidate join +
     # two count-verification joins: more exchange MENTIONS than the
     # old payload plan (17 vs 14) but every one carries narrow

@@ -335,19 +335,24 @@ def _sets_fixture(spark):
     return spark.createDataFrame(rows, "key long, item long")
 
 
-def test_set_similarity_join_three_paths_identical(spark):
+def test_set_similarity_join_three_paths_identical(spark, exact_route):
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
         set_similarity_join,
     )
 
     sets = _sets_fixture(spark)
-    got_prefix = _pairs(set_similarity_join(sets, "key", "item", 3, 10))
+    got = {}
+    for route in ("single", "prefix"):
+        asked = exact_route(route)
+        got[route] = _pairs(set_similarity_join(sets, "key", "item", 3, 10))
+        assert len(asked) == 1
+    got_prefix = got["prefix"]
     got_bitmap = _pairs(
         set_similarity_join(
             sets, "key", "item", 3, 10, dense_bitmap_domain=64
         )
     )
-    assert got_prefix == got_bitmap
+    assert got["single"] == got_prefix == got_bitmap
     assert len(got_prefix) > 0
 
     # ground truth by hand: NULL counts toward sz but never intersects
@@ -368,7 +373,7 @@ def test_set_similarity_join_three_paths_identical(spark):
     assert got_prefix == sorted(expect)
 
 
-def test_set_similarity_join_threshold_boundary_exact(spark):
+def test_set_similarity_join_threshold_boundary_exact(spark, exact_route):
     """Integer cross-multiplication must keep a pair at exactly
     J = num/den (3/10 here: |∩|=3, |∪|=10) on every path — the float
     boundary that motivates the integer form."""
@@ -380,9 +385,14 @@ def test_set_similarity_join_threshold_boundary_exact(spark):
     b = {0, 1, 2} | {10, 11, 12}       # sz 6, inter 3, union 10
     rows = [(0, i) for i in a] + [(1, i) for i in b]
     sets = spark.createDataFrame(rows, "key long, item long")
-    for kw in ({}, {"dense_bitmap_domain": 16}):
-        got = _pairs(set_similarity_join(sets, "key", "item", 3, 10, **kw))
-        assert got == [(0, 1, 3, 7, 6)], kw
+    for route in ("single", "prefix"):
+        exact_route(route)
+        got = _pairs(set_similarity_join(sets, "key", "item", 3, 10))
+        assert got == [(0, 1, 3, 7, 6)], route
+    got = _pairs(
+        set_similarity_join(sets, "key", "item", 3, 10, dense_bitmap_domain=16)
+    )
+    assert got == [(0, 1, 3, 7, 6)]
 
 
 def test_ivf_kmeans_codebook_recall_beats_sampled(spark):
@@ -467,10 +477,13 @@ def test_ivf_topk_prebuilt_index_identical(spark, tmp_path):
     assert a == b and len(a) > 0
 
 
-def test_choose_set_similarity_path_rules():
+def test_choose_set_similarity_path_rules(monkeypatch):
     """Routing rule unit test (no Spark): small key tables and
     linear-regime candidate bounds stay exact; only a quadratic
     candidate bound over a large key table hands off to LSH."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators import (
+        similarity,
+    )
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
         choose_set_similarity_path,
     )
@@ -498,22 +511,42 @@ def test_choose_set_similarity_path_rules():
     )
     # cand bound is capped at all-pairs: a single ultra-hot item on a
     # small-ish key table cannot fake a quadratic regime past C(U,2)
+    monkeypatch.setattr(similarity, "PAIRS_PER_KEY_BUDGET", 5_000)
     assert (
         choose_set_similarity_path(
-            {"n_keys": 5_000, "cand_pairs": 1e12, "n_rows": 1e6, "max_df": 1e6},
-            pairs_per_key_budget=5_000,
+            {"n_keys": 5_000, "cand_pairs": 1e12, "n_rows": 1e6, "max_df": 1e6}
         )
         == "exact"
     )
-    # thresholds are parameters
+    # the handoff reads the module constants
+    monkeypatch.setattr(similarity, "PAIRS_PER_KEY_BUDGET", 1)
+    monkeypatch.setattr(similarity, "MIN_LSH_KEYS", 10)
     assert (
         choose_set_similarity_path(
-            {"n_keys": 20, "cand_pairs": 190, "n_rows": 100, "max_df": 20},
-            pairs_per_key_budget=1,
-            min_lsh_keys=10,
+            {"n_keys": 20, "cand_pairs": 190, "n_rows": 100, "max_df": 20}
         )
         == "lsh"
     )
+
+
+def test_choose_exact_path_rule():
+    """Single-join vs prefix rule unit test (no Spark): prefix only
+    when the hottest item's key frequency exceeds 4·√n_keys."""
+    from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
+        choose_exact_path,
+    )
+
+    def route(n_keys, max_df):
+        return choose_exact_path(
+            {"n_keys": n_keys, "max_df": max_df, "n_rows": 0, "cand_pairs": 0.0}
+        )
+
+    assert route(0, 0) == route(1, 1) == "single"
+    assert route(100, 40) == "single"  # 4·√100 = 40: not above
+    assert route(100, 41) == "prefix"
+    # the committed document corpora: 3-gram max_df 9 / 25 at 500 /
+    # 5 000 docs stays single
+    assert route(500, 9) == route(5_000, 25) == "single"
 
 
 def test_set_similarity_auto_sparse_equals_exact(spark):
@@ -531,10 +564,7 @@ def test_set_similarity_auto_sparse_equals_exact(spark):
     assert stats["n_keys"] == 12
     assert stats["n_rows"] == sets.count()
     assert stats["max_df"] == 12  # hot item 0 in every key
-    auto = set_similarity_join_auto(sets, "key", "item", 3, 10, stats=stats)
-    # round 8: the caller's stats dict is never mutated; the decision
-    # lives on the returned DataFrame only
-    assert "path" not in stats
+    auto = set_similarity_join_auto(sets, "key", "item", 3, 10)
     assert auto.__setsim_path__ == "exact"
     assert auto.__setsim_meta__["path"] == "exact"
     assert auto.__setsim_meta__["expected_recall_at_threshold"] == 1.0
@@ -584,7 +614,7 @@ def test_set_similarity_lsh_no_false_positives_and_dup_recall(spark):
         assert dup_pairs <= got, f"missed exact dups (domain={domain})"
 
 
-def test_set_similarity_auto_dense_routes_lsh(spark):
+def test_set_similarity_auto_dense_routes_lsh(spark, setsim_handoff):
     """Dense fixture (thresholds tightened to make the small fixture
     'dense'): auto must route to LSH and emit a subset of the exact
     pair set with exact values."""
@@ -596,12 +626,9 @@ def test_set_similarity_auto_dense_routes_lsh(spark):
     # every key shares most of a tiny item domain: quadratic regime
     rows = [(k, (k + j) % 8) for k in range(24) for j in range(6)]
     sets = spark.createDataFrame(rows, "key long, item long")
-    stats = {}
-    auto = set_similarity_join_auto(
-        sets, "key", "item", 1, 2,
-        pairs_per_key_budget=2, min_lsh_keys=10,
-    )
-    assert auto.__setsim_path__ == "lsh"
+    verdicts = setsim_handoff(2, 10)
+    auto = set_similarity_join_auto(sets, "key", "item", 1, 2)
+    assert verdicts == ["lsh"] and auto.__setsim_path__ == "lsh"
     exact = set(map(tuple, _pairs(set_similarity_join(sets, "key", "item", 1, 2))))
     got = set(map(tuple, _pairs(auto)))
     assert got <= exact
@@ -759,63 +786,31 @@ def test_choose_lsh_params_meets_target(monkeypatch):
     assert lsh_collision_probability(0.3, 4, 4) < 0.999999
 
 
-def test_auto_target_recall_surfaces_contract(spark):
-    """The dense-routed auto join with target_recall set must use the
-    contract banding, surface it in __setsim_meta__, and stay a subset
-    of the exact pairs with every identical-set pair recovered."""
+def test_contract_banding_meets_recall_floor(spark):
+    """The recall-contract banding (choose_lsh_params at target 0.8,
+    as the t90 queries call set_similarity_join_lsh) must stay a
+    subset of the exact pairs with every identical-set pair recovered
+    and recall at the target on a dense fixture."""
     from analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity import (
+        choose_lsh_params,
         set_similarity_join,
-        set_similarity_join_auto,
+        set_similarity_join_lsh,
     )
 
     rows = [(k, (k + j) % 8) for k in range(24) for j in range(6)]
     rows += [(k, i) for k in (100, 101) for i in (1, 2, 3)]  # J=1 pair
     sets = spark.createDataFrame(rows, "key long, item long")
-    auto = set_similarity_join_auto(
-        sets, "key", "item", 3, 10,
-        pairs_per_key_budget=2, min_lsh_keys=10,
-        target_recall=0.8,
-    )
-    meta = auto.__setsim_meta__
-    assert auto.__setsim_path__ == "lsh"
-    assert (meta["k"], meta["bands"]) == (36, 18)
-    assert meta["target_recall"] == 0.8
-    assert meta["expected_recall_at_threshold"] >= 0.8
+    k, bands = choose_lsh_params(3, 10, 0.8)
+    assert (k, bands) == (36, 18)
+    lsh = set_similarity_join_lsh(sets, "key", "item", 3, 10, k=k, bands=bands)
     exact = set(map(tuple, _pairs(set_similarity_join(sets, "key", "item", 3, 10))))
-    got = set(map(tuple, _pairs(auto)))
+    got = set(map(tuple, _pairs(lsh)))
     assert got <= exact and len(got) > 0
     assert (100, 101, 3, 3, 3) in got
     # measured recall on this fixture should beat the midpoint default
     # by a wide margin (expected ~0.52 there, >=0.8 here); assert the
     # contract's floor holds in aggregate on qualifying pairs
     assert len(got) / len(exact) >= 0.8
-
-
-def test_preseeded_stats_route_zero_preroute_jobs(spark, monkeypatch):
-    """VERDICT r7 #4: routing from caller-supplied statistics (at
-    100 TB: catalog NDVs) must launch ZERO pre-route stats jobs —
-    set_similarity_stats is monkeypatched to raise, so any fallback to
-    the two scalar agg jobs fails loudly — and must route exactly as
-    the measured stats do, without mutating the caller's dict."""
-    import analyzing_the_characteristics_of_shanghai_s_pedestrian_flow_based_on_mobile_big_data_spark.operators.similarity as sim
-
-    dense = [(k, (k + j) % 8) for k in range(24) for j in range(6)]
-    sets = spark.createDataFrame(dense, "key long, item long")
-    # every item sits in 18 of the 24 keys: Σ C(18, 2) over 8 items
-    stats = {"n_rows": 144, "n_keys": 24, "cand_pairs": 1224.0, "max_df": 18}
-    assert sim.set_similarity_stats(sets, "key", "item") == stats
-
-    def boom(*a, **k):
-        raise AssertionError("pre-route stats job launched")
-
-    monkeypatch.setattr(sim, "set_similarity_stats", boom)
-    auto = sim.set_similarity_join_auto(
-        sets, "key", "item", 3, 10,
-        pairs_per_key_budget=2, min_lsh_keys=10, stats=stats,
-    )
-    assert auto.__setsim_path__ == "lsh"
-    assert "path" not in stats
-    assert auto.count() > 0
 
 
 def test_ivf_index_health_monitors(spark):
